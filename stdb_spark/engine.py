@@ -21,7 +21,9 @@ Scale notes: the series binding (`where`) filters on the fact table's own
 metric/tags columns so Parquet predicate pushdown applies; group-by keys
 are strings (canonical tag suffix) to keep every shuffle key sortable;
 aggregates are single Catalyst expressions so map-side partials apply;
-pivot passes an explicit metric list to avoid the discovery pass.
+`join` aligns metrics with one conditional max per metric (one hash
+exchange, where a pivot plans two); the final ordering sorts small
+inputs in one task instead of range-partitioning them (see `_sort`).
 """
 
 from __future__ import annotations
@@ -55,11 +57,40 @@ def _tags_suffix():
     return F.array_join(kv, " ")
 
 
-def _series_name(metric_expr):
-    sfx = _tags_suffix()
-    return F.when(
-        F.length(sfx) > 0, F.concat(metric_expr, F.lit(" "), sfx)
-    ).otherwise(metric_expr)
+def _quote(name: str) -> str:
+    """Column reference for an output column named after a metric: a
+    dotted name such as ``cpu.user`` is one column, not a struct field."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sort(df: DataFrame, *keys) -> DataFrame:
+    """Total order over ``df`` in the regime its input size allows.
+
+    Small inputs sort in ONE task: ``coalesce(1)`` reports
+    SinglePartition, which satisfies the sort's ordered distribution,
+    so the plan has no range exchange — and no RangePartitioner sample
+    job, which re-runs the whole child plan, scan included.  "Small" is
+    the summed ``sizeInBytes`` of the optimized plan's leaves (the scan
+    size after partition pruning, an upper bound on what the sort
+    sees) at or under ``spark.sql.autoBroadcastJoinThreshold``.  Memory
+    bound: the one task sorts at most threshold-sized input, and
+    Spark's sort spills past memory.  Larger inputs, or a threshold
+    <= 0, keep the distributed range sort.
+
+    The estimate is read off the Dataset that is returned, so its
+    ``collect`` reuses the optimized plan instead of optimizing again."""
+    out = df.coalesce(1).orderBy(*keys)
+    qe = out._jdf.queryExecution()
+    limit = qe.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
+    if limit > 0:
+        leaves = qe.optimizedPlan().collectLeaves()
+        size = sum(
+            int(leaves.apply(i).stats().sizeInBytes())
+            for i in range(leaves.size())
+        )
+        if size <= limit:
+            return out
+    return df.orderBy(*keys)
 
 
 def _and_all(conds):
@@ -122,6 +153,21 @@ class Engine:
         # decimal-backed sum/mean: reproducible independent of partial-agg
         # order (oracle-comparison mode; slower, default off)
         self.exact_sums = exact_sums
+        # per-query invariants, built once: every schema read is a py4j
+        # round trip, and the tag-suffix expression alone costs ~4 ms
+        self._dtypes = {
+            name: dict(df.dtypes)
+            for name, df in (("samples", samples), ("events", events))
+            if df is not None
+        }
+        sfx = _tags_suffix()
+        self._tags_col = sfx.alias("_tags_s")
+        metric = F.col("metric")
+        self._series_col = (
+            F.when(F.length(sfx) > 0, F.concat(metric, F.lit(" "), sfx))
+            .otherwise(metric)
+            .alias("series")
+        )
 
     # ------------------------------------------------------------------
     @classmethod
@@ -177,7 +223,7 @@ class Engine:
         req.where = sq.where
         req.limit, req.offset = sq.limit, sq.offset
         df = self._bind(df, req, metrics=[])
-        out = df.select(F.col("name").alias("series")).orderBy("series")
+        out = _sort(df.select(F.col("name").alias("series")), "series")
         return self._limit(out, req)
 
     def suggest(self, q) -> DataFrame:
@@ -207,7 +253,7 @@ class Engine:
             )
         if sq.starts_with:
             out = out.filter(F.col("name").startswith(sq.starts_with))
-        return out.orderBy("name")
+        return _sort(out, "name")
 
     # ------------------------------------------------------------------
     # shared stages
@@ -233,7 +279,7 @@ class Engine:
                 df = df.filter(_or_all(combos))
         return df
 
-    def _range(self, df: DataFrame, req: QueryRequest) -> DataFrame:
+    def _range(self, df: DataFrame, req: QueryRequest, table: str) -> DataFrame:
         """Half-open [from, to); reversed bounds scan backward over
         (to, from] (operator.h:88-94).  When a ``ts_raw`` column is bound,
         coarse bounds on it are added so the Parquet scan prunes row
@@ -241,9 +287,11 @@ class Engine:
         layout's ``day`` partition column (sources.storage.write_samples),
         explicit day bounds are added so directory-level partition
         pruning fires — the NB+tree time-descent analog at the file
-        system level."""
+        system level.  ``table`` names the bound table ``df`` filters
+        ("samples" or "events"), whose schema __init__ read once."""
         if req.begin is None:
             return df
+        dtypes = self._dtypes[table]
         # widen BOTH ends by the slack: the contract is the symmetric
         # |ts - ts_raw| <= ts_slack_ns, so a transform that can move ts
         # ABOVE ts_raw (round-to-nearest, negative-epoch truncation)
@@ -252,14 +300,14 @@ class Engine:
         if req.backward:
             lo, hi = req.end - g, req.begin + g
             cond = (F.col("ts") <= req.begin) & (F.col("ts") > req.end)
-            if "ts_raw" in df.columns:
+            if "ts_raw" in dtypes:
                 cond = cond & (F.col("ts_raw") <= req.begin + g) & (
                     F.col("ts_raw") > req.end - g
                 )
         else:
             lo, hi = req.begin - g, req.end + g
             cond = (F.col("ts") >= req.begin) & (F.col("ts") < req.end)
-            if "ts_raw" in df.columns:
+            if "ts_raw" in dtypes:
                 cond = cond & (F.col("ts_raw") >= req.begin - g) & (
                     F.col("ts_raw") < req.end + g
                 )
@@ -268,10 +316,10 @@ class Engine:
         # When the adapter kept the raw parquet column, add coarse
         # attribute-vs-literal bounds on it so the scan prunes row
         # groups (the NB+tree time-descent analog at the storage level).
-        src_cond = model.ts_src_bounds(df, int(lo), int(hi))
+        src_cond = model.ts_src_bounds(df, int(lo), int(hi), dtypes)
         if src_cond is not None:
             cond = cond & src_cond
-        if "day" in df.columns:
+        if "day" in dtypes:
             from stdb_spark.common.timeutil import NS_PER_DAY
 
             cond = cond & (F.col("day") >= int(lo // NS_PER_DAY)) & (
@@ -294,7 +342,11 @@ class Engine:
         )
 
     @staticmethod
-    def _order(df: DataFrame, req: QueryRequest, preordered: bool = False) -> DataFrame:
+    def _order(
+        df: DataFrame, req: QueryRequest, cols: Iterable[str], preordered: bool = False
+    ) -> DataFrame:
+        """Output order; ``cols`` are df's payload columns (all but
+        series and ts)."""
         if preordered:
             return df
         ts = F.col("ts").desc() if req.backward else F.col("ts").asc()
@@ -308,11 +360,11 @@ class Engine:
         tiebreaks = [
             (F.col(c).desc() if req.backward else F.col(c).asc())
             for c in ("value", "body")
-            if c in df.columns
+            if c in cols
         ]
         if req.order_by == "series":
-            return df.orderBy(sr, ts, *tiebreaks)
-        return df.orderBy(ts, sr, *tiebreaks)
+            return _sort(df, sr, ts, *tiebreaks)
+        return _sort(df, ts, sr, *tiebreaks)
 
     @staticmethod
     def _limit(df: DataFrame, req: QueryRequest) -> DataFrame:
@@ -380,7 +432,7 @@ class Engine:
     # ------------------------------------------------------------------
     def _select(self, req: QueryRequest) -> DataFrame:
         df = self._bind(self.samples, req)
-        df = self._range(df, req)
+        df = self._range(df, req, "samples")
         df = self._group_remap(df, req)
         if req.filters:
             # reject unknown keys loudly instead of KeyError-crashing /
@@ -391,84 +443,87 @@ class Engine:
                     f"filter key {unknown[0]!r} matches no selected metric"
                 )
             df = df.filter(_vf_condition(F.col("value"), req.filters[req.metrics[0]]))
-        out = df.select(
-            _series_name(F.col("metric")).alias("series"),
-            F.col("ts"),
-            F.col("value"),
-        )
-        out, _, preordered = apply_pipeline(out, req.apply, ["value"], req.backward)
-        return self._limit(self._order(out, req, preordered), req)
+        out = df.select(self._series_col, F.col("ts"), F.col("value"))
+        out, cols, preordered = apply_pipeline(out, req.apply, ["value"], req.backward)
+        return self._limit(self._order(out, req, cols, preordered), req)
 
     def _select_events(self, req: QueryRequest) -> DataFrame:
         if self.events is None:
             raise QueryParseError("no events table bound")
         df = self._bind(self.events, req)
-        df = self._range(df, req)
+        df = self._range(df, req, "events")
         if req.event_regex:
             # regex pushed into the scan, like BinaryDataFilter
             # (stdb/storage/nbtree.cc:1630)
             df = df.filter(F.col("body").rlike(req.event_regex))
         df = self._group_remap(df, req)
-        out = df.select(
-            _series_name(F.col("metric")).alias("series"), F.col("ts"), F.col("body")
-        )
-        return self._limit(self._order(out, req), req)
+        out = df.select(self._series_col, F.col("ts"), F.col("body"))
+        return self._limit(self._order(out, req, ["body"]), req)
 
     def _select_meta(self, req: QueryRequest) -> DataFrame:
         if self.series is None:
             raise QueryParseError("no series registry bound")
         df = self._bind(self.series, req)
-        out = df.select(F.col("name").alias("series")).orderBy("series")
+        out = _sort(df.select(F.col("name").alias("series")), "series")
         return self._limit(out, req)
 
     # ------------------------------------------------------------------
-    # summary-table aggregate pushdown
-    _SUMMARY_FUNCS = {
-        "min", "max", "sum", "count", "cnt", "mean", "first", "last",
-        "min_timestamp", "max_timestamp", "first_timestamp", "last_timestamp",
+    # summary-table aggregate pushdown: AggregationResult::combine
+    # (operator.h:48-73) as one Catalyst expression per function, built
+    # only when requested.  Exactness: `sum` is decimal (exact,
+    # order-free); min/max/first/last carry their timestamps so struct
+    # ordering reproduces the leaf scan's deterministic tiebreaks.
+    _SUMMARY_EXPRS = {
+        "min": lambda: F.min(F.struct("min", "min_ts")).getField("min"),
+        "max": lambda: F.max(F.struct("max", "max_ts")).getField("max"),
+        "sum": lambda: F.sum("sum").cast("double"),
+        "count": lambda: F.sum("cnt").cast("double"),
+        "cnt": lambda: F.sum("cnt").cast("double"),
+        "mean": lambda: F.sum("sum").cast("double") / F.sum("cnt"),
+        "first": lambda: F.min(F.struct("first_ts", "first")).getField("first"),
+        "last": lambda: F.max(F.struct("last_ts", "last")).getField("last"),
+        "min_timestamp": lambda: F.min(F.struct("min", "min_ts"))
+        .getField("min_ts").cast("double"),
+        "max_timestamp": lambda: F.max(F.struct("max", "max_ts"))
+        .getField("max_ts").cast("double"),
+        "first_timestamp": lambda: F.min("first_ts").cast("double"),
+        "last_timestamp": lambda: F.max("last_ts").cast("double"),
     }
 
-    @staticmethod
-    def _summary_agg_expr(func: str) -> "F.Column":
-        """Combine bucket summaries into the whole-range aggregate —
-        AggregationResult::combine (operator.h:48-73) as one Catalyst
-        expression per function.  Exactness: `sum` is decimal (exact,
-        order-free); min/max/first/last carry their timestamps so struct
-        ordering reproduces the leaf scan's deterministic tiebreaks."""
-        table = {
-            "min": F.min(F.struct("min", "min_ts")).getField("min"),
-            "max": F.max(F.struct("max", "max_ts")).getField("max"),
-            "sum": F.sum("sum").cast("double"),
-            "count": F.sum("cnt").cast("double"),
-            "cnt": F.sum("cnt").cast("double"),
-            "mean": F.sum("sum").cast("double") / F.sum("cnt"),
-            "first": F.min(F.struct("first_ts", "first")).getField("first"),
-            "last": F.max(F.struct("last_ts", "last")).getField("last"),
-            "min_timestamp": F.min(F.struct("min", "min_ts"))
-            .getField("min_ts").cast("double"),
-            "max_timestamp": F.max(F.struct("max", "max_ts"))
-            .getField("max_ts").cast("double"),
-            "first_timestamp": F.min("first_ts").cast("double"),
-            "last_timestamp": F.max("last_ts").cast("double"),
-        }
-        return table[func]
+    def _summary_exact(self, req: QueryRequest, funcs: list[str], bucketed: bool) -> bool:
+        """Whether the summary table answers ``req`` provably exactly:
+        forward scan, no tag regrouping, every func combinable, range
+        aligned to the summary step (or absent, unbucketed only), and
+        for buckets a step the summary step divides, so every summary
+        bucket nests inside one output bucket."""
+        sstep = self.summary_step_ns
+        if self.summaries is None or not sstep or req.group_op or req.backward:
+            return False
+        if not set(funcs) <= self._SUMMARY_EXPRS.keys():
+            return False
+        if req.begin is None:
+            return not bucketed
+        return not (
+            req.begin % sstep or req.end % sstep or (bucketed and req.step_ns % sstep)
+        )
 
-    def _aggregate_from_summaries(self, req: QueryRequest, all_funcs: list[str]):
-        """Planner choice: answer `aggregate` from the summary table when
-        it is provably exact — forward scan, range aligned to the summary
-        step (or absent), no tag regrouping.  Returns None to fall back
-        to the leaf scan."""
-        if self.summaries is None or not self.summary_step_ns:
-            return None
-        if req.group_op or req.backward:
-            return None
-        if not set(all_funcs) <= self._SUMMARY_FUNCS:
-            return None
-        step = self.summary_step_ns
+    def _agg_input(self, req: QueryRequest, funcs: list[str], bucketed: bool):
+        """(rows, group keys, func -> aggregate expression) for the
+        aggregating queries.  The keys are the tag suffix, then the
+        bucket when ``bucketed``; callers add ``metric`` or pivot on it.
+
+        Planner choice: roll up the summary table when _summary_exact
+        holds — the hypertable-rollup shape: a month of 2d buckets
+        combines ~60 day-summaries per series instead of re-scanning
+        every leaf row — and scan the leaf rows otherwise."""
+        if not self._summary_exact(req, funcs, bucketed):
+            df = self._bind(self.samples, req)
+            df = self._range(df, req, "samples")
+            df = self._group_remap(df, req)
+            keys = [self._tags_col] + ([self._bucket_col(req)] if bucketed else [])
+            return df, keys, lambda f: agg_expr(f, req.backward, exact=self.exact_sums)
         s = self.summaries
         if req.begin is not None:
-            if req.begin % step or req.end % step:
-                return None
             s = s.filter(
                 (F.col("bucket_ts") >= req.begin) & (F.col("bucket_ts") < req.end)
             )
@@ -477,77 +532,9 @@ class Engine:
         # tags live in the (small) series registry — bind there, then
         # broadcast-join the matching series ids onto the summaries
         reg = self._bind(self.series, req, metrics=req.metrics)
-        reg = reg.select("series_id", _tags_suffix().alias("_tags_s"))
-        s = s.join(F.broadcast(reg), "series_id")
-        return s.groupBy("metric", "_tags_s").agg(
-            *[self._summary_agg_expr(f).alias(f"_f_{f}") for f in all_funcs]
-        )
-
-    def _group_aggregate_from_summaries(self, req: QueryRequest):
-        """Planner choice: answer `group-aggregate` (downsample) by
-        ROLLING UP the summary table when every summary bucket nests
-        inside one output bucket — requires begin/end and step aligned
-        to the summary step.  The hypertable-rollup shape: a month of
-        2d buckets combines ~60 day-summaries per series instead of
-        re-scanning every leaf row."""
-        if self.summaries is None or not self.summary_step_ns:
-            return None
-        if req.group_op or req.backward or req.begin is None:
-            return None
-        if not set(req.agg_funcs) <= self._SUMMARY_FUNCS:
-            return None
-        sstep = self.summary_step_ns
-        if req.step_ns % sstep or req.begin % sstep or req.end % sstep:
-            return None
-        s = self.summaries.filter(
-            (F.col("bucket_ts") >= req.begin) & (F.col("bucket_ts") < req.end)
-        )
-        if req.metrics:
-            s = s.filter(F.col("metric").isin(list(dict.fromkeys(req.metrics))))
-        reg = self._bind(self.series, req, metrics=req.metrics)
-        reg = reg.select("series_id", _tags_suffix().alias("_tags_s"))
-        s = s.join(F.broadcast(reg), "series_id")
-        b, st = F.lit(req.begin), F.lit(req.step_ns)
-        bucket = (
-            b + st * F.expr(f"(bucket_ts - {req.begin}L) div {req.step_ns}L")
-        ).alias("ts")
-        return s.groupBy("metric", "_tags_s", bucket).agg(
-            *[self._summary_agg_expr(f).alias(f) for f in req.agg_funcs]
-        )
-
-    def _group_aggregate_join_from_summaries(self, req: QueryRequest):
-        """Planner choice: answer single-func `group-aggregate-join` by
-        rolling up + pivoting the summary table — same provable-
-        exactness eligibility as _group_aggregate_from_summaries (the
-        one func must be summary-combinable, buckets must nest).  The
-        pivot is over the same combine expressions, so values are
-        bit-identical to the leaf scan's."""
-        if self.summaries is None or not self.summary_step_ns:
-            return None
-        if req.group_op or req.backward or req.begin is None:
-            return None
-        if not set(req.agg_funcs) <= self._SUMMARY_FUNCS:
-            return None
-        sstep = self.summary_step_ns
-        if req.step_ns % sstep or req.begin % sstep or req.end % sstep:
-            return None
-        fn = req.agg_funcs[0]
-        s = self.summaries.filter(
-            (F.col("bucket_ts") >= req.begin) & (F.col("bucket_ts") < req.end)
-        )
-        s = s.filter(F.col("metric").isin(list(dict.fromkeys(req.metrics))))
-        reg = self._bind(self.series, req, metrics=req.metrics)
-        reg = reg.select("series_id", _tags_suffix().alias("_tags_s"))
-        s = s.join(F.broadcast(reg), "series_id")
-        b, st = F.lit(req.begin), F.lit(req.step_ns)
-        bucket = (
-            b + st * F.expr(f"(bucket_ts - {req.begin}L) div {req.step_ns}L")
-        ).alias("ts")
-        return (
-            s.groupBy("_tags_s", bucket)
-            .pivot("metric", req.metrics)
-            .agg(self._summary_agg_expr(fn))
-        )
+        s = s.join(F.broadcast(reg.select("series_id", self._tags_col)), "series_id")
+        keys = ["_tags_s"] + ([self._bucket_col(req, "bucket_ts")] if bucketed else [])
+        return s, keys, lambda f: self._SUMMARY_EXPRS[f]()
 
     # ------------------------------------------------------------------
     def _aggregate(self, req: QueryRequest) -> DataFrame:
@@ -555,14 +542,10 @@ class Engine:
         for m, fn in zip(req.metrics, req.agg_funcs):
             by_metric.setdefault(m, []).append(fn)
         all_funcs = sorted({f for fs in by_metric.values() for f in fs})
-        gb = self._aggregate_from_summaries(req, all_funcs)
-        if gb is None:
-            df = self._bind(self.samples, req)
-            df = self._range(df, req)
-            df = self._group_remap(df, req)
-            gb = df.groupBy("metric", _tags_suffix().alias("_tags_s")).agg(
-                *[agg_expr(f, req.backward, exact=self.exact_sums).alias(f"_f_{f}") for f in all_funcs]
-            )
+        df, keys, expr = self._agg_input(req, all_funcs, bucketed=False)
+        gb = df.groupBy("metric", *keys).agg(
+            *[expr(f).alias(f"_f_{f}") for f in all_funcs]
+        )
         # one output row per requested (metric, func): a single explode of
         # per-metric (label, value) structs — NOT a union of one branch per
         # pair, which would recompute the final aggregate once per branch
@@ -591,31 +574,26 @@ class Engine:
         ).otherwise(F.col("_e.label"))
         out = e.select(sname.alias("series"), F.col("_e.value").alias("value"))
         # aggregate output is always series-ordered (queryparser.cc:1453+)
-        return self._limit(out.orderBy("series"), req)
+        return self._limit(_sort(out, "series"), req)
 
     # ------------------------------------------------------------------
-    def _bucket_col(self, req: QueryRequest):
-        """Tumbling buckets aligned to the query's `begin`, NOT to the
-        epoch (stdb/storage/operators/aggregate.cc:160-170):
+    @staticmethod
+    def _bucket_col(req: QueryRequest, ts: str = "ts"):
+        """Tumbling buckets over column ``ts``, aligned to the query's
+        `begin`, NOT to the epoch (stdb/storage/operators/aggregate.cc:160-170):
         forward  bucket_ts = begin + step*((ts - begin) div step)
         backward bucket_ts = begin - step*((begin - ts) div step)
         Integer `div` keeps 1e18-scale nanosecond math exact (a double
         division would lose precision past 2^53)."""
         b, s = F.lit(req.begin), F.lit(req.step_ns)
         if req.backward:
-            return (b - s * F.expr(f"({req.begin}L - ts) div {req.step_ns}L")).alias("ts")
-        return (b + s * F.expr(f"(ts - {req.begin}L) div {req.step_ns}L")).alias("ts")
+            return (b - s * F.expr(f"({req.begin}L - {ts}) div {req.step_ns}L")).alias("ts")
+        return (b + s * F.expr(f"({ts} - {req.begin}L) div {req.step_ns}L")).alias("ts")
 
     def _group_aggregate(self, req: QueryRequest) -> DataFrame:
         funcs = req.agg_funcs
-        gb = self._group_aggregate_from_summaries(req)
-        if gb is None:
-            df = self._bind(self.samples, req)
-            df = self._range(df, req)
-            df = self._group_remap(df, req)
-            gb = df.groupBy(
-                "metric", _tags_suffix().alias("_tags_s"), self._bucket_col(req)
-            ).agg(*[agg_expr(f, req.backward, exact=self.exact_sums).alias(f) for f in funcs])
+        df, keys, expr = self._agg_input(req, funcs, bucketed=True)
+        gb = df.groupBy("metric", *keys).agg(*[expr(f).alias(f) for f in funcs])
         # HAVING over bucket components, keyed by function name — plus
         # the parser's other accepted spellings: the pre-canonical
         # 'cnt' alias, and metric keys (queryparser.cc:1868 parses
@@ -643,58 +621,52 @@ class Engine:
             ),
         ).otherwise(F.regexp_replace(F.lit(label), F.lit("\\{m\\}"), F.col("metric")))
         out = gb.select(sname.alias("series"), F.col("ts"), *[F.col(f) for f in funcs])
-        return self._limit(self._order(out, req), req)
+        return self._limit(self._order(out, req, funcs), req)
 
     # ------------------------------------------------------------------
     def _join(self, req: QueryRequest) -> DataFrame:
         """N metrics aligned on exact timestamp per tag-set -> one row per
         (tags, ts) with one column per metric, missing -> null
         (JoinMaterializer parity, stdb/storage/operators/join.h:18-53).
-        Implemented as groupBy(tags, ts).pivot(metric) — one shuffle, no
-        M-way self-join."""
+        Implemented as groupBy(tags, ts) with one conditional max per
+        metric — one shuffle, no M-way self-join, and no second
+        aggregation (a pivot plans two).  A (series, ts) pair holds at
+        most one sample; max() picks it deterministically even if
+        duplicates sneak in (first() would be partition-order
+        dependent)."""
         metrics = req.metrics
         df = self._bind(self.samples, req)
-        df = self._range(df, req)
+        df = self._range(df, req, "samples")
         df = self._group_remap(df, req)
-        piv = (
-            df.groupBy(_tags_suffix().alias("_tags_s"), "ts")
-            .pivot("metric", metrics)
-            # a (series, ts) pair holds at most one sample; max() picks it
-            # deterministically even if duplicates sneak in (first() would
-            # be partition-order dependent)
-            .agg(F.max("value"))
+        metric, value = F.col("metric"), F.col("value")
+        piv = df.groupBy(self._tags_col, "ts").agg(
+            *[F.max(F.when(metric == m, value)).alias(m) for m in metrics]
         )
-        piv = self._value_filters(piv, req, {m: m for m in metrics})
+        piv = self._value_filters(piv, req, {m: _quote(m) for m in metrics})
         joined_name = "|".join(metrics)
         sname = F.when(
             F.length("_tags_s") > 0,
             F.concat(F.lit(joined_name + " "), F.col("_tags_s")),
         ).otherwise(F.lit(joined_name))
-        out = piv.select(sname.alias("series"), "ts", *[F.col(m) for m in metrics])
+        out = piv.select(sname.alias("series"), "ts", *[F.col(_quote(m)) for m in metrics])
         out, cols, preordered = apply_pipeline(out, req.apply, list(metrics), req.backward)
-        return self._limit(self._order(out, req, preordered), req)
+        return self._limit(self._order(out, req, cols, preordered), req)
 
     def _group_aggregate_join(self, req: QueryRequest) -> DataFrame:
         """Downsample N metrics with ONE func, align buckets
-        (queryparser.cc:1793-1907)."""
+        (queryparser.cc:1793-1907).  Stays on pivot: a conditional
+        `count` would give 0 for a bucket without rows, pivot gives
+        null."""
         metrics = req.metrics
         fn = req.agg_funcs[0]
-        piv = self._group_aggregate_join_from_summaries(req)
-        if piv is None:
-            df = self._bind(self.samples, req)
-            df = self._range(df, req)
-            df = self._group_remap(df, req)
-            piv = (
-                df.groupBy(_tags_suffix().alias("_tags_s"), self._bucket_col(req))
-                .pivot("metric", metrics)
-                .agg(agg_expr(fn, req.backward, exact=self.exact_sums))
-            )
-        piv = self._value_filters(piv, req, {m: m for m in metrics})
+        df, keys, expr = self._agg_input(req, [fn], bucketed=True)
+        piv = df.groupBy(*keys).pivot("metric", metrics).agg(expr(fn))
+        piv = self._value_filters(piv, req, {m: _quote(m) for m in metrics})
         joined_name = "|".join(f"{m}:{fn}" for m in metrics)
         sname = F.when(
             F.length("_tags_s") > 0,
             F.concat(F.lit(joined_name + " "), F.col("_tags_s")),
         ).otherwise(F.lit(joined_name))
-        out = piv.select(sname.alias("series"), "ts", *[F.col(m) for m in metrics])
+        out = piv.select(sname.alias("series"), "ts", *[F.col(_quote(m)) for m in metrics])
         out, cols, preordered = apply_pipeline(out, req.apply, list(metrics), req.backward)
-        return self._limit(self._order(out, req, preordered), req)
+        return self._limit(self._order(out, req, cols, preordered), req)

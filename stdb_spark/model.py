@@ -376,15 +376,16 @@ def events_raw_ns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ts_src_bounds(df: DataFrame, lo_ns: int, hi_ns: int):
+def ts_src_bounds(df: DataFrame, lo_ns: int, hi_ns: int, dtypes: dict | None = None):
     """Conservative [lo_ns, hi_ns] bounds as a pushable predicate on the
     ``ts_src`` physical column (None when the column is absent).  Bounds
     are widened to the enclosing µs grid — the exact cut on the derived
     ns column stays in the plan, this predicate only exists to prune
-    row groups / pages at the scan."""
-    if "ts_src" not in df.columns:
+    row groups / pages at the scan.  ``dtypes`` is df's ``dict(dtypes)``
+    when the caller already holds it (saves the schema fetch)."""
+    dtype = (dtypes if dtypes is not None else dict(df.dtypes)).get("ts_src")
+    if dtype is None:
         return None
-    dtype = dict(df.dtypes)["ts_src"]
     lo_us, hi_us = lo_ns // 1000, -((-hi_ns) // 1000)
     if dtype.startswith("timestamp"):
         import datetime

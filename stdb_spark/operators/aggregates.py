@@ -33,57 +33,58 @@ AGG_OUTPUT_IS_TS = {
 }
 
 
+# a backward scan's 'first' is the latest point in time: the forward
+# 'last' (and likewise for the timestamps)
+_BACKWARD_NAMES = {
+    "first": "last",
+    "last": "first",
+    "first_timestamp": "last_timestamp",
+    "last_timestamp": "first_timestamp",
+}
+
+
 def agg_expr(
     func: str, backward: bool, value: str = "value", ts: str = "ts", exact: bool = False
 ) -> Column:
-    """One Catalyst aggregate expression per reference function.
+    """One Catalyst aggregate expression per reference function; only
+    the requested one is built.
 
     ``exact=True`` computes sum/mean through decimal(28,10) so the result
     is independent of partial-aggregation order — bit-reproducible across
     engines (used by the oracle-checked suite; default off for speed).
     """
     v, t = F.col(value), F.col(ts)
-    if exact:
-        sum_d = F.sum(v.cast("decimal(28,10)")).cast("double")
-        mean_d = F.sum(v.cast("decimal(28,10)")).cast("double") / F.count(v)
-    else:
-        sum_d = F.sum(v)
-        mean_d = F.avg(v)
-    first_s = F.min(F.struct(t, v))  # earliest ts, tie -> smallest value
-    last_s = F.max(F.struct(t, v))
-    minv_s = F.min(F.struct(v, t))  # smallest value, tie -> smallest ts
-    maxv_s = F.max(F.struct(v, t))
-    if backward:
-        # backward scan: 'first' is the latest point in time
-        first_s, last_s = last_s, first_s
-        first_ts, last_ts = F.max(t), F.min(t)
-    else:
-        first_ts, last_ts = F.min(t), F.max(t)
+
+    def sum_d():
+        return F.sum(v.cast("decimal(28,10)")).cast("double")
+
     table = {
-        "min": F.min(v),
-        "max": F.max(v),
-        "sum": sum_d,
-        "count": F.count(v).cast("double"),
-        "cnt": F.count(v).cast("double"),
-        "mean": mean_d,
-        "first": first_s.getField(value),
-        "last": last_s.getField(value),
-        "min_timestamp": minv_s.getField(ts).cast("double"),
-        "max_timestamp": maxv_s.getField(ts).cast("double"),
-        "first_timestamp": first_ts.cast("double"),
-        "last_timestamp": last_ts.cast("double"),
+        "min": lambda: F.min(v),
+        "max": lambda: F.max(v),
+        "sum": sum_d if exact else lambda: F.sum(v),
+        "count": lambda: F.count(v).cast("double"),
+        "cnt": lambda: F.count(v).cast("double"),
+        "mean": (lambda: sum_d() / F.count(v)) if exact else lambda: F.avg(v),
+        # earliest ts, tie -> smallest value (and the reverse for last)
+        "first": lambda: F.min(F.struct(t, v)).getField(value),
+        "last": lambda: F.max(F.struct(t, v)).getField(value),
+        # smallest value, tie -> smallest ts (likewise for the max)
+        "min_timestamp": lambda: F.min(F.struct(v, t)).getField(ts).cast("double"),
+        "max_timestamp": lambda: F.max(F.struct(v, t)).getField(ts).cast("double"),
+        "first_timestamp": lambda: F.min(t).cast("double"),
+        "last_timestamp": lambda: F.max(t).cast("double"),
         # --- extensions beyond the reference's 11 (SURVEY §2.4 "free in
         # Spark if exposed"): exact distinct count and exact linear-
         # interpolation percentiles (matching DuckDB quantile_cont)
-        "distinct_count": F.count_distinct(v).cast("double"),
-        "median": F.percentile(v, F.lit(0.5)),
-        "p90": F.percentile(v, F.lit(0.90)),
-        "p95": F.percentile(v, F.lit(0.95)),
-        "p99": F.percentile(v, F.lit(0.99)),
+        "distinct_count": lambda: F.count_distinct(v).cast("double"),
+        "median": lambda: F.percentile(v, F.lit(0.5)),
+        "p90": lambda: F.percentile(v, F.lit(0.90)),
+        "p95": lambda: F.percentile(v, F.lit(0.95)),
+        "p99": lambda: F.percentile(v, F.lit(0.99)),
     }
     if func not in table:
         raise ValueError(f"unknown aggregate function {func!r}")
-    return table[func]
+    return table[_BACKWARD_NAMES.get(func, func) if backward else func]()
 
 
 def oracle_agg_sql(

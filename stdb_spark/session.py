@@ -89,6 +89,12 @@ def get_spark(
         # spark.executor.memory.
         .config("spark.driver.memory", os.environ.get("STDB_SPARK_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
+        # PySpark otherwise captures the Python call site on every
+        # DataFrame/Column API call (~5 py4j round trips each, plus an
+        # IPython import probe).  It reads this flag once per process,
+        # from the first active session, so it must be set here and not
+        # at runtime.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

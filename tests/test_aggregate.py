@@ -551,3 +551,11 @@ def test_p95_histogram_within_bin_width_of_exact(spark):
         assert exact[k] - 1e-9 <= est <= exact[k] + 0.0100001 + 1e-9, (
             k, est, exact[k],
         )
+
+
+def test_agg_expr_rejects_unknown_function(spark):
+    from stdb_spark.operators.aggregates import agg_expr
+
+    for backward in (False, True):
+        with pytest.raises(ValueError, match="unknown aggregate function 'nope'"):
+            agg_expr("nope", backward)

@@ -100,6 +100,65 @@ def test_join_eval_expression(eng):
     assert all(abs(r.value) < 1e-9 for r in out)
 
 
+@pytest.fixture(scope="module")
+def dotted_eng(spark):
+    """cpu.user=0.1*ts, cpu.sys=0.2*ts over 2 hosts, ts in [100, 160);
+    cpu.sys drops every 3rd point — dotted metric names."""
+    from tests.conftest import make_samples
+
+    rows = []
+    for h in range(2):
+        tags = {"host": f"h{h}"}
+        for ts in range(100, 160):
+            rows.append(("cpu.user", tags, ts, 0.1 * ts))
+            if ts % 3 != 0:
+                rows.append(("cpu.sys", tags, ts, 0.2 * ts))
+    return Engine(spark, samples=make_samples(spark, rows))
+
+
+def test_join_dotted_metric_names(dotted_eng):
+    # a dotted name is one column, not a struct field — in the output
+    # projection and in the value filter alike
+    out = dotted_eng.query(
+        {
+            "join": ["cpu.user", "cpu.sys"],
+            "range": {"from": 100, "to": 120},
+            "where": {"host": "h0"},
+            "filter": {"cpu.user": {"ge": 11.05}},
+        }
+    ).collect()
+    assert [r.ts for r in out] == list(range(111, 120))
+    for r in out:
+        assert r.series == "cpu.user|cpu.sys host=h0"
+        assert r["cpu.user"] == pytest.approx(0.1 * r.ts)
+        if r.ts % 3 == 0:
+            assert r["cpu.sys"] is None
+        else:
+            assert r["cpu.sys"] == pytest.approx(0.2 * r.ts)
+
+
+def test_group_aggregate_join_dotted_metric_names(dotted_eng):
+    out = dotted_eng.query(
+        {
+            "group-aggregate-join": {
+                "step": "10",
+                "metric": ["cpu.user", "cpu.sys"],
+                "func": "max",
+            },
+            "range": {"from": 100, "to": 160},
+            "where": {"host": "h1"},
+            "filter": {"cpu.sys": {"gt": 25.0}},
+        }
+    ).collect()
+    # max cpu.sys of bucket b sits at b+9, or b+8 when 3 | b+9
+    assert [r.ts for r in out] == [120, 130, 140, 150]
+    for r in out:
+        assert r.series == "cpu.user:max|cpu.sys:max host=h1"
+        last = r.ts + 9
+        assert r["cpu.user"] == pytest.approx(0.1 * last)
+        assert r["cpu.sys"] == pytest.approx(0.2 * (last - (last % 3 == 0)))
+
+
 def test_asof_join_semantics(spark):
     from stdb_spark.operators.asof import asof_join
 

@@ -91,6 +91,47 @@ def test_join_pivot_is_single_pivot_not_selfjoin(spark):
     assert "BroadcastHashJoin" not in plan
 
 
+def test_join_pivot_single_hash_exchange_below_sort(spark):
+    # one conditional max per metric: one aggregation, one hash exchange
+    # (a pivot plans two); the small result then sorts in one task
+    plan = _plan(QUERIES["ts_join_pivot"](spark, SF))
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "rangepartitioning" not in plan, plan
+    assert plan.index("Sort [") < plan.index("Exchange hashpartitioning"), plan
+
+
+_SELECT_CLICK = {"select": "click", "range": {"from": 1704412800000000000, "to": 1705276800000000000}}
+
+
+def test_small_engine_select_sorts_in_one_job(spark):
+    """A small result sorts in one task: no range exchange, so no
+    RangePartitioner sample job re-running the scan — one job total."""
+    from stdb_spark.engine import Engine
+
+    eng = Engine(spark, samples=model.events_as_samples(spark, SF, keep_src=True))
+    df = eng.query(_SELECT_CLICK)
+    assert "rangepartitioning" not in _plan(df), _plan(df)
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-pin-small-select", "small select", False)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup("plan-pin-small-select")) == 1
+
+
+def test_forced_range_session_keeps_range_sort(spark):
+    # threshold <= 0 is the distributed regime, whatever the input size
+    from stdb_spark.engine import Engine
+
+    forced = spark.newSession()
+    forced.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    eng = Engine(forced, samples=model.events_as_samples(forced, SF, keep_src=True))
+    plan = _plan(eng.query(_SELECT_CLICK))
+    assert "rangepartitioning" in plan, plan
+
+
 def test_minhash_agg_reuses_repartition_exchange(spark):
     docs = model.load_table(spark, SF, "documents")
     from stdb_spark.functions import dedup
