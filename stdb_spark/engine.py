@@ -22,8 +22,9 @@ metric/tags columns so Parquet predicate pushdown applies; group-by keys
 are strings (canonical tag suffix) to keep every shuffle key sortable;
 aggregates are single Catalyst expressions so map-side partials apply;
 `join` aligns metrics with one conditional max per metric (one hash
-exchange, where a pivot plans two); the final ordering sorts small
-inputs in one task instead of range-partitioning them (see `_sort`).
+exchange, where a pivot plans two); the final ordering sorts inputs
+from small tables in one task instead of range-partitioning them (see
+`_sort`).
 """
 
 from __future__ import annotations
@@ -63,33 +64,45 @@ def _quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+# Largest input, in bytes of the bound tables' files, that sorts in one
+# task.  Paired runs on a 4-core VM (a table of 1-32 day partitions,
+# scanned whole; ten alternated pairs per size): the one-task sort wins
+# 10/10 for select and select-events up to 4.1 MB, select-events turns
+# at 6-8 MB and select at 10-15 MB, and group-aggregate, whose scan
+# stays parallel, wins or ties up to 79 MB.  On more cores the range
+# sort's scan spreads wider, so the turn comes earlier there.
+_ONE_TASK_SORT_BYTES = 4 << 20
+
+
 def _sort(df: DataFrame, *keys) -> DataFrame:
     """Total order over ``df`` in the regime its input size allows.
 
     Small inputs sort in ONE task: ``coalesce(1)`` reports
     SinglePartition, which satisfies the sort's ordered distribution,
-    so the plan has no range exchange — and no RangePartitioner sample
-    job, which re-runs the whole child plan, scan included.  "Small" is
-    the summed ``sizeInBytes`` of the optimized plan's leaves (the scan
-    size after partition pruning, an upper bound on what the sort
-    sees) at or under ``spark.sql.autoBroadcastJoinThreshold``.  Memory
-    bound: the one task sorts at most threshold-sized input, and
-    Spark's sort spills past memory.  Larger inputs, or a threshold
-    <= 0, keep the distributed range sort.
+    so the plan has no range exchange and no RangePartitioner sample
+    job (which re-runs the whole child plan, scan included).  Coalesce
+    is a narrow dependency, so the one task runs the whole stage above
+    the last exchange: for select and select-events the Parquet scan,
+    the filters and the apply windows; for aggregates the final merge.
 
-    The estimate is read off the Dataset that is returned, so its
-    ``collect`` reuses the optimized plan instead of optimizing again."""
-    out = df.coalesce(1).orderBy(*keys)
-    qe = out._jdf.queryExecution()
+    "Small" is the summed ``sizeInBytes`` of the analyzed plan's leaves
+    at or under ``_ONE_TASK_SORT_BYTES`` (or under
+    ``spark.sql.autoBroadcastJoinThreshold`` when that is smaller).  For
+    Parquet tables that is their whole compressed file size, before
+    partition pruning: an upper bound on what the scan reads, whatever
+    the range.  A threshold <= 0 keeps the distributed range sort for
+    every input.  The analyzed plan is built with every Dataset, so the
+    choice runs no optimizer pass of its own."""
+    qe = df._jdf.queryExecution()
     limit = qe.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
     if limit > 0:
-        leaves = qe.optimizedPlan().collectLeaves()
+        leaves = qe.analyzed().collectLeaves()
         size = sum(
             int(leaves.apply(i).stats().sizeInBytes())
             for i in range(leaves.size())
         )
-        if size <= limit:
-            return out
+        if size <= min(limit, _ONE_TASK_SORT_BYTES):
+            return df.coalesce(1).orderBy(*keys)
     return df.orderBy(*keys)
 
 

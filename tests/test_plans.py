@@ -132,6 +132,17 @@ def test_forced_range_session_keeps_range_sort(spark):
     assert "rangepartitioning" in plan, plan
 
 
+def test_table_over_one_task_cut_keeps_range_sort(spark, monkeypatch):
+    # the one task would scan the whole table: above the cut the scan
+    # stays spread over the range sort's tasks
+    from stdb_spark import engine
+
+    monkeypatch.setattr(engine, "_ONE_TASK_SORT_BYTES", 1024)
+    eng = engine.Engine(spark, samples=model.events_as_samples(spark, SF, keep_src=True))
+    plan = _plan(eng.query(_SELECT_CLICK))
+    assert "rangepartitioning" in plan, plan
+
+
 def test_minhash_agg_reuses_repartition_exchange(spark):
     docs = model.load_table(spark, SF, "documents")
     from stdb_spark.functions import dedup
