@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from stdb_spark.functions.text import tokens_col
+from stdb_spark.operators.graph import _persisted, _run_edge_kernel
 
 
 def _md5_long(c: Column, salt: str = "") -> Column:
@@ -796,11 +797,6 @@ def embedding_near_duplicates(
     )
 
 
-#: one-task cutoff for the connected-components kernel — same
-#: size-dispatch rationale as operators/graph.py:SINGLE_TASK_MAX_EDGES
-SINGLE_TASK_MAX_EDGES = 20_000_000
-
-
 def _cc_single_task_kernel():
     """mapInPandas kernel: vectorized hash-min label propagation with
     pointer jumping over one task's doubled edge list.  Labels are
@@ -814,14 +810,7 @@ def _cc_single_task_kernel():
         dfs = list(batches)
         if not dfs:
             return
-        # drop null endpoints BEFORE factorize: factorize codes null as
-        # -1, which would silently index the LAST node via numpy
-        # negative indexing — the distributed loop drops null keys
-        # through its joins, and bit-equality across regimes requires
-        # the kernel to match that
-        df = pd.concat(dfs, ignore_index=True).dropna(subset=["src", "dst"])
-        if df.empty:
-            return
+        df = pd.concat(dfs, ignore_index=True)
         codes, nodes = pd.factorize(
             pd.concat([df["src"], df["dst"]], ignore_index=True), sort=True
         )
@@ -849,13 +838,13 @@ def connected_components(
     src: str = "a",
     dst: str = "b",
     max_iter: int = 30,
-    single_task_max_edges: int = SINGLE_TASK_MAX_EDGES,
 ) -> DataFrame:
     """Cluster assignment over an undirected near-dup pair graph:
     (id, cluster_id) for every id that occurs in ``pairs``, where
     cluster_id is the smallest member id of its connected component —
     the transitive closure a real dedup pass needs (A~B and B~C must
     collapse into ONE cluster even if A~C was never a candidate pair).
+    Pairs with a null endpoint are dropped.
 
     Algorithm: hash-min label propagation (the MapReduce-era standard,
     cf. Kiveris et al., "Connected Components in MapReduce and Beyond").
@@ -870,117 +859,97 @@ def connected_components(
     localCheckpoint, otherwise the iterated join plan grows without
     bound (at cluster scale use a reliable checkpoint dir instead).
 
-    Below SINGLE_TASK_MAX_EDGES the whole propagation runs as ONE
-    Arrow-batched numpy task instead (vectorized min-label rounds with
-    pointer jumping) — no per-round shuffles or driver barriers, the
-    same size-dispatch the PageRank kernel uses
-    (operators/graph.py:SINGLE_TASK_MAX_EDGES).  The result is
-    identical by construction: cluster_id = min member id of the
-    component, independent of which algorithm finds it."""
-    spark = pairs.sparkSession
-    # null endpoints are meaningless in a pair graph and the two
-    # size-dispatched regimes would otherwise diverge on them (groupBy
-    # keeps a null group, factorize codes null as -1): drop them HERE so
-    # both regimes see the identical graph
-    pairs = pairs.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-    # persist the doubled edge list: without it every round's join (and
-    # the init fold) re-executes the CALLER's pair lineage — for the
-    # dedup suites that lineage is the whole MinHash-LSH banding
-    # pipeline, re-run once per propagation round (r5 perf review).
+    The size dispatch is the graph operators' shared one
+    (operators/graph.py: ``_run_edge_kernel`` and its
+    ``SINGLE_TASK_MAX_EDGES``): up to that many doubled edges the whole
+    propagation runs as ONE Arrow-batched numpy task instead
+    (vectorized min-label rounds with pointer jumping) — no per-round
+    shuffles or driver barriers.  The result is identical by
+    construction: cluster_id = min member id of the component,
+    independent of which algorithm finds it."""
     # Doubling via explode, not union: a union plants the caller's pair
     # lineage TWICE in the plan and the cache-fill job computes it twice
-    # (the pagerank edge-doubling discipline).
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src).alias("src"), F.col(dst).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(dst).alias("src"), F.col(src).alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .persist()
-    )
-    n_edges = edges.count()
-    if n_edges <= int(single_task_max_edges):
-        id_type = dict(edges.dtypes)["src"]
-        out = edges.repartition(1).mapInPandas(
-            _cc_single_task_kernel(),
-            f"id {id_type}, cluster_id {id_type}",
-        )
-        # materialize the single kernel task so the edge cache can be
-        # released without the caller's action re-running the (often
-        # expensive) candidate-pair lineage
-        out = out.localCheckpoint(eager=True)
-        edges.unpersist()
-        return out
-    # graph-scale exchanges: the per-round shuffles carry label rows,
-    # not the corpus.  Width is scoped PER-PLAN — the doubled edge list
-    # is hash-partitioned by src at an explicit width sized to the
-    # graph (~1M edges/task, floor 4), and every round's join reuses
-    # that layout (HashPartitioning(src) satisfies the join's required
-    # distribution, so the cached edge side never re-exchanges; only
-    # the small label side shuffles to match).  The session-global
-    # spark.sql.shuffle.partitions is never touched, so queries running
-    # concurrently on a shared session are unaffected — same discipline
-    # as pagerank_exact (operators/graph.py).
-    parts = max(
-        4,
-        min(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            n_edges // 1_000_000 + 1,
-        ),
-    )
-    edges2 = edges.repartition(parts, "src").persist()
-    edges2.count()  # fill the partitioned cache from the unpartitioned one
-    edges.unpersist()  # ...then release it: one copy cached, not two
-    try:
-        # init folds the first propagation round in: label(v) = min(v, N(v))
-        # (one groupBy instead of a distinct + a full join round)
-        labels = (
-            edges2.groupBy("src")
-            .agg(F.min("dst").alias("_m"))
-            .select(F.col("src").alias("id"), F.least("src", "_m").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        prev_sum = labels.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        for _ in range(max_iter):
-            prop = edges2.join(labels, edges2.src == labels.id).select(
-                F.col("dst").alias("id"), F.col("lbl")
+    # (the pagerank edge-doubling discipline).  The dispatch persists
+    # the doubled list: without it every round's join (and the init
+    # fold) re-executes the CALLER's pair lineage — for the dedup suites
+    # that lineage is the whole MinHash-LSH banding pipeline.
+    edges = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(src).alias("src"), F.col(dst).alias("dst")),
+                F.struct(F.col(dst).alias("src"), F.col(src).alias("dst")),
             )
+        ).alias("e")
+    ).select("e.src", "e.dst")
+    id_type = dict(edges.dtypes)["src"]
+
+    def distributed(edges: DataFrame, n_edges: int) -> DataFrame:
+        # graph-scale exchanges: the per-round shuffles carry label
+        # rows, not the corpus.  Width is scoped PER-PLAN — the doubled
+        # edge list is hash-partitioned by src at an explicit width
+        # sized to the graph (~1M edges/task, floor 4), and every
+        # round's join reuses that layout (HashPartitioning(src)
+        # satisfies the join's required distribution, so the cached
+        # edge side never re-exchanges; only the small label side
+        # shuffles to match).  The session-global
+        # spark.sql.shuffle.partitions is never touched.
+        parts = max(
+            4,
+            min(
+                int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+                n_edges // 1_000_000 + 1,
+            ),
+        )
+        with _persisted(edges.repartition(parts, "src")) as edges2:
+            # fill the partitioned cache from the unpartitioned one,
+            # then release that: one copy cached, not two
+            edges2.count()
+            edges.unpersist()
+            # init folds the first propagation round in: label(v) =
+            # min(v, N(v)) (one groupBy instead of a distinct + a full
+            # join round)
             labels = (
-                labels.select("id", "lbl")
-                .union(prop)
-                .repartition(parts, "id")
-                .groupBy("id")
-                .agg(F.min("lbl").alias("lbl"))
+                edges2.groupBy("src")
+                .agg(F.min("dst").alias("_m"))
+                .select(
+                    F.col("src").alias("id"), F.least("src", "_m").alias("lbl")
+                )
                 .localCheckpoint(eager=True)
             )
-            # localCheckpoint blocks are RDD-level persisted, not
-            # CacheManager-tracked (unpersist() on the DataFrame is a
-            # no-op for them); the previous round's blocks are
-            # reclaimed by the ContextCleaner once the old `labels`
-            # binding is dropped by this rebind.
-            cur_sum = labels.agg(
+            prev_sum = labels.agg(
                 F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
             ).collect()[0]["s"]
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-    finally:
-        # inside finally: an exception mid-propagation must not leave
-        # the (persisted) edge lists pinned in executor storage for the
-        # session's life
-        edges2.unpersist()
-        edges.unpersist()
-    return labels.select(F.col("id"), F.col("lbl").alias("cluster_id"))
+            for _ in range(max_iter):
+                prop = edges2.join(labels, edges2.src == labels.id).select(
+                    F.col("dst").alias("id"), F.col("lbl")
+                )
+                labels = (
+                    labels.select("id", "lbl")
+                    .union(prop)
+                    .repartition(parts, "id")
+                    .groupBy("id")
+                    .agg(F.min("lbl").alias("lbl"))
+                    .localCheckpoint(eager=True)
+                )
+                # localCheckpoint blocks are RDD-level persisted, not
+                # CacheManager-tracked (unpersist() on the DataFrame is
+                # a no-op for them); the previous round's blocks are
+                # reclaimed by the ContextCleaner once the old `labels`
+                # binding is dropped by this rebind.
+                cur_sum = labels.agg(
+                    F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
+                ).collect()[0]["s"]
+                if cur_sum == prev_sum:
+                    break
+                prev_sum = cur_sum
+        return labels.select(F.col("id"), F.col("lbl").alias("cluster_id"))
+
+    return _run_edge_kernel(
+        edges,
+        _cc_single_task_kernel(),
+        f"id {id_type}, cluster_id {id_type}",
+        distributed,
+    )
 
 
 def paragraph_dedup(

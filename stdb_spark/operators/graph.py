@@ -31,6 +31,8 @@ scale use a reliable checkpoint dir.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,8 +52,66 @@ BROADCAST_RANKS_MAX_NODES = 1_000_000
 #: driver barriers, same size-dispatch philosophy as Spark's own
 #: broadcast-join threshold.  Above it, the distributed per-round
 #: join+aggregate loop runs.  The arithmetic is identical either way
-#: (int64 floor divisions and sums), so results are bit-equal.
+#: (int64 floor divisions and sums), so results are bit-equal.  The one
+#: threshold for every kernel here and for dedup's connected components.
 SINGLE_TASK_MAX_EDGES = 20_000_000
+
+
+@contextmanager
+def _persisted(df: DataFrame):
+    """``df`` persisted for the ``with`` body and released on exit, also
+    when the body raises — an error must not leave executor storage
+    pinned for the session's life."""
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def _run_edge_kernel(
+    edges: DataFrame,
+    kernel,
+    schema: str,
+    distributed,
+    upper_bound: int | None = None,
+) -> DataFrame:
+    """The size dispatch every graph operator shares.  ``edges`` is a
+    two-column frame; rows with a null endpoint are dropped first, so
+    both regimes see the identical graph (a null would otherwise be a
+    group of its own in the distributed plan and code -1 in a kernel's
+    ``pd.factorize``).
+
+    Graphs of at most :data:`SINGLE_TASK_MAX_EDGES` edges run ``kernel``
+    (a mapInPandas function emitting ``schema``) in ONE task; larger
+    ones run ``distributed(e, n_edges)`` over the persisted edge list.
+    Deciding needs a count, which also fills the edge cache the
+    distributed loop reuses.  A caller that already knows an
+    ``upper_bound`` on the edge count at or under the threshold skips
+    the persist and the count: the kernel job is then the only pass
+    over the caller's edge lineage.
+
+    Both regimes return a materialized frame (the kernel's eager local
+    checkpoint; each distributed loop checkpoints or collects its last
+    round), so releasing the edge cache on return recomputes nothing.
+    The kernels therefore never see a null endpoint."""
+    src, dst = edges.columns
+    e = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
+
+    def run_kernel(df: DataFrame) -> DataFrame:
+        return (
+            df.repartition(1)
+            .mapInPandas(kernel, schema)
+            .localCheckpoint(eager=True)
+        )
+
+    if upper_bound is not None and upper_bound <= SINGLE_TASK_MAX_EDGES:
+        return run_kernel(e)
+    with _persisted(e) as e:
+        n_edges = e.count()
+        if n_edges <= SINGLE_TASK_MAX_EDGES:
+            return run_kernel(e)
+        return distributed(e, n_edges)
 
 
 def _pagerank_single_task_kernel(
@@ -69,14 +129,7 @@ def _pagerank_single_task_kernel(
         dfs = list(batches)
         if not dfs:
             return
-        # drop null endpoints BEFORE factorize: factorize codes null as
-        # -1, which would silently index the LAST node (numpy negative
-        # indexing) in outdeg/pr lookups — the distributed loop drops
-        # null keys through its joins, and the regimes must stay
-        # bit-equal
-        df = pd.concat(dfs, ignore_index=True).dropna(subset=["src", "dst"])
-        if df.empty:
-            return
+        df = pd.concat(dfs, ignore_index=True)
         codes, nodes = pd.factorize(
             pd.concat([df["src"], df["dst"]], ignore_index=True), sort=True
         )
@@ -105,251 +158,122 @@ def pagerank_exact(
     iterations: int = 5,
     damp_num: int = 85,
     damp_den: int = 100,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    checkpoint: bool = True,
-    checkpoint_every: int = 2,
     early_exit: bool = True,
-    single_task_max_edges: int = SINGLE_TASK_MAX_EDGES,
-    stats: dict | None = None,
-    edge_layout: str = "cache",
-    bucket_table: str | None = None,
     single_task_hint: int | None = None,
 ) -> DataFrame:
-    """Exact integer fixed-point PageRank over a directed edge list.
+    """Exact integer fixed-point PageRank over a directed (src, dst)
+    edge list.
 
     Returns (node, pr) with ``pr`` in BIGINT SCALE units.  Every node
     appearing as a source or destination participates; dangling nodes
     (no out-edges) simply contribute nothing (their mass evaporates,
     again deterministically).  ``damp_num/damp_den`` is the damping
-    factor as an exact rational (default 85/100).
+    factor as an exact rational (default 85/100).  Edges with a null
+    endpoint are dropped.
 
-    Wall-time shape (r5 review: rounds x scheduling latency dominated
-    locally).  Three size-dispatched regimes:
+    Three size-dispatched regimes, bit-equal by construction:
 
-    - edges <= ``single_task_max_edges``: ONE Arrow-batched numpy task
-      runs the whole loop (``_pagerank_single_task_kernel``) — no
-      per-round exchanges, no driver barriers, no broadcast jobs.  One
-      dispatch action (e.count, which also fills the edge cache) + one
-      materialization.  This is worker-side mapInPandas, not a driver
-      collect; the threshold bounds the task's memory exactly like a
-      broadcast-join threshold does.
+    - edges <= SINGLE_TASK_MAX_EDGES: ONE Arrow-batched numpy task runs
+      the whole loop (``_pagerank_single_task_kernel``) — no per-round
+      exchanges or driver barriers (see :func:`_run_edge_kernel`).
     - nodes <= BROADCAST_RANKS_MAX_NODES: distributed loop, rank table
-      broadcast each round, so the cached edge list never exchanges.
-    - else: cluster scale — one co-partitioned join + one rank exchange
-      per round, eager localCheckpoints every ``checkpoint_every``
-      rounds to keep the plan flat.  Shuffle widths are scoped per-plan
-      via explicit repartition (the session-global shuffle.partitions
-      is never touched — concurrent queries on a shared session are
-      unaffected).
+      broadcast each round, so the cached edge list never exchanges;
+      the whole loop is one lineage materialized by one job.
+    - else: cluster scale — the degree-annotated edge list is
+      src-partitioned and cached once, then one co-partitioned join +
+      one rank exchange per round, with an eager localCheckpoint every
+      2 rounds to keep the plan flat.  Shuffle widths are scoped
+      per-plan via explicit repartition (the session-global
+      shuffle.partitions is never touched).
 
-    ``edge_layout`` applies to the cluster regime only and picks where
-    the degree-annotated doubled edge list lives across the rounds:
-    ``"cache"`` (default) src-repartitions and persists it in executor
-    storage; ``"bucketed"`` writes it ONCE as a Hive-bucketed managed
-    table on src (``bucket_table``, same bucket count as the join
-    width, src-sorted buckets) and every round scans the bucket files —
-    the join still runs exchange-free on the edge side but pins zero
-    executor storage, trading memory pressure for scan IO.  The table
-    is dropped before returning; the ranks are materialized first in
-    BOTH checkpoint modes (with ``checkpoint=False`` a final
-    localCheckpoint is forced, since the lazy plan would otherwise
-    dangle over the dropped table).  ``bucket_table=None`` (default)
-    derives a per-invocation unique name so concurrent bucketed runs
-    on a shared warehouse cannot clobber each other.
-    Probed at sf10 in r10 (VERDICT r9 directive #6, BENCH_NOTES) —
-    arithmetic and results are bit-identical either way.
+    ``early_exit`` (kernel only): integer fixed point makes rank
+    equality exact, so when round k+1 equals round k bit-for-bit every
+    later round is identical and the loop stops.  The check compares
+    CONSECUTIVE rounds only: a gap-k comparison would certify a k-cycle,
+    not a fixed point, and truncated integer maps can in principle
+    cycle.  The distributed loop always runs every round, which gives
+    the same ranks.
 
-    ``early_exit``: integer fixed point makes rank equality exact, so
-    when round k+1 equals round k bit-for-bit every later round is
-    identical and the loop stops — the dedup-CC convergence pattern
-    (functions/dedup.py:500-530).  The check compares CONSECUTIVE
-    rounds only: a gap-k comparison would certify a k-cycle, not a
-    fixed point, and truncated integer maps can in principle cycle.
-    In-kernel it is a free numpy comparison per round; in the
-    distributed loop it runs only where consecutive rounds are both
-    materialized (``checkpoint_every == 1``).  ``stats``, when given,
-    records ``rounds_run`` (distributed path only — the kernel's round
-    count stays worker-side).
+    ``single_task_hint``: a caller-supplied UPPER BOUND on the edge
+    count (e.g. 2x a fact table's metadata-only count).  When it fits
+    the kernel, the dispatch count — a full evaluation of the caller's
+    edge lineage just to pick a regime — is skipped.  actual <= hint <=
+    threshold keeps the task exactly as memory-bounded as a counted
+    dispatch.
     """
-    spark = edges.sparkSession
-    # null endpoints are meaningless in an edge list and the regimes
-    # would diverge on them (groupBy keeps a null group; factorize codes
-    # null as -1 → negative indexing): drop them HERE so every regime
-    # sees the identical graph
-    e0 = edges.filter(
-        F.col(src_col).isNotNull() & F.col(dst_col).isNotNull()
-    ).select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    # ``single_task_hint``: a caller-supplied UPPER BOUND on the edge
-    # count (e.g. 2x a fact table's metadata-only count).  When the
-    # bound already fits the kernel, the count-dispatch action — a full
-    # evaluation of the caller's edge lineage just to pick a regime —
-    # is skipped and the kernel job is the ONLY pass over the edge
-    # build (r12: the pagerank edge join+distinct cost ~0.9 s of the
-    # query's 2.3 s, and ran twice: once for the dispatch count, once
-    # into the kernel.  guide §1.2 "don't compute things you throw
-    # away").  The bound is conservative: actual <= hint <= threshold
-    # keeps the single task exactly as memory-bounded as the counted
-    # dispatch.
-    if (
-        single_task_hint is not None
-        and single_task_hint <= int(single_task_max_edges)
-    ):
-        id_type = dict(e0.dtypes)["src"]
-        pr = e0.repartition(1).mapInPandas(
-            _pagerank_single_task_kernel(
-                iterations, damp_num, damp_den, early_exit
-            ),
-            f"node {id_type}, pr long",
-        )
-        if checkpoint:
-            pr = pr.localCheckpoint(eager=True)
-        if stats is not None:
-            stats["rounds_run"] = None
-        return pr
-    e = e0.persist()
-    # one scalar action: size dispatch + cache fill
-    n_edges = e.count()
-    if n_edges <= int(single_task_max_edges):
-        # node ids keep the caller's type (string suppliers, long doc
-        # ids, ...) — a hard-coded schema would crash Arrow conversion
-        id_type = dict(e.dtypes)["src"]
-        pr = e.repartition(1).mapInPandas(
-            _pagerank_single_task_kernel(
-                iterations, damp_num, damp_den, early_exit
-            ),
-            f"node {id_type}, pr long",
-        )
-        if checkpoint:
-            # materialize the single kernel task so the edge cache can
-            # be released without the caller's action recomputing it
-            pr = pr.localCheckpoint(eager=True)
-        if stats is not None:
-            stats["rounds_run"] = None
-        e.unpersist()
-        return pr
-    nodes = (
-        e.select(
+    e = edges.select("src", "dst")
+    # node ids keep the caller's type (string suppliers, long doc ids,
+    # ...) — a hard-coded schema would crash Arrow conversion
+    id_type = dict(e.dtypes)["src"]
+
+    def distributed(e: DataFrame, n_edges: int) -> DataFrame:
+        spark = e.sparkSession
+        nodes_all = e.select(
             F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
         ).distinct()
-    ).persist()
-    n = nodes.count()
-    deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    broadcast_ranks = n <= BROADCAST_RANKS_MAX_NODES
-    ed = e.join(deg, "src")
-    ed_bucketed = False
-    if not broadcast_ranks:
-        # src-partitioned once, sized to the graph (~1M edges/task,
-        # floor 4) with an EXPLICIT width — not the session conf;
-        # every iteration's hash join reuses this layout
-        parts = max(
-            4,
-            min(
-                int(spark.conf.get("spark.sql.shuffle.partitions")),
-                n_edges // 1_000_000 + 1,
-            ),
-        )
-        if edge_layout == "bucketed":
-            import uuid
-
-            from stdb_spark.sources import bucketing
-
-            # per-invocation unique table name unless the caller pins
-            # one: two concurrent bucketed runs on a shared session /
-            # warehouse must not overwrite-then-drop each other's edge
-            # table mid-loop
-            if bucket_table is None:
-                bucket_table = (
-                    f"pagerank_edges_bucketed_{uuid.uuid4().hex[:12]}"
+        with _persisted(nodes_all) as nodes:
+            n = nodes.count()
+            deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
+            broadcast_ranks = n <= BROADCAST_RANKS_MAX_NODES
+            ed = e.join(deg, "src")
+            if not broadcast_ranks:
+                # src-partitioned once, sized to the graph (~1M
+                # edges/task, floor 4) with an EXPLICIT width — not the
+                # session conf; every iteration's hash join reuses it
+                parts = max(
+                    4,
+                    min(
+                        int(spark.conf.get("spark.sql.shuffle.partitions")),
+                        n_edges // 1_000_000 + 1,
+                    ),
                 )
-            # one write-side cluster pass; the per-round join then
-            # scans src-sorted bucket files exchange-free with zero
-            # executor storage pinned across the rounds
-            bucketing.write_bucketed(
-                ed, bucket_table, "src", n_buckets=parts, sort_cols=("src",)
-            )
-            ed = spark.table(bucket_table)
-            ed_bucketed = True
-        else:
-            ed = ed.repartition(parts, "src")
-    if not ed_bucketed:
-        ed = ed.persist()
-    teleport = (SCALE * (damp_den - damp_num)) // (damp_den * n)
-    pr = nodes.withColumn("pr", F.lit(SCALE // n))
-    rounds_run = int(iterations)
-    for it in range(int(iterations)):
-        rank_side = F.broadcast(pr) if broadcast_ranks else pr
-        contribs = (
-            ed.join(rank_side, ed.src == pr.node)
-            .select(
-                "dst",
-                F.expr(
-                    f"(pr * {damp_num}L) div ({damp_den}L * outdeg)"
-                ).alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
-        )
-        new_pr = (
-            nodes.join(contribs, nodes.node == contribs.dst, "left")
-            .select(
-                "node",
-                (F.lit(teleport) + F.coalesce(F.col("s"), F.lit(0))).alias(
-                    "pr"
-                ),
-            )
-        )
-        if (
-            checkpoint
-            and not broadcast_ranks
-            and (
-                (it + 1) % int(checkpoint_every) == 0
-                or it + 1 == int(iterations)
-            )
-        ):
-            # eager: materialize up to here so the iterated plan stays
-            # flat (same discipline as dedup's CC).  Superseded
-            # checkpoint blocks are RDD-level persisted and reclaimed
-            # by the ContextCleaner when their DataFrame is dropped.
-            new_pr = new_pr.localCheckpoint(eager=True)
-            converged = (
-                early_exit
-                and int(checkpoint_every) == 1
-                and it + 1 < int(iterations)
-                and new_pr.join(
-                    pr.withColumnRenamed("pr", "_prev"), "node"
-                )
-                .filter(F.col("pr") != F.col("_prev"))
-                .isEmpty()
-            )
-            if converged:
-                pr = new_pr
-                rounds_run = it + 1
-                break
-        pr = new_pr
-    if broadcast_ranks and checkpoint:
-        # ONE materialization job runs every round of the single
-        # lineage back-to-back (each round's BroadcastExchange computes
-        # inline), so the caches can be released below without the
-        # caller's later action recomputing the edge join per round
-        pr = pr.localCheckpoint(eager=True)
-    if stats is not None:
-        stats["rounds_run"] = rounds_run
-    # release the edge/node caches: with checkpoint=True the final
-    # ranks are already materialized, so nothing is recomputed and
-    # nothing stays pinned for the session's life
-    e.unpersist()
-    if ed_bucketed:
-        if not checkpoint:
-            # the lazy rank plan still references spark.table(
-            # bucket_table); dropping it first would break every later
-            # action on the result — materialize before the DROP
-            pr = pr.localCheckpoint(eager=True)
-        spark.sql(f"DROP TABLE IF EXISTS `{bucket_table}`")
-    else:
-        ed.unpersist()
-    nodes.unpersist()
-    return pr
+                ed = ed.repartition(parts, "src")
+            with _persisted(ed) as ed:
+                teleport = (SCALE * (damp_den - damp_num)) // (damp_den * n)
+                pr = nodes.withColumn("pr", F.lit(SCALE // n))
+                for it in range(int(iterations)):
+                    rank_side = F.broadcast(pr) if broadcast_ranks else pr
+                    contribs = (
+                        ed.join(rank_side, ed.src == pr.node)
+                        .select(
+                            "dst",
+                            F.expr(
+                                f"(pr * {damp_num}L) div ({damp_den}L * outdeg)"
+                            ).alias("c"),
+                        )
+                        .groupBy("dst")
+                        .agg(F.sum("c").alias("s"))
+                    )
+                    pr = nodes.join(
+                        contribs, nodes.node == contribs.dst, "left"
+                    ).select(
+                        "node",
+                        (
+                            F.lit(teleport) + F.coalesce(F.col("s"), F.lit(0))
+                        ).alias("pr"),
+                    )
+                    if not broadcast_ranks and (
+                        (it + 1) % 2 == 0 or it + 1 == int(iterations)
+                    ):
+                        # eager: materialize up to here so the iterated
+                        # plan stays flat.  Superseded checkpoint blocks
+                        # are reclaimed by the ContextCleaner when their
+                        # DataFrame is dropped.
+                        pr = pr.localCheckpoint(eager=True)
+                if broadcast_ranks:
+                    # ONE job runs every round of the single lineage
+                    # back-to-back (each round's BroadcastExchange
+                    # computes inline) before the caches are released
+                    pr = pr.localCheckpoint(eager=True)
+        return pr
+
+    return _run_edge_kernel(
+        e,
+        _pagerank_single_task_kernel(iterations, damp_num, damp_den, early_exit),
+        f"node {id_type}, pr long",
+        distributed,
+        upper_bound=single_task_hint,
+    )
 
 
 def pagerank_oracle_sql(
@@ -405,9 +329,7 @@ def _lpa_single_task_kernel(k_iter: int):
         dfs = list(batches)
         if not dfs:
             return
-        df = pd.concat(dfs, ignore_index=True).dropna(subset=["a", "b"])
-        if df.empty:
-            return
+        df = pd.concat(dfs, ignore_index=True)
         codes, nodes = pd.factorize(
             pd.concat([df["a"], df["b"]], ignore_index=True), sort=True
         )
@@ -481,11 +403,7 @@ def lpa_round_plan(edges: DataFrame) -> DataFrame:
     )
 
 
-def label_propagation_exact(
-    edges: DataFrame,
-    k_iter: int = 4,
-    single_task_max_edges: int = SINGLE_TASK_MAX_EDGES,
-) -> DataFrame:
+def label_propagation_exact(edges: DataFrame, k_iter: int = 4) -> DataFrame:
     """(id, community) after ``k_iter`` SYNCHRONOUS label-propagation
     rounds (Raghavan et al., Phys. Rev. E 76, 2007) made fully
     deterministic by spec — the community-detection companion to
@@ -497,7 +415,8 @@ def label_propagation_exact(
     whole trajectory replays bit-for-bit as unrolled SQL CTEs.
 
     ``edges``: (a, b) undirected with a != b, deduplicated; both
-    directions are expanded internally.
+    directions are expanded internally.  Edges with a null endpoint
+    are dropped.
 
     Scale shape: each round is one join of the label table against the
     directed edge list (labels keyed by id, a broadcast below the usual
@@ -505,52 +424,42 @@ def label_propagation_exact(
     one per-id window pick; k_iter is a small constant, and rounds only
     ever merge communities.
 
-    Size dispatch (same thresholds as :func:`pagerank_exact`): below
-    ``single_task_max_edges`` the whole loop runs as ONE Arrow-batched
-    numpy task (``_lpa_single_task_kernel``) — no per-round exchanges
-    or driver barriers; the arithmetic (integer counts + (count desc,
-    label asc) pick) is identical, so the regimes are bit-equal.
-    Either way the input edge list is persisted for the duration (one
-    count fills it — without this every round's join re-executes the
-    CALLER's lineage, e.g. relsuite's co-purchase self-join, ~k_iter+1
-    times; r8 judge finding #1) and the result is materialized with an
-    eager localCheckpoint before the cache is released."""
-    e = (
-        edges.filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .select("a", "b")
-        .persist()
-    )
-    n_edges = e.count()  # one scalar action: size dispatch + cache fill
-    if n_edges <= int(single_task_max_edges):
-        id_type = dict(e.dtypes)["a"]
-        out = e.repartition(1).mapInPandas(
-            _lpa_single_task_kernel(k_iter),
-            f"id {id_type}, community {id_type}",
+    Size dispatch through :func:`_run_edge_kernel`: up to
+    SINGLE_TASK_MAX_EDGES the whole loop runs as ONE Arrow-batched
+    numpy task (``_lpa_single_task_kernel``); the arithmetic (integer
+    counts + (count desc, label asc) pick) is identical, so the regimes
+    are bit-equal.  Above it, the persisted edge list feeds every round
+    — without the cache each round's join re-executes the CALLER's
+    lineage, e.g. relsuite's co-purchase self-join."""
+    e = edges.select("a", "b")
+    id_type = dict(e.dtypes)["a"]
+
+    def distributed(e: DataFrame, n_edges: int) -> DataFrame:
+        both_dirs = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
+            e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
         )
-        out = out.localCheckpoint(eager=True)
-        e.unpersist()
-        return out
-    both = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    ).persist()
-    labels = (
-        both.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("lbl"))
+        with _persisted(both_dirs) as both:
+            labels = (
+                both.select(F.col("src").alias("id"))
+                .distinct()
+                .select("id", F.col("id").alias("lbl"))
+            )
+            for _ in range(k_iter):
+                # eager per-round cut: the iterated join+window plan
+                # would otherwise grow without bound.  localCheckpoint
+                # blocks are RDD-level persisted, not CacheManager-
+                # tracked; the previous round's blocks are reclaimed by
+                # the ContextCleaner once the old `labels` binding is
+                # dropped at this rebind.
+                labels = _lpa_round(both, labels).localCheckpoint(eager=True)
+        return labels.select("id", F.col("lbl").alias("community"))
+
+    return _run_edge_kernel(
+        e,
+        _lpa_single_task_kernel(k_iter),
+        f"id {id_type}, community {id_type}",
+        distributed,
     )
-    for _ in range(k_iter):
-        # eager per-round cut: the iterated join+window plan would
-        # otherwise grow without bound (same discipline as
-        # pagerank_exact / dedup CC).  localCheckpoint blocks are
-        # RDD-level persisted, not CacheManager-tracked, so there is
-        # no unpersist() to call — the previous round's blocks are
-        # reclaimed by the ContextCleaner once the old `labels`
-        # binding is dropped at this rebind.
-        labels = _lpa_round(both, labels).localCheckpoint(eager=True)
-    out = labels.select("id", F.col("lbl").alias("community"))
-    both.unpersist()
-    e.unpersist()
-    return out
 
 
 def _triangle_single_task_kernel():
@@ -573,16 +482,7 @@ def _triangle_single_task_kernel():
         for pdf in batches:
             acc_a.append(pdf["a"].to_numpy())
             acc_b.append(pdf["b"].to_numpy())
-        out_schema = {
-            "n_nodes": "int64",
-            "n_edges": "int64",
-            "n_wedges": "int64",
-            "n_triangles": "int64",
-        }
         if not acc_a:
-            yield pd.DataFrame(
-                {k: np.array([0], dtype=v) for k, v in out_schema.items()}
-            )
             return
         a = np.concatenate(acc_a)
         b = np.concatenate(acc_b)
@@ -724,10 +624,10 @@ def triangle_plan(edges: DataFrame) -> DataFrame:
     return tri.agg(F.count("*").cast("long").alias("n_triangles"))
 
 
-def triangle_count_exact(
-    edges: DataFrame,
-    single_task_max_edges: int = SINGLE_TASK_MAX_EDGES,
-) -> DataFrame:
+_CENSUS = "n_nodes long, n_edges long, n_wedges long, n_triangles long"
+
+
+def triangle_count_exact(edges: DataFrame) -> DataFrame:
     """Exact triangle / wedge counting by DEGREE ORIENTATION — the
     standard shuffle-bounded plan (Cohen 2009; GraphX's triangleCount
     uses the same idea): orient every undirected edge from its
@@ -740,94 +640,75 @@ def triangle_count_exact(
     intermediate to m^1.5 worst-case — the 100 TB discipline.  All
     integer arithmetic; the closure ratio is one final double division.
 
-    ``edges``: undirected, one row per edge, columns (a, b) with a < b.
-    Returns one row: n_nodes, n_edges, n_wedges, n_triangles,
-    closure_ratio = 3 * triangles / wedges.
+    ``edges``: undirected, one row per edge, columns (a, b) with a < b;
+    edges with a null endpoint are dropped.  Returns one row: n_nodes,
+    n_edges, n_wedges, n_triangles, closure_ratio = 3 * triangles /
+    wedges.  Up to SINGLE_TASK_MAX_EDGES the census runs in one numpy
+    task (:func:`_run_edge_kernel`; see _triangle_single_task_kernel
+    for the identical-result argument).
     """
-    # persist the edge list FIRST and fill it with one count: deg, da,
-    # db and ori all derive from e, so without the cache the caller's
-    # edge lineage (e.g. relsuite's co-purchase self-join + groupBy)
-    # re-executes once per derivation — r8 judge finding #2.  deg is
-    # likewise persisted (used by the orientation join twice and the
-    # final wedge aggregate).
-    e0 = edges.select("a", "b").persist()
-    n_edges = e0.count()
-    spark_ = edges.sparkSession
-    if n_edges == 0:
-        # a fully empty edge set can plan to ZERO partitions, in which
-        # case the kernel function never runs — emit the degenerate row
-        # directly (closure_ratio 0.0, the oracle's CASE-guard shape)
-        e0.unpersist()
-        return spark_.createDataFrame(
-            [(0, 0, 0, 0, 0.0)],
-            "n_nodes long, n_edges long, n_wedges long, n_triangles long, "
-            "closure_ratio double",
-        )
-    if n_edges <= int(single_task_max_edges):
-        # one Arrow-batched numpy task computes the whole census — no
-        # per-derivation shuffles, no AQE job round-trips (the
-        # PageRank/CC size dispatch; see _triangle_single_task_kernel
-        # for the identical-result argument)
-        row = (
-            e0.repartition(1)
-            .mapInPandas(
-                _triangle_single_task_kernel(),
-                "n_nodes long, n_edges long, n_wedges long, n_triangles long",
-            )
-            .collect()[0]
-        )
-        e0.unpersist()
-        n_w, n_t = int(row["n_wedges"]), int(row["n_triangles"])
-        ratio = 3.0 * float(n_t) / float(n_w) if n_w else 0.0
-        return spark_.createDataFrame(
-            [(int(row["n_nodes"]), int(row["n_edges"]), n_w, n_t, ratio)],
-            "n_nodes long, n_edges long, n_wedges long, n_triangles long, "
-            "closure_ratio double",
-        )
-    # scale-adaptive width (the pagerank_exact discipline): ~1M edges
-    # per task.  The caller's edge lineage usually leaves 32+ cached
-    # partitions behind; every downstream map stage (deg, orientation,
-    # wedge join) would otherwise run that many near-empty tasks per
-    # stage — pure scheduling overhead on small graphs, and on big
-    # graphs the explicit width keeps the wedge join's exchanges sized
-    # to the data instead of the session conf (guide §2.2).
-    parts = max(
-        1,
-        min(
-            int(spark_.conf.get("spark.sql.shuffle.partitions")),
-            n_edges // 1_000_000 + 1,
-        ),
-    )
-    e = e0.repartition(parts).persist()
-    deg = _degrees(e).persist()
-    ori = _orient(e, deg)
-    ori.persist()
-    tri = _close_wedges(ori)
-    # ONE action for all four scalars: the three aggregates are 1-row
-    # DataFrames crossJoined (each crossJoin side is a broadcast of a
-    # single row), so the triangle join, the edge count and the degree
-    # stats all materialize in a single job instead of three separate
-    # scheduling round-trips
-    stats = (
-        deg.agg(
-            F.count("*").cast("long").alias("n_nodes"),
-            F.sum(F.expr("deg * (deg - 1) div 2"))
-            .cast("long")
-            .alias("n_wedges"),
-        )
-        .crossJoin(ori.agg(F.count("*").cast("long").alias("n_edges")))
-        .crossJoin(tri.agg(F.count("*").cast("long").alias("n_triangles")))
-        .collect()[0]
-    )
-    ori.unpersist()
-    deg.unpersist()
-    e.unpersist()
-    e0.unpersist()
     spark = edges.sparkSession
-    n_wedges = int(stats["n_wedges"] or 0)
-    n_tri = int(stats["n_triangles"])
-    ratio = 3.0 * float(n_tri) / float(n_wedges) if n_wedges else 0.0
+
+    def distributed(e: DataFrame, n_edges: int) -> DataFrame:
+        # scale-adaptive width: ~1M edges per task.  The caller's edge
+        # lineage usually leaves 32+ cached partitions behind; every
+        # downstream map stage (deg, orientation, wedge join) would
+        # otherwise run that many near-empty tasks per stage, and on
+        # big graphs the explicit width keeps the wedge join's
+        # exchanges sized to the data instead of the session conf.
+        parts = max(
+            1,
+            min(
+                int(spark.conf.get("spark.sql.shuffle.partitions")),
+                n_edges // 1_000_000 + 1,
+            ),
+        )
+        # deg feeds both orientation joins and the wedge aggregate; ori
+        # feeds the wedge self-join, the closing probe and the edge count
+        with _persisted(e.repartition(parts)) as ep, _persisted(
+            _degrees(ep)
+        ) as deg, _persisted(_orient(ep, deg)) as ori:
+            # ONE action for all four scalars: the three 1-row
+            # aggregates are crossJoined (each side a broadcast of a
+            # single row), so they materialize in a single job
+            stats = (
+                deg.agg(
+                    F.count("*").cast("long").alias("n_nodes"),
+                    F.sum(F.expr("deg * (deg - 1) div 2"))
+                    .cast("long")
+                    .alias("n_wedges"),
+                )
+                .crossJoin(ori.agg(F.count("*").cast("long").alias("n_edges")))
+                .crossJoin(
+                    _close_wedges(ori).agg(
+                        F.count("*").cast("long").alias("n_triangles")
+                    )
+                )
+                .collect()[0]
+            )
+        return spark.createDataFrame(
+            [
+                (
+                    stats["n_nodes"],
+                    stats["n_edges"],
+                    stats["n_wedges"] or 0,
+                    stats["n_triangles"],
+                )
+            ],
+            _CENSUS,
+        )
+
+    rows = _run_edge_kernel(
+        edges.select("a", "b"),
+        _triangle_single_task_kernel(),
+        _CENSUS,
+        distributed,
+    ).collect()
+    # an empty graph can plan the kernel's repartition to zero
+    # partitions, and then no census row comes back at all
+    n_nodes, n_edges, n_w, n_t = rows[0] if rows else (0, 0, 0, 0)
+    ratio = 3.0 * float(n_t) / float(n_w) if n_w else 0.0
     return spark.createDataFrame(
-        [(stats["n_nodes"], int(stats["n_edges"]), n_wedges, n_tri, ratio)],
-        "n_nodes long, n_edges long, n_wedges long, n_triangles long, closure_ratio double",
+        [(n_nodes, n_edges, n_w, n_t, ratio)],
+        _CENSUS + ", closure_ratio double",
     )

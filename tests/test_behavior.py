@@ -640,7 +640,7 @@ def test_pagerank_exact_matches_integer_model(spark):
     assert pr["a"] == max(pr.values())
 
 
-def test_pagerank_single_task_and_distributed_bit_equal(spark):
+def test_pagerank_single_task_and_distributed_bit_equal(spark, monkeypatch):
     """The size-dispatched regimes (single-task numpy kernel vs the
     distributed join+aggregate loop) share one integer spec — outputs
     must be bit-equal on the same graph."""
@@ -655,11 +655,10 @@ def test_pagerank_single_task_and_distributed_bit_equal(spark):
         r.node: r.pr
         for r in graph.pagerank_exact(edges, iterations=6).collect()
     }
+    monkeypatch.setattr(graph, "SINGLE_TASK_MAX_EDGES", 0)
     dist = {
         r.node: r.pr
-        for r in graph.pagerank_exact(
-            edges, iterations=6, single_task_max_edges=0
-        ).collect()
+        for r in graph.pagerank_exact(edges, iterations=6).collect()
     }
     assert kernel == dist and len(kernel) == 5
 
@@ -703,7 +702,7 @@ def test_peak_concurrency_adjacent_intervals_not_concurrent(spark):
     assert {(r.bucket_start, r.peak) for r in out} == {(0, 1)}
 
 
-def test_pagerank_kernel_preserves_long_node_ids(spark):
+def test_pagerank_kernel_preserves_long_node_ids(spark, monkeypatch):
     """The single-task kernel output schema follows the caller's node
     type — long-keyed graphs under the threshold must not crash Arrow
     conversion (the distributed path always preserved the type)."""
@@ -713,16 +712,14 @@ def test_pagerank_kernel_preserves_long_node_ids(spark):
         [(1, 2), (2, 1), (1, 3), (3, 1)], "src long, dst long"
     )
     got = {r.node: r.pr for r in graph.pagerank_exact(edges, iterations=3).collect()}
+    monkeypatch.setattr(graph, "SINGLE_TASK_MAX_EDGES", 0)
     dist = {
-        r.node: r.pr
-        for r in graph.pagerank_exact(
-            edges, iterations=3, single_task_max_edges=0
-        ).collect()
+        r.node: r.pr for r in graph.pagerank_exact(edges, iterations=3).collect()
     }
     assert got == dist and set(got) == {1, 2, 3}
 
 
-def test_pagerank_kernel_drops_null_edges_like_distributed(spark):
+def test_pagerank_kernel_drops_null_edges_like_distributed(spark, monkeypatch):
     """ADVICE r6: factorize codes null as -1, which would index the
     LAST node via numpy negative indexing.  Null endpoints must be
     dropped in the kernel exactly as the distributed joins drop them —
@@ -736,11 +733,9 @@ def test_pagerank_kernel_drops_null_edges_like_distributed(spark):
     kernel = {
         r.node: r.pr for r in graph.pagerank_exact(edges, iterations=4).collect()
     }
+    monkeypatch.setattr(graph, "SINGLE_TASK_MAX_EDGES", 0)
     dist = {
-        r.node: r.pr
-        for r in graph.pagerank_exact(
-            edges, iterations=4, single_task_max_edges=0
-        ).collect()
+        r.node: r.pr for r in graph.pagerank_exact(edges, iterations=4).collect()
     }
     assert kernel == dist
     assert set(kernel) == {"a", "b"}
@@ -830,12 +825,12 @@ def test_triangle_count_hub_star_plus_one(spark):
     assert row.n_triangles == 1
 
 
-def test_triangle_kernel_matches_distributed_plan(spark):
+def test_triangle_kernel_matches_distributed_plan(spark, monkeypatch):
     """The single-task numpy census (size dispatch) must agree with the
     distributed wedge-join plan on every output column — pinned on a
     deterministic pseudo-random graph with hubs, ties and isolated-pair
     structure (r11 optimization: the kernel path is new)."""
-    from stdb_spark.operators.graph import triangle_count_exact
+    from stdb_spark.operators import graph
 
     edges = sorted(
         {
@@ -846,10 +841,9 @@ def test_triangle_kernel_matches_distributed_plan(spark):
         }
     )
     df = spark.createDataFrame(edges, "a long, b long")
-    via_kernel = triangle_count_exact(df).collect()[0]
-    via_plan = triangle_count_exact(
-        df, single_task_max_edges=0
-    ).collect()[0]
+    via_kernel = graph.triangle_count_exact(df).collect()[0]
+    monkeypatch.setattr(graph, "SINGLE_TASK_MAX_EDGES", 0)
+    via_plan = graph.triangle_count_exact(df).collect()[0]
     assert via_kernel == via_plan
     assert via_kernel.n_edges == len(edges)
 
@@ -981,11 +975,10 @@ def test_triangle_count_empty_edges(spark):
     assert row.closure_ratio == 0.0
 
 
-def test_pagerank_bucketed_edge_layout_bit_equal(spark, monkeypatch):
-    """edge_layout="bucketed" (the zero-storage cluster-loop shape,
-    VERDICT r9 directive #6) is a pure layout choice: forced into the
-    cluster regime, its ranks are bit-equal to the cached layout's and
-    the scratch bucket table is dropped before returning."""
+def test_pagerank_cluster_loop_bit_equal_to_kernel(spark, monkeypatch):
+    """The cluster-scale loop (ranks hash-joined against the
+    src-partitioned cached edge list, checkpointed every 2 rounds) is
+    bit-equal to the single-task kernel on the same graph."""
     from stdb_spark.operators import graph
 
     edges = spark.createDataFrame(
@@ -993,45 +986,89 @@ def test_pagerank_bucketed_edge_layout_bit_equal(spark, monkeypatch):
          ("b", "a"), ("e", "a")],
         "src string, dst string",
     )
+    kernel = {
+        r.node: r.pr
+        for r in graph.pagerank_exact(edges, iterations=6).collect()
+    }
+    monkeypatch.setattr(graph, "SINGLE_TASK_MAX_EDGES", 0)
     monkeypatch.setattr(graph, "BROADCAST_RANKS_MAX_NODES", 0)
-    cached = {
+    cluster = {
         r.node: r.pr
-        for r in graph.pagerank_exact(
-            edges, iterations=6, single_task_max_edges=0
-        ).collect()
+        for r in graph.pagerank_exact(edges, iterations=6).collect()
     }
-    bucketed = {
-        r.node: r.pr
-        for r in graph.pagerank_exact(
-            edges,
-            iterations=6,
-            single_task_max_edges=0,
-            edge_layout="bucketed",
-            bucket_table="pagerank_edges_bucketed_testtmp",
-        ).collect()
+    assert cluster == kernel and len(kernel) == 5
+
+
+def test_triangle_count_drops_null_endpoints(spark, monkeypatch):
+    """Edges with a null endpoint are dropped before either regime sees
+    the graph: kernel and distributed plan return the same row, equal
+    to the census of the graph without the null rows — for long ids
+    and for string ids."""
+    from stdb_spark.operators import graph
+
+    cases = {
+        "a long, b long": [(0, 1), (0, 2), (1, 2), (2, 3), (3, None),
+                           (None, 4), (None, None)],
+        "a string, b string": [("p", "q"), ("p", "r"), ("q", "r"),
+                               ("r", "s"), ("s", None), (None, "t")],
     }
-    assert cached == bucketed and len(cached) == 5
-    assert not any(
-        t.name == "pagerank_edges_bucketed_testtmp"
-        for t in edges.sparkSession.catalog.listTables()
+
+    def census(rows, schema):
+        df = spark.createDataFrame(rows, schema)
+        return graph.triangle_count_exact(df).collect()[0]
+
+    kernel = {s: census(rows, s) for s, rows in cases.items()}
+    clean = {
+        s: census([r for r in rows if None not in r], s)
+        for s, rows in cases.items()
+    }
+    monkeypatch.setattr(graph, "SINGLE_TASK_MAX_EDGES", 0)
+    dist = {s: census(rows, s) for s, rows in cases.items()}
+    for s in cases:
+        assert kernel[s] == dist[s] == clean[s]
+        # a triangle plus one pendant edge: degrees 2, 2, 3, 1
+        assert tuple(kernel[s]) == (4, 4, 5, 1, 0.6)
+
+
+def test_graph_kernel_error_releases_edge_cache(spark, monkeypatch):
+    """A kernel that raises must not leave the operator's edge list
+    cached: the release runs in ``finally`` for all four operators.
+    Counted as RDDs that hold cached blocks; a failed eager
+    localCheckpoint registers its own RDD as persistent before its job
+    runs, but that RDD never holds a block."""
+    from stdb_spark.functions import dedup
+    from stdb_spark.operators import graph
+
+    def failing_factory(*args):
+        def fn(batches):
+            raise RuntimeError("kernel failed")
+            yield
+
+        return fn
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "a long, b long")
+    directed = spark.createDataFrame(
+        [("a", "b"), ("b", "a")], "src string, dst string"
     )
-    # checkpoint=False must still return an actionable result: the
-    # scratch table is dropped before returning, so the ranks are
-    # force-materialized first (r10 ADVICE medium item).  The default
-    # bucket_table=None derives a unique name, so no collision with a
-    # concurrent run either.
-    unchk = {
-        r.node: r.pr
-        for r in graph.pagerank_exact(
-            edges,
-            iterations=6,
-            single_task_max_edges=0,
-            edge_layout="bucketed",
-            checkpoint=False,
-        ).collect()
-    }
-    assert unchk == cached
-    assert not any(
-        t.name.startswith("pagerank_edges_bucketed_")
-        for t in edges.sparkSession.catalog.listTables()
-    )
+    cases = [
+        (graph, "_pagerank_single_task_kernel",
+         lambda: graph.pagerank_exact(directed)),
+        (graph, "_lpa_single_task_kernel",
+         lambda: graph.label_propagation_exact(pairs)),
+        (graph, "_triangle_single_task_kernel",
+         lambda: graph.triangle_count_exact(pairs)),
+        (dedup, "_cc_single_task_kernel",
+         lambda: dedup.connected_components(pairs)),
+    ]
+    jsc = spark.sparkContext._jsc
+
+    def cached_rdds():
+        return len(jsc.sc().getRDDStorageInfo())
+
+    for module, factory, run in cases:
+        with monkeypatch.context() as m:
+            m.setattr(module, factory, failing_factory)
+            before = cached_rdds()
+            with pytest.raises(Exception, match="kernel failed"):
+                run().collect()
+            assert cached_rdds() <= before, factory

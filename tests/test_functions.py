@@ -11,7 +11,7 @@ from stdb_spark.functions.multimodal import (
     make_fake_media,
     sample_video_frames,
 )
-from stdb_spark.operators import spatial
+from stdb_spark.operators import graph, spatial
 
 
 @pytest.fixture(scope="module")
@@ -1501,7 +1501,7 @@ def test_assign_q_expr_equals_pandas_path(spark):
     assert sorted(map(tuple, got_pd)) == sorted(map(tuple, got_ex))
 
 
-def test_connected_components_kernel_and_distributed_bit_equal(spark):
+def test_connected_components_kernel_and_distributed_bit_equal(spark, monkeypatch):
     """The size-dispatched regimes (single-task numpy hash-min kernel
     vs the distributed propagation loop) must emit identical
     (id, cluster_id) labelings — min member id per component either
@@ -1517,12 +1517,12 @@ def test_connected_components_kernel_and_distributed_bit_equal(spark):
         (r.id, r.cluster_id)
         for r in dedup.connected_components(pairs).collect()
     }
-    dist = {
-        (r.id, r.cluster_id)
-        for r in dedup.connected_components(
-            pairs, single_task_max_edges=0
-        ).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(graph, "SINGLE_TASK_MAX_EDGES", 0)
+        dist = {
+            (r.id, r.cluster_id)
+            for r in dedup.connected_components(pairs).collect()
+        }
     assert kernel == dist
     # the 3-24 bridge merges the chain and the long path into one
     # component labeled by its smallest member
@@ -1666,7 +1666,7 @@ def test_lttb_exact_int_endpoint_modes(spark):
         downsample.lttb_exact_int(df, 1)
 
 
-def test_connected_components_kernel_drops_null_edges(spark):
+def test_connected_components_kernel_drops_null_edges(spark, monkeypatch):
     """ADVICE r6: null endpoints factorize to code -1 and would corrupt
     labels via negative indexing; the kernel must drop them like the
     distributed joins do."""
@@ -1678,9 +1678,9 @@ def test_connected_components_kernel_drops_null_edges(spark):
     kernel = {
         (r.id, r.cluster_id) for r in dedup.connected_components(pairs).collect()
     }
+    monkeypatch.setattr(graph, "SINGLE_TASK_MAX_EDGES", 0)
     dist = {
-        (r.id, r.cluster_id)
-        for r in dedup.connected_components(pairs, single_task_max_edges=0).collect()
+        (r.id, r.cluster_id) for r in dedup.connected_components(pairs).collect()
     }
     assert kernel == dist
     assert kernel == {(1, 1), (2, 1), (3, 1)}

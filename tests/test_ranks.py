@@ -184,14 +184,15 @@ def test_label_propagation_hand_computed(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
 
 
-def test_label_propagation_kernel_matches_distributed(spark):
+def test_label_propagation_kernel_matches_distributed(spark, monkeypatch):
     """The single-task Arrow kernel and the distributed join+window
     loop are bit-equal by construction (identical integer counts +
     (count desc, label asc) pick): prove it on a graph with bridges,
     an isolated triangle, and a hub — forced distributed via
-    single_task_max_edges=0."""
+    SINGLE_TASK_MAX_EDGES=0."""
     import random
 
+    from stdb_spark.operators import graph
     from stdb_spark.operators.graph import label_propagation_exact
 
     rng = random.Random(7)
@@ -204,19 +205,18 @@ def test_label_propagation_kernel_matches_distributed(spark):
     kern = {
         r.id: r.community for r in label_propagation_exact(df, 4).collect()
     }
+    monkeypatch.setattr(graph, "SINGLE_TASK_MAX_EDGES", 0)
     dist = {
-        r.id: r.community
-        for r in label_propagation_exact(
-            df, 4, single_task_max_edges=0
-        ).collect()
+        r.id: r.community for r in label_propagation_exact(df, 4).collect()
     }
     assert kern == dist
     assert len(kern) == 40
 
 
-def test_label_propagation_string_ids_and_nulls(spark):
+def test_label_propagation_string_ids_and_nulls(spark, monkeypatch):
     """Caller id types ride through both regimes; null endpoints are
     dropped before either regime sees the graph."""
+    from stdb_spark.operators import graph
     from stdb_spark.operators.graph import label_propagation_exact
 
     df = spark.createDataFrame(
@@ -224,18 +224,17 @@ def test_label_propagation_string_ids_and_nulls(spark):
         "a string, b string",
     )
     kern = {r.id: r.community for r in label_propagation_exact(df, 3).collect()}
-    dist = {
-        r.id: r.community
-        for r in label_propagation_exact(df, 3, single_task_max_edges=0).collect()
-    }
+    monkeypatch.setattr(graph, "SINGLE_TASK_MAX_EDGES", 0)
+    dist = {r.id: r.community for r in label_propagation_exact(df, 3).collect()}
     assert kern == dist
     assert kern == {"x": "x", "y": "x", "z": "x", "p": "p", "q": "p"}
 
 
-def test_graph_plan_helpers_match_operators(spark):
+def test_graph_plan_helpers_match_operators(spark, monkeypatch):
     """triangle_plan / lpa_round_plan are the un-persisted lineages
     PLANS.md records; their results must match the real operators
     (triangle count; one distributed LPA round)."""
+    from stdb_spark.operators import graph
     from stdb_spark.operators.graph import (
         label_propagation_exact,
         lpa_round_plan,
@@ -252,10 +251,9 @@ def test_graph_plan_helpers_match_operators(spark):
         == triangle_count_exact(edges).collect()[0].n_triangles
     )
     plan1 = {r.id: r.community for r in lpa_round_plan(edges).collect()}
+    monkeypatch.setattr(graph, "SINGLE_TASK_MAX_EDGES", 0)
     loop1 = {
         r.id: r.community
-        for r in label_propagation_exact(
-            edges, k_iter=1, single_task_max_edges=0
-        ).collect()
+        for r in label_propagation_exact(edges, k_iter=1).collect()
     }
     assert plan1 == loop1
