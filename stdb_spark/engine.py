@@ -46,16 +46,7 @@ from stdb_spark.query.parser import (
     ValueFilter,
     parse_query,
 )
-
-
-def _tags_suffix():
-    """Sorted ``k1=v1 k2=v2`` string for the tags map (canonical-form
-    parity with SeriesParser, stdb/index/seriesparser.h:39-53)."""
-    kv = F.transform(
-        F.array_sort(F.map_keys(F.col("tags"))),
-        lambda k: F.concat(k, F.lit("="), F.col("tags")[k]),
-    )
-    return F.array_join(kv, " ")
+from stdb_spark.sources import storage
 
 
 def _quote(name: str) -> str:
@@ -173,7 +164,7 @@ class Engine:
             for name, df in (("samples", samples), ("events", events))
             if df is not None
         }
-        sfx = _tags_suffix()
+        sfx = model.tags_suffix_col()
         self._tags_col = sfx.alias("_tags_s")
         metric = F.col("metric")
         self._series_col = (
@@ -333,11 +324,7 @@ class Engine:
         if src_cond is not None:
             cond = cond & src_cond
         if "day" in dtypes:
-            from stdb_spark.common.timeutil import NS_PER_DAY
-
-            cond = cond & (F.col("day") >= int(lo // NS_PER_DAY)) & (
-                F.col("day") <= int(hi // NS_PER_DAY)
-            )
+            cond = cond & storage.day_bounds(lo, hi)
         return df.filter(cond)
 
     @staticmethod

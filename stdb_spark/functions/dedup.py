@@ -1077,7 +1077,7 @@ def snapshot_diff(
     Plan shape at 100 TB: each side reduces map-side to (key, digest) —
     16 bytes of payload per doc, not the text — then ONE full-outer
     equi-join on the key.  If both snapshots are written bucketed by the
-    key (sources/storage.py:write_samples_bucketed pattern) the join is
+    key (sources/bucketing.write_bucketed) the join is
     exchange-free.  Returns (key, status)."""
     o = old.select(F.col(key), F.md5(normalized_text(text_col)).alias("_od"))
     n = new.select(F.col(key), F.md5(normalized_text(text_col)).alias("_nd"))

@@ -19,9 +19,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from stdb_spark.common.seriesparser import MAX_TAGS
 
 SAMPLES_SCHEMA = T.StructType(
     [
@@ -68,23 +70,56 @@ TESTDATA_TABLES = (
 )
 
 
-def canonical_name_col(metric="metric", tags="tags"):
-    """Spark expression producing the canonical series name
-    ``metric k1=v1 k2=v2`` with keys sorted (SeriesParser parity,
-    stdb/index/seriesparser.h:39-53) — entirely JVM-side."""
+def tags_suffix_col(tags="tags"):
+    """Sorted ``k1=v1 k2=v2`` string for the tags map (canonical-form
+    parity with SeriesParser, stdb/index/seriesparser.h:39-53)."""
     kv = F.transform(
         F.array_sort(F.map_keys(F.col(tags))),
         lambda k: F.concat(k, F.lit("="), F.col(tags)[k]),
     )
+    return F.array_join(kv, " ")
+
+
+def canonical_name_col(metric="metric", tags="tags"):
+    """Spark expression producing the canonical series name
+    ``metric k1=v1 k2=v2`` with keys sorted (SeriesParser parity,
+    stdb/index/seriesparser.h:39-53) — entirely JVM-side."""
     return F.when(
         F.size(F.map_keys(F.col(tags))) > 0,
-        F.concat(F.col(metric), F.lit(" "), F.array_join(kv, " ")),
+        F.concat(F.col(metric), F.lit(" "), tags_suffix_col(tags)),
     ).otherwise(F.col(metric))
 
 
 def series_id_col(metric="metric", tags="tags"):
     """Stable 64-bit id from the canonical name (xxhash64, JVM-side)."""
     return F.xxhash64(canonical_name_col(metric, tags))
+
+
+def wire_to_narrow(
+    df: DataFrame, metric: Column, tokens: Column, first_tag: int, *payload: str
+) -> DataFrame:
+    """The one wire -> narrow projection every ingest parser ends in:
+    ``(series_id, metric, tags, ts, *payload)`` from ``df``'s ``ts`` and
+    ``payload`` columns, the ``metric`` expression, and the ``tokens``
+    array of a split series name whose ``k=v`` tags start at 1-based
+    position ``first_tag``.  At most MAX_TAGS tokens are read and tokens
+    without ``=`` are dropped; a repeated key keeps its last value (the
+    session's LAST_WIN map-key policy, see _SESSION_CONFS)."""
+    tags = F.map_from_entries(
+        F.transform(
+            F.filter(
+                F.slice(tokens, first_tag, MAX_TAGS), lambda t: t.contains("=")
+            ),
+            lambda t: F.struct(
+                F.split(t, "=")[0].alias("key"), F.split(t, "=")[1].alias("value")
+            ),
+        )
+    )
+    return (
+        df.select(metric.alias("metric"), "ts", *payload, tags.alias("tags"))
+        .withColumn("series_id", series_id_col())
+        .select("series_id", "metric", "tags", "ts", *payload)
+    )
 
 
 def default_sf_dir() -> str:
@@ -157,7 +192,7 @@ _SESSION_CONFS = {
     "spark.sql.shuffle.partitions": str(
         max(int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)), 8)
     ),
-    # Ingest parsers build tag maps with map_from_entries; a malformed
+    # Ingest parsers build tag maps in wire_to_narrow; a malformed
     # wire line repeating a tag key ('put cpu 1 1 host=a host=a') must
     # degrade per the parsers' drop-don't-crash contract, not kill the
     # whole job with Spark's default EXCEPTION dedup policy.  LAST_WIN

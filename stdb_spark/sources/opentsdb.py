@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from stdb_spark.model import series_id_col
+from stdb_spark.model import wire_to_narrow
 
 
 def _ts_to_ns(ts: Column) -> Column:
@@ -38,25 +38,10 @@ def parse_opentsdb_lines(lines: DataFrame, value_col: str = "value") -> DataFram
         lines.select(parts.alias("p"))
         .filter((F.col("p")[0] == "put") & (F.size("p") >= 4))
         .select(
-            F.col("p")[1].alias("metric"),
+            "p",
             _ts_to_ns(F.col("p")[2]).alias("ts"),
             F.col("p")[3].cast("double").alias("value"),
-            F.slice("p", 5, 32).alias("rawtags"),
         )
         .filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
-        .withColumn(
-            "tags",
-            F.map_from_entries(
-                F.transform(
-                    F.filter(F.col("rawtags"), lambda t: t.contains("=")),
-                    lambda t: F.struct(
-                        F.split(t, "=")[0].alias("key"),
-                        F.split(t, "=")[1].alias("value"),
-                    ),
-                )
-            ),
-        )
     )
-    return df.withColumn("series_id", series_id_col()).select(
-        "series_id", "metric", "tags", "ts", "value"
-    )
+    return wire_to_narrow(df, F.col("p")[1], F.col("p"), 5, "value")

@@ -50,7 +50,7 @@ from stdb_spark.common.seriesparser import (
     parse_series_name,
 )
 from stdb_spark.common.timeutil import parse_timestamp_ns
-from stdb_spark.model import series_id_col
+from stdb_spark.model import wire_to_narrow
 
 
 class RESPError(ValueError):
@@ -232,15 +232,18 @@ class RESPStream:
                 self.out.append(Sample(name, ts, v))
 
 
-def _parse_resp_full(
+def parse_resp_full(
     pdus: DataFrame,
     value_col: str = "value",
     dictionary: dict[int, str] | None = None,
 ) -> DataFrame:
-    """Pre-framed PDU strings -> exploded per-metric rows, all JVM-side:
-    ``(metric, tags, ts, value double, body string)`` where exactly one
-    of value/body is set, dispatched on the metric's kind (``!`` prefix
-    = event stream, parse_event_value protocolparser.cc:409-422,450,508).
+    """Mixed wire in ONE parse pass, all JVM-side: pre-framed PDU
+    strings -> ``(series_id, metric, tags, ts, value, body)`` with
+    exactly one of value/body set per row, dispatched on the metric's
+    kind (metric columns carry value, ``!``-event columns carry body —
+    parse_event_value protocolparser.cc:409-422,450,508).  Use this when
+    a feed interleaves metrics and events: the split projections below
+    each re-evaluate the parse lineage when used together.
 
     A PDU is either the data-point form ``+series\\n+ts\\n+value`` or
     the row form ``+m1|m2 tags\\n+ts\\n*2\\n+v1\\n+v2`` — each metric is
@@ -356,41 +359,19 @@ def _parse_resp_full(
         & (F.size("_ms") == F.size("_raw"))
         & ~F.exists("_vs", lambda v: v["value"].isNull() & v["body"].isNull())
     )
-    tags_part = F.array_join(F.slice(F.split(F.col("_series"), " "), 2, 32), " ")
     df = df.select(
         F.explode(F.when(valid, F.arrays_zip("_ms", "_vs"))).alias("_z"),
         "ts",
-        F.map_from_entries(
-            F.transform(
-                F.filter(F.split(tags_part, " "), lambda t: t.contains("=")),
-                lambda t: F.struct(
-                    F.split(t, "=")[0].alias("key"), F.split(t, "=")[1].alias("value")
-                ),
-            )
-        ).alias("tags"),
+        "_series",
     ).select(
-        F.col("_z._ms").alias("metric"),
         "ts",
+        "_series",
+        F.col("_z._ms").alias("_metric"),
         F.col("_z._vs.value").alias("value"),
         F.col("_z._vs.body").alias("body"),
-        "tags",
     )
-    return df.withColumn("series_id", series_id_col()).select(
-        "series_id", "metric", "tags", "ts", "value", "body"
-    )
-
-
-def parse_resp_full(
-    pdus: DataFrame,
-    value_col: str = "value",
-    dictionary: dict[int, str] | None = None,
-) -> DataFrame:
-    """Mixed wire in ONE parse pass: ``(series_id, metric, tags, ts,
-    value, body)`` with exactly one of value/body set per row (metric
-    columns carry value, ``!``-event columns carry body).  Use this
-    when a feed interleaves metrics and events — the split projections
-    below each re-evaluate the parse lineage when used together."""
-    return _parse_resp_full(pdus, value_col, dictionary)
+    tokens = F.split(F.col("_series"), " ")
+    return wire_to_narrow(df, F.col("_metric"), tokens, 2, "value", "body")
 
 
 def parse_resp_pdus(
@@ -402,7 +383,7 @@ def parse_resp_pdus(
     ``(series_id, metric, tags, ts, value)``.  Event columns riding the
     same wire (``!``-metrics) are routed to :func:`parse_resp_events`,
     never coerced to doubles."""
-    full = _parse_resp_full(pdus, value_col, dictionary)
+    full = parse_resp_full(pdus, value_col, dictionary)
     return full.filter(~F.col("metric").startswith("!")).select(
         "series_id", "metric", "tags", "ts", "value"
     )
@@ -417,7 +398,7 @@ def parse_resp_events(
     metric, tags, ts, body)`` for ``!``-metric columns — the wire write
     path for annotations/logs (parse_event_value,
     protocolparser.cc:409-422; row-branch wiring :450,508)."""
-    full = _parse_resp_full(pdus, value_col, dictionary)
+    full = parse_resp_full(pdus, value_col, dictionary)
     return full.filter(F.col("metric").startswith("!")).select(
         "series_id", "metric", "tags", "ts", "body"
     )

@@ -16,13 +16,18 @@ engine maps to pruning:
 
 At 100 TB this yields: day dirs * ~5-50 metrics * N files; a typical
 query touches days x 1 metric — a few thousand files — and Spark's scan
-parallelism is per row-group.  Writers control file count via
-``target_files_per_partition`` (AQE handles read-side coalescing).
+parallelism is per row-group.  Every writer of the layout — batch
+writes, streaming-ingest staging, compaction — goes through one
+clustering writer that lands one file per (day, metric) (AQE handles
+read-side coalescing).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import glob
+import os
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stdb_spark.common.timeutil import NS_PER_DAY
@@ -34,37 +39,30 @@ def with_day(samples: DataFrame) -> DataFrame:
     return samples.withColumn("day", F.expr(f"ts div {NS_PER_DAY}L").cast("int"))
 
 
-def write_samples(
-    samples: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    target_files_per_partition: int = 1,
-) -> None:
+def write_samples(samples: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Write the narrow fact table partitioned by (day, metric), sorted
-    by (series_id, ts) within files.
+    by (series_id, ts) within files."""
+    _write_clustered(with_day(samples), path, mode)
 
-    The clustering shuffle hashes ON THE PARTITION COLUMNS (plus a
-    series-hash salt when more than one file per partition is
-    requested): every (day, metric) combination lands wholly in one
-    task — one file per combination — while distinct combinations
-    spread across all shuffle partitions, so the write parallelism
-    scales with the data.  (A fixed ``repartition(n, cols)`` would pin
-    the WHOLE write to n tasks regardless of table size — the round-4
-    scale review caught exactly that: n=1 serialized every ingest
-    through a single task.)  AQE coalesces the excess partitions when
-    the batch is small."""
-    df = with_day(samples)
-    keys = [F.col("day"), F.col("metric")]
-    if target_files_per_partition > 1:
-        keys.append(
-            F.pmod(
-                F.xxhash64("series_id"), F.lit(int(target_files_per_partition))
-            )
-        )
-    df = df.repartition(*keys).sortWithinPartitions(
-        "day", "metric", "series_id", "ts"
+
+def _write_clustered(df: DataFrame, path: str, mode: str) -> None:
+    """The layout's one writer: ``df`` already carries ``day``.
+
+    The clustering shuffle hashes ON THE PARTITION COLUMNS: every
+    (day, metric) combination lands wholly in one task — one file per
+    combination — while distinct combinations spread across all
+    shuffle partitions, so the write parallelism scales with the data.
+    (A fixed ``repartition(n, cols)`` would pin the WHOLE write to n
+    tasks regardless of table size — the round-4 scale review caught
+    exactly that: n=1 serialized every ingest through a single task.)
+    AQE coalesces the excess partitions when the batch is small."""
+    (
+        df.repartition("day", "metric")
+        .sortWithinPartitions("day", "metric", "series_id", "ts")
+        .write.partitionBy("day", "metric")
+        .mode(mode)
+        .parquet(path)
     )
-    df.write.partitionBy("day", "metric").mode(mode).parquet(path)
     # Bulk (overwrite) writes are task-parallel, so file commit order —
     # and therefore file-stream replay order — is arbitrary: restamp
     # the whole table once.  Append batches need no restamp: their new
@@ -73,6 +71,18 @@ def write_samples(
     # total_files) utime calls on a streaming ingest path).
     if mode != "append":
         stamp_replay_order(path)
+
+
+def layout_files(path: str) -> list[tuple[int, str]]:
+    """``(day, file)`` for every data file of the layout at ``path``, in
+    NUMERIC day order, then metric directory and file name —
+    lexicographic path order would interleave day ids of different
+    digit counts (day=10 before day=9)."""
+    keyed = []
+    for f in glob.glob(os.path.join(path, "day=*", "metric=*", "*.parquet")):
+        parts = f.split(os.sep)
+        keyed.append((int(parts[-3].split("=", 1)[1]), parts[-2], parts[-1], f))
+    return [(day, f) for day, _, _, f in sorted(keyed)]
 
 
 def stamp_replay_order(path: str) -> None:
@@ -85,32 +95,30 @@ def stamp_replay_order(path: str) -> None:
     full-registry gate caught 4 stream queries diverging from their
     sf0.01-green results exactly this way).  O(#files) utime calls
     restore a deterministic, day-ordered replay at any scale."""
-    import glob
-    import os
     import time
 
-    def key(f: str) -> tuple:
-        # NUMERIC day order — lexicographic path order would interleave
-        # day ids of different digit counts (day=10 before day=9)
-        parts = f.split(os.sep)
-        day = int(parts[-3].split("=", 1)[1])
-        return (day, parts[-2], parts[-1])
-
-    files = sorted(
-        glob.glob(os.path.join(path, "day=*", "metric=*", "*.parquet")),
-        key=key,
-    )
+    files = layout_files(path)
     base = int(time.time()) - len(files) - 10
-    for i, f in enumerate(files):
+    for i, (_, f) in enumerate(files):
         os.utime(f, (base + i, base + i))
 
 
 def read_samples(spark: SparkSession, path: str) -> DataFrame:
-    """Read back with partition columns restored to the narrow schema
-    ordering.  Filters on ts/metric prune partitions (day is derived
-    from ts by the caller's range: use ``prune_range``)."""
+    """Read back in the narrow schema's column order, keeping the
+    ``day`` partition column last: a range filter prunes directories
+    only through ``day`` (``prune_range``, or the Engine's own day
+    bounds when this frame is bound as its samples)."""
     df = spark.read.parquet(path)
-    return df.select("series_id", "metric", "tags", "ts", "value")
+    return df.select("series_id", "metric", "tags", "ts", "value", "day")
+
+
+def day_bounds(lo_ns: int, hi_ns: int) -> Column:
+    """Predicate on the ``day`` partition column covering [lo_ns,
+    hi_ns]: directory pruning is visible to Catalyst only through it,
+    because ``day`` is derived from ts at write time."""
+    return (F.col("day") >= int(lo_ns // NS_PER_DAY)) & (
+        F.col("day") <= int(hi_ns // NS_PER_DAY)
+    )
 
 
 def prune_range(df: DataFrame, begin_ns: int, end_ns: int) -> DataFrame:
@@ -118,10 +126,7 @@ def prune_range(df: DataFrame, begin_ns: int, end_ns: int) -> DataFrame:
     pruning is visible to Catalyst even though `day` is derived."""
     lo, hi = min(begin_ns, end_ns), max(begin_ns, end_ns)
     return df.filter(
-        (F.col("day") >= int(lo // NS_PER_DAY))
-        & (F.col("day") <= int(hi // NS_PER_DAY))
-        & (F.col("ts") >= lo)
-        & (F.col("ts") < hi)
+        day_bounds(lo, hi) & (F.col("ts") >= lo) & (F.col("ts") < hi)
     )
 
 
@@ -184,29 +189,6 @@ def combine_summaries(summaries: DataFrame) -> DataFrame:
     )
 
 
-def write_samples_bucketed(
-    samples: DataFrame,
-    table: str,
-    buckets: int = 32,
-) -> None:
-    """Bucketed layout: the co-location strategy for per-series work at
-    100 TB.  `bucketBy(series_id)` + sort within buckets means every
-    downstream `groupBy("series_id")`, per-series window, or
-    series-keyed join starts from data already hash-distributed and
-    sorted on the key — Catalyst elides the Exchange entirely (assert:
-    test_plans).  Parquet `partitionBy` cannot do this (series
-    cardinality is unbounded); bucketing caps the directory fan-out at
-    `buckets` while keeping the co-location guarantee.  Requires a
-    metastore table (saveAsTable), not a bare path."""
-    (
-        samples.write.bucketBy(buckets, "series_id")
-        .sortBy("series_id", "ts")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
 def expire_partitions(spark: SparkSession, path: str, before_day: int) -> list[str]:
     """Retention enforcement on the (day, metric) layout: drop every
     ``day=N`` partition directory with N < ``before_day``.  This is the
@@ -238,37 +220,16 @@ def expire_partitions(spark: SparkSession, path: str, before_day: int) -> list[s
     return sorted(removed)
 
 
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_files_per_partition: int = 1,
-) -> None:
-    """Small-file compaction: rewrite the layout with
-    ``target_files_per_partition`` files per (day, metric), restoring
-    the (series_id, ts) sort.  Streaming ingest (availableNow
-    micro-batches) leaves one file per batch per partition; at 100 TB
-    that read amplification dominates scan cost, and nightly compaction
-    is the standard fix.  The rewrite is partition-parallel — each
-    (day, metric) group lands in its own task (hash on the partition
-    columns + optional series salt, same idiom as write_samples), no
-    global sort and no fixed task count."""
-    df = spark.read.parquet(path)
-    keys = [F.col("day"), F.col("metric")]
-    if target_files_per_partition > 1:
-        keys.append(
-            F.pmod(
-                F.xxhash64("series_id"), F.lit(int(target_files_per_partition))
-            )
-        )
-    (
-        df.repartition(*keys)
-        .sortWithinPartitions("day", "metric", "series_id", "ts")
-        .write.partitionBy("day", "metric")
-        .mode("overwrite")
-        .parquet(out_path)
-    )
-    stamp_replay_order(out_path)
+def compact_partitions(spark: SparkSession, path: str, out_path: str) -> None:
+    """Small-file compaction: rewrite the layout with one file per
+    (day, metric), restoring the (series_id, ts) sort.  Streaming
+    ingest (availableNow micro-batches) leaves one file per batch per
+    partition; at 100 TB that read amplification dominates scan cost,
+    and nightly compaction is the standard fix.  The rewrite is
+    partition-parallel through the layout's one clustering writer —
+    each (day, metric) group lands in its own task, no global sort and
+    no fixed task count."""
+    _write_clustered(spark.read.parquet(path), out_path, "overwrite")
 
 
 def upsert_latest(
@@ -302,10 +263,15 @@ def write_summary(
 ) -> None:
     """Materialize the summary table day-partitioned, so incremental
     maintenance can replace exactly the days an ingest touched."""
-    df = summary_table(samples, step_ns).withColumn(
+    _day_summary(samples, step_ns).write.partitionBy("day").mode(mode).parquet(path)
+
+
+def _day_summary(samples: DataFrame, step_ns: int) -> DataFrame:
+    """summary_table plus the ``day`` partition column of the summary
+    store, derived from each bucket's start."""
+    return summary_table(samples, step_ns).withColumn(
         "day", F.expr(f"bucket_ts div {NS_PER_DAY}L").cast("int")
     )
-    df.write.partitionBy("day").mode(mode).parquet(path)
 
 
 def update_summary_incremental(
@@ -333,11 +299,9 @@ def update_summary_incremental(
         .filter(F.col("day").isin([int(d) for d in days]))
         .select("series_id", "metric", "tags", "ts", "value")
     )
-    upd = summary_table(src, step_ns).withColumn(
-        "day", F.expr(f"bucket_ts div {NS_PER_DAY}L").cast("int")
-    )
     (
-        upd.write.partitionBy("day")
+        _day_summary(src, step_ns)
+        .write.partitionBy("day")
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .parquet(summary_path)

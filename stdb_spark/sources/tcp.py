@@ -31,58 +31,30 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stdb_spark.model import series_id_col
+from stdb_spark.model import wire_to_narrow
 from stdb_spark.sources.resp import RESPStream
+
+
+def _raw_to_narrow(
+    spark: SparkSession, rows: list, payload: str, dtype: str
+) -> DataFrame:
+    df = spark.createDataFrame(rows, f"series string, ts long, {payload} {dtype}")
+    tokens = F.split(F.col("series"), " ")
+    return wire_to_narrow(df, tokens[0], tokens, 2, payload)
 
 
 def raw_samples_to_narrow(spark: SparkSession, rows: list) -> DataFrame:
     """(series, ts, value) triples -> the narrow fact schema, with the
-    metric/tags split done JVM-side (same expressions as
-    resp.parse_resp_pdus)."""
-    df = spark.createDataFrame(rows, "series string, ts long, value double")
-    tags_part = F.array_join(F.slice(F.split(F.col("series"), " "), 2, 32), " ")
-    df = df.select(
-        F.split(F.col("series"), " ")[0].alias("metric"),
-        "ts",
-        "value",
-        F.map_from_entries(
-            F.transform(
-                F.filter(F.split(tags_part, " "), lambda t: t.contains("=")),
-                lambda t: F.struct(
-                    F.split(t, "=")[0].alias("key"),
-                    F.split(t, "=")[1].alias("value"),
-                ),
-            )
-        ).alias("tags"),
-    )
-    return df.withColumn("series_id", series_id_col()).select(
-        "series_id", "metric", "tags", "ts", "value"
-    )
+    metric/tags split done JVM-side (model.wire_to_narrow, as in
+    resp.parse_resp_full)."""
+    return _raw_to_narrow(spark, rows, "value", "double")
 
 
 def raw_events_to_narrow(spark: SparkSession, rows: list) -> DataFrame:
     """(series, ts, body) triples -> the narrow event schema (same
     metric/tags split; the value column is the string body instead of a
     double — parse_event_value, protocolparser.cc:409-422)."""
-    df = spark.createDataFrame(rows, "series string, ts long, body string")
-    tags_part = F.array_join(F.slice(F.split(F.col("series"), " "), 2, 32), " ")
-    df = df.select(
-        F.split(F.col("series"), " ")[0].alias("metric"),
-        "ts",
-        "body",
-        F.map_from_entries(
-            F.transform(
-                F.filter(F.split(tags_part, " "), lambda t: t.contains("=")),
-                lambda t: F.struct(
-                    F.split(t, "=")[0].alias("key"),
-                    F.split(t, "=")[1].alias("value"),
-                ),
-            )
-        ).alias("tags"),
-    )
-    return df.withColumn("series_id", series_id_col()).select(
-        "series_id", "metric", "tags", "ts", "body"
-    )
+    return _raw_to_narrow(spark, rows, "body", "string")
 
 
 class TcpIngestServer:

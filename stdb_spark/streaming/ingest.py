@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stdb_spark.sources import storage
 from stdb_spark.sources.opentsdb import parse_opentsdb_lines
 
 
@@ -47,12 +48,11 @@ def write_to_parquet(
 ):
     """Append into a day-partitioned narrow fact table.  Partitioning by
     (day, metric) gives time pruning + metric pruning on read — the
-    storage layout the query engine's filters are designed against."""
-    day = F.date_format(
-        F.timestamp_micros(F.expr("ts div 1000")), "yyyy-MM-dd"
-    )
+    storage layout the query engine's filters are designed against
+    (``day`` is storage.with_day's integer day id, as every batch
+    writer of the layout writes it)."""
     writer = (
-        samples.withColumn("day", day)
+        storage.with_day(samples)
         .writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
@@ -630,8 +630,6 @@ def commit_epoch_idempotent(
     import shutil
     import time
 
-    from stdb_spark.sources import storage
-
     marker_dir = os.path.join(checkpoint, "_epoch_markers")
     marker = os.path.join(marker_dir, f"epoch-{batch_id}")
     if os.path.exists(marker):
@@ -651,13 +649,11 @@ def commit_epoch_idempotent(
         storage.write_samples(batch, stage_dir, mode="overwrite")
     finally:
         batch.unpersist()
-    staged = sorted(
-        glob.glob(os.path.join(stage_dir, "day=*", "metric=*", "*.parquet"))
-    )
+    staged = storage.layout_files(stage_dir)
     # 2. scrub any files a crashed previous attempt of this epoch
     #    already moved (same epoch == same source offsets == same
     #    (day, metric) set, so scrubbing the staged dirs suffices)
-    part_dirs = sorted({os.path.dirname(f) for f in staged})
+    part_dirs = sorted({os.path.dirname(f) for _, f in staged})
     for d in part_dirs:
         rel = os.path.relpath(d, stage_dir)
         scrub = os.path.join(glob.escape(os.path.join(path, rel)), f"e{batch_id}-*")
@@ -681,7 +677,7 @@ def commit_epoch_idempotent(
             cursor = 0.0
     base = max(time.time(), cursor + 0.001)
     last = base
-    for i, f in enumerate(staged):
+    for i, (_, f) in enumerate(staged):
         rel_dir = os.path.relpath(os.path.dirname(f), stage_dir)
         dst_dir = os.path.join(path, rel_dir)
         os.makedirs(dst_dir, exist_ok=True)
@@ -713,17 +709,10 @@ def commit_epoch_idempotent(
     with open(tmp_cursor, "w") as fh:
         fh.write(repr(last))
     os.replace(tmp_cursor, cursor_file)
-    days = sorted({int(d.split(os.sep)[-2].split("=", 1)[1]) for d in part_dirs})
-    if not os.path.isdir(summary_path):
-        # first batch bootstraps the store (still only its own days)
-        storage.write_summary(
-            spark.read.parquet(path)
-            .filter(F.col("day").isin(days))
-            .select("series_id", "metric", "tags", "ts", "value"),
-            summary_path,
-        )
-    else:
-        storage.update_summary_incremental(spark, path, summary_path, days)
+    # the first epoch creates the summary store the same way: a
+    # dynamic overwrite of its own days into a missing path
+    days = sorted({day for day, _ in staged})
+    storage.update_summary_incremental(spark, path, summary_path, days)
     os.makedirs(marker_dir, exist_ok=True)
     with open(marker, "w") as fh:
         fh.write("done")

@@ -31,7 +31,6 @@ def test_write_read_roundtrip(spark, facts, tmp_path):
 def test_partition_pruning_in_plan(spark, facts, tmp_path):
     path = str(tmp_path / "pruned")
     storage.write_samples(facts, path)
-    df = storage.with_day(storage.read_samples(spark, path).withColumn("day", F.expr("ts div 86400000000000L").cast("int")))
     lo, hi = 86400 * 10**9, 2 * 86400 * 10**9
     plan = storage.prune_range(
         spark.read.parquet(path), lo, hi
@@ -78,8 +77,36 @@ def test_streaming_file_ingest(spark, tmp_path):
         ("cpu.user", 2.5),
         ("mem.used", 7.0),
     ]
-    # partition layout: day + metric directories
+    # partition layout: day + metric directories, with the integer day
+    # id every batch writer of the layout uses
     assert back.select("day").distinct().count() == 1
+    assert dict(back.dtypes)["day"] == "int"
+    day = 1428000000 // 86400
+
+    # the readers of the layout run on it: a ranged query prunes by day
+    from stdb_spark.engine import Engine
+
+    t0 = 1428000000 * 10**9
+    got = Engine(spark, samples=spark.read.parquet(out)).query(
+        {"select": "cpu.user", "range": {"from": t0, "to": t0 + 120 * 10**9}}
+    )
+    assert [(r.ts, r.value) for r in got.collect()] == [
+        (t0, 1.5),
+        (t0 + 60 * 10**9, 2.5),
+    ]
+    summary = str(tmp_path / "summary")
+    storage.update_summary_incremental(spark, out, summary, [day])
+    assert sorted(
+        (r.metric, r.cnt, r.day) for r in spark.read.parquet(summary).collect()
+    ) == [("cpu.user", 2, day), ("mem.used", 1, day)]
+    compacted = str(tmp_path / "compacted")
+    storage.compact_partitions(spark, out, compacted)
+    assert sorted(map(tuple, storage.read_samples(spark, compacted).collect())) == (
+        sorted(map(tuple, storage.read_samples(spark, out).collect()))
+    )
+    assert storage.expire_partitions(spark, compacted, before_day=day + 1) == [
+        f"day={day}"
+    ]
 
 
 def test_streaming_downsample(spark, tmp_path):
@@ -227,9 +254,9 @@ def test_bucketed_layout_elides_groupby_exchange(spark, facts):
     bucketed table must need NO Exchange (the co-location story at
     100 TB; partitionBy can't do this for unbounded series
     cardinality)."""
-    from stdb_spark.sources import storage
+    from stdb_spark.sources import bucketing
 
-    storage.write_samples_bucketed(facts, "t_bucketed_test", buckets=4)
+    bucketing.write_bucketed(facts, "t_bucketed_test", "series_id", 4, ("series_id", "ts"))
     try:
         df = (
             spark.table("t_bucketed_test")
@@ -293,7 +320,7 @@ def test_compact_partitions_reduces_file_count(spark, tmp_path):
         )
         storage.write_samples(part, src, mode="append")
     dst = str(tmp_path / "compacted")
-    storage.compact_partitions(spark, src, dst, target_files_per_partition=1)
+    storage.compact_partitions(spark, src, dst)
     n_src = len(glob.glob(f"{src}/day=*/metric=*/*.parquet"))
     n_dst = len(glob.glob(f"{dst}/day=*/metric=*/*.parquet"))
     assert n_dst < n_src and n_dst == 2  # one file per (day, metric)
