@@ -91,10 +91,13 @@ class RESPStream:
         self._values: list[float] = []
 
     def feed(self, chunk: str) -> None:
-        self._buf += chunk
-        while "\r\n" in self._buf or "\n" in self._buf:
-            sep = "\r\n" if "\r\n" in self._buf.split("\n", 1)[0] + "\n" else "\n"
-            line, self._buf = self._buf.split(sep, 1)
+        # one split per chunk: lines end in \n with an optional \r
+        # before it, and the unterminated tail carries to the next chunk
+        lines = (self._buf + chunk).split("\n")
+        self._buf = lines.pop()
+        for line in lines:
+            if line.endswith("\r"):
+                line = line[:-1]
             if line:
                 self._line(line)
 

@@ -25,9 +25,12 @@ job.
 from __future__ import annotations
 
 import codecs
+import os
 import socketserver
 import threading
 
+import pyarrow as pa
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,10 +38,24 @@ from stdb_spark.model import wire_to_narrow
 from stdb_spark.sources.resp import RESPStream
 
 
+def _arrow_frame(spark: SparkSession, **columns: pa.Array) -> DataFrame:
+    """One DataFrame from typed column arrays.  A ``pa.Table`` takes
+    PySpark's Arrow path whatever the session's Arrow setting: the batch
+    crosses to the JVM as columnar buffers, not as one pickled row per
+    sample, with the column types fixed by the arrays."""
+    return spark.createDataFrame(pa.table(columns))
+
+
 def _raw_to_narrow(
-    spark: SparkSession, rows: list, payload: str, dtype: str
+    spark: SparkSession, rows: list, payload: str, dtype: pa.DataType
 ) -> DataFrame:
-    df = spark.createDataFrame(rows, f"series string, ts long, {payload} {dtype}")
+    series, ts, values = zip(*rows) if rows else ((), (), ())
+    df = _arrow_frame(
+        spark,
+        series=pa.array(series, pa.string()),
+        ts=pa.array(ts, pa.int64()),
+        **{payload: pa.array(values, dtype)},
+    )
     tokens = F.split(F.col("series"), " ")
     return wire_to_narrow(df, tokens[0], tokens, 2, payload)
 
@@ -47,14 +64,14 @@ def raw_samples_to_narrow(spark: SparkSession, rows: list) -> DataFrame:
     """(series, ts, value) triples -> the narrow fact schema, with the
     metric/tags split done JVM-side (model.wire_to_narrow, as in
     resp.parse_resp_full)."""
-    return _raw_to_narrow(spark, rows, "value", "double")
+    return _raw_to_narrow(spark, rows, "value", pa.float64())
 
 
 def raw_events_to_narrow(spark: SparkSession, rows: list) -> DataFrame:
     """(series, ts, body) triples -> the narrow event schema (same
     metric/tags split; the value column is the string body instead of a
     double — parse_event_value, protocolparser.cc:409-422)."""
-    return _raw_to_narrow(spark, rows, "body", "string")
+    return _raw_to_narrow(spark, rows, "body", pa.string())
 
 
 class TcpIngestServer:
@@ -68,7 +85,12 @@ class TcpIngestServer:
     ``flush_every`` accumulate (or :meth:`flush`/:meth:`stop` is
     called), then append to the layout via the storage writer.  The
     reference's WAL bounds the same window with fsync cadence
-    (same trade, different knob)."""
+    (same trade, different knob).
+
+    Flushes are serialized: every connection's handler flushes inline,
+    and two appends into one layout would race on the job commit.  One
+    flush writes the sample layout and the event layout as two
+    concurrent Spark jobs, one per directory."""
 
     def __init__(
         self,
@@ -88,10 +110,13 @@ class TcpIngestServer:
         # event layout (the reference keeps events in the same column
         # store under negative ids; two schemas = two directories here)
         self.events_path = events_path or layout_path + "_events"
+        if os.path.normpath(self.events_path) == os.path.normpath(layout_path):
+            raise ValueError("events_path must differ from layout_path")
         self.protocol = protocol
         self._addr = (host, port)
         self.flush_every = int(flush_every)
         self._lock = threading.Lock()
+        self._flush_lock = threading.Lock()
         self._samples: list[tuple[str, int, float]] = []
         self._events: list[tuple[str, int, str]] = []
         self._lines: list[str] = []
@@ -144,33 +169,53 @@ class TcpIngestServer:
             return len(self._samples) + len(self._events) + len(self._lines)
 
     def flush(self) -> int:
-        """Append everything buffered to the layout; returns row count."""
+        """Append everything buffered to the layouts; returns row count.
+
+        The event write runs on its own thread while the calling thread
+        writes the samples: the two jobs land in different directories.
+        The event thread is always joined, and the first error raised."""
         from stdb_spark.sources import storage
         from stdb_spark.sources.opentsdb import parse_opentsdb_lines
 
-        with self._lock:
-            samples, self._samples = self._samples, []
-            events, self._events = self._events, []
-            lines, self._lines = self._lines, []
-        n = 0
-        if samples:
-            df = raw_samples_to_narrow(self.spark, samples)
-            storage.write_samples(df, self.layout_path, mode="append")
-            n += len(samples)
-        if events:
-            edf = raw_events_to_narrow(self.spark, events)
-            # same (day, metric)-partitioned writer — the sort/cluster
-            # keys exist on both schemas; only the payload column differs
-            storage.write_samples(edf, self.events_path, mode="append")
-            n += len(events)
-        if lines:
-            ldf = self.spark.createDataFrame([(l,) for l in lines], "value string")
-            df = parse_opentsdb_lines(ldf)
-            storage.write_samples(df, self.layout_path, mode="append")
-            n += len(lines)
-        if n:
-            self.flushed_batches += 1
-        return n
+        with self._flush_lock:
+            with self._lock:
+                samples, self._samples = self._samples, []
+                events, self._events = self._events, []
+                lines, self._lines = self._lines, []
+            event_error: list[BaseException] = []
+
+            def write_events() -> None:
+                try:
+                    # same (day, metric)-partitioned writer — the sort and
+                    # cluster keys exist on both schemas; only the payload
+                    # column differs
+                    edf = raw_events_to_narrow(self.spark, events)
+                    storage.write_samples(edf, self.events_path, mode="append")
+                except BaseException as exc:  # noqa: BLE001 - re-raised by flush
+                    event_error.append(exc)
+
+            writer = None
+            if events:
+                writer = InheritableThread(write_events, name="tcp-flush-events")
+                writer.start()
+            try:
+                if samples:
+                    df = raw_samples_to_narrow(self.spark, samples)
+                    storage.write_samples(df, self.layout_path, mode="append")
+                if lines:
+                    df = parse_opentsdb_lines(_arrow_frame(
+                        self.spark, value=pa.array(lines, pa.string())
+                    ))
+                    storage.write_samples(df, self.layout_path, mode="append")
+            finally:
+                if writer is not None:
+                    writer.join()
+            if event_error:
+                raise event_error[0]
+            n = len(samples) + len(events) + len(lines)
+            if n:
+                self.flushed_batches += 1
+            return n
 
     # --------------------------------------------------------- control
     def start(self) -> tuple[str, int]:

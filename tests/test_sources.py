@@ -198,6 +198,25 @@ def test_resp_partial_chunks():
     assert p.out[0].series == "cpu host=h0"
 
 
+def test_resp_stream_line_endings():
+    """Bare ``\\n`` endings parse like ``\\r\\n``, and a ``\\r\\n`` split
+    across two chunks still loses its ``\\r``."""
+    lf = RESPStream()
+    lf.feed("+cpu host=h0\n+1000\n+1.5\n+mem host=h1\n:2000\n:7\n")
+    assert [(s.series, s.ts, s.value) for s in lf.out] == [
+        ("cpu host=h0", 1000, 1.5),
+        ("mem host=h1", 2000, 7.0),
+    ]
+    crlf = RESPStream()
+    crlf.feed("+!log host=h0\r")
+    crlf.feed("\n+1000\r\n+oom\r")
+    assert crlf.out == []
+    crlf.feed("\n")
+    assert [(s.series, s.ts, s.body) for s in crlf.out] == [
+        ("!log host=h0", 1000, "oom")
+    ]
+
+
 def test_parse_resp_pdus_dataframe(spark):
     pdus = spark.createDataFrame(
         [
@@ -502,3 +521,179 @@ def test_parse_resp_negative_array_size_drops_pdu(spark):
     )
     got = [(r.metric, r.ts, r.value) for r in parse_resp_pdus(pdus).collect()]
     assert got == [("ok", 7, 1.5)]
+
+
+def _send_resp(addr, payload: str) -> None:
+    import socket
+
+    with socket.create_connection(addr) as c:
+        c.sendall(payload.encode("utf-8"))
+
+
+def _await_pending(srv, n: int, timeout_s: float = 30) -> None:
+    import time
+
+    deadline = time.time() + timeout_s
+    while srv.pending_count() < n and time.time() < deadline:
+        time.sleep(0.05)
+    assert srv.pending_count() == n
+
+
+def test_tcp_ingest_server_serializes_flushes(spark, tmp_path, monkeypatch):
+    """Every connection runs on its own handler thread and flushes
+    inline, and a manual flush() can run beside them.  Two appends into
+    one layout must never run at once: they race on the job commit, and
+    a lost race raises inside the handler, where it is swallowed
+    together with the batch it swapped out."""
+    import collections
+    import socket
+    import threading
+    import time
+
+    from stdb_spark.sources import storage
+    from stdb_spark.sources.tcp import TcpIngestServer
+
+    write = storage.write_samples
+    in_flight, peak = collections.Counter(), collections.Counter()
+    count_lock = threading.Lock()
+
+    def counting_write(df, path, mode="overwrite"):
+        with count_lock:
+            in_flight[path] += 1
+            peak[path] = max(peak[path], in_flight[path])
+        try:
+            time.sleep(0.05)  # widen the window an overlap needs
+            write(df, path, mode)
+        finally:
+            with count_lock:
+                in_flight[path] -= 1
+
+    monkeypatch.setattr(storage, "write_samples", counting_write)
+    layout = str(tmp_path / "layout")
+    srv = TcpIngestServer(spark, layout, protocol="resp", flush_every=200)
+    finished = threading.Semaphore(0)
+    handle = srv._handle_resp
+
+    def handle_and_count(rfile):
+        try:
+            handle(rfile)
+        finally:
+            finished.release()
+
+    srv._handle_resp = handle_and_count
+    addr = srv.start()
+    per_conn, t0 = 2000, 1_704_067_200_000_000_000
+
+    def send(conn: int) -> None:
+        # many small writes, so each handler flushes many times
+        with socket.create_connection(addr) as c:
+            for lo in range(0, per_conn, 50):
+                c.sendall("".join(
+                    f"+m host=c{conn}\r\n:{t0 + i}\r\n+{i}.5\r\n"
+                    for i in range(lo, lo + 50)
+                ).encode())
+                time.sleep(0.075)
+
+    senders = [threading.Thread(target=send, args=(k,)) for k in range(2)]
+    for t in senders:
+        t.start()
+    while any(t.is_alive() for t in senders):
+        srv.flush()
+        time.sleep(0.1)
+    for t in senders:
+        t.join(timeout=60)
+        assert not t.is_alive()
+    for _ in senders:
+        assert finished.acquire(timeout=300)
+    srv.stop()
+    assert peak[layout] == 1
+    got = sorted(
+        (r.tags["host"], r.ts, r.value) for r in spark.read.parquet(layout).collect()
+    )
+    assert got == sorted(
+        (f"c{k}", t0 + i, i + 0.5) for k in range(2) for i in range(per_conn)
+    )
+
+
+def test_tcp_ingest_server_rejects_shared_event_path(spark, tmp_path):
+    from stdb_spark.sources.tcp import TcpIngestServer
+
+    layout = str(tmp_path / "layout")
+    with pytest.raises(ValueError, match="events_path"):
+        TcpIngestServer(spark, layout, events_path=layout)
+
+
+def test_tcp_ingest_server_event_write_failure(spark, tmp_path):
+    """A failed event write raises from flush(), leaves no writer
+    thread running, and the sample batch still lands."""
+    import threading
+
+    from py4j.protocol import Py4JJavaError
+    from pyspark import InheritableThread
+
+    from stdb_spark.sources.tcp import TcpIngestServer
+
+    blocker = tmp_path / "events"
+    blocker.write_text("a regular file, not a layout directory")
+    layout = str(tmp_path / "layout")
+    srv = TcpIngestServer(spark, layout, protocol="resp", events_path=str(blocker))
+    addr = srv.start()
+    _send_resp(addr, "+cpu host=h0\r\n:1000\r\n+1.5\r\n+!log host=h0\r\n:1000\r\n+oom\r\n")
+    _await_pending(srv, 2)
+    try:
+        with pytest.raises(Py4JJavaError, match="not a directory"):
+            srv.flush()
+        assert not [t for t in threading.enumerate() if isinstance(t, InheritableThread)]
+    finally:
+        srv.stop(flush=False)
+    rows = [(r.metric, r.ts, r.value) for r in spark.read.parquet(layout).collect()]
+    assert rows == [("cpu", 1000, 1.5)]
+
+
+def test_tcp_ingest_server_schema_and_exact_values(spark, tmp_path):
+    """Both layouts keep the narrow schema that layouts already on disk
+    were written with (appends must stay readable), and every value
+    round-trips bit for bit: ns timestamps beyond 2^53, signed zero,
+    extreme doubles, multi-byte UTF-8 names and bodies."""
+    import math
+
+    from stdb_spark.sources.tcp import TcpIngestServer
+
+    t0 = 1_704_067_200_123_456_789  # not representable as a double
+    samples = [
+        ("cpu host=h0", t0, 0.1),
+        ("cpu host=h0", t0 + 1, -0.0),
+        ("cpu host=h0", t0 + 2, 1e308),
+        ("温度 host=ħøst room=北", t0 + 3, -2.5e-300),
+    ]
+    events = [
+        ("!log host=h0", t0, "ünïcode € 日本 🚀"),
+        ("!注記 host=ħøst", t0 + 1, "plain"),
+    ]
+    layout = str(tmp_path / "layout")
+    srv = TcpIngestServer(spark, layout, protocol="resp")
+    addr = srv.start()
+    _send_resp(addr, "".join(
+        f"+{s}\r\n:{ts}\r\n+{v}\r\n" for s, ts, v in samples + events
+    ))
+    _await_pending(srv, len(samples) + len(events))
+    srv.stop()
+
+    def series(r):
+        return " ".join([r.metric] + [f"{k}={v}" for k, v in r.tags.items()])
+
+    got = spark.read.parquet(layout)
+    assert got.schema.simpleString() == (
+        "struct<series_id:bigint,tags:map<string,string>,ts:bigint,"
+        "value:double,day:int,metric:string>"
+    )
+    rows = sorted((series(r), r.ts, r.value) for r in got.collect())
+    assert [(s, ts) for s, ts, _ in rows] == [(s, ts) for s, ts, _ in samples]
+    for (_, _, v), (_, _, want) in zip(rows, samples):
+        assert v == want and math.copysign(1, v) == math.copysign(1, want)
+    ev = spark.read.parquet(srv.events_path)
+    assert ev.schema.simpleString() == (
+        "struct<series_id:bigint,tags:map<string,string>,ts:bigint,"
+        "body:string,day:int,metric:string>"
+    )
+    assert sorted((series(r), r.ts, r.body) for r in ev.collect()) == sorted(events)
