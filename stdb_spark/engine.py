@@ -22,9 +22,9 @@ metric/tags columns so Parquet predicate pushdown applies; group-by keys
 are strings (canonical tag suffix) to keep every shuffle key sortable;
 aggregates are single Catalyst expressions so map-side partials apply;
 `join` aligns metrics with one conditional max per metric (one hash
-exchange, where a pivot plans two); the final ordering sorts inputs
-from small tables in one task instead of range-partitioning them (see
-`_sort`).
+exchange, where a pivot plans two).  A small bound table is read in one
+task, so a query over it plans no exchange and runs as one job; larger
+tables keep the distributed plans (see `_one_task`).
 """
 
 from __future__ import annotations
@@ -55,46 +55,47 @@ def _quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-# Largest input, in bytes of the bound tables' files, that sorts in one
-# task.  Paired runs on a 4-core VM (a table of 1-32 day partitions,
-# scanned whole; ten alternated pairs per size): the one-task sort wins
-# 10/10 for select and select-events up to 4.1 MB, select-events turns
-# at 6-8 MB and select at 10-15 MB, and group-aggregate, whose scan
-# stays parallel, wins or ties up to 79 MB.  On more cores the range
-# sort's scan spreads wider, so the turn comes earlier there.
-_ONE_TASK_SORT_BYTES = 4 << 20
+# Largest bound table, in bytes of its files, that a query reads in one
+# task.  Set from paired runs on a 4-core VM of the earlier regime that
+# made only the final sort one task, in which select and select-events
+# already scanned in that task (a table of 1-32 day partitions, scanned
+# whole; ten alternated pairs per size): one task wins 10/10 up to
+# 4.1 MB, select-events turns at 6-8 MB and select at 10-15 MB.  The
+# aggregating queries' turn with a one-task scan is unmeasured.  On
+# more cores a distributed scan spreads wider, so the turn comes
+# earlier there.
+_ONE_TASK_BYTES = 4 << 20
 
 
-def _sort(df: DataFrame, *keys) -> DataFrame:
-    """Total order over ``df`` in the regime its input size allows.
+def _one_task(df: DataFrame | None) -> DataFrame | None:
+    """``df`` in the regime its size allows: a small table is stored
+    ``coalesce(1)``'d, a larger one as it is.
 
-    Small inputs sort in ONE task: ``coalesce(1)`` reports
-    SinglePartition, which satisfies the sort's ordered distribution,
-    so the plan has no range exchange and no RangePartitioner sample
-    job (which re-runs the whole child plan, scan included).  Coalesce
-    is a narrow dependency, so the one task runs the whole stage above
-    the last exchange: for select and select-events the Parquet scan,
-    the filters and the apply windows; for aggregates the final merge.
+    Coalesce reports SinglePartition, which satisfies every distribution
+    an engine query asks for: the clustered one of the aggregates, the
+    pivot, the apply windows and pandas UDFs, and the sort's ordered one.
+    So a query over small tables plans no Exchange at all: one job, one
+    stage, one task running scan, filters, both aggregation phases and
+    the sort, with no map-stage job and no RangePartitioner sample job.
+    Catalyst pushes the bind and range filters, and the column pruning,
+    below the Coalesce, so PushedFilters and PartitionFilters are those
+    of the bare scan.
 
     "Small" is the summed ``sizeInBytes`` of the analyzed plan's leaves
-    at or under ``_ONE_TASK_SORT_BYTES`` (or under
+    at or under ``_ONE_TASK_BYTES`` (or under
     ``spark.sql.autoBroadcastJoinThreshold`` when that is smaller).  For
     Parquet tables that is their whole compressed file size, before
-    partition pruning: an upper bound on what the scan reads, whatever
-    the range.  A threshold <= 0 keeps the distributed range sort for
-    every input.  The analyzed plan is built with every Dataset, so the
-    choice runs no optimizer pass of its own."""
+    partition pruning: an upper bound on what any query's scan reads.
+    A threshold <= 0 keeps the distributed plans for every table."""
+    if df is None:
+        return None
     qe = df._jdf.queryExecution()
     limit = qe.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
-    if limit > 0:
-        leaves = qe.analyzed().collectLeaves()
-        size = sum(
-            int(leaves.apply(i).stats().sizeInBytes())
-            for i in range(leaves.size())
-        )
-        if size <= min(limit, _ONE_TASK_SORT_BYTES):
-            return df.coalesce(1).orderBy(*keys)
-    return df.orderBy(*keys)
+    if limit <= 0:
+        return df
+    leaves = qe.analyzed().collectLeaves()
+    size = sum(int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size()))
+    return df.coalesce(1) if size <= min(limit, _ONE_TASK_BYTES) else df
 
 
 def _and_all(conds):
@@ -132,13 +133,22 @@ class Engine:
         summaries: DataFrame | None = None,
         summary_step_ns: int | None = None,
     ):
+        if summaries is not None and "tags" not in summaries.columns:
+            raise ValueError(
+                "summaries have no tags column: rebuild the store with "
+                "storage.write_summary (or storage.summary_table)"
+            )
+        # the one-task choice is made once per bound table, not per
+        # query; a registry derived from the samples inherits theirs
+        samples, events, summaries = (_one_task(t) for t in (samples, events, summaries))
         self.spark = spark
         self.samples = samples
         self.events = events
         # optional pre-aggregated per-(series, coarse-bucket) table
         # (sources.storage.summary_table): bucket-aligned `aggregate`
         # queries are answered from it without touching leaf rows — the
-        # SubtreeRef pushdown analog (stdb/storage/nbtree.cc:922-1035)
+        # SubtreeRef pushdown analog (stdb/storage/nbtree.cc:922-1035).
+        # It carries each series' tags, so it binds like the leaf rows.
         self.summaries = summaries
         self.summary_step_ns = summary_step_ns
         # If the bound DataFrames carry a ``ts_raw`` column (the untouched
@@ -153,6 +163,8 @@ class Engine:
         self.ts_slack_ns = ts_slack_ns
         if series is None and samples is not None:
             series = model.series_registry(samples)
+        else:
+            series = _one_task(series)
         self.series = series
         # decimal-backed sum/mean: reproducible independent of partial-agg
         # order (oracle-comparison mode; slower, default off)
@@ -227,7 +239,7 @@ class Engine:
         req.where = sq.where
         req.limit, req.offset = sq.limit, sq.offset
         df = self._bind(df, req, metrics=[])
-        out = _sort(df.select(F.col("name").alias("series")), "series")
+        out = df.select(F.col("name").alias("series")).orderBy("series")
         return self._limit(out, req)
 
     def suggest(self, q) -> DataFrame:
@@ -257,7 +269,7 @@ class Engine:
             )
         if sq.starts_with:
             out = out.filter(F.col("name").startswith(sq.starts_with))
-        return _sort(out, "name")
+        return out.orderBy("name")
 
     # ------------------------------------------------------------------
     # shared stages
@@ -363,8 +375,8 @@ class Engine:
             if c in cols
         ]
         if req.order_by == "series":
-            return _sort(df, sr, ts, *tiebreaks)
-        return _sort(df, ts, sr, *tiebreaks)
+            return df.orderBy(sr, ts, *tiebreaks)
+        return df.orderBy(ts, sr, *tiebreaks)
 
     @staticmethod
     def _limit(df: DataFrame, req: QueryRequest) -> DataFrame:
@@ -464,7 +476,7 @@ class Engine:
         if self.series is None:
             raise QueryParseError("no series registry bound")
         df = self._bind(self.series, req)
-        out = _sort(df.select(F.col("name").alias("series")), "series")
+        out = df.select(F.col("name").alias("series")).orderBy("series")
         return self._limit(out, req)
 
     # ------------------------------------------------------------------
@@ -515,26 +527,21 @@ class Engine:
         Planner choice: roll up the summary table when _summary_exact
         holds — the hypertable-rollup shape: a month of 2d buckets
         combines ~60 day-summaries per series instead of re-scanning
-        every leaf row — and scan the leaf rows otherwise."""
-        if not self._summary_exact(req, funcs, bucketed):
-            df = self._bind(self.samples, req)
-            df = self._range(df, req, "samples")
-            df = self._group_remap(df, req)
-            keys = [self._tags_col] + ([self._bucket_col(req)] if bucketed else [])
-            return df, keys, lambda f: agg_expr(f, req.backward, exact=self.exact_sums)
-        s = self.summaries
-        if req.begin is not None:
-            s = s.filter(
-                (F.col("bucket_ts") >= req.begin) & (F.col("bucket_ts") < req.end)
-            )
-        if req.metrics:
-            s = s.filter(F.col("metric").isin(list(dict.fromkeys(req.metrics))))
-        # tags live in the (small) series registry — bind there, then
-        # broadcast-join the matching series ids onto the summaries
-        reg = self._bind(self.series, req, metrics=req.metrics)
-        s = s.join(F.broadcast(reg.select("series_id", self._tags_col)), "series_id")
-        keys = ["_tags_s"] + ([self._bucket_col(req, "bucket_ts")] if bucketed else [])
-        return s, keys, lambda f: self._SUMMARY_EXPRS[f]()
+        every leaf row — and scan the leaf rows otherwise.  Summary rows
+        carry their series' metric and tags, so both bind alike."""
+        summary = self._summary_exact(req, funcs, bucketed)
+        df = self._bind(self.summaries if summary else self.samples, req)
+        if summary:
+            ts = "bucket_ts"
+            if req.begin is not None:
+                df = df.filter((F.col(ts) >= req.begin) & (F.col(ts) < req.end))
+            expr = lambda f: self._SUMMARY_EXPRS[f]()  # noqa: E731
+        else:
+            ts = "ts"
+            df = self._group_remap(self._range(df, req, "samples"), req)
+            expr = lambda f: agg_expr(f, req.backward, exact=self.exact_sums)  # noqa: E731
+        keys = [self._tags_col] + ([self._bucket_col(req, ts)] if bucketed else [])
+        return df, keys, expr
 
     # ------------------------------------------------------------------
     def _aggregate(self, req: QueryRequest) -> DataFrame:
@@ -574,7 +581,7 @@ class Engine:
         ).otherwise(F.col("_e.label"))
         out = e.select(sname.alias("series"), F.col("_e.value").alias("value"))
         # aggregate output is always series-ordered (queryparser.cc:1453+)
-        return self._limit(_sort(out, "series"), req)
+        return self._limit(out.orderBy("series"), req)
 
     # ------------------------------------------------------------------
     @staticmethod

@@ -520,18 +520,6 @@ def extract_audio_features(df: DataFrame) -> DataFrame:
     ).mapInPandas(fn, schema=AUDIO_FEATURE_SCHEMA)
 
 
-def resize_plan(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Resize plumbing: emits (media_id, payload, target dims) with the
-    decode/resize marked; the actual pixel work is the same mapInPandas
-    shape as extract_image_features."""
-    return df.select(
-        "media_id",
-        "payload",
-        F.lit(target_w).alias("target_w"),
-        F.lit(target_h).alias("target_h"),
-    )
-
-
 def encode_avi_mjpeg(
     frames: list[np.ndarray], fps: int = 4, quality: int = 90
 ) -> bytes:

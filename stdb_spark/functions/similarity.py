@@ -86,20 +86,6 @@ def int8_quantize_expr(vec_col: Column, scale: Column) -> Column:
     )
 
 
-def with_int8_embedding(
-    df: DataFrame, vec_col: str = "embedding", out_prefix: str = "q"
-) -> DataFrame:
-    """Write-time artifact: adds ``{p}_scale`` (float64) and ``{p}_vec``
-    (array<int>) columns.  At 100 TB this is the storage play that makes
-    ANN affordable: int8 vectors are 4× smaller than float32 on disk and
-    in shuffle, and the scan-side score is an exact integer dot product
-    rescaled by two floats.  Map-side only."""
-    scale = int8_scale_expr(F.col(vec_col))
-    return df.withColumn(f"{out_prefix}_scale", scale).withColumn(
-        f"{out_prefix}_vec", int8_quantize_expr(F.col(vec_col), F.col(f"{out_prefix}_scale"))
-    )
-
-
 def quantize_query_int8(query_vec: list[float]) -> tuple[float, list[int]]:
     """Driver-side twin of :func:`int8_quantize_expr` for one query."""
     import math
@@ -165,24 +151,6 @@ def _local_then_global_top_k(scored: DataFrame, qkey: str, key: str, k: int) -> 
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def brute_force_top_k_many(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    key: str = "vec_id",
-    qkey: str = "query_id",
-) -> DataFrame:
-    """Top-k per query via broadcast cross join + two-phase window rank.
-    The query side is broadcast (small); the corpus is scanned once,
-    and the rank runs skew-free via the (query, partition)-cell local
-    phase (see _local_then_global_top_k)."""
-    joined = df.crossJoin(F.broadcast(queries.select(qkey, F.col(vec_col).alias("_qv"))))
-    cos = cosine_expr(F.col(vec_col), F.col("_qv"))
-    scored = joined.select(qkey, key, cos.alias("cosine"))
-    return _local_then_global_top_k(scored, qkey, key, k)
 
 
 def knn_classify(

@@ -61,13 +61,6 @@ def bpe_token_count_col(text: str | Column = "text") -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(BPE_PATTERN), F.lit(0)))
 
 
-def stopword_ratio_col(text: str | Column = "text", stopwords: list[str] | None = None) -> Column:
-    sw = F.array(*[F.lit(w) for w in (stopwords or STOPWORDS_EN)])
-    toks = tokens_col(text)
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic document quality: length, mean word length, punctuation
     density, stopword ratio — the standard cheap pre-filters of an LLM

@@ -85,45 +85,3 @@ def agg_expr(
     if func not in table:
         raise ValueError(f"unknown aggregate function {func!r}")
     return table[_BACKWARD_NAMES.get(func, func) if backward else func]()
-
-
-def oracle_agg_sql(
-    func: str, backward: bool, value: str = "value", ts: str = "ts", exact: bool = False
-) -> str:
-    """DuckDB SQL fragment with semantics identical to :func:`agg_expr`
-    (used to build oracle queries; struct comparison works the same way)."""
-    if exact:
-        sum_d = f"CAST(sum(CAST({value} AS DECIMAL(28,10))) AS DOUBLE)"
-        mean_d = f"{sum_d} / count({value})"
-    else:
-        sum_d = f"sum({value})"
-        mean_d = f"avg({value})"
-    first_s = f"min(struct_pack(t := {ts}, v := {value}))"
-    last_s = f"max(struct_pack(t := {ts}, v := {value}))"
-    minv_s = f"min(struct_pack(v := {value}, t := {ts}))"
-    maxv_s = f"max(struct_pack(v := {value}, t := {ts}))"
-    if backward:
-        first_s, last_s = last_s, first_s
-        first_ts, last_ts = f"max({ts})", f"min({ts})"
-    else:
-        first_ts, last_ts = f"min({ts})", f"max({ts})"
-    table = {
-        "min": f"min({value})",
-        "max": f"max({value})",
-        "sum": sum_d,
-        "count": f"CAST(count({value}) AS DOUBLE)",
-        "cnt": f"CAST(count({value}) AS DOUBLE)",
-        "mean": mean_d,
-        "first": f"({first_s}).v",
-        "last": f"({last_s}).v",
-        "min_timestamp": f"CAST(({minv_s}).t AS DOUBLE)",
-        "max_timestamp": f"CAST(({maxv_s}).t AS DOUBLE)",
-        "first_timestamp": f"CAST({first_ts} AS DOUBLE)",
-        "last_timestamp": f"CAST({last_ts} AS DOUBLE)",
-        "distinct_count": f"CAST(count(DISTINCT {value}) AS DOUBLE)",
-        "median": f"quantile_cont({value}, 0.5)",
-        "p90": f"quantile_cont({value}, 0.90)",
-        "p95": f"quantile_cont({value}, 0.95)",
-        "p99": f"quantile_cont({value}, 0.99)",
-    }
-    return table[func]

@@ -187,11 +187,6 @@ def parse_where(q: dict) -> WhereClause | None:
     return _parse_where(q)
 
 
-def parse_limit_offset(q: dict) -> tuple[int | None, int]:
-    """Public limit/offset parser (validation included)."""
-    return _parse_limit_offset(q)
-
-
 @dataclass
 class SearchRequest:
     """Parsed search endpoint query (parse_search_query,

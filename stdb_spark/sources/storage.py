@@ -147,9 +147,15 @@ def summary_table(samples: DataFrame, step_ns: int = NS_PER_DAY) -> DataFrame:
     associative, so combining bucket sums in ANY grouping reproduces the
     leaf scan's exact-sum answer bit-for-bit.  min/max carry the ts at
     which they occur (smallest-ts tiebreak via (value, ts) struct order)
-    so min_timestamp/max_timestamp combine exactly too."""
+    so min_timestamp/max_timestamp combine exactly too.
+
+    Each row carries its series' ``tags`` (``series_id`` determines
+    them; a map cannot be a grouping key, so ``any_value`` takes them),
+    so the engine binds a ``where`` clause on this table as on the leaf
+    rows, with no series-registry lookup."""
     bucket = (F.expr(f"ts div {step_ns}L") * step_ns).alias("bucket_ts")
     return samples.groupBy("series_id", "metric", bucket).agg(
+        F.any_value("tags").alias("tags"),
         F.count("value").alias("cnt"),
         F.sum(F.col("value").cast("decimal(38,10)")).alias("sum"),
         F.min(F.struct("value", "ts")).alias("_minv"),
@@ -159,6 +165,7 @@ def summary_table(samples: DataFrame, step_ns: int = NS_PER_DAY) -> DataFrame:
     ).select(
         "series_id",
         "metric",
+        "tags",
         "bucket_ts",
         "cnt",
         "sum",

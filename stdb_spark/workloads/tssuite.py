@@ -781,7 +781,7 @@ def _engine_with_summaries(spark: SparkSession, sf_dir: str) -> Engine:
         # cache (fingerprint-keyed to the source file, so regenerated
         # testdata recomputes) so a summary-answered aggregate touches NO
         # leaf rows
-        summ_path = model.derived_cache_path(sf_dir, "summaries", "events")
+        summ_path = model.derived_cache_path(sf_dir, "summaries_tagged", "events")
         reg_path = model.derived_cache_path(sf_dir, "registry", "events")
         # coalesce: both artifacts are ~#series(*days) rows — tiny at any
         # sf here; a real deployment sizes files to row-group targets

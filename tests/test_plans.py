@@ -91,12 +91,22 @@ def test_join_pivot_is_single_pivot_not_selfjoin(spark):
     assert "BroadcastHashJoin" not in plan
 
 
-def test_join_pivot_single_hash_exchange_below_sort(spark):
-    # one conditional max per metric: one aggregation, one hash exchange
-    # (a pivot plans two); the small result then sorts in one task
+def test_join_pivot_small_input_plans_no_exchange(spark):
+    # one conditional max per metric: one aggregation over the small
+    # table's one partition, so neither it nor the sort needs an exchange
     plan = _plan(QUERIES["ts_join_pivot"](spark, SF))
+    assert "Exchange" not in plan, plan
+    assert plan.index("HashAggregate") < plan.index("Coalesce 1"), plan
+
+
+def test_join_pivot_forced_range_single_hash_exchange_below_sort(spark):
+    # the distributed regime: one conditional max per metric is one
+    # aggregation, so one hash exchange (a pivot plans two) below the sort
+    forced = spark.newSession()
+    forced.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    plan = _plan(QUERIES["ts_join_pivot"](forced, SF))
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "rangepartitioning" not in plan, plan
+    assert "Coalesce" not in plan, plan
     assert plan.index("Sort [") < plan.index("Exchange hashpartitioning"), plan
 
 
@@ -137,7 +147,7 @@ def test_table_over_one_task_cut_keeps_range_sort(spark, monkeypatch):
     # stays spread over the range sort's tasks
     from stdb_spark import engine
 
-    monkeypatch.setattr(engine, "_ONE_TASK_SORT_BYTES", 1024)
+    monkeypatch.setattr(engine, "_ONE_TASK_BYTES", 1024)
     eng = engine.Engine(spark, samples=model.events_as_samples(spark, SF, keep_src=True))
     plan = _plan(eng.query(_SELECT_CLICK))
     assert "rangepartitioning" in plan, plan

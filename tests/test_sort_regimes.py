@@ -1,10 +1,10 @@
-"""Sort-regime parity: every engine query kind returns the same rows in
-the same order whether its final sort runs in one task (small input,
-the default session) or as a distributed range sort (a session with
-``spark.sql.autoBroadcastJoinThreshold=-1``).  The data are parquet
-files, so the default session sees real scan sizes and picks the
-one-task regime; values are multiples of 1/4, so every sum is exact
-whatever the combine order."""
+"""Regime parity: every engine query kind returns the same rows in the
+same order whether it runs in one task (small bound tables, the default
+session) or as a distributed plan with hash exchanges and a range sort
+(a session with ``spark.sql.autoBroadcastJoinThreshold=-1``).  The data
+are parquet files, so the default session sees real scan sizes and
+picks the one-task regime; values are multiples of 1/4, so every sum is
+exact whatever the combine order."""
 
 import pytest
 
@@ -164,3 +164,32 @@ def test_join_missing_metric_is_null_duplicate_is_max(engines, regime):
     assert by_ts[49].m2 == ((49 + 0) % 11) * 0.25
     assert by_ts[50].m1 == 99.0  # duplicated (series, ts): the max
     assert by_ts[51].m1 == ((51 * 7) % 13) * 0.5
+
+
+NO_LIMIT = [c for c in CASES if "limit" not in c[2]]
+AGGREGATING = {"aggregate", "group-aggregate", "join", "group-aggregate-join"}
+
+
+@pytest.mark.parametrize("method,name,q", NO_LIMIT, ids=[c[1] for c in NO_LIMIT])
+def test_one_task_engine_runs_one_job(spark, engines, method, name, q):
+    """Over small tables a query plans no exchange: one job, whatever
+    its kind.  The forced engine still shuffles the aggregating kinds."""
+    one_task, ranged = engines
+    sc = spark.sparkContext
+    group = f"one-task-{name}"
+    sc.setJobGroup(group, name, False)
+    try:
+        rows = getattr(one_task, method)(q).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert rows, name
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, name
+    if method == "suggest" or AGGREGATING & q.keys():
+        plan = _plan(getattr(ranged, method)(q))
+        assert "Exchange hashpartitioning" in plan, plan
+
+
+def test_summaries_without_tags_rejected(spark, tables):
+    stale = spark.read.parquet(tables["summary"]).drop("tags")
+    with pytest.raises(ValueError, match="storage.write_summary"):
+        Engine(spark, summaries=stale, summary_step_ns=SSTEP)

@@ -56,6 +56,27 @@ def test_summary_combine_matches_direct(spark, facts):
     assert first["cpu"] == 0.0  # value at earliest ts
 
 
+def test_summary_tags_match_registry(spark, tmp_path):
+    """Summary rows carry their series' tags, so the engine binds a
+    where clause on them without the registry; incremental maintenance
+    writes the same column."""
+    from stdb_spark import model
+
+    samples = model.events_as_samples(spark, "/root/testdata/sf0.001")
+    want = {r.series_id: r.tags for r in model.series_registry(samples).collect()}
+    got = storage.summary_table(samples).select("series_id", "tags").collect()
+    assert {r.series_id for r in got} == set(want)
+    assert all(r.tags == want[r.series_id] for r in got)
+
+    layout, summary = str(tmp_path / "layout"), str(tmp_path / "summary")
+    storage.write_samples(samples, layout)
+    days = [r.day for r in spark.read.parquet(layout).select("day").distinct().collect()]
+    storage.update_summary_incremental(spark, layout, summary, days)
+    back = spark.read.parquet(summary).select("series_id", "tags").collect()
+    assert {r.series_id for r in back} == set(want)
+    assert all(r.tags == want[r.series_id] for r in back)
+
+
 def test_streaming_file_ingest(spark, tmp_path):
     from stdb_spark.streaming.ingest import stream_from_files, write_to_parquet
 
