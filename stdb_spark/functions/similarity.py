@@ -737,101 +737,6 @@ def simplified_silhouette(
     )
 
 
-def pq_train(
-    df: DataFrame,
-    dim: int,
-    m: int = 4,
-    ks: int = 16,
-    iters: int = 4,
-    vec_col: str = "embedding",
-    key: str = "vec_id",
-) -> list[list[list[float]]]:
-    """Train product-quantization codebooks (Jégou et al., TPAMI'11):
-    split each vector into ``m`` contiguous subspaces of dim/m and run
-    the deterministic distributed k-means (:func:`kmeans_fit`) per
-    subspace.  Returns m codebooks of ks centroids each — m·ks·(dim/m)
-    floats, broadcast-scale by construction (the whole point: an
-    m-byte code per vector instead of 4·dim bytes, with table-lookup
-    distances at query time)."""
-    assert dim % m == 0, "dim must divide evenly into m subspaces"
-    sub = dim // m
-    books = []
-    for j in range(m):
-        sliced = df.select(
-            F.col(key), F.slice(F.col(vec_col), j * sub + 1, sub).alias(vec_col)
-        )
-        books.append(kmeans_fit(sliced, k=ks, iters=iters, vec_col=vec_col, key=key))
-    return books
-
-
-def pq_codes(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    key: str = "vec_id",
-) -> DataFrame:
-    """Assign each vector its m-subspace PQ code (array<int>) — the
-    write-time compression step.  Each subspace assignment is the same
-    JVM argmin expression the IVF path uses; fully map-side, zero
-    shuffles."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    cells = []
-    for j, book in enumerate(codebooks):
-        sliced = F.slice(F.col(vec_col), j * sub + 1, sub)
-        dists = F.transform(
-            F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in book]),
-            lambda c: F.aggregate(
-                F.zip_with(sliced, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-        cells.append(F.array_position(dists, F.array_min(dists)).cast("int") - 1)
-    return df.select(F.col(key), F.array(*cells).alias("code"))
-
-
-def pq_adc_top_k(
-    codes: DataFrame,
-    codebooks: list[list[list[float]]],
-    query_vec: list[float],
-    k: int = 10,
-    key: str = "vec_id",
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: precompute the
-    m×ks table of squared distances from the query's subvectors to
-    every centroid (driver-side, tiny), then score each row with m
-    array lookups + a sum — no float vector is ever read.  This is the
-    100 TB scan shape PQ exists for: the fact table holds m small ints
-    per vector, the distance table rides the closure, and the scan is
-    a TakeOrdered with no shuffle."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    table = []
-    for j, book in enumerate(codebooks):
-        q = query_vec[j * sub : (j + 1) * sub]
-        table.append(
-            [sum((a - b) * (a - b) for a, b in zip(q, c)) for c in book]
-        )
-    tbl = F.array(
-        *[F.array(*[F.lit(float(x)) for x in row]) for row in table]
-    )
-    score = F.aggregate(
-        F.zip_with(
-            tbl,
-            F.col("code"),
-            lambda row, c: F.element_at(row, c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        codes.select(F.col(key), score.alias("adc_dist2"))
-        .orderBy(F.col("adc_dist2").asc(), F.col(key).asc())
-        .limit(k)
-    )
-
-
 def centroid_outliers(
     emb: DataFrame,
     k: float = 3.0,

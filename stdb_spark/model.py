@@ -168,8 +168,8 @@ _SESSION_CONFS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.filterPushdown": "true",
     # selective fact-fact joins inject a bloom filter into the big
-    # side's scan (runtime row-level filtering) — explicit so injected
-    # bare sessions behave like session.get_spark ones
+    # side's scan (runtime row-level filtering; plan test:
+    # test_plans.test_runtime_bloom_filter_reduces_fact_scan)
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     # InferFiltersFromGenerate synthesizes `size(e) > 0` below every
     # explode and pushdown then SUBSTITUTES the generator input's whole
@@ -185,10 +185,10 @@ _SESSION_CONFS = {
     # Right-size shuffles for the local box: an injected bare session
     # defaults to 200 partitions — pure task overhead at test scale
     # (AQE coalesces batch plans, but streaming state shuffles run all
-    # 200).  Sized from the SAME cpu count session.get_spark uses, so
-    # the two never fight; and ensure_session_confs only replaces the
-    # BARE default (see below) so an explicit get_spark(
-    # shuffle_partitions=...) choice survives.
+    # 200).  One partition per core locally; a real cluster would use
+    # 2-3x total cores — AQE coalesces the excess either way.
+    # ensure_session_confs only replaces the BARE default (see below)
+    # so an explicit get_spark(shuffle_partitions=...) choice survives.
     "spark.sql.shuffle.partitions": str(
         max(int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)), 8)
     ),

@@ -23,6 +23,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from stdb_spark import model
+
 
 def get_spark(
     app_name: str = "stdb_spark",
@@ -33,27 +35,24 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if master is None:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # one shuffle partition per core locally; a real cluster would use
-        # 2-3x total cores — AQE coalesces the excess either way.
-        shuffle_partitions = max(cpus, 8)
 
+    builder = SparkSession.builder.appName(app_name).master(master)
+    # the runtime confs every entry point needs (nanosAsLong, ansi off,
+    # UTC, Arrow, pushdown, runtime bloom filters, excluded optimizer
+    # rules, one shuffle partition per core, LAST_WIN map keys) have one
+    # table, model._SESSION_CONFS, which ensure_session_confs also
+    # applies to injected sessions; an explicit width wins
+    for k, v in model._SESSION_CONFS.items():
+        builder = builder.config(k, v)
+    if shuffle_partitions is not None:
+        builder = builder.config(
+            "spark.sql.shuffle.partitions", str(shuffle_partitions)
+        )
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
+        builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # the reference is a C++ engine: float division by zero flows
-        # through as inf/NaN rather than raising; non-ANSI Spark (NULL)
-        # is the closest declarative match
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # preferSortMergeJoin stays at its default (true): an
         # alternating-order A/B over the join-heavy set showed NO
@@ -63,18 +62,6 @@ def get_spark(
         # build-side OOM class at 100 TB that this repo handles with
         # explicit per-join shuffle_hash hints instead
         # (OPTIMIZATION_r11.md "negative results").
-        # runtime row-level filtering: a selective filter on one join
-        # side injects a bloom filter into the other side's scan —
-        # at 100 TB this prunes the fact scan of a fact-fact join the
-        # same way broadcast pruning serves dim joins (plan test:
-        # test_plans.test_runtime_bloom_filter_reduces_fact_scan)
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        # see model._SESSION_CONFS: the inferred size(e)>0 filters push
-        # the full generator-input alias chain into the scan predicate
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # local[N] runs all N task threads inside the driver JVM, so
         # this is the whole executor heap.  12g is the steady-state

@@ -222,6 +222,75 @@ FROM base WHERE metric = 'click' AND tu >= {JAN05_US} AND tu < {JAN15_US}
 )
 
 
+# Process-lifetime schema memo per replayed source path.  Every source
+# is a derived cache keyed by its input's (size, mtime)
+# (model.derived_cache_path), so one path names one schema for the
+# process's life; the footer read it saves costs 80-135 ms per replay.
+_SOURCE_SCHEMAS: dict = {}
+
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _replay_stream(
+    spark, path, transform, sink_name, mode, files_per_trigger=8, state_width=None
+):
+    """availableNow file-stream replay of the parquet files under
+    ``path`` through ``transform`` into a memory sink — the one harness
+    every stream_* query shares.  ``files_per_trigger`` sets the
+    micro-batch granularity: stateful single-input queries replay at 8
+    (many batches exercise state handoff), while the stream-stream join
+    coarsens it (join state is re-scanned per batch, and dozens of
+    replay batches turn a second-long query into minutes without
+    testing anything extra).
+
+    The replay runs on a SCOPED ``spark.newSession()`` child: the
+    caller's session conf is never mutated, concurrent queries are
+    unaffected, and the child shares the SparkContext so the returned
+    sink DataFrame collects normally.  Two confs differ on the child:
+
+    - ``parallelPartitionDiscovery.threshold`` is raised to at least
+      ``files_per_trigger``.  A file stream's getBatch indexes that
+      batch's file paths, and above the threshold (32 by default)
+      Spark lists them in a distributed job on EVERY micro-batch:
+      372-486 ms of getBatch per batch (stream_windowed_topk at sf0.1,
+      4-core VM), against 18-26 ms listed on the driver.  The source's
+      latestOffset already lists the whole directory on the driver, so
+      this is never more driver work.
+    - ``state_width``, when set, is the shuffle width.  Streaming
+      state operators shuffle to shuffle.partitions at query start (a
+      per-plan ``repartition`` can't override the state store's
+      required distribution), so each micro-batch pays that many state
+      tasks + Python state workers even when the state is a handful of
+      keys.  Otherwise the child keeps the caller's width.  Replay
+      knob only: results are width-independent (pinned by the
+      oracles); on a real cluster the production path sizes state
+      partitions to the key cardinality."""
+    child = spark.newSession()
+    model.ensure_session_confs(child)
+    if state_width is None:
+        state_width = spark.conf.get("spark.sql.shuffle.partitions")
+    child.conf.set("spark.sql.shuffle.partitions", str(int(state_width)))
+    threshold = int(spark.conf.get(_LISTING_THRESHOLD))
+    child.conf.set(_LISTING_THRESHOLD, str(max(threshold, files_per_trigger)))
+    schema = _SOURCE_SCHEMAS.get(path)
+    if schema is None:
+        schema = _SOURCE_SCHEMAS[path] = child.read.parquet(path).schema
+    sdf = child.readStream.schema(schema).option(
+        "maxFilesPerTrigger", str(files_per_trigger)
+    ).parquet(path)
+    # the child's catalog is fresh, so no stale sink view can exist
+    q = (
+        transform(sdf)
+        .writeStream.format("memory")
+        .queryName(sink_name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return child.table(sink_name)
+
+
 # Structured Streaming end-to-end through the driver gate: replay the
 # partitioned layout as a file stream (availableNow), run the
 # continuous group-aggregate twin (tumbling windows + watermark =
@@ -232,30 +301,19 @@ FROM base WHERE metric = 'click' AND tu >= {JAN05_US} AND tu < {JAN15_US}
 def _stream_replay(spark, sf):
     from stdb_spark.streaming.ingest import streaming_downsample
 
-    path = _layout_path(spark, sf)
-    schema = spark.read.parquet(path).schema
-    sdf = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", "8"
-    ).parquet(path)
-    sdf = sdf.withColumn("ts", F.expr("(ts div 1000) * 1000")).withColumn(
-        "user", F.col("tags")["user"]
+    def tf(sdf):
+        return streaming_downsample(
+            sdf.withColumn("ts", F.expr("(ts div 1000) * 1000")).withColumn(
+                "user", F.col("tags")["user"]
+            ),
+            step="1 day",
+            max_lateness="1 hour",
+            extra_keys=("user",),
+        )
+
+    res = _replay_stream(
+        spark, _layout_path(spark, sf), tf, "stream_replay_sink", "complete"
     )
-    out = streaming_downsample(
-        sdf, step="1 day", max_lateness="1 hour", extra_keys=("user",)
-    )
-    name = "stream_replay_sink"
-    spark.catalog.dropTempView(name) if name in [
-        t.name for t in spark.catalog.listTables()
-    ] else None
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.table(name)
     return res.select(
         F.concat(F.col("metric"), F.lit(" user="), F.col("user")).alias("series"),
         F.unix_micros(F.col("bucket.start")).alias("ts"),
@@ -279,53 +337,6 @@ GROUP BY metric, u, tu // {D1_US}
 )
 
 
-def _replay_stream(
-    spark, sf, transform, sink_name, mode, files_per_trigger=8, state_width=None
-):
-    """availableNow file-stream replay of the partitioned layout through
-    ``transform`` into a memory sink — the harness the stream_* queries
-    share.  ``files_per_trigger`` sets the micro-batch granularity:
-    stateful single-input queries replay at 8 (many batches exercise
-    state handoff), while the stream-stream join coarsens it (join
-    state is re-scanned per batch, and dozens of replay batches turn a
-    second-long query into minutes without testing anything extra).
-
-    ``state_width``: streaming state operators shuffle to the session's
-    shuffle.partitions at query start (a per-plan ``repartition`` can't
-    override the state store's required distribution), so each
-    micro-batch pays that many state tasks + Python state workers even
-    when the state itself is a handful of keys.  When set, the replay
-    runs on a SCOPED ``spark.newSession()`` child with that shuffle
-    width — the injected/shared session's conf is never mutated (the r8
-    shuffle-width discipline), concurrent queries are unaffected, and
-    the child shares the SparkContext so the returned sink DataFrame
-    collects normally.  Replay-harness knob only: results are
-    width-independent (pinned by the oracles); on a real cluster the
-    production path sizes state partitions to the key cardinality."""
-    if state_width is not None:
-        child = spark.newSession()
-        model.ensure_session_confs(child)
-        child.conf.set("spark.sql.shuffle.partitions", str(int(state_width)))
-        spark = child
-    path = _layout_path(spark, sf)
-    schema = spark.read.parquet(path).schema
-    sdf = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", str(files_per_trigger)
-    ).parquet(path)
-    out = transform(sdf)
-    if sink_name in [t.name for t in spark.catalog.listTables()]:
-        spark.catalog.dropTempView(sink_name)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_name)
-
-
 # Streaming at-least-once ingest dedup: replay the layout, drop repeated
 # (series, ts-µs) keys inside the watermark horizon, project to the key
 # columns (which survivor row wins is arrival-order dependent; the keys
@@ -345,7 +356,9 @@ def _stream_dedup(spark, sf):
             F.expr("ts div 1000").alias("ts"),
         )
 
-    return _replay_stream(spark, sf, tf, "stream_dedup_sink", "append")
+    return _replay_stream(
+        spark, _layout_path(spark, sf), tf, "stream_dedup_sink", "append"
+    )
 
 
 _q(
@@ -399,7 +412,7 @@ def _stream_geofence(spark, sf):
     # directive #7), scoped to a child session (conf never mutated).
     return _replay_stream(
         spark,
-        sf,
+        _layout_path(spark, sf),
         tf,
         "stream_geofence_sink",
         "append",
@@ -463,31 +476,17 @@ def _stream_resp_events(spark, sf):
             ).alias("value")
         )
         pdus.repartition(4).write.mode("overwrite").parquet(wire)
-    schema = spark.read.parquet(wire).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "8")
-        .parquet(wire)
-    )
-    out = parse_resp_events(sdf).select(
-        F.concat("metric", F.lit(" user="), F.col("tags")["user"]).alias(
-            "series"
-        ),
-        F.expr("ts div 1000").alias("ts"),
-        "body",
-    )
-    sink = "stream_resp_events_sink"
-    if sink in [t.name for t in spark.catalog.listTables()]:
-        spark.catalog.dropTempView(sink)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+
+    def tf(sdf):
+        return parse_resp_events(sdf).select(
+            F.concat("metric", F.lit(" user="), F.col("tags")["user"]).alias(
+                "series"
+            ),
+            F.expr("ts div 1000").alias("ts"),
+            "body",
+        )
+
+    return _replay_stream(spark, wire, tf, "stream_resp_events_sink", "append")
 
 
 _q(
@@ -503,10 +502,9 @@ FROM events
 
 # Streaming RESP session with a wire-format dictionary prelude
 # (protocolparser.h:165-199): the session's in-stream id->series
-# arrays become the broadcast mapping handed to parse_resp_pdus, and
-# process-lifetime dictionary/schema memo per wire layout (see
-# _stream_resp_dict: the server holds its declared dictionary in
-# memory by protocol design)
+# arrays become the broadcast mapping handed to parse_resp_pdus.
+# Process-lifetime dictionary memo per wire layout (the server holds
+# its declared dictionary in memory by protocol design)
 _RESP_DICT_MEMO: dict = {}
 
 
@@ -549,23 +547,21 @@ def _stream_resp_dict(spark, sf):
     prelude = wire + "_dict"
     # an ingest server holds its declared dictionary IN MEMORY for the
     # session's life — that is the protocol's whole point — so replays
-    # within one process memoize it (and the wire schema) per layout
-    # instead of re-collecting the prelude parquet every invocation
-    # (~0.5 s of driver jobs at sf0.1, VERDICT r10 directive #4)
-    memo = _RESP_DICT_MEMO.get(wire)
-    if memo is not None:
-        names, _wire_schema = memo
-    elif model.cache_ready(prelude):
-        names = sorted(r[0] for r in spark.read.parquet(prelude).collect())
-        _wire_schema = None
-    else:
-        names = sorted(
-            r[0] for r in ev.select(cname.alias("n")).distinct().collect()
-        )
-        spark.createDataFrame(
-            [(n,) for n in names], "_n string"
-        ).coalesce(1).write.mode("overwrite").parquet(prelude)
-        _wire_schema = None
+    # within one process memoize it per layout instead of re-collecting
+    # the prelude parquet every invocation (~0.5 s of driver jobs at
+    # sf0.1, VERDICT r10 directive #4)
+    names = _RESP_DICT_MEMO.get(wire)
+    if names is None:
+        if model.cache_ready(prelude):
+            names = sorted(r[0] for r in spark.read.parquet(prelude).collect())
+        else:
+            names = sorted(
+                r[0] for r in ev.select(cname.alias("n")).distinct().collect()
+            )
+            spark.createDataFrame(
+                [(n,) for n in names], "_n string"
+            ).coalesce(1).write.mode("overwrite").parquet(prelude)
+        _RESP_DICT_MEMO[wire] = names
     dictionary = {i + 1: n for i, n in enumerate(names)}
     inv = {n: i for i, n in dictionary.items()}
     if not model.cache_ready(wire):
@@ -604,39 +600,22 @@ def _stream_resp_dict(spark, sf):
         # (r6 bench: the replay floor was parse time on underparallel
         # epochs, not data volume)
         pdus.repartition(16).write.mode("overwrite").parquet(wire)
-    # replay on a SCOPED child session at width 8 (the directive #7
-    # state_width discipline applied to the dictionary path: the shared
-    # session's conf is never mutated; measured ~0.3 s/replay of
-    # micro-batch planning overhead at sf0.1 even though the parse
-    # itself is shuffle-free)
-    child = spark.newSession()
-    model.ensure_session_confs(child)
-    child.conf.set("spark.sql.shuffle.partitions", "8")
-    if _wire_schema is None:
-        _wire_schema = child.read.parquet(wire).schema
-    _RESP_DICT_MEMO[wire] = (names, _wire_schema)
-    sdf = (
-        child.readStream.schema(_wire_schema)
-        .option("maxFilesPerTrigger", "8")
-        .parquet(wire)
+
+    def tf(sdf):
+        return parse_resp_pdus(sdf, dictionary=dictionary).select(
+            F.concat("metric", F.lit(" user="), F.col("tags")["user"]).alias(
+                "series"
+            ),
+            F.expr("ts div 1000").alias("ts"),
+            "value",
+        )
+
+    # width 8 (the directive #7 state_width discipline applied to the
+    # dictionary path: measured ~0.3 s/replay of micro-batch planning
+    # overhead at sf0.1 even though the parse itself is shuffle-free)
+    return _replay_stream(
+        spark, wire, tf, "stream_resp_dict_sink", "append", state_width=8
     )
-    out = parse_resp_pdus(sdf, dictionary=dictionary).select(
-        F.concat("metric", F.lit(" user="), F.col("tags")["user"]).alias("series"),
-        F.expr("ts div 1000").alias("ts"),
-        "value",
-    )
-    sink = "stream_resp_dict_sink"
-    if sink in [t.name for t in child.catalog.listTables()]:
-        child.catalog.dropTempView(sink)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return child.table(sink)
 
 
 _q(
@@ -680,7 +659,9 @@ def _stream_ohlc(spark, sf):
             "close",
         )
 
-    return _replay_stream(spark, sf, tf, "stream_ohlc_sink", "complete")
+    return _replay_stream(
+        spark, _layout_path(spark, sf), tf, "stream_ohlc_sink", "complete"
+    )
 
 
 _q(
@@ -3192,7 +3173,7 @@ def _stream_sessionize(spark, sf):
         )
 
     return _replay_stream(
-        spark, sf, tf, "stream_sessionize_sink", "complete"
+        spark, _layout_path(spark, sf), tf, "stream_sessionize_sink", "complete"
     ).orderBy("u", "session_start")
 
 
@@ -3302,7 +3283,9 @@ def _stream_hopping(spark, sf):
             "max",
         )
 
-    return _replay_stream(spark, sf, tf, "stream_hopping_sink", "complete")
+    return _replay_stream(
+        spark, _layout_path(spark, sf), tf, "stream_hopping_sink", "complete"
+    )
 
 
 _q(
@@ -3354,7 +3337,7 @@ def _stream_topk(spark, sf):
     # #metrics rows — tiny; the 32-wide state shuffle was pure floor)
     sink = _replay_stream(
         spark,
-        sf,
+        _layout_path(spark, sf),
         tf,
         "stream_topk_sink",
         "complete",
@@ -3458,7 +3441,9 @@ def _stream_enrich(spark, sf):
             "segment",
         )
 
-    return _replay_stream(spark, sf, tf, "stream_enrich_sink", "append")
+    return _replay_stream(
+        spark, _layout_path(spark, sf), tf, "stream_enrich_sink", "append"
+    )
 
 
 _q(
@@ -3496,7 +3481,12 @@ def _stream_stream_join(spark, sf):
         )
 
     return _replay_stream(
-        spark, sf, tf, "stream_stream_sink", "append", files_per_trigger=96
+        spark,
+        _layout_path(spark, sf),
+        tf,
+        "stream_stream_sink",
+        "append",
+        files_per_trigger=96,
     )
 
 
@@ -3697,7 +3687,9 @@ def _stream_heavy_hitters(spark, sf):
             "metric", F.unix_micros(F.col("bucket.start")).alias("ts"), "n"
         )
 
-    t = _replay_stream(spark, sf, tf, "stream_hh_sink", "complete")
+    t = _replay_stream(
+        spark, _layout_path(spark, sf), tf, "stream_hh_sink", "complete"
+    )
     w = Window.partitionBy("ts").orderBy(F.col("n").desc(), F.col("metric"))
     return (
         t.withColumn("rk", F.row_number().over(w).cast("long"))
@@ -5369,7 +5361,9 @@ def _stream_hysteresis(spark, sf):
             ev, hi=150.0, lo=75.0, key_cols=("metric", "u")
         )
 
-    res = _replay_stream(spark, sf, tf, "stream_hysteresis_sink", "append")
+    res = _replay_stream(
+        spark, _layout_path(spark, sf), tf, "stream_hysteresis_sink", "append"
+    )
     return (
         res.groupBy(
             F.concat(F.col("metric"), F.lit(" user="), F.col("u")).alias(
@@ -6278,7 +6272,9 @@ def _stream_counter_rate(spark, sf):
         )
         return streaming_counter_rate(ev, key_cols=("metric", "u"))
 
-    res = _replay_stream(spark, sf, tf, "stream_counter_rate_sink", "append")
+    res = _replay_stream(
+        spark, _layout_path(spark, sf), tf, "stream_counter_rate_sink", "append"
+    )
     return res.select(
         F.concat(F.col("metric"), F.lit(" user="), F.col("u")).alias("series"),
         F.expr("ts div 1000").alias("ts"),
@@ -7531,7 +7527,12 @@ def _stream_funnel(spark, sf):
     # batches already exercise cross-batch (and out-of-order) state
     # handoff — which per-user greedy re-resolution makes order-proof.
     sink = _replay_stream(
-        spark, sf, tf, "stream_funnel_sink", "update", files_per_trigger=25
+        spark,
+        _layout_path(spark, sf),
+        tf,
+        "stream_funnel_sink",
+        "update",
+        files_per_trigger=25,
     )
     per_user = sink.groupBy("u").agg(
         F.max(F.struct("n_seen", "stage")).alias("m")

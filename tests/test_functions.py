@@ -1075,34 +1075,6 @@ def test_winnowing_shared_run_guarantee(spark):
     assert o2[10] == o2[11]
 
 
-def test_pq_roundtrip_and_adc_self_match(spark):
-    import random
-
-    from stdb_spark.functions import similarity
-
-    rnd = random.Random(3)
-    dim, m, ks = 16, 4, 4
-    # corpus drawn from ks distinct prototype vectors per subspace so
-    # k-means can recover the codebook structure
-    protos = [[rnd.gauss(0, 1) for _ in range(dim)] for _ in range(ks)]
-    rows = [
-        (i, [x + rnd.gauss(0, 0.01) for x in protos[i % ks]]) for i in range(48)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    books = similarity.pq_train(df, dim=dim, m=m, ks=ks, iters=3)
-    assert len(books) == m and all(len(b) == ks for b in books)
-    codes = similarity.pq_codes(df, books)
-    got = codes.collect()
-    assert all(len(r.code) == m and all(0 <= c < ks for c in r.code) for r in got)
-    # ADC with a corpus vector as the query ranks a same-prototype
-    # vector first (quantization collapses the 0.01 jitter)
-    q = rows[5][1]
-    top = similarity.pq_adc_top_k(codes, books, q, k=5).collect()
-    assert top[0].adc_dist2 == pytest.approx(0.0, abs=1e-6) or (
-        top[0].vec_id % ks == 5 % ks
-    )
-
-
 def test_dup_span_scrub_removes_second_occurrence_only(spark):
     from stdb_spark.functions.dedup import dup_span_scrub
 

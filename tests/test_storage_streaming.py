@@ -130,6 +130,61 @@ def test_streaming_file_ingest(spark, tmp_path):
     ]
 
 
+def test_replay_stream_lists_batch_files_on_driver(spark):
+    """A file-stream replay at 75 files per trigger launches no
+    distributed listing job: each micro-batch's getBatch indexes that
+    batch's files, and above parallelPartitionDiscovery.threshold (32
+    by default) Spark would list them in a Spark job per batch.  The
+    caller's conf is untouched and the sink holds the layout's rows."""
+    import collections
+    import glob
+    import os
+
+    from stdb_spark.workloads import tssuite
+
+    path = tssuite._layout_path(spark, "/root/testdata/sf0.001")
+    n_files = len(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+    assert n_files > 75  # two micro-batches, each over the default threshold
+    keys = (
+        "spark.sql.sources.parallelPartitionDiscovery.threshold",
+        "spark.sql.shuffle.partitions",
+    )
+    confs = {k: spark.conf.get(k) for k in keys}
+    jsc = spark.sparkContext._jsc.sc()
+    store = jsc.statusStore()
+
+    def jobs():
+        listed = store.jobsList(None)
+        return [listed.apply(i) for i in range(listed.size())]
+
+    first = max((j.jobId() for j in jobs()), default=-1)
+    cols = ("series_id", "metric", "ts", "value")
+    sink = tssuite._replay_stream(
+        spark,
+        path,
+        lambda sdf: sdf.select(*cols),
+        "listing_pin_sink",
+        "append",
+        files_per_trigger=75,
+        state_width=4,
+    )
+    jsc.listenerBus().waitUntilEmpty()
+    listing = [
+        j.jobId()
+        for j in jobs()
+        if j.jobId() > first
+        and j.description().isDefined()
+        and "Listing leaf files" in j.description().get()
+    ]
+    assert listing == []
+    assert {k: spark.conf.get(k) for k in keys} == confs
+    got = collections.Counter(map(tuple, sink.collect()))
+    want = collections.Counter(
+        map(tuple, spark.read.parquet(path).select(*cols).collect())
+    )
+    assert got == want
+
+
 def test_streaming_downsample(spark, tmp_path):
     from stdb_spark.sources.opentsdb import parse_opentsdb_lines
     from stdb_spark.streaming.ingest import streaming_downsample
