@@ -403,62 +403,6 @@ def _assign_cells_expr(vec_col: str, centroids: list[list[float]]) -> Column:
     return (F.array_position(arr, F.array_min(arr)) - 1).cast("int")
 
 
-def kmeans_fit(
-    df: DataFrame,
-    k: int = 16,
-    iters: int = 5,
-    vec_col: str = "embedding",
-    key: str = "vec_id",
-) -> list[list[float]]:
-    """Distributed Lloyd's k-means over an embedding column — the IVF
-    training step.  Deterministic: seeds are the k rows with the
-    smallest md5(key) (reproducible across runs/engines, like
-    functions/sampling.py), and every iteration is exact DataFrame
-    algebra (assign = JVM argmin expression for small k, Arrow/BLAS
-    matmul for k >= ASSIGN_MATMUL_MIN_K; recenter = posexplode +
-    groupBy(cell, pos) avg — never collects vectors).  Only the k×dim
-    centroid matrix ever reaches the driver, once per iteration —
-    broadcast-scale by construction.  Empty cells keep their previous
-    centroid (the standard fallback)."""
-    seed_rows = (
-        df.select(
-            vec_col,
-            F.conv(F.substring(F.md5(F.col(key).cast("string")), 1, 15), 16, 10)
-            .cast("long")
-            .alias("_h"),
-        )
-        .orderBy("_h")
-        .limit(k)
-        .collect()
-    )
-    cents = [list(map(float, r[vec_col])) for r in seed_rows]
-    # fewer rows than k: clamp rather than IndexError in the
-    # empty-cell fallback below (every row its own centroid is the
-    # exact solution at that size)
-    k = min(k, len(cents))
-    if k == 0:
-        raise ValueError("kmeans_fit needs a non-empty input")
-    for _ in range(iters):
-        assign = (
-            _assign_cells_pandas(vec_col, cents)
-            if k >= ASSIGN_MATMUL_MIN_K
-            else _assign_cells_expr(vec_col, cents)
-        )
-        assigned = df.select(assign.alias("cell"), vec_col)
-        rows = (
-            assigned.select("cell", F.posexplode(vec_col).alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("_s"))
-            .select("cell", F.transform("_s", lambda s: s.getField("m")).alias("c"))
-            .collect()
-        )
-        new = {r["cell"]: list(map(float, r["c"])) for r in rows}
-        cents = [new.get(i, cents[i]) for i in range(k)]
-    return cents
-
-
 def _assign_cells_pandas(vec_col: str, centroids: list[list[float]]) -> Column:
     """Arrow-batched nearest-centroid assignment via one BLAS matmul
     per batch (argmin over |c|² − 2·x·c, first index on ties — same
@@ -510,40 +454,6 @@ def with_ivf_cells(
     if len(centroids) >= ASSIGN_MATMUL_MIN_K:
         return df.withColumn("cell", _assign_cells_pandas(vec_col, centroids))
     return df.withColumn("cell", _assign_cells_expr(vec_col, centroids))
-
-
-def ivf_top_k_trained(
-    df: DataFrame,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    key: str = "vec_id",
-    n_probe: int = 2,
-) -> DataFrame:
-    """IVF probe against trained centroids: rank cells by centroid
-    cosine on the driver (k×dim floats — trivial), filter to the
-    n_probe nearest cells, exact-rerank inside.  With cell-partitioned
-    storage the filter prunes partitions; otherwise it is still a
-    scan-cheap single predicate."""
-    import math
-
-    qn = math.sqrt(sum(x * x for x in query_vec)) or 1.0
-    scored = []
-    for i, c in enumerate(centroids):
-        cn = math.sqrt(sum(x * x for x in c)) or 1.0
-        scored.append((sum(a * b for a, b in zip(c, query_vec)) / (cn * qn), i))
-    probe = [i for _, i in sorted(scored, reverse=True)[:n_probe]]
-    cands = with_ivf_cells(df, centroids, vec_col).filter(
-        F.col("cell").isin(probe)
-    )
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = cosine_expr(F.col(vec_col), q)
-    return (
-        cands.select(F.col(key), cos.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(key))
-        .limit(k)
-    )
 
 
 def label_centroids(
@@ -704,7 +614,7 @@ def simplified_silhouette(
     so neither aggregate inserts its own exchange — without it Catalyst
     shuffles the n·k distance partials twice (pinned in test_plans).
     When cross-engine bit-parity is not required, the kmeans-style
-    collected-centroid broadcast fold (ivf_top_k_trained pattern) is
+    collected-centroid broadcast fold (ivf_top_k_exact pattern) is
     the cheaper at-scale variant — no distance exchange at all."""
     cents = label_centroids(emb, label_col, vec_col)
     ex = emb.select(

@@ -103,6 +103,17 @@ def stamp_replay_order(path: str) -> None:
         os.utime(f, (base + i, base + i))
 
 
+def replay_order_stamped(path: str) -> bool:
+    """True iff the data-file mtimes of the layout at ``path`` strictly
+    increase in ``layout_files`` order — the order
+    ``stamp_replay_order`` leaves.  A committed layout can still fail
+    this: its ``_SUCCESS`` is written before the restamp, so a run
+    killed between the two, or a copy that does not keep mtimes,
+    leaves a ready layout that replays in task-completion order."""
+    mtimes = [os.stat(f).st_mtime_ns for _, f in layout_files(path)]
+    return all(a < b for a, b in zip(mtimes, mtimes[1:]))
+
+
 def read_samples(spark: SparkSession, path: str) -> DataFrame:
     """Read back in the narrow schema's column order, keeping the
     ``day`` partition column last: a range filter prunes directories

@@ -191,15 +191,17 @@ FROM base WHERE metric = 'purchase' AND tu >= {JAN01_US} AND tu < {FEB01_US}
 # parquet partitioned by (day, metric), sorted by (series_id, ts)) —
 # the 100 TB read path.  The range clause becomes directory-level
 # PartitionFilters (NB+tree time descent at the filesystem level);
-# written once per sf into the repo-local cache.
+# written once per sf into the repo-local cache.  A reused layout is
+# restamped when its mtimes are out of replay order: every stream_*
+# replay of it orders files by mtime.
 def _layout_path(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
     from stdb_spark.sources import storage
 
     cache = model.derived_cache_path(sf_dir, "layout", "events")
     if not model.cache_ready(cache):
         storage.write_samples(model.events_as_samples(spark, sf_dir), cache)
+    elif not storage.replay_order_stamped(cache):
+        storage.stamp_replay_order(cache)
     return cache
 
 
@@ -246,7 +248,7 @@ def _replay_stream(
     The replay runs on a SCOPED ``spark.newSession()`` child: the
     caller's session conf is never mutated, concurrent queries are
     unaffected, and the child shares the SparkContext so the returned
-    sink DataFrame collects normally.  Two confs differ on the child:
+    sink DataFrame collects normally.  Three confs differ on the child:
 
     - ``parallelPartitionDiscovery.threshold`` is raised to at least
       ``files_per_trigger``.  A file stream's getBatch indexes that
@@ -256,6 +258,16 @@ def _replay_stream(
       4-core VM), against 18-26 ms listed on the driver.  The source's
       latestOffset already lists the whole directory on the driver, so
       this is never more driver work.
+    - ``checkpointFileManagerClass`` is the FileSystem-based manager.
+      Spark's default goes through Hadoop's FileContext, whose
+      ``RawLocalFs`` forks a ``readlink`` process on every status
+      call: 328 of the 426-429 processes one stream_windowed_topk
+      replay started (sf0.01, 4-core VM).  The replay's checkpoint is
+      always a local temp dir, where rename is atomic, so the
+      FileContext manager's rename guarantee buys nothing here.  User
+      streams that checkpoint to HDFS keep Spark's default: the conf
+      is set on the replay child only, never in
+      ``model._SESSION_CONFS``.
     - ``state_width``, when set, is the shuffle width.  Streaming
       state operators shuffle to shuffle.partitions at query start (a
       per-plan ``repartition`` can't override the state store's
@@ -272,6 +284,11 @@ def _replay_stream(
     child.conf.set("spark.sql.shuffle.partitions", str(int(state_width)))
     threshold = int(spark.conf.get(_LISTING_THRESHOLD))
     child.conf.set(_LISTING_THRESHOLD, str(max(threshold, files_per_trigger)))
+    child.conf.set(
+        "spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
+    )
     schema = _SOURCE_SCHEMAS.get(path)
     if schema is None:
         schema = _SOURCE_SCHEMAS[path] = child.read.parquet(path).schema
@@ -410,6 +427,9 @@ def _stream_geofence(spark, sf):
     # state_width=8: 8 state tasks/Python workers per batch instead of
     # 32 for a few-hundred-key state — 4.1 -> 3.4 s median (r9 VERDICT
     # directive #7), scoped to a child session (conf never mutated).
+    # Not 1: one Python state worker serializes the per-user fold —
+    # paired replays, width 1 vs 8, medians: sf0.01 2.12 vs 2.67 s,
+    # but sf0.1 9.03 vs 4.86 s (0 of 6 pairs won).
     return _replay_stream(
         spark,
         _layout_path(spark, sf),
@@ -612,7 +632,9 @@ def _stream_resp_dict(spark, sf):
 
     # width 8 (the directive #7 state_width discipline applied to the
     # dictionary path: measured ~0.3 s/replay of micro-batch planning
-    # overhead at sf0.1 even though the parse itself is shuffle-free)
+    # overhead at sf0.1 even though the parse itself is shuffle-free).
+    # Width 1 does not win: paired replays, medians 1.91 vs 1.83 s at
+    # sf0.01 (3 of 6 pairs) and 4.26 vs 3.98 s at sf0.1 (1 of 6).
     return _replay_stream(
         spark, wire, tf, "stream_resp_dict_sink", "append", state_width=8
     )
@@ -3333,8 +3355,10 @@ def _stream_topk(spark, sf):
     # two micro-batches (150-file layout): complete mode rewrites the
     # whole state each trigger, so extra epochs only multiply the
     # replay floor; 2 still proves cross-batch state accumulation.
-    # state_width=8 as in _stream_geofence (state is #windows x
-    # #metrics rows — tiny; the 32-wide state shuffle was pure floor)
+    # state_width=1: the state is #windows x #metrics rows, and every
+    # state task commits its own delta file per batch — 1 task instead
+    # of 8 took the addBatch median from 670 to 439 ms per batch and
+    # the chmod forks per replay from 98 to 35 (sf0.01, 4-core VM)
     sink = _replay_stream(
         spark,
         _layout_path(spark, sf),
@@ -3342,7 +3366,7 @@ def _stream_topk(spark, sf):
         "stream_topk_sink",
         "complete",
         files_per_trigger=75,
-        state_width=8,
+        state_width=1,
     )
     w = W.partitionBy("ts").orderBy(F.col("n").desc(), F.col("metric").asc())
     return (

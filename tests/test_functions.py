@@ -462,19 +462,18 @@ def test_kmeans_deterministic_and_ivf_full_probe_exact(spark):
         (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(120)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    c1 = similarity.kmeans_fit(df, k=4, iters=3)
-    c2 = similarity.kmeans_fit(df, k=4, iters=3)
-    assert c1 == c2  # hash-seeded init + exact algebra -> reproducible
+    c1 = similarity.kmeans_fit_exact(df, k=4, iters=3)
+    assert c1 == similarity.kmeans_fit_exact(df, k=4, iters=3)  # reproducible
     q = [1.0] * 8
     exact = [r.vec_id for r in similarity.brute_force_top_k(df, q, k=5).collect()]
     # probing every cell must equal brute force
     full = [
         r.vec_id
-        for r in similarity.ivf_top_k_trained(df, c1, q, k=5, n_probe=4).collect()
+        for r in similarity.ivf_top_k_exact(df, c1, q, k=5, n_probe=4).collect()
     ]
     assert full == exact
     # probing 2/4 cells: results are a subset of the table, ranked by cosine
-    part = similarity.ivf_top_k_trained(df, c1, q, k=5, n_probe=2).collect()
+    part = similarity.ivf_top_k_exact(df, c1, q, k=5, n_probe=2).collect()
     assert len(part) == 5
     cos = [r.cosine for r in part]
     assert cos == sorted(cos, reverse=True)
@@ -771,7 +770,10 @@ def test_semantic_dedup_finds_planted_duplicates(spark):
     rows.append((100, list(rows[3][1])))
     rows.append((101, [2.0 * x for x in rows[7][1]]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = similarity.kmeans_fit(df, k=4, iters=3)
+    cents = [
+        [x / similarity.KM_QSCALE for x in c]
+        for c in similarity.kmeans_fit_exact(df, k=4, iters=3)
+    ]
     pairs = {
         (r.a, r.b)
         for r in similarity.semantic_dedup_pairs(

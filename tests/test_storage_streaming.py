@@ -130,12 +130,16 @@ def test_streaming_file_ingest(spark, tmp_path):
     ]
 
 
-def test_replay_stream_lists_batch_files_on_driver(spark):
+def test_replay_stream_lists_batch_files_on_driver(spark, tmp_path):
     """A file-stream replay at 75 files per trigger launches no
     distributed listing job: each micro-batch's getBatch indexes that
     batch's files, and above parallelPartitionDiscovery.threshold (32
-    by default) Spark would list them in a Spark job per batch.  The
-    caller's conf is untouched and the sink holds the layout's rows."""
+    by default) Spark would list them in a Spark job per batch.  Nor
+    does its checkpoint fork a ``readlink`` process: Spark's default
+    checkpoint manager reaches the local disk through Hadoop's
+    RawLocalFs, which shells out on every status call (read back from
+    a JFR recording of ``jdk.ProcessStart``).  The caller's conf is
+    untouched and the sink holds the layout's rows."""
     import collections
     import glob
     import os
@@ -148,8 +152,9 @@ def test_replay_stream_lists_batch_files_on_driver(spark):
     keys = (
         "spark.sql.sources.parallelPartitionDiscovery.threshold",
         "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.checkpointFileManagerClass",
     )
-    confs = {k: spark.conf.get(k) for k in keys}
+    confs = {k: spark.conf.get(k, None) for k in keys}
     jsc = spark.sparkContext._jsc.sc()
     store = jsc.statusStore()
 
@@ -159,15 +164,35 @@ def test_replay_stream_lists_batch_files_on_driver(spark):
 
     first = max((j.jobId() for j in jobs()), default=-1)
     cols = ("series_id", "metric", "ts", "value")
-    sink = tssuite._replay_stream(
-        spark,
-        path,
-        lambda sdf: sdf.select(*cols),
-        "listing_pin_sink",
-        "append",
-        files_per_trigger=75,
-        state_width=4,
-    )
+    jvm = spark._jvm
+    recording = jvm.jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    try:
+        sink = tssuite._replay_stream(
+            spark,
+            path,
+            lambda sdf: sdf.select(*cols),
+            "listing_pin_sink",
+            "append",
+            files_per_trigger=75,
+            state_width=4,
+        )
+        # positive control: a process the JVM itself starts inside the
+        # recording must show up in it
+        jvm.java.lang.Runtime.getRuntime().exec("true").waitFor()
+    finally:
+        recording.stop()
+    dump = jvm.java.io.File(str(tmp_path / "replay.jfr")).toPath()
+    recording.dump(dump)
+    recording.close()
+    events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+    forked = [
+        os.path.basename(str(events.get(i).getString("command")).split()[0])
+        for i in range(events.size())
+    ]
+    assert "true" in forked, collections.Counter(forked)
+    assert "readlink" not in forked, collections.Counter(forked)
     jsc.listenerBus().waitUntilEmpty()
     listing = [
         j.jobId()
@@ -177,12 +202,47 @@ def test_replay_stream_lists_batch_files_on_driver(spark):
         and "Listing leaf files" in j.description().get()
     ]
     assert listing == []
-    assert {k: spark.conf.get(k) for k in keys} == confs
+    assert {k: spark.conf.get(k, None) for k in keys} == confs
     got = collections.Counter(map(tuple, sink.collect()))
     want = collections.Counter(
         map(tuple, spark.read.parquet(path).select(*cols).collect())
     )
     assert got == want
+
+
+def test_layout_reuse_restamps_scrambled_replay_order(spark):
+    """A reused layout whose file mtimes are out of day order is
+    restamped before it is replayed.  File-stream replay orders files
+    by mtime, and ``_SUCCESS`` is written before the write's restamp,
+    so a run killed between the two (or a copy that drops mtimes)
+    leaves a ready layout that would replay days out of order and give
+    stream_counter_rate a wrong answer without an error."""
+    import os
+
+    import duckdb
+
+    from stdb_spark.sources import storage
+    from stdb_spark.workloads import tssuite
+
+    sf = "/root/testdata/sf0.001"
+    path = tssuite._layout_path(spark, sf)
+    files = storage.layout_files(path)
+    base = int(os.stat(files[0][1]).st_mtime)
+    for i, (_, f) in enumerate(reversed(files)):
+        os.utime(f, (base + i, base + i))
+
+    got = tssuite.QUERIES["stream_counter_rate"](spark, sf).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf}/events.parquet')")
+    want = con.sql(tssuite.ORACLES["stream_counter_rate"]).df()
+    cols = sorted(want.columns)
+    assert sorted(got.columns) == cols
+
+    def rows(df):
+        return sorted(df[cols].itertuples(index=False, name=None))
+
+    assert rows(got) == rows(want)
+    assert storage.replay_order_stamped(path)
 
 
 def test_streaming_downsample(spark, tmp_path):
