@@ -191,22 +191,6 @@ def summary_table(samples: DataFrame, step_ns: int = NS_PER_DAY) -> DataFrame:
     )
 
 
-def combine_summaries(summaries: DataFrame) -> DataFrame:
-    """Whole-range aggregate from summaries (AggregationResult::combine,
-    stdb/storage/operators/operator.h:48-73)."""
-    return summaries.groupBy("series_id", "metric").agg(
-        F.sum("cnt").alias("cnt"),
-        F.sum("sum").cast("double").alias("sum"),
-        F.min(F.struct("min", "min_ts")).getField("min").alias("min"),
-        F.max(F.struct("max", "max_ts")).getField("max").alias("max"),
-        (F.sum("sum").cast("double") / F.sum("cnt")).alias("mean"),
-        F.min(F.struct("first_ts", "first")).getField("first").alias("first"),
-        F.max(F.struct("last_ts", "last")).getField("last").alias("last"),
-        F.min("first_ts").alias("first_timestamp"),
-        F.max("last_ts").alias("last_timestamp"),
-    )
-
-
 def expire_partitions(spark: SparkSession, path: str, before_day: int) -> list[str]:
     """Retention enforcement on the (day, metric) layout: drop every
     ``day=N`` partition directory with N < ``before_day``.  This is the

@@ -8,7 +8,9 @@ concatenation ("click user=42").
 
 from __future__ import annotations
 
+import glob
 import math
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -224,26 +226,28 @@ FROM base WHERE metric = 'click' AND tu >= {JAN05_US} AND tu < {JAN15_US}
 )
 
 
-# Process-lifetime schema memo per replayed source path.  Every source
-# is a derived cache keyed by its input's (size, mtime)
-# (model.derived_cache_path), so one path names one schema for the
-# process's life; the footer read it saves costs 80-135 ms per replay.
-_SOURCE_SCHEMAS: dict = {}
+# Process-lifetime (schema, parquet file count) memo per replayed source
+# path.  Every source is a derived cache keyed by its input's (size,
+# mtime) (model.derived_cache_path), so one path names one schema and
+# one file count for the process's life; the footer read it saves costs
+# 80-135 ms per replay.
+_REPLAY_SOURCES: dict = {}
 
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
-def _replay_stream(
-    spark, path, transform, sink_name, mode, files_per_trigger=8, state_width=None
-):
+def _replay_stream(spark, path, transform, sink_name, mode, state_width=None):
     """availableNow file-stream replay of the parquet files under
     ``path`` through ``transform`` into a memory sink — the one harness
-    every stream_* query shares.  ``files_per_trigger`` sets the
-    micro-batch granularity: stateful single-input queries replay at 8
-    (many batches exercise state handoff), while the stream-stream join
-    coarsens it (join state is re-scanned per batch, and dozens of
-    replay batches turn a second-long query into minutes without
-    testing anything extra).
+    every stream_* query shares.  Every replay is exactly TWO
+    micro-batches: ``maxFilesPerTrigger`` is half the source's file
+    count, rounded up.  Two is the fewest that tests what the stream_*
+    entries are for — state written in the first epoch carried into
+    the second — and each further epoch only adds a state-store round
+    and a Python worker round.  On the 30-day x 5-metric layout (150
+    files, ordered by day) the split falls after file 75, the end of
+    day 15, so every row of the second batch is later than every row
+    of the first and no watermark can drop one.
 
     The replay runs on a SCOPED ``spark.newSession()`` child: the
     caller's session conf is never mutated, concurrent queries are
@@ -251,13 +255,13 @@ def _replay_stream(
     sink DataFrame collects normally.  Three confs differ on the child:
 
     - ``parallelPartitionDiscovery.threshold`` is raised to at least
-      ``files_per_trigger``.  A file stream's getBatch indexes that
-      batch's file paths, and above the threshold (32 by default)
-      Spark lists them in a distributed job on EVERY micro-batch:
-      372-486 ms of getBatch per batch (stream_windowed_topk at sf0.1,
-      4-core VM), against 18-26 ms listed on the driver.  The source's
-      latestOffset already lists the whole directory on the driver, so
-      this is never more driver work.
+      the trigger size.  A file stream's getBatch indexes that batch's
+      file paths, and above the threshold (32 by default) Spark lists
+      them in a distributed job on EVERY micro-batch: 372-486 ms of
+      getBatch per batch (stream_windowed_topk at sf0.1, 4-core VM),
+      against 18-26 ms listed on the driver.  The source's latestOffset
+      already lists the whole directory on the driver, so this is
+      never more driver work.
     - ``checkpointFileManagerClass`` is the FileSystem-based manager.
       Spark's default goes through Hadoop's FileContext, whose
       ``RawLocalFs`` forks a ``readlink`` process on every status
@@ -279,21 +283,24 @@ def _replay_stream(
       partitions to the key cardinality."""
     child = spark.newSession()
     model.ensure_session_confs(child)
+    source = _REPLAY_SOURCES.get(path)
+    if source is None:
+        files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+        source = _REPLAY_SOURCES[path] = (child.read.parquet(path).schema, len(files))
+    schema, n_files = source
+    per_trigger = (n_files + 1) // 2
     if state_width is None:
         state_width = spark.conf.get("spark.sql.shuffle.partitions")
     child.conf.set("spark.sql.shuffle.partitions", str(int(state_width)))
     threshold = int(spark.conf.get(_LISTING_THRESHOLD))
-    child.conf.set(_LISTING_THRESHOLD, str(max(threshold, files_per_trigger)))
+    child.conf.set(_LISTING_THRESHOLD, str(max(threshold, per_trigger)))
     child.conf.set(
         "spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing."
         "FileSystemBasedCheckpointFileManager",
     )
-    schema = _SOURCE_SCHEMAS.get(path)
-    if schema is None:
-        schema = _SOURCE_SCHEMAS[path] = child.read.parquet(path).schema
     sdf = child.readStream.schema(schema).option(
-        "maxFilesPerTrigger", str(files_per_trigger)
+        "maxFilesPerTrigger", str(per_trigger)
     ).parquet(path)
     # the child's catalog is fresh, so no stale sink view can exist
     q = (
@@ -417,13 +424,6 @@ def _stream_geofence(spark, sf):
         )
         return streaming_geofence_visits(pts, key_cols=("u",))
 
-    # coarse replay granularity: the per-user state shuffle + Python
-    # worker round costs ~1 s per micro-batch regardless of data volume,
-    # so batches are pure replay floor.  The day-partitioned layout is
-    # 150 files at every sf, so 75/trigger = exactly TWO micro-batches —
-    # the minimum that still proves cross-batch state handoff (state
-    # written in epoch 1 must carry the in-fence/visit counters into
-    # epoch 2), at sf0.1 5.1 s -> 2.8 s (r8 VERDICT directive #7).
     # state_width=8: 8 state tasks/Python workers per batch instead of
     # 32 for a few-hundred-key state — 4.1 -> 3.4 s median (r9 VERDICT
     # directive #7), scoped to a child session (conf never mutated).
@@ -436,7 +436,6 @@ def _stream_geofence(spark, sf):
         tf,
         "stream_geofence_sink",
         "append",
-        files_per_trigger=75,
         state_width=8,
     )
 
@@ -560,9 +559,8 @@ def _stream_resp_dict(spark, sf):
     # source (which is also the faithful protocol shape — the server
     # never reconstructs the dictionary from payload data).
     # artifact name carries the layout (16 files): an existing cache
-    # with an older layout must not satisfy the 8-per-trigger replay
-    # below (a stale 4-file cache would collapse it to single-task
-    # epochs; a 32-file one would balloon it into 4 epochs)
+    # with an older layout must not satisfy the replay below (a stale
+    # 4-file cache would parse each of its two epochs in 2 tasks)
     wire = model.derived_cache_path(sf, "resp_wire16", "events")
     prelude = wire + "_dict"
     # an ingest server holds its declared dictionary IN MEMORY for the
@@ -613,12 +611,9 @@ def _stream_resp_dict(spark, sf):
                 .alias("value")
             )
         )
-        # 16 wire files / 8 per trigger = 2 micro-batches: still a real
-        # multi-epoch replay (dictionary state must survive the epoch
-        # boundary) without paying 4-5 epochs of trigger scheduling,
-        # and each epoch's parse spreads over 8 tasks instead of 2
-        # (r6 bench: the replay floor was parse time on underparallel
-        # epochs, not data volume)
+        # 16 wire files: each of the replay's two epochs parses 8 of
+        # them in 8 tasks (the replay floor is parse time on
+        # underparallel epochs, not data volume)
         pdus.repartition(16).write.mode("overwrite").parquet(wire)
 
     def tf(sdf):
@@ -630,14 +625,7 @@ def _stream_resp_dict(spark, sf):
             "value",
         )
 
-    # width 8 (the directive #7 state_width discipline applied to the
-    # dictionary path: measured ~0.3 s/replay of micro-batch planning
-    # overhead at sf0.1 even though the parse itself is shuffle-free).
-    # Width 1 does not win: paired replays, medians 1.91 vs 1.83 s at
-    # sf0.01 (3 of 6 pairs) and 4.26 vs 3.98 s at sf0.1 (1 of 6).
-    return _replay_stream(
-        spark, wire, tf, "stream_resp_dict_sink", "append", state_width=8
-    )
+    return _replay_stream(spark, wire, tf, "stream_resp_dict_sink", "append")
 
 
 _q(
@@ -2267,8 +2255,6 @@ WHERE tu >= {JAN05_US} AND tu < {JAN15_US}
 # rtree.h:594-712 — as pure layout).  Identical oracle to
 # sp_trajectory_bbox: the layout changes the plan, never the answer.
 def _sp_trajectory_bbox_zordered(spark, sf):
-    import os
-
     from stdb_spark.sources.zorder import write_zordered
 
     pts = model.events_as_samples(spark, sf).select(
@@ -3352,9 +3338,6 @@ def _stream_topk(spark, sf):
             max_lateness="30 days",
         )
 
-    # two micro-batches (150-file layout): complete mode rewrites the
-    # whole state each trigger, so extra epochs only multiply the
-    # replay floor; 2 still proves cross-batch state accumulation.
     # state_width=1: the state is #windows x #metrics rows, and every
     # state task commits its own delta file per batch — 1 task instead
     # of 8 took the addBatch median from 670 to 439 ms per batch and
@@ -3365,7 +3348,6 @@ def _stream_topk(spark, sf):
         tf,
         "stream_topk_sink",
         "complete",
-        files_per_trigger=75,
         state_width=1,
     )
     w = W.partitionBy("ts").orderBy(F.col("n").desc(), F.col("metric").asc())
@@ -3505,12 +3487,7 @@ def _stream_stream_join(spark, sf):
         )
 
     return _replay_stream(
-        spark,
-        _layout_path(spark, sf),
-        tf,
-        "stream_stream_sink",
-        "append",
-        files_per_trigger=96,
+        spark, _layout_path(spark, sf), tf, "stream_stream_sink", "append"
     )
 
 
@@ -6171,8 +6148,6 @@ GROUP BY 1
 # the events table to CSV once (cached artifact), read it back, and
 # verify against the direct parquet read via the oracle.
 def _ingest_csv_roundtrip(spark, sf):
-    import os
-
     from pyspark.sql import types as T
 
     cache = model.derived_cache_path(sf, "csv_export", "events")
@@ -6243,8 +6218,6 @@ _q(
 # rewrite of old files.  Oracle reconstructs the same union from the
 # source table.
 def _ingest_schema_evolution(spark, sf):
-    import os
-
     root = model.derived_cache_path(sf, "schema_evo", "orders")
     orders = model.load_table(spark, sf, "orders")
     part_a = os.path.join(root, "batch=a")
@@ -7546,17 +7519,8 @@ def _stream_funnel(spark, sf):
             within=_FUNNEL_W_US,
         )
 
-    # Coarser micro-batches than the default 8-file replay: each
-    # stateful batch pays python-worker + state-store startup, and 6
-    # batches already exercise cross-batch (and out-of-order) state
-    # handoff — which per-user greedy re-resolution makes order-proof.
     sink = _replay_stream(
-        spark,
-        _layout_path(spark, sf),
-        tf,
-        "stream_funnel_sink",
-        "update",
-        files_per_trigger=25,
+        spark, _layout_path(spark, sf), tf, "stream_funnel_sink", "update"
     )
     per_user = sink.groupBy("u").agg(
         F.max(F.struct("n_seen", "stage")).alias("m")

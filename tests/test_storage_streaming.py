@@ -40,22 +40,6 @@ def test_partition_pruning_in_plan(spark, facts, tmp_path):
     assert storage.prune_range(spark.read.parquet(path), lo, hi).count() == 8
 
 
-def test_summary_combine_matches_direct(spark, facts):
-    summaries = storage.summary_table(facts, step_ns=86400 * 10**9)
-    combined = storage.combine_summaries(summaries)
-    direct = facts.groupBy("series_id", "metric").agg(
-        F.count("value").alias("cnt"),
-        F.sum("value").alias("sum"),
-        F.min("value").alias("min"),
-        F.max("value").alias("max"),
-    )
-    c = {(r.metric): (r.cnt, r.sum, r.min, r.max) for r in combined.collect()}
-    d = {(r.metric): (r.cnt, r.sum, r.min, r.max) for r in direct.collect()}
-    assert c == d
-    first = {r.metric: r.first for r in combined.collect()}
-    assert first["cpu"] == 0.0  # value at earliest ts
-
-
 def test_summary_tags_match_registry(spark, tmp_path):
     """Summary rows carry their series' tags, so the engine binds a
     where clause on them without the registry; incremental maintenance
@@ -131,24 +115,29 @@ def test_streaming_file_ingest(spark, tmp_path):
 
 
 def test_replay_stream_lists_batch_files_on_driver(spark, tmp_path):
-    """A file-stream replay at 75 files per trigger launches no
-    distributed listing job: each micro-batch's getBatch indexes that
-    batch's files, and above parallelPartitionDiscovery.threshold (32
-    by default) Spark would list them in a Spark job per batch.  Nor
-    does its checkpoint fork a ``readlink`` process: Spark's default
-    checkpoint manager reaches the local disk through Hadoop's
-    RawLocalFs, which shells out on every status call (read back from
-    a JFR recording of ``jdk.ProcessStart``).  The caller's conf is
-    untouched and the sink holds the layout's rows."""
+    """A layout replay is exactly two micro-batches, split on a day
+    boundary, and launches no distributed listing job: each
+    micro-batch's getBatch indexes that batch's files, and above
+    parallelPartitionDiscovery.threshold (32 by default) Spark would
+    list them in a Spark job per batch.  Nor does its checkpoint fork
+    a ``readlink`` process: Spark's default checkpoint manager reaches
+    the local disk through Hadoop's RawLocalFs, which shells out on
+    every status call (read back from a JFR recording of
+    ``jdk.ProcessStart``).  The caller's conf is untouched and the sink
+    holds the layout's rows."""
     import collections
-    import glob
     import os
+    import re
 
     from stdb_spark.workloads import tssuite
 
     path = tssuite._layout_path(spark, "/root/testdata/sf0.001")
-    n_files = len(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-    assert n_files > 75  # two micro-batches, each over the default threshold
+    files = storage.layout_files(path)
+    n = len(files)
+    assert n // 2 > 32  # each micro-batch is over the default threshold
+    # the first batch ends a day: no row of the second is older than
+    # any row of the first
+    assert files[n // 2 - 1][0] != files[n // 2][0]
     keys = (
         "spark.sql.sources.parallelPartitionDiscovery.threshold",
         "spark.sql.shuffle.partitions",
@@ -175,7 +164,6 @@ def test_replay_stream_lists_batch_files_on_driver(spark, tmp_path):
             lambda sdf: sdf.select(*cols),
             "listing_pin_sink",
             "append",
-            files_per_trigger=75,
             state_width=4,
         )
         # positive control: a process the JVM itself starts inside the
@@ -194,14 +182,19 @@ def test_replay_stream_lists_batch_files_on_driver(spark, tmp_path):
     assert "true" in forked, collections.Counter(forked)
     assert "readlink" not in forked, collections.Counter(forked)
     jsc.listenerBus().waitUntilEmpty()
-    listing = [
-        j.jobId()
+    descriptions = [
+        j.description().get()
         for j in jobs()
-        if j.jobId() > first
-        and j.description().isDefined()
-        and "Listing leaf files" in j.description().get()
+        if j.jobId() > first and j.description().isDefined()
     ]
-    assert listing == []
+    assert not [d for d in descriptions if "Listing leaf files" in d]
+    batches = {
+        b
+        for d in descriptions
+        if "listing_pin_sink" in d
+        for b in re.findall(r"batch = (\d+)", d)
+    }
+    assert batches == {"0", "1"}, descriptions
     assert {k: spark.conf.get(k, None) for k in keys} == confs
     got = collections.Counter(map(tuple, sink.collect()))
     want = collections.Counter(
