@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stdb_spark import model
-from stdb_spark.operators.aggregates import agg_expr
+from stdb_spark.operators.aggregates import COMBINABLE, agg_expr, bucket_start, combine_expr
 from stdb_spark.query.apply_nodes import apply_pipeline
 from stdb_spark.query.parser import (
     QueryKind,
@@ -480,28 +480,6 @@ class Engine:
         return self._limit(out, req)
 
     # ------------------------------------------------------------------
-    # summary-table aggregate pushdown: AggregationResult::combine
-    # (operator.h:48-73) as one Catalyst expression per function, built
-    # only when requested.  Exactness: `sum` is decimal (exact,
-    # order-free); min/max/first/last carry their timestamps so struct
-    # ordering reproduces the leaf scan's deterministic tiebreaks.
-    _SUMMARY_EXPRS = {
-        "min": lambda: F.min(F.struct("min", "min_ts")).getField("min"),
-        "max": lambda: F.max(F.struct("max", "max_ts")).getField("max"),
-        "sum": lambda: F.sum("sum").cast("double"),
-        "count": lambda: F.sum("cnt").cast("double"),
-        "cnt": lambda: F.sum("cnt").cast("double"),
-        "mean": lambda: F.sum("sum").cast("double") / F.sum("cnt"),
-        "first": lambda: F.min(F.struct("first_ts", "first")).getField("first"),
-        "last": lambda: F.max(F.struct("last_ts", "last")).getField("last"),
-        "min_timestamp": lambda: F.min(F.struct("min", "min_ts"))
-        .getField("min_ts").cast("double"),
-        "max_timestamp": lambda: F.max(F.struct("max", "max_ts"))
-        .getField("max_ts").cast("double"),
-        "first_timestamp": lambda: F.min("first_ts").cast("double"),
-        "last_timestamp": lambda: F.max("last_ts").cast("double"),
-    }
-
     def _summary_exact(self, req: QueryRequest, funcs: list[str], bucketed: bool) -> bool:
         """Whether the summary table answers ``req`` provably exactly:
         forward scan, no tag regrouping, every func combinable, range
@@ -511,7 +489,7 @@ class Engine:
         sstep = self.summary_step_ns
         if self.summaries is None or not sstep or req.group_op or req.backward:
             return False
-        if not set(funcs) <= self._SUMMARY_EXPRS.keys():
+        if not COMBINABLE.issuperset(funcs):
             return False
         if req.begin is None:
             return not bucketed
@@ -535,12 +513,14 @@ class Engine:
             ts = "bucket_ts"
             if req.begin is not None:
                 df = df.filter((F.col(ts) >= req.begin) & (F.col(ts) < req.end))
-            expr = lambda f: self._SUMMARY_EXPRS[f]()  # noqa: E731
+            expr = combine_expr
         else:
             ts = "ts"
             df = self._group_remap(self._range(df, req, "samples"), req)
             expr = lambda f: agg_expr(f, req.backward, exact=self.exact_sums)  # noqa: E731
-        keys = [self._tags_col] + ([self._bucket_col(req, ts)] if bucketed else [])
+        keys = [self._tags_col]
+        if bucketed:
+            keys.append(bucket_start(ts, req.begin, req.step_ns, req.backward).alias("ts"))
         return df, keys, expr
 
     # ------------------------------------------------------------------
@@ -584,19 +564,6 @@ class Engine:
         return self._limit(out.orderBy("series"), req)
 
     # ------------------------------------------------------------------
-    @staticmethod
-    def _bucket_col(req: QueryRequest, ts: str = "ts"):
-        """Tumbling buckets over column ``ts``, aligned to the query's
-        `begin`, NOT to the epoch (stdb/storage/operators/aggregate.cc:160-170):
-        forward  bucket_ts = begin + step*((ts - begin) div step)
-        backward bucket_ts = begin - step*((begin - ts) div step)
-        Integer `div` keeps 1e18-scale nanosecond math exact (a double
-        division would lose precision past 2^53)."""
-        b, s = F.lit(req.begin), F.lit(req.step_ns)
-        if req.backward:
-            return (b - s * F.expr(f"({req.begin}L - {ts}) div {req.step_ns}L")).alias("ts")
-        return (b + s * F.expr(f"({ts} - {req.begin}L) div {req.step_ns}L")).alias("ts")
-
     def _group_aggregate(self, req: QueryRequest) -> DataFrame:
         funcs = req.agg_funcs
         df, keys, expr = self._agg_input(req, funcs, bucketed=True)

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from stdb_spark.operators.aggregates import bucket_start
+
 _D = "DECIMAL(28,10)"
 _D2 = "DECIMAL(38,8)"
 
@@ -593,11 +595,9 @@ def trapezoid_integral(
     w = Window.partitionBy(series_col).orderBy(ts_col)
     pv = F.lag(value_col).over(w)
     pt = F.lag(ts_col).over(w)
-    # exact int64 begin-aligned bucket (same convention as the engine's
-    # group-aggregate _bucket_col); origin must be <= min(ts)
-    bucket = F.lit(origin_ns) + F.lit(bucket_ns) * F.expr(
-        f"({ts_col} - {origin_ns}L) div {bucket_ns}L"
-    )
+    # exact int64 begin-aligned bucket (the engine's group-aggregate
+    # bucket); origin must be <= min(ts)
+    bucket = bucket_start(ts_col, origin_ns, bucket_ns)
     d = samples.select(
         F.col(series_col).alias("series"),
         bucket.alias("_b"),
@@ -740,9 +740,7 @@ def error_budget_burn(
     the per-user totals are whole-partition window sums over the
     already-aggregated (tiny) bucket rows — no second scan of the
     fact table."""
-    bucket = F.lit(origin_ns) + F.lit(bucket_ns) * F.expr(
-        f"({ts_col} - {origin_ns}L) div {bucket_ns}L"
-    )
+    bucket = bucket_start(ts_col, origin_ns, bucket_ns)
     per = (
         events.groupBy(
             F.col(user_col).alias("user"), bucket.alias("ts")

@@ -8,16 +8,18 @@ function at a time (stdb/storage/nbtree.cc:1067-1422); M4 is the
 operator a grafana-style frontend actually wants.
 
 Plan shape at 100 TB: ONE hash exchange on (series, bucket) with
-map-side partial aggregation — the anchors are struct min/max, so
-Tungsten keeps the whole reduction JVM-side and each anchor is
-row-atomic (ts and value come from the SAME sample; ties on equal
-values break deterministically by the struct's second field).
+map-side partial aggregation — the M4 anchors are exactly the summary
+partials, the four row-atomic anchors of operators/aggregates.py (ts and
+value from the SAME sample, deterministic ties), struct min/max that
+Tungsten keeps JVM-side.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from stdb_spark.operators.aggregates import anchor
 
 
 def m4(
@@ -33,32 +35,29 @@ def m4(
     (first_ts, first_v), (min_v, min_ts), (max_v, max_ts),
     (last_ts, last_v).  Buckets are begin-aligned, [begin, end) half-open
     like the engine's group-aggregate."""
-    ts, v = F.col(ts_col), F.col(value_col)
-    s = samples.filter((ts >= begin) & (ts < end))
+    s = samples.filter((F.col(ts_col) >= begin) & (F.col(ts_col) < end))
     bk = F.expr(f"({ts_col} - {int(begin)}L) div {int(step)}L")
-    tv = F.struct(ts.alias("t"), v.alias("v"))
-    vt = F.struct(v.alias("v"), ts.alias("t"))
     agg = (
         s.withColumn("bk", bk)
         .groupBy(series_col, "bk")
         .agg(
-            F.min(tv).alias("_f"),
-            F.max(tv).alias("_l"),
-            F.min(vt).alias("_mn"),
-            F.max(vt).alias("_mx"),
+            anchor("first", ts_col, value_col).alias("_f"),
+            anchor("last", ts_col, value_col).alias("_l"),
+            anchor("min", ts_col, value_col).alias("_mn"),
+            anchor("max", ts_col, value_col).alias("_mx"),
         )
     )
     return agg.select(
         series_col,
         "bk",
-        F.col("_f.t").alias("first_ts"),
-        F.col("_f.v").alias("first_v"),
-        F.col("_mn.v").alias("min_v"),
-        F.col("_mn.t").alias("min_ts"),
-        F.col("_mx.v").alias("max_v"),
-        F.col("_mx.t").alias("max_ts"),
-        F.col("_l.t").alias("last_ts"),
-        F.col("_l.v").alias("last_v"),
+        F.col("_f.ts").alias("first_ts"),
+        F.col("_f.value").alias("first_v"),
+        F.col("_mn.value").alias("min_v"),
+        F.col("_mn.ts").alias("min_ts"),
+        F.col("_mx.value").alias("max_v"),
+        F.col("_mx.ts").alias("max_ts"),
+        F.col("_l.ts").alias("last_ts"),
+        F.col("_l.value").alias("last_v"),
     )
 
 

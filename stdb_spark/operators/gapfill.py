@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from stdb_spark.operators.aggregates import anchor
+
 
 def _anchors_with_next(
     samples: DataFrame,
@@ -34,16 +36,15 @@ def _anchors_with_next(
     ts_col: str,
     value_col: str,
 ):
-    """Per-(series, bucket) first/last anchors (row-atomic struct
-    min/max over (ts, value)) plus the NEXT observed bucket's index and
-    first-anchor via one lead() window; n_buckets."""
+    """Per-(series, bucket) first/last anchors (aggregates.anchor) plus
+    the NEXT observed bucket's index and first-anchor via one lead()
+    window; n_buckets."""
     n_buckets = (end - begin + step - 1) // step
     s = samples.filter((F.col(ts_col) >= begin) & (F.col(ts_col) < end))
-    tv = F.struct(F.col(ts_col).alias("t"), F.col(value_col).alias("v"))
     bucketed = (
         s.withColumn("_bk", F.expr(f"({ts_col} - {int(begin)}L) div {int(step)}L"))
         .groupBy(series_col, "_bk")
-        .agg(F.min(tv).alias("_first"), F.max(tv).alias("_last"))
+        .agg(*[anchor(k, ts_col, value_col).alias(f"_{k}") for k in ("first", "last")])
     )
     w = Window.partitionBy(series_col).orderBy("_bk")
     return (
@@ -93,7 +94,7 @@ def resample_locf(
     g = _expand(anchored, n_buckets, series_col)
     # _k < _bk only on leading empty buckets (null); otherwise the
     # anchor's last value carries through its span.
-    value = F.when(F.col("_k") >= F.col("_bk"), F.col("_last").getField("v"))
+    value = F.when(F.col("_k") >= F.col("_bk"), F.col("_last").getField("value"))
     return g.select(
         F.col(series_col),
         (F.lit(begin) + F.col("_k") * step).cast("long").alias(ts_col),
@@ -122,13 +123,13 @@ def resample_interpolate(
     g = _expand(anchored, n_buckets, series_col)
     ts = (F.lit(begin) + F.col("_k") * step).cast("long")
     prev, nxt = F.col("_last"), F.col("_nfirst")
-    interp = prev.getField("v") + (
-        nxt.getField("v") - prev.getField("v")
+    interp = prev.getField("value") + (
+        nxt.getField("value") - prev.getField("value")
     ) * (
-        (ts - prev.getField("t")).cast("double")
-        / (nxt.getField("t") - prev.getField("t")).cast("double")
+        (ts - prev.getField("ts")).cast("double")
+        / (nxt.getField("ts") - prev.getField("ts")).cast("double")
     )
-    value = F.when(F.col("_k") == F.col("_bk"), prev.getField("v")).otherwise(
+    value = F.when(F.col("_k") == F.col("_bk"), prev.getField("value")).otherwise(
         # gap bucket inside the span: interpolate iff a later anchor
         # exists; leading (_k < _bk) and trailing (_nfirst null) stay null
         F.when((F.col("_k") > F.col("_bk")) & nxt.isNotNull(), interp)

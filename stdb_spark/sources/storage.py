@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stdb_spark.common.timeutil import NS_PER_DAY
+from stdb_spark.operators.aggregates import anchor
 
 
 def with_day(samples: DataFrame) -> DataFrame:
@@ -77,7 +78,8 @@ def layout_files(path: str) -> list[tuple[int, str]]:
     """``(day, file)`` for every data file of the layout at ``path``, in
     NUMERIC day order, then metric directory and file name —
     lexicographic path order would interleave day ids of different
-    digit counts (day=10 before day=9)."""
+    digit counts (day=10 before day=9).  Local paths only (``glob``,
+    not the FileSystem API of ``expire_partitions``)."""
     keyed = []
     for f in glob.glob(os.path.join(path, "day=*", "metric=*", "*.parquet")):
         parts = f.split(os.sep)
@@ -94,7 +96,8 @@ def stamp_replay_order(path: str) -> None:
     fold or watermark assumes in-event-time-order arrival (the sf0.1
     full-registry gate caught 4 stream queries diverging from their
     sf0.01-green results exactly this way).  O(#files) utime calls
-    restore a deterministic, day-ordered replay at any scale."""
+    restore a deterministic, day-ordered replay at any scale.  Local
+    paths only (``os.utime`` over ``layout_files``)."""
     import time
 
     files = layout_files(path)
@@ -109,7 +112,8 @@ def replay_order_stamped(path: str) -> bool:
     ``stamp_replay_order`` leaves.  A committed layout can still fail
     this: its ``_SUCCESS`` is written before the restamp, so a run
     killed between the two, or a copy that does not keep mtimes,
-    leaves a ready layout that replays in task-completion order."""
+    leaves a ready layout that replays in task-completion order.
+    Local paths only (``os.stat`` over ``layout_files``)."""
     mtimes = [os.stat(f).st_mtime_ns for _, f in layout_files(path)]
     return all(a < b for a, b in zip(mtimes, mtimes[1:]))
 
@@ -148,17 +152,11 @@ def summary_table(samples: DataFrame, step_ns: int = NS_PER_DAY) -> DataFrame:
     count/min/max/sum/first/last and whole-range aggregates combine
     them without touching leaves).
 
-    A bucket-aligned `aggregate` query can be answered from this table
-    via AggregationResult::combine semantics (sum of sums, min of mins,
-    first by min ts...) at 1/N the scan cost — wired into
-    Engine._aggregate as an explicit planner choice, not a Catalyst rule
-    (SURVEY.md §4).
-
-    ``sum`` is stored as decimal(38,10): decimal addition is exact and
-    associative, so combining bucket sums in ANY grouping reproduces the
-    leaf scan's exact-sum answer bit-for-bit.  min/max carry the ts at
-    which they occur (smallest-ts tiebreak via (value, ts) struct order)
-    so min_timestamp/max_timestamp combine exactly too.
+    A bucket-aligned query combines these rows at 1/N the scan cost
+    (aggregates.combine_expr) — an explicit planner choice in
+    Engine._agg_input, not a Catalyst rule (SURVEY.md §4).  ``sum`` is
+    decimal(38,10), exact and associative in ANY grouping; the other
+    partials are the four anchors of operators/aggregates.py.
 
     Each row carries its series' ``tags`` (``series_id`` determines
     them; a map cannot be a grouping key, so ``any_value`` takes them),
@@ -169,10 +167,10 @@ def summary_table(samples: DataFrame, step_ns: int = NS_PER_DAY) -> DataFrame:
         F.any_value("tags").alias("tags"),
         F.count("value").alias("cnt"),
         F.sum(F.col("value").cast("decimal(38,10)")).alias("sum"),
-        F.min(F.struct("value", "ts")).alias("_minv"),
-        F.max(F.struct("value", "ts")).alias("_maxv"),
-        F.min(F.struct("ts", "value")).alias("_first"),
-        F.max(F.struct("ts", "value")).alias("_last"),
+        anchor("min").alias("_minv"),
+        anchor("max").alias("_maxv"),
+        anchor("first").alias("_first"),
+        anchor("last").alias("_last"),
     ).select(
         "series_id",
         "metric",

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stdb_spark.operators.ohlc import candles
 from stdb_spark.sources import storage
 from stdb_spark.sources.opentsdb import parse_opentsdb_lines
 
@@ -178,23 +179,15 @@ def streaming_ohlc(
     extra_keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Continuous candlesticks: tumbling-window OHLC per series — the
-    streaming twin of the batch `operators/ohlc.py`.  Open/close are
-    struct-min/max over (ts, value), so same-timestamp ties break on
-    value deterministically (row-atomic, same idiom as the batch
-    aggregate's first/last)."""
+    streaming twin of the batch `operators/ohlc.py`, built from the
+    same candlestick columns (tie-breaks: operators/aggregates.py)."""
     ev = with_late_data_policy(samples, max_lateness)
-    tv = F.struct(F.col("ts").alias("t"), F.col("value").alias("v"))
     return ev.groupBy(
         F.window("event_time", step).alias("bucket"),
         "series_id",
         "metric",
         *extra_keys,
-    ).agg(
-        F.min(tv).getField("v").alias("open"),
-        F.max("value").alias("high"),
-        F.min("value").alias("low"),
-        F.max(tv).getField("v").alias("close"),
-    )
+    ).agg(*candles())
 
 
 def streaming_hopping_aggregate(
@@ -623,7 +616,8 @@ def commit_epoch_idempotent(
     (see write_to_parquet_with_summary).  Module-level so the replay
     path is directly testable: calling it twice with the same batch_id
     must leave the fact table and summaries byte-identical to one
-    call."""
+    call.  Local paths only: markers, scrub and move use ``os``/``glob``/
+    ``shutil``, not the FileSystem API of ``storage.expire_partitions``."""
     import errno
     import glob
     import os

@@ -45,6 +45,22 @@ def dense_ramp(spark):
 
 
 @pytest.fixture(scope="session")
+def ties(spark):
+    """F1 with ties: 10 series `test tag=Tk`, ts in [100, 1000), values
+    repeating every 13 samples, so equal values recur at different ts in
+    different 100-ns buckets; a second sample of another value at every
+    5th ts and at the last ts of each hundred, so same-ts ties sit on
+    bucket edges.  No negative values, so no -0.0/0.0 ties."""
+    rows = []
+    for k in range(10):
+        for ts in range(100, 1000):
+            rows.append(("test", {"tag": f"T{k}"}, ts, float((7 * ts + k) % 13)))
+            if ts % 5 == 0 or ts % 100 == 99:
+                rows.append(("test", {"tag": f"T{k}"}, ts, float((3 * ts + k) % 13)))
+    return make_samples(spark, rows).cache()
+
+
+@pytest.fixture(scope="session")
 def multi_metric(spark):
     """F2: m1=0.1*ts, m2=0.2*ts over 5 hosts, ts in [100, 400);
     m2 drops every 3rd point (ts%3==0) — join gap variant."""

@@ -155,19 +155,14 @@ def test_group_by_tag_merges_series(eng):
     assert out[0].value == 1000.0
 
 
-def test_aggregate_from_summaries_matches_leaf(spark, dense_ramp):
+def test_aggregate_from_summaries_matches_leaf(spark, dense_ramp, ties):
     """The summary-table planner path (SubtreeRef pushdown analog) must
     reproduce the leaf scan bit-for-bit on an aligned range, and fall
-    back to the leaf scan when the range is unaligned."""
+    back to the leaf scan when the range is unaligned — on a strictly
+    monotone ramp and on an input full of same-ts and equal-value ties."""
     from stdb_spark.sources import storage
 
     step = 100
-    summ = storage.summary_table(dense_ramp, step_ns=step)
-    eng_s = Engine(
-        spark, samples=dense_ramp, summaries=summ, summary_step_ns=step,
-        exact_sums=True,
-    )
-    eng_l = Engine(spark, samples=dense_ramp, exact_sums=True)
     q = {
         "aggregate": {
             "test": ["min", "max", "sum", "count", "mean", "first", "last",
@@ -177,34 +172,40 @@ def test_aggregate_from_summaries_matches_leaf(spark, dense_ramp):
         "range": {"from": 200, "to": 500},
         "where": {"tag": ["T0", "T3"]},
     }
-    got = {(r.series, r.value) for r in eng_s.query(q).collect()}
-    want = {(r.series, r.value) for r in eng_l.query(q).collect()}
-    assert got == want
+    for samples in (dense_ramp, ties):
+        summ = storage.summary_table(samples, step_ns=step)
+        eng_s = Engine(
+            spark, samples=samples, summaries=summ, summary_step_ns=step,
+            exact_sums=True,
+        )
+        eng_l = Engine(spark, samples=samples, exact_sums=True)
+        got = {(r.series, r.value) for r in eng_s.query(q).collect()}
+        want = {(r.series, r.value) for r in eng_l.query(q).collect()}
+        assert got == want
 
-    # the summary path really was taken (analyzed plan still names the
-    # summary columns; the optimizer later inlines the aliases)
-    plan = eng_s.query(q)._jdf.queryExecution().analyzed().toString()
-    assert "bucket_ts" in plan
+        # the summary path really was taken (analyzed plan still names the
+        # summary columns; the optimizer later inlines the aliases)
+        plan = eng_s.query(q)._jdf.queryExecution().analyzed().toString()
+        assert "bucket_ts" in plan
 
-    # unaligned range -> falls back to the leaf scan, still correct
-    q2 = dict(q, range={"from": 250, "to": 450})
-    got2 = {(r.series, r.value) for r in eng_s.query(q2).collect()}
-    want2 = {(r.series, r.value) for r in eng_l.query(q2).collect()}
-    assert got2 == want2
+        # unaligned range -> falls back to the leaf scan, still correct
+        q2 = dict(q, range={"from": 250, "to": 450})
+        got2 = {(r.series, r.value) for r in eng_s.query(q2).collect()}
+        want2 = {(r.series, r.value) for r in eng_l.query(q2).collect()}
+        assert got2 == want2
+    # the ties were there: T0 at ts=200 holds 9.0 and 2.0, and 0.0 first
+    # occurs at ts=208 and recurs in every bucket
+    assert ("test:first tag=T0", 2.0) in got
+    assert ("test:min_timestamp tag=T0", 208.0) in got
 
 
-def test_group_aggregate_rollup_from_summaries(spark, dense_ramp):
+def test_group_aggregate_rollup_from_summaries(spark, dense_ramp, ties):
     """Downsample answered by combining finer summary buckets must match
-    the leaf scan exactly; unaligned step falls back."""
+    the leaf scan exactly, with and without ties; unaligned step falls
+    back."""
     from stdb_spark.sources import storage
 
     sstep = 100
-    summ = storage.summary_table(dense_ramp, step_ns=sstep)
-    eng_s = Engine(
-        spark, samples=dense_ramp, summaries=summ, summary_step_ns=sstep,
-        exact_sums=True,
-    )
-    eng_l = Engine(spark, samples=dense_ramp, exact_sums=True)
     q = {
         "group-aggregate": {
             "step": 300,  # 3 summary buckets per output bucket
@@ -214,18 +215,25 @@ def test_group_aggregate_rollup_from_summaries(spark, dense_ramp):
         "range": {"from": 100, "to": 1000},
         "where": {"tag": ["T1", "T4"]},
     }
-    got = sorted(map(tuple, eng_s.query(q).collect()))
-    want = sorted(map(tuple, eng_l.query(q).collect()))
-    assert got == want
-    plan = eng_s.query(q)._jdf.queryExecution().analyzed().toString()
-    assert "bucket_ts" in plan  # summary path taken
+    for samples in (dense_ramp, ties):
+        summ = storage.summary_table(samples, step_ns=sstep)
+        eng_s = Engine(
+            spark, samples=samples, summaries=summ, summary_step_ns=sstep,
+            exact_sums=True,
+        )
+        eng_l = Engine(spark, samples=samples, exact_sums=True)
+        got = sorted(map(tuple, eng_s.query(q).collect()))
+        want = sorted(map(tuple, eng_l.query(q).collect()))
+        assert got == want
+        plan = eng_s.query(q)._jdf.queryExecution().analyzed().toString()
+        assert "bucket_ts" in plan  # summary path taken
 
-    # step not a multiple of the summary step -> leaf fallback, correct
-    q2 = dict(q)
-    q2["group-aggregate"] = dict(q["group-aggregate"], step=250)
-    got2 = sorted(map(tuple, eng_s.query(q2).collect()))
-    want2 = sorted(map(tuple, eng_l.query(q2).collect()))
-    assert got2 == want2
+        # step not a multiple of the summary step -> leaf fallback, correct
+        q2 = dict(q)
+        q2["group-aggregate"] = dict(q["group-aggregate"], step=250)
+        got2 = sorted(map(tuple, eng_s.query(q2).collect()))
+        want2 = sorted(map(tuple, eng_l.query(q2).collect()))
+        assert got2 == want2
 
 
 def test_p95_sketch_tracks_exact(spark):
@@ -410,22 +418,23 @@ def test_group_aggregate_join_from_summaries(spark, multi_metric):
     assert got2 == want2
 
 
-def test_ohlc_from_summaries_matches_leaf(spark, dense_ramp):
+def test_ohlc_from_summaries_matches_leaf(spark, dense_ramp, ties):
     """Candlesticks combined from summary buckets == the leaf-scan OHLC
-    (the SubtreeRef pushdown extended to OHLC, VERDICT r4 #7) — and the
-    summary plan never touches the samples relation."""
+    (the SubtreeRef pushdown extended to OHLC, VERDICT r4 #7), with and
+    without same-ts and equal-value ties."""
     from stdb_spark.operators.ohlc import ohlc, ohlc_from_summaries
     from stdb_spark.sources import storage
 
     sstep = 100
-    summ = storage.summary_table(dense_ramp, step_ns=sstep)
-    got = sorted(
-        map(tuple, ohlc_from_summaries(summ, step_ns=300, begin_ns=100).collect())
-    )
-    want = sorted(
-        map(tuple, ohlc(dense_ramp, step_ns=300, begin_ns=100).collect())
-    )
-    assert got == want and got
+    for samples in (dense_ramp, ties):
+        summ = storage.summary_table(samples, step_ns=sstep)
+        got = sorted(
+            map(tuple, ohlc_from_summaries(summ, step_ns=300, begin_ns=100).collect())
+        )
+        want = sorted(
+            map(tuple, ohlc(samples, step_ns=300, begin_ns=100).collect())
+        )
+        assert got == want and got
 
 
 def test_hll_rollup_datasketches_accuracy(spark):

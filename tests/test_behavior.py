@@ -164,7 +164,9 @@ def test_m4_anchors_hand_computed(spark):
             ("s", 0, 5.0),
             ("s", 3, 1.0),   # min of bucket 0
             ("s", 7, 9.0),   # max of bucket 0
-            ("s", 9, 4.0),   # last of bucket 0
+            ("s", 5, 1.0),   # equal to the min, later: min_ts stays 3
+            ("s", 9, 4.0),   # same ts as the next row, smaller value
+            ("s", 9, 6.0),   # last of bucket 0: the larger value at ts 9
             ("s", 12, 2.0),  # bucket 1 single sample = all four anchors
         ],
         "series string, ts long, value double",
@@ -177,7 +179,7 @@ def test_m4_anchors_hand_computed(spark):
     assert (b0.first_ts, b0.first_v) == (0, 5.0)
     assert (b0.min_v, b0.min_ts) == (1.0, 3)
     assert (b0.max_v, b0.max_ts) == (9.0, 7)
-    assert (b0.last_ts, b0.last_v) == (9, 4.0)
+    assert (b0.last_ts, b0.last_v) == (9, 6.0)
     b1 = rows[1]
     assert (b1.first_ts, b1.first_v) == (12, 2.0)
     assert (b1.min_v, b1.max_v, b1.last_v) == (2.0, 2.0, 2.0)

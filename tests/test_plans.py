@@ -665,6 +665,27 @@ def test_ohlc_from_summaries_no_leaf_scan(spark):
     assert "summaries" in plan and "events.parquet" not in plan, plan
 
 
+def test_summary_combine_plain_min_max_plans_hash_aggregate(spark):
+    # min/max combine as plain min/max over the bucket partials, so a
+    # summary-path aggregate that asks for no first/last/*_timestamp
+    # plans a HashAggregate and sorts only its output
+    from stdb_spark.workloads.tssuite import JAN05, JAN15, _engine_with_summaries
+
+    eng = _engine_with_summaries(spark, SF)
+    funcs = ["min", "max", "mean", "count"]
+    q = {"aggregate": {"click": funcs}, "range": {"from": JAN05, "to": JAN15}}
+    df = eng.query(q)
+    assert "bucket_ts" in df._jdf.queryExecution().optimizedPlan().toString()
+    plan = _plan(df)
+    assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
+    sorts = [line for line in plan.splitlines() if "Sort [" in line]
+    assert sorts and all("], true, 0" in line for line in sorts), plan
+    # min_timestamp reads the (value, ts) anchor: a struct buffer, which
+    # a HashAggregate cannot hold
+    q["aggregate"]["click"] = funcs + ["min_timestamp"]
+    assert "SortAggregate" in _plan(eng.query(q))
+
+
 def test_group_aggregate_join_from_summaries_no_leaf_scan(spark):
     # single-func group-aggregate-join combines + pivots summaries:
     # same no-leaf-scan property as the aggregate/OHLC pushdowns
