@@ -18,7 +18,10 @@ stream):
     select meta:names-> (series)
 
 Scale notes: the series binding (`where`) filters on the fact table's own
-metric/tags columns so Parquet predicate pushdown applies; group-by keys
+metric/tags columns so Parquet predicate pushdown applies; a query
+filters each bound table once, its bind, range and value conditions
+composed as Columns into one `filter` (every DataFrame call is analyzed
+eagerly, so a chain of filters costs plan builds); group-by keys
 are strings (canonical tag suffix) to keep every shuffle key sortable;
 aggregates are single Catalyst expressions so map-side partials apply;
 `join` aligns metrics with one conditional max per metric (one hash
@@ -33,7 +36,7 @@ import functools
 import operator as _op
 from typing import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stdb_spark import model
@@ -104,6 +107,24 @@ def _and_all(conds):
 
 def _or_all(conds):
     return functools.reduce(_op.or_, conds)
+
+
+def _filter(df: DataFrame, conds: list[Column]) -> DataFrame:
+    """``df`` under the conjunction of ``conds``: one Filter, or none."""
+    return df.filter(_and_all(conds)) if conds else df
+
+
+def _series_name(label: str | Column, tags: Column | None = None) -> Column:
+    """The output series name: ``label``, then a space and the tag
+    suffix (the ``_tags_s`` column unless ``tags`` is given) when the
+    series has tags."""
+    tags = F.col("_tags_s") if tags is None else tags
+    if isinstance(label, str):
+        named = F.concat(F.lit(label + " "), tags)
+        label = F.lit(label)
+    else:
+        named = F.concat(label, F.lit(" "), tags)
+    return F.when(F.length(tags) > 0, named).otherwise(label).alias("series")
 
 
 def _vf_condition(col, vf: ValueFilter):
@@ -178,12 +199,7 @@ class Engine:
         }
         sfx = model.tags_suffix_col()
         self._tags_col = sfx.alias("_tags_s")
-        metric = F.col("metric")
-        self._series_col = (
-            F.when(F.length(sfx) > 0, F.concat(metric, F.lit(" "), sfx))
-            .otherwise(metric)
-            .alias("series")
-        )
+        self._series_col = _series_name(F.col("metric"), sfx)
 
     # ------------------------------------------------------------------
     @classmethod
@@ -228,17 +244,17 @@ class Engine:
         from stdb_spark.query.parser import parse_search_query
 
         sq = parse_search_query(dict(q))
-        df = self.series
+        conds = []
         if sq.regex:
-            df = df.filter(F.col("name").rlike(sq.regex))
+            conds.append(F.col("name").rlike(sq.regex))
         elif sq.metric and sq.fuzzy:
-            df = df.filter(F.col("metric").startswith(sq.metric))
+            conds.append(F.col("metric").startswith(sq.metric))
         elif sq.metric:
-            df = df.filter(F.col("metric") == sq.metric)
+            conds.append(F.col("metric") == sq.metric)
         req = QueryRequest(kind=QueryKind.SELECT_META)
         req.where = sq.where
         req.limit, req.offset = sq.limit, sq.offset
-        df = self._bind(df, req, metrics=[])
+        df = _filter(self.series, conds + self._bind(req, metrics=[]))
         out = df.select(F.col("name").alias("series")).orderBy("series")
         return self._limit(out, req)
 
@@ -252,61 +268,60 @@ class Engine:
         from stdb_spark.query.parser import parse_suggest_query
 
         sq = parse_suggest_query(dict(q))
-        df = self.series
-        if sq.metric:
-            df = df.filter(F.col("metric") == sq.metric)
+        name = F.col("name")
+        conds = []
         if sq.target == "metric-names":
-            out = self.series.select(F.col("metric").alias("name")).distinct()
-        elif sq.target == "tag-names":
-            out = df.select(
-                F.explode(F.map_keys(F.col("tags"))).alias("name")
-            ).distinct()
-        else:  # tag-values (target validated by the parser)
-            out = (
-                df.select(F.col("tags")[sq.tag].alias("name"))
-                .filter(F.col("name").isNotNull())
-                .distinct()
-            )
+            # metric names ignore the `metric` filter
+            cols = [F.col("metric").alias("name")]
+        else:
+            if sq.metric:
+                conds.append(F.col("metric") == sq.metric)
+            if sq.target == "tag-names":
+                cols = ["metric", F.explode(F.map_keys(F.col("tags"))).alias("name")]
+            else:  # tag-values (target validated by the parser)
+                cols = ["metric", F.col("tags")[sq.tag].alias("name")]
+                conds.append(name.isNotNull())
         if sq.starts_with:
-            out = out.filter(F.col("name").startswith(sq.starts_with))
-        return out.orderBy("name")
+            conds.append(name.startswith(sq.starts_with))
+        out = _filter(self.series.select(*cols), conds)
+        return out.select(name).distinct().orderBy("name")
 
     # ------------------------------------------------------------------
     # shared stages
-    def _bind(self, df: DataFrame, req: QueryRequest, metrics: list[str] | None = None) -> DataFrame:
-        """metric + where -> row filter (the parse-time series binding of
-        the reference, queryparser.cc:683-740, becomes a pushed-down
-        predicate on the fact table)."""
+    def _bind(self, req: QueryRequest, metrics: list[str] | None = None) -> list[Column]:
+        """metric + where -> row conditions (the parse-time series
+        binding of the reference, queryparser.cc:683-740, becomes a
+        pushed-down predicate on the fact table)."""
         metrics = metrics if metrics is not None else req.metrics
+        conds = []
         if metrics:
-            df = df.filter(F.col("metric").isin(list(dict.fromkeys(metrics))))
+            conds.append(F.col("metric").isin(list(dict.fromkeys(metrics))))
         if req.where:
             if req.where.tag_values:
-                conds = [
+                conds.append(_and_all([
                     F.col("tags")[t].isin(vals)
                     for t, vals in req.where.tag_values.items()
-                ]
-                df = df.filter(_and_all(conds))
+                ]))
             if req.where.series_combos:
-                combos = [
+                conds.append(_or_all([
                     _and_all([F.col("tags")[k] == F.lit(v) for k, v in combo.items()])
                     for combo in req.where.series_combos
-                ]
-                df = df.filter(_or_all(combos))
-        return df
+                ]))
+        return conds
 
-    def _range(self, df: DataFrame, req: QueryRequest, table: str) -> DataFrame:
-        """Half-open [from, to); reversed bounds scan backward over
-        (to, from] (operator.h:88-94).  When a ``ts_raw`` column is bound,
-        coarse bounds on it are added so the Parquet scan prunes row
-        groups (see __init__ on ts_slack_ns).  When the table carries the
-        layout's ``day`` partition column (sources.storage.write_samples),
-        explicit day bounds are added so directory-level partition
-        pruning fires — the NB+tree time-descent analog at the file
-        system level.  ``table`` names the bound table ``df`` filters
-        ("samples" or "events"), whose schema __init__ read once."""
+    def _range(self, req: QueryRequest, table: str) -> list[Column]:
+        """Row conditions of the range: half-open [from, to); reversed
+        bounds scan backward over (to, from] (operator.h:88-94).  When a
+        ``ts_raw`` column is bound, coarse bounds on it are added so the
+        Parquet scan prunes row groups (see __init__ on ts_slack_ns).
+        When the table carries the layout's ``day`` partition column
+        (sources.storage.write_samples), explicit day bounds are added
+        so directory-level partition pruning fires — the NB+tree
+        time-descent analog at the file system level.  ``table`` names
+        the bound table ("samples" or "events"), whose schema __init__
+        read once."""
         if req.begin is None:
-            return df
+            return []
         dtypes = self._dtypes[table]
         # widen BOTH ends by the slack: the contract is the symmetric
         # |ts - ts_raw| <= ts_slack_ns, so a transform that can move ts
@@ -332,12 +347,12 @@ class Engine:
         # When the adapter kept the raw parquet column, add coarse
         # attribute-vs-literal bounds on it so the scan prunes row
         # groups (the NB+tree time-descent analog at the storage level).
-        src_cond = model.ts_src_bounds(df, int(lo), int(hi), dtypes)
+        src_cond = model.ts_src_bounds(None, int(lo), int(hi), dtypes)
         if src_cond is not None:
             cond = cond & src_cond
         if "day" in dtypes:
             cond = cond & storage.day_bounds(lo, hi)
-        return df.filter(cond)
+        return [cond]
 
     @staticmethod
     def _group_remap(df: DataFrame, req: QueryRequest) -> DataFrame:
@@ -443,9 +458,7 @@ class Engine:
 
     # ------------------------------------------------------------------
     def _select(self, req: QueryRequest) -> DataFrame:
-        df = self._bind(self.samples, req)
-        df = self._range(df, req, "samples")
-        df = self._group_remap(df, req)
+        conds = self._bind(req) + self._range(req, "samples")
         if req.filters:
             # reject unknown keys loudly instead of KeyError-crashing /
             # silently dropping extra named filters
@@ -454,7 +467,8 @@ class Engine:
                 raise QueryParseError(
                     f"filter key {unknown[0]!r} matches no selected metric"
                 )
-            df = df.filter(_vf_condition(F.col("value"), req.filters[req.metrics[0]]))
+            conds.append(_vf_condition(F.col("value"), req.filters[req.metrics[0]]))
+        df = self._group_remap(_filter(self.samples, conds), req)
         out = df.select(self._series_col, F.col("ts"), F.col("value"))
         out, cols, preordered = apply_pipeline(out, req.apply, ["value"], req.backward)
         return self._limit(self._order(out, req, cols, preordered), req)
@@ -462,20 +476,19 @@ class Engine:
     def _select_events(self, req: QueryRequest) -> DataFrame:
         if self.events is None:
             raise QueryParseError("no events table bound")
-        df = self._bind(self.events, req)
-        df = self._range(df, req, "events")
+        conds = self._bind(req) + self._range(req, "events")
         if req.event_regex:
             # regex pushed into the scan, like BinaryDataFilter
             # (stdb/storage/nbtree.cc:1630)
-            df = df.filter(F.col("body").rlike(req.event_regex))
-        df = self._group_remap(df, req)
+            conds.append(F.col("body").rlike(req.event_regex))
+        df = self._group_remap(_filter(self.events, conds), req)
         out = df.select(self._series_col, F.col("ts"), F.col("body"))
         return self._limit(self._order(out, req, ["body"]), req)
 
     def _select_meta(self, req: QueryRequest) -> DataFrame:
         if self.series is None:
             raise QueryParseError("no series registry bound")
-        df = self._bind(self.series, req)
+        df = _filter(self.series, self._bind(req))
         out = df.select(F.col("name").alias("series")).orderBy("series")
         return self._limit(out, req)
 
@@ -507,16 +520,17 @@ class Engine:
         combines ~60 day-summaries per series instead of re-scanning
         every leaf row — and scan the leaf rows otherwise.  Summary rows
         carry their series' metric and tags, so both bind alike."""
-        summary = self._summary_exact(req, funcs, bucketed)
-        df = self._bind(self.summaries if summary else self.samples, req)
-        if summary:
+        conds = self._bind(req)
+        if self._summary_exact(req, funcs, bucketed):
             ts = "bucket_ts"
             if req.begin is not None:
-                df = df.filter((F.col(ts) >= req.begin) & (F.col(ts) < req.end))
+                conds.append((F.col(ts) >= req.begin) & (F.col(ts) < req.end))
+            df = _filter(self.summaries, conds)
             expr = combine_expr
         else:
             ts = "ts"
-            df = self._group_remap(self._range(df, req, "samples"), req)
+            df = _filter(self.samples, conds + self._range(req, "samples"))
+            df = self._group_remap(df, req)
             expr = lambda f: agg_expr(f, req.backward, exact=self.exact_sums)  # noqa: E731
         keys = [self._tags_col]
         if bucketed:
@@ -555,11 +569,7 @@ class Engine:
         for cond, arr in branches[1:]:
             pairs = pairs.when(cond, arr)
         e = gb.select("_tags_s", F.explode(pairs).alias("_e"))
-        sname = F.when(
-            F.length("_tags_s") > 0,
-            F.concat(F.col("_e.label"), F.lit(" "), F.col("_tags_s")),
-        ).otherwise(F.col("_e.label"))
-        out = e.select(sname.alias("series"), F.col("_e.value").alias("value"))
+        out = e.select(_series_name(F.col("_e.label")), F.col("_e.value").alias("value"))
         # aggregate output is always series-ordered (queryparser.cc:1453+)
         return self._limit(out.orderBy("series"), req)
 
@@ -586,15 +596,8 @@ class Engine:
                     metric_keys[m] = funcs[0]
         gb = self._group_aggregate_filters(gb, req, cols, metric_keys)
         label = "|".join(f"{{m}}:{f}" for f in funcs)
-        sname = F.when(
-            F.length("_tags_s") > 0,
-            F.concat(
-                F.regexp_replace(F.lit(label), F.lit("\\{m\\}"), F.col("metric")),
-                F.lit(" "),
-                F.col("_tags_s"),
-            ),
-        ).otherwise(F.regexp_replace(F.lit(label), F.lit("\\{m\\}"), F.col("metric")))
-        out = gb.select(sname.alias("series"), F.col("ts"), *[F.col(f) for f in funcs])
+        label = F.regexp_replace(F.lit(label), F.lit("\\{m\\}"), F.col("metric"))
+        out = gb.select(_series_name(label), F.col("ts"), *[F.col(f) for f in funcs])
         return self._limit(self._order(out, req, funcs), req)
 
     # ------------------------------------------------------------------
@@ -609,22 +612,13 @@ class Engine:
         duplicates sneak in (first() would be partition-order
         dependent)."""
         metrics = req.metrics
-        df = self._bind(self.samples, req)
-        df = self._range(df, req, "samples")
+        df = _filter(self.samples, self._bind(req) + self._range(req, "samples"))
         df = self._group_remap(df, req)
         metric, value = F.col("metric"), F.col("value")
         piv = df.groupBy(self._tags_col, "ts").agg(
             *[F.max(F.when(metric == m, value)).alias(m) for m in metrics]
         )
-        piv = self._value_filters(piv, req, {m: _quote(m) for m in metrics})
-        joined_name = "|".join(metrics)
-        sname = F.when(
-            F.length("_tags_s") > 0,
-            F.concat(F.lit(joined_name + " "), F.col("_tags_s")),
-        ).otherwise(F.lit(joined_name))
-        out = piv.select(sname.alias("series"), "ts", *[F.col(_quote(m)) for m in metrics])
-        out, cols, preordered = apply_pipeline(out, req.apply, list(metrics), req.backward)
-        return self._limit(self._order(out, req, cols, preordered), req)
+        return self._joined_output(piv, req, "|".join(metrics))
 
     def _group_aggregate_join(self, req: QueryRequest) -> DataFrame:
         """Downsample N metrics with ONE func, align buckets
@@ -635,12 +629,14 @@ class Engine:
         fn = req.agg_funcs[0]
         df, keys, expr = self._agg_input(req, [fn], bucketed=True)
         piv = df.groupBy(*keys).pivot("metric", metrics).agg(expr(fn))
+        return self._joined_output(piv, req, "|".join(f"{m}:{fn}" for m in metrics))
+
+    def _joined_output(self, piv: DataFrame, req: QueryRequest, label: str) -> DataFrame:
+        """The output of the joins: ``piv`` holds one column per metric
+        by (``_tags_s``, ts); value filters, series name, apply
+        pipeline, order and limit."""
+        metrics = req.metrics
         piv = self._value_filters(piv, req, {m: _quote(m) for m in metrics})
-        joined_name = "|".join(f"{m}:{fn}" for m in metrics)
-        sname = F.when(
-            F.length("_tags_s") > 0,
-            F.concat(F.lit(joined_name + " "), F.col("_tags_s")),
-        ).otherwise(F.lit(joined_name))
-        out = piv.select(sname.alias("series"), "ts", *[F.col(_quote(m)) for m in metrics])
+        out = piv.select(_series_name(label), "ts", *[F.col(_quote(m)) for m in metrics])
         out, cols, preordered = apply_pipeline(out, req.apply, list(metrics), req.backward)
         return self._limit(self._order(out, req, cols, preordered), req)

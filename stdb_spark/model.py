@@ -21,40 +21,8 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from stdb_spark.common.seriesparser import MAX_TAGS
-
-SAMPLES_SCHEMA = T.StructType(
-    [
-        T.StructField("series_id", T.LongType()),
-        T.StructField("metric", T.StringType()),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("ts", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-    ]
-)
-
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("series_id", T.LongType()),
-        T.StructField("metric", T.StringType()),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("ts", T.LongType()),
-        T.StructField("body", T.StringType()),
-    ]
-)
-
-SERIES_SCHEMA = T.StructType(
-    [
-        T.StructField("series_id", T.LongType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("metric", T.StringType()),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("lon", T.FloatType()),
-        T.StructField("lat", T.FloatType()),
-    ]
-)
 
 TESTDATA_TABLES = (
     "region",

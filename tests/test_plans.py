@@ -1004,3 +1004,85 @@ def test_dup_span_profile_single_gram_exchange_no_join(spark):
     plan = _plan(dup_span_profile(docs))
     assert "Join" not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
+
+
+# ----------------------------------------------------------------------
+# One Filter per bound table: the engine composes a query's bind, range
+# and value conditions as Columns and filters each bound table once.
+# The walk finds each bound table's analyzed plan inside the query's
+# analyzed plan and counts the Filter nodes on the path down to it: the
+# ones below the nearest Aggregate filter the table's rows, the ones
+# above it filter aggregated rows (HAVING, a join's value filter).
+
+def _filters_over_bound_tables(df, tables):
+    """[(rows filters, aggregate filters)] for each occurrence of a
+    DataFrame of ``tables`` in ``df``'s analyzed plan."""
+    bound = [t._jdf.queryExecution().analyzed() for t in tables if t is not None]
+    found = []
+
+    def walk(node, path):
+        if any(node.equals(b) for b in bound):
+            names = [n.nodeName() for n in path]
+            cut = max((i for i, n in enumerate(names) if n == "Aggregate"), default=-1)
+            found.append((names[cut + 1:].count("Filter"), names[: cut + 1].count("Filter")))
+            return
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), path + [node])
+
+    walk(df._jdf.queryExecution().analyzed(), [])
+    return found
+
+
+_ONE_FILTER_QUERIES = {
+    "select_where_range_value": ("query", {
+        "select": "cpu", "where": {"host": ["a"]}, "range": {"from": 0, "to": 150},
+        "filter": {"gt": 1.0}}, 0),
+    "select_events_regex": ("query", {
+        "select-events": "!log", "where": {"host": ["a"]}, "range": {"from": 0, "to": 150},
+        "filter": "err"}, 0),
+    "aggregate_leaf": ("query", {
+        "aggregate": {"cpu": ["min", "max"]}, "where": {"host": ["a"]},
+        "range": {"from": 5, "to": 150}}, 0),
+    "aggregate_summary": ("query", {
+        "aggregate": {"cpu": ["min", "max"]}, "where": {"host": ["a"]},
+        "range": {"from": 0, "to": 100}}, 0),
+    "group_aggregate_having": ("query", {
+        "group-aggregate": {"step": 10, "metric": "cpu", "func": ["max"]},
+        "where": {"host": ["a"]}, "range": {"from": 0, "to": 150},
+        "filter": {"max": {"gt": 1.0}}}, 1),
+    "join_filter": ("query", {
+        "join": ["cpu", "mem"], "where": {"host": ["a"]}, "range": {"from": 0, "to": 150},
+        "filter": {"cpu": {"gt": 1.0}}}, 1),
+    "search": ("search", {"select": "cpu", "where": {"host": ["a"]}}, 0),
+    "suggest_tag_values": ("suggest", {
+        "select": "tag-values", "metric": "cpu", "tag": "host", "starts-with": "a"}, 0),
+}
+
+
+@pytest.fixture(scope="module")
+def one_filter_engine(spark):
+    from stdb_spark.engine import Engine
+    from stdb_spark.sources import storage
+    from tests.conftest import make_events, make_samples
+
+    rows = [(m, {"host": h}, ts, float(ts)) for m in ("cpu", "mem")
+            for h in "ab" for ts in range(0, 200, 5)]
+    samples = make_samples(spark, rows)
+    events = make_events(spark, [("!log", {"host": h}, ts, f"err {ts}")
+                                 for h in "ab" for ts in range(0, 200, 7)])
+    summaries = storage.summary_table(samples, step_ns=50)
+    return Engine(spark, samples=samples, events=events, summaries=summaries,
+                  summary_step_ns=50)
+
+
+@pytest.mark.parametrize("name", sorted(_ONE_FILTER_QUERIES))
+def test_engine_filters_each_bound_table_once(one_filter_engine, name):
+    eng = one_filter_engine
+    method, q, agg_filters = _ONE_FILTER_QUERIES[name]
+    df = getattr(eng, method)(q)
+    tables = (eng.samples, eng.events, eng.series, eng.summaries)
+    found = _filters_over_bound_tables(df, tables)
+    assert found == [(1, agg_filters)], (found, df._jdf.queryExecution().analyzed().toString())
+    if name == "aggregate_summary":
+        assert "bucket_ts" in df._jdf.queryExecution().analyzed().toString()

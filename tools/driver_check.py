@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import resource
 import sys
 import traceback
 
@@ -67,6 +68,32 @@ def _hash(df: pd.DataFrame) -> str:
     return hashlib.md5(payload.encode()).hexdigest()
 
 
+def _bytes(size: str) -> int:
+    """A JVM memory size such as ``8g`` or ``4096m`` in bytes."""
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    size = size.strip().lower()
+    if size[-1:] in units:
+        return int(float(size[:-1]) * units[size[-1]])
+    return int(size)
+
+
+def _duckdb_mem_default(driver_mem: str | None) -> str:
+    """DuckDB's memory limit when DUCKDB_MEM is unset: half of the
+    machine's available memory less the driver heap (Spark's default
+    1g unless DRIVER_CHECK_MEM sizes it), at least 1 GB.  DuckDB's own
+    default is 80% of RAM inside this process, while the oracle's and
+    Spark's result frames live outside its pool."""
+    with open("/proc/meminfo") as f:
+        avail_kb = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
+    free = avail_kb * 1024 - _bytes(driver_mem or "1g")
+    return f"{max(free // 2, 1 << 30) >> 20}MB"
+
+
+def _write_results(results: dict) -> None:
+    with open("/tmp/driver_check.json", "w") as f:
+        json.dump(results, f, indent=1, default=str)
+
+
 def main() -> int:
     from pyspark.sql import SparkSession
 
@@ -101,10 +128,11 @@ def main() -> int:
     # DuckDB's default buffer pool is 80% of RAM; alongside a sized-up
     # JVM (DRIVER_CHECK_MEM) a long multi-query run can OOM the box —
     # the sf1 full-registry run died exactly this way at query 232.
-    # DUCKDB_MEM caps it (the driver's own sf0.01 gate never needs to).
-    ddb_mem = os.environ.get("DUCKDB_MEM")
-    if ddb_mem:
-        con.execute(f"SET memory_limit='{ddb_mem}'")
+    # DUCKDB_MEM caps it; unset, the cap comes from the memory the
+    # machine has available when the run starts.
+    ddb_mem = os.environ.get("DUCKDB_MEM") or _duckdb_mem_default(mem)
+    con.execute(f"SET memory_limit='{ddb_mem}'")
+    print(f"duckdb memory_limit={ddb_mem}", flush=True)
     for t in TABLES:
         # driver testdata ships single-file tables; locally generated
         # scale replicas (tools/gen_scale.py) are Spark-written
@@ -169,7 +197,11 @@ def main() -> int:
             nerr += 1
             status = "ERR " + rec["err"].strip().splitlines()[-1][:140]
         rec["sec"] = round(time.perf_counter() - t0, 2)
+        # this process's peak resident set so far (Linux: KB); the file
+        # is rewritten after every entry, so a killed run names its last
+        rec["peak_rss_mb"] = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss >> 10
         results[name] = rec
+        _write_results(results)
         print(f"{name:42s} {status}  [{rec['sec']}s]", flush=True)
         if "err" in rec and (
             "Connection refused" in rec["err"]
@@ -193,8 +225,7 @@ def main() -> int:
             {"pass": npass, "fail": nfail, "err": nerr, "total": npass + nfail + nerr}
         )
     )
-    with open("/tmp/driver_check.json", "w") as f:
-        json.dump(results, f, indent=1, default=str)
+    _write_results(results)
     spark.stop()
     return 0 if nfail + nerr == 0 else 1
 
