@@ -61,32 +61,19 @@ def m4(
     )
 
 
-def _hashed_per_series_apply(
-    samples: DataFrame,
-    pick_one,
-    series_col: str,
-    ts_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Shared dispatch for sequential per-series kernels: ONE
-    applyInPandas call per hash partition of series (per-group Arrow
-    overhead dominates with many short series), each series intact in
-    one frame, the kernel applied per series inside."""
-    import pandas as pd
-
-    out_schema = f"{series_col} string, {ts_col} long, {value_col} double"
-
-    def _pick(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts = [
-            pick_one(g) for _, g in pdf.groupby(series_col, sort=False)
-        ]
-        return pd.concat(parts, ignore_index=True)
-
-    n_pg = int(samples.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    tagged = samples.select(series_col, ts_col, value_col).withColumn(
-        "_pg", F.pmod(F.xxhash64(series_col), F.lit(n_pg))
-    )
-    return tagged.groupBy("_pg").applyInPandas(_pick, schema=out_schema)
+def hashed_series_apply(df: DataFrame, fn, schema=None, series_col: str = "series") -> DataFrame:
+    """Run a sequential per-series kernel ``fn(pdf) -> pdf`` with ONE
+    applyInPandas call per hash partition of series
+    (``_pg = xxhash64(series) % shuffle.partitions``), NOT one per
+    series: ``groupBy(series).applyInPandas`` pays per-group Arrow +
+    pandas overhead (~ms), which with millions of short series dominates
+    the math by orders of magnitude.  Each series stays intact in one
+    frame, each frame holds rows/partitions (the memory bound of any
+    shuffle partition), and ``fn`` loops over the series inside.
+    ``schema`` defaults to the input's plus ``_pg``."""
+    n_pg = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    tagged = df.withColumn("_pg", F.pmod(F.xxhash64(series_col), F.lit(n_pg)))
+    return tagged.groupBy("_pg").applyInPandas(fn, schema=schema or tagged.schema)
 
 
 def lttb(
@@ -95,6 +82,7 @@ def lttb(
     series_col: str = "series",
     ts_col: str = "ts",
     value_col: str = "value",
+    qscale: int = 1_000_000,
 ) -> DataFrame:
     """Largest-Triangle-Three-Buckets (Steinarsson 2013 — public
     algorithm): per series, pick the ``n_out`` samples that best
@@ -102,76 +90,26 @@ def lttb(
     interior bucket keeps the point maximizing the triangle area with
     the previously kept point and the next bucket's centroid).
 
-    The selection is inherently sequential per series (each choice
-    depends on the previous), so this is the documented Pandas-UDF slow
-    path — but the shuffle is ONE ``applyInPandas`` call per hash
-    partition of series (``_pg``), not one per series: per-group Arrow
-    overhead dominates with many short series, so series are hashed
-    onto ``shuffle.partitions`` groups (each series intact in one
-    frame) and the sequential kernel runs per series inside.  A series'
-    samples must fit in one partition — at 100 TB pre-reduce with
-    :func:`m4` (e.g. step = span/(4*n_out)) before LTTB; the anchors
-    preserve exactly the extremes LTTB needs.
-    """
-    import numpy as np
-    import pandas as pd
-
-    def _pick_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        n = len(pdf)
-        if n <= n_out:
-            return pdf[[series_col, ts_col, value_col]]
-        t = pdf[ts_col].to_numpy(dtype=np.float64)
-        v = pdf[value_col].to_numpy(dtype=np.float64)
-        # bucket edges over the interior points (first/last pinned)
-        edges = np.linspace(1, n - 1, n_out - 1).astype(np.int64)
-        keep = np.empty(n_out, dtype=np.int64)
-        keep[0] = 0
-        for i in range(n_out - 2):
-            lo, hi = edges[i], edges[i + 1]
-            nlo, nhi = edges[i + 1], (n if i == n_out - 3 else edges[i + 2])
-            cx, cy = t[nlo:nhi].mean(), v[nlo:nhi].mean()
-            ax, ay = t[keep[i]], v[keep[i]]
-            area = np.abs(
-                (ax - cx) * (v[lo:hi] - ay) - (ax - t[lo:hi]) * (cy - ay)
-            )
-            keep[i + 1] = lo + int(np.argmax(area))
-        keep[-1] = n - 1
-        out = pdf.iloc[keep]
-        return out[[series_col, ts_col, value_col]]
-
-    return _hashed_per_series_apply(
-        samples, _pick_one, series_col, ts_col, value_col
-    )
-
-
-def lttb_exact_int(
-    samples: DataFrame,
-    n_out: int,
-    series_col: str = "series",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    qscale: int = 1_000_000,
-) -> DataFrame:
-    """Cross-engine-exact LTTB twin of :func:`lttb` (the SemDeDup /
-    PageRank fixed-point pattern): the greedy selection runs on
-    INTEGER coordinates — ts as-is, value quantized to
-    ``trunc(value * qscale)`` — with the triangle-area comparison
-    cleared of the centroid division::
+    The greedy selection runs on INTEGER coordinates — ts as-is, value
+    quantized to ``trunc(value * qscale)`` — with the triangle-area
+    comparison cleared of the centroid division::
 
         area(P) ∝ |(t_a*c - St)*(w_P - w_a) - (t_a - t_P)*(Sw - w_a*c)|
 
     (c, St, Sw = next bucket's count and coordinate sums), evaluated in
     arbitrary-precision Python ints, argmax ties broken by first index.
-    Bucket edges are the integer analog of the float linspace:
+    Bucket edges are the integer analog of a float linspace:
     ``e_k = 1 + (k*(n-2)) // (n_out-2)``.  Every quantity is an exact
     integer, so a DuckDB recursive CTE replays the identical selection
-    (HUGEINT arithmetic) — which is what buys the full value-hash
-    oracle; the float :func:`lttb` remains the production operator.
+    (HUGEINT arithmetic), which is what buys the full value-hash oracle.
     Output rows carry the ORIGINAL values of the selected samples.
 
-    Same scale shape as :func:`lttb`: one hash exchange, the
-    sequential kernel per series inside an Arrow frame."""
+    The selection is sequential per series (each choice depends on the
+    previous), so it runs in pandas per series, batched per hash
+    partition (:func:`hashed_series_apply`).  A series' samples must fit
+    in one partition — at 100 TB pre-reduce with :func:`m4` (e.g.
+    step = span/(4*n_out)) before LTTB; the anchors preserve exactly the
+    extremes LTTB needs."""
     import pandas as pd
 
     if n_out < 2:
@@ -214,8 +152,15 @@ def lttb_exact_int(
         keep.append(n - 1)
         return pdf.iloc[keep][[series_col, ts_col, value_col]]
 
-    return _hashed_per_series_apply(
-        samples, _pick_one, series_col, ts_col, value_col
+    def _pick(pdf: pd.DataFrame) -> pd.DataFrame:
+        parts = [_pick_one(g) for _, g in pdf.groupby(series_col, sort=False)]
+        return pd.concat(parts, ignore_index=True)
+
+    return hashed_series_apply(
+        samples.select(series_col, ts_col, value_col),
+        _pick,
+        f"{series_col} string, {ts_col} long, {value_col} double",
+        series_col,
     )
 
 

@@ -58,6 +58,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from stdb_spark.operators.downsample import hashed_series_apply
+
 EWMA_WARMUP = 10  # sliding_window.cc:7
 
 
@@ -68,6 +70,19 @@ class ApplyError(ValueError):
 def _scan_window(backward: bool):
     order = F.col("ts").desc() if backward else F.col("ts").asc()
     return Window.partitionBy("series").orderBy(order)
+
+
+def _field(step: dict, key: str, cast=float, default=None):
+    """``cast(step[key])`` (``default`` when absent and not None), raising
+    ApplyError that names the node and the field when the field is
+    missing or does not convert."""
+    if key not in step and default is None:
+        raise ApplyError(f"`{step['name']}` requires a `{key}` field")
+    raw = step.get(key, default)
+    try:
+        return cast(raw)
+    except (TypeError, ValueError):
+        raise ApplyError(f"`{step['name']}` `{key}`: not a number: {raw!r}") from None
 
 
 def _weights(step: dict, ncols: int) -> list[float]:
@@ -107,9 +122,8 @@ def _rowwise_fold(df: DataFrame, cols: list[str], op: str, ignore_missing: bool)
 
 def _ewma_seq(x, decay: float, delta: bool):
     """Reference-exact sequential EWMA fold over a dense float array
-    (EWMA::add, sliding_window.cc:23-34).  Kept as the semantic ground
-    truth and the fallback when the vectorized kernel is not bit-exact
-    for this decay."""
+    (EWMA::add, sliding_window.cc:23-34) — the semantic ground truth
+    the lockstep kernel is tested bit-for-bit against."""
     import numpy as np
 
     out = np.empty_like(x)
@@ -130,137 +144,68 @@ def _ewma_seq(x, decay: float, delta: bool):
     return out
 
 
-_EWM_BITEXACT: dict[float, bool] = {}
-
-
-def _pd_ewm_bitexact(decay: float) -> bool:
-    """One-time probe: does ``pandas.ewm(alpha=decay, adjust=False)``
-    reproduce the C++-loop recurrence ``val = cur*d + val*(1-d)``
-    bit-for-bit?  pandas' cython kernel normalizes by (old_wt+new_wt),
-    which for some decays costs the last ulp — for those we fall back to
-    the sequential fold.  The probe includes repeated-value runs
-    (pandas short-circuits ``weighted_avg != cur``)."""
-    if decay not in _EWM_BITEXACT:
-        import numpy as np
-
-        rng = np.random.default_rng(12345)
-        x = rng.normal(100.0, 25.0, 4096)
-        x[100:120] = x[99]  # equal-run edge case
-        x[1000] = 0.0
-        val = x[0]
-        direct = np.empty_like(x)
-        direct[0] = val
-        for i in range(1, len(x)):
-            val = x[i] * decay + val * (1.0 - decay)
-            direct[i] = val
-        got = pd.Series(x).ewm(alpha=decay, adjust=False).mean().to_numpy()
-        _EWM_BITEXACT[decay] = bool(np.array_equal(direct, got))
-    return _EWM_BITEXACT[decay]
-
-
 def _ewma_udf(df: DataFrame, cols: list[str], decay: float, delta: bool, backward: bool) -> DataFrame:
-    """Arrow-batched per-series EWMA with the reference's warm-up rule.
+    """Per-series EWMA with the reference's warm-up rule, as a
+    lane-lockstep recurrence (_batched_series_apply_lockstep).
 
-    Shuffle shape: ONE applyInPandas call per hash partition of series
-    (``_pg = xxhash64(series) % shuffle.partitions``), NOT one per
-    series.  ``groupBy(series).applyInPandas`` pays per-group Arrow +
-    pandas overhead (~ms); with millions of short series at 100 TB that
-    overhead dominates the actual math by orders of magnitude.  Hashing
-    series onto a bounded number of groups keeps every series intact in
-    one pandas frame (same co-location guarantee), sizes each frame at
-    rows/partitions (the same memory bound as any shuffle partition),
-    and runs the per-series kernels inside one Python call.
-
-    The post-warm-up tail is computed with pandas' C kernel
-    (``ewm(alpha, adjust=False)``) seeded so position k equals the
-    reference fold's state: out[i] for i > W is the EWMA of x[..i-1]
-    seeded at e_W = x[W]*d + mean(x[0..W])*(1-d).  The vectorized path
-    is used only when the one-time bit-parity probe passes for this
-    decay (it does for the suite's d=0.3); otherwise the sequential
-    reference fold runs — same values either way.
-    """
+    Per lane, in the scalar fold's op order: the first W+1 samples emit
+    themselves (``ewma-error``: 0); the seed is the left-to-right sum of
+    x[0..W-1], plus x[W], over W+1, blended once with x[W]; from x[W+1]
+    on each step emits the prediction ``val`` (``ewma-error``:
+    x - val), then ``val = cur*d + val*(1-d)``.  One step per time index
+    runs elementwise across all lanes, masked by ``active``, so every
+    lane is bit-identical to _ewma_seq for any decay."""
     import numpy as np
 
     W = EWMA_WARMUP
-    use_vec = _pd_ewm_bitexact(decay)
 
-    def one(xs: "np.ndarray") -> "np.ndarray":
-        """Dense (NaN-free) series values -> outputs, reference-exact."""
-        n = len(xs)
-        outs = xs.copy() if not delta else np.zeros_like(xs)
-        if n > W + 1:
-            if use_vec:
-                # warm-up seed, exactly as the sequential fold: sum of
-                # the first W values in order, blended at x[W]
-                val = 0.0
-                for v in xs[:W]:
-                    val += float(v)
-                val = (val + float(xs[W])) / float(W + 1)
-                seed = float(xs[W]) * decay + val * (1.0 - decay)
-                z = np.concatenate(([seed], xs[W + 1 :]))
-                e = pd.Series(z).ewm(alpha=decay, adjust=False).mean().to_numpy()
-                exp = e[: n - (W + 1)]
-                if delta:
-                    outs[W + 1 :] = xs[W + 1 :] - exp
-                else:
-                    outs[W + 1 :] = exp
-            else:
-                outs = _ewma_seq(xs, decay, delta)
+    def many(X):
+        nS, T = X.shape
+        outs = X.copy() if not delta else np.zeros_like(X)
+        if T <= W + 1:
+            return outs
+        with np.errstate(invalid="ignore"):
+            val = np.zeros(nS)
+            for j in range(W):
+                val = val + X[:, j]
+            cur = X[:, W]
+            val = (val + cur) / float(W + 1)
+            val = cur * decay + val * (1.0 - decay)
+            for i in range(W + 1, T):
+                cur = X[:, i]
+                active = ~np.isnan(cur)  # NaN padding sits at the end
+                outs[active, i] = (cur - val)[active] if delta else val[active]
+                val = np.where(active, cur * decay + val * (1.0 - decay), val)
         return outs
 
-    return _batched_series_apply(df, cols, backward, one)
+    return _batched_series_apply_lockstep(df, cols, backward, many)
 
 
-def _batched_series_apply(df: DataFrame, cols: list[str], backward: bool, one):
-    """Run a dense-array kernel ``one(xs) -> outs`` per (series, column)
-    with ONE applyInPandas call per hash partition of series (see the
-    shuffle-shape rationale on _ewma_udf).  NaN rows pass through
-    untouched and are invisible to the kernel (reference rule)."""
-    import numpy as np
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["series", "ts"], ascending=[True, not backward]
-        ).reset_index(drop=True)
-        for c in cols:
-            x = pdf[c].to_numpy(dtype="float64", copy=True)
-            for _, idx in pdf.groupby("series", sort=False).indices.items():
-                xi = x[idx]
-                mask = ~np.isnan(xi)
-                xi[mask] = one(xi[mask])
-                x[idx] = xi
-            pdf[c] = x
-        return pdf
-
-    n_pg = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    tagged = df.withColumn("_pg", F.pmod(F.xxhash64("series"), F.lit(n_pg)))
-    return (
-        tagged.groupBy("_pg").applyInPandas(fn, schema=tagged.schema).drop("_pg")
-    )
+# Each padded lockstep matrix holds at most this many doubles (32 MB).
+_LOCKSTEP_MAX_ELEMS = 1 << 22
 
 
 def _batched_series_apply_lockstep(
-    df: DataFrame, cols: list[str], backward: bool, many, max_elems: int = 1 << 22
+    df: DataFrame, cols: list[str], backward: bool, many
 ) -> DataFrame:
     """Run a LANE-LOCKSTEP recurrence kernel ``many(X) -> OUT`` where
     ``X`` is an (n_series, max_len) float64 matrix, one series per row,
     NaN-padded at the END (rows hold each series' dense, NaN-free
-    values in ts order).
+    values in ts order); NaN rows pass through untouched and are
+    invisible to the kernel (reference rule).
 
     This is how a sequential recurrence vectorizes WITHOUT changing its
     float semantics: the kernel loops over TIME STEPS and applies each
     step's arithmetic elementwise across all series at once.  Per lane
     the operations and their order are identical to the scalar fold
     (numpy elementwise ops are independently IEEE-rounded per element,
-    no cross-lane reduction), so results are bit-exact by construction
-    — no parity probe needed, unlike the pandas ``ewm`` path whose
-    internal kernel uses a different recurrence form.
+    no cross-lane reduction), so results are bit-exact by construction.
 
     Series are length-sorted and chunked so each padded matrix stays
-    under ``max_elems`` doubles: padding waste is bounded (neighbors in
-    the sort have similar lengths) and peak memory is capped regardless
-    of how skewed series lengths are.  Shuffle shape is the same
-    hash-partition batching as ``_batched_series_apply``."""
+    under ``_LOCKSTEP_MAX_ELEMS`` doubles: padding waste is bounded
+    (neighbors in the sort have similar lengths) and peak memory is
+    capped regardless of how skewed series lengths are.  Shuffle shape:
+    downsample.hashed_series_apply."""
     import numpy as np
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -280,7 +225,7 @@ def _batched_series_apply_lockstep(
                 max_len, j = 0, i0
                 while j < len(dense):
                     cand = max(max_len, len(dense[j][1]))
-                    if (j - i0 + 1) * cand > max_elems and j > i0:
+                    if (j - i0 + 1) * cand > _LOCKSTEP_MAX_ELEMS and j > i0:
                         break
                     max_len = cand
                     j += 1
@@ -295,11 +240,7 @@ def _batched_series_apply_lockstep(
             pdf[c] = x
         return pdf
 
-    n_pg = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    tagged = df.withColumn("_pg", F.pmod(F.xxhash64("series"), F.lit(n_pg)))
-    return (
-        tagged.groupBy("_pg").applyInPandas(fn, schema=tagged.schema).drop("_pg")
-    )
+    return hashed_series_apply(df, fn).drop("_pg")
 
 
 def _holt_seq(xs, alpha: float, beta: float, delta: bool):
@@ -504,10 +445,10 @@ def apply_pipeline(
             # NOTE on join gaps: the frame is PHYSICAL rows, and the
             # warm-up rule (short frame sums coalesce to 0, divisor
             # stays n) is oracle-pinned — so a NULL slot inside the
-            # frame also contributes 0, unlike the ewma/holt pandas
+            # frame also contributes 0, unlike the ewma/holt lockstep
             # kernels where NaN rows are invisible.  On gap-bearing
             # join output prefer ewma, or gapfill before smoothing.
-            n = int(step.get("window-width", 0))
+            n = _field(step, "window-width", int, 0)
             if n <= 0:
                 raise ApplyError("`sma` requires positive `window-width`")
             for c in value_cols:
@@ -517,17 +458,17 @@ def apply_pipeline(
                 out = (F.col(c) - pred) if name == "sma-error" else pred
                 df = df.withColumn(c, F.when(F.col(c).isNotNull(), out))
         elif name in ("ewma", "ewma-error"):
-            decay = float(step["decay"])
+            decay = _field(step, "decay")
             df = _ewma_udf(df, value_cols, decay, name == "ewma-error", backward)
         elif name in ("holt", "holt-error"):
-            alpha = float(step.get("alpha", 0.5))
-            beta = float(step.get("beta", 0.3))
+            alpha = _field(step, "alpha", default=0.5)
+            beta = _field(step, "beta", default=0.3)
             df = _holt_udf(df, value_cols, alpha, beta, name == "holt-error", backward)
         elif name in ("holt-winters", "holt-winters-error"):
-            alpha = float(step.get("alpha", 0.5))
-            beta = float(step.get("beta", 0.3))
-            gamma = float(step.get("gamma", 0.3))
-            period = int(step.get("period", 0))
+            alpha = _field(step, "alpha", default=0.5)
+            beta = _field(step, "beta", default=0.3)
+            gamma = _field(step, "gamma", default=0.3)
+            period = _field(step, "period", int, 0)
             if period < 2:
                 raise ApplyError("`holt-winters` requires `period` >= 2")
             df = _holt_winters_udf(
@@ -544,7 +485,7 @@ def apply_pipeline(
             # only, and warm-up rows (< n samples) emit NULL: the 0.5
             # percentile then always lands ON a sample — exact element
             # selection, no interpolation, bit-parity across engines.
-            n = int(step.get("window-width", 0))
+            n = _field(step, "window-width", int, 0)
             if n <= 0 or n % 2 == 0:
                 raise ApplyError("`median` requires positive odd `window-width`")
             for c in value_cols:
@@ -568,7 +509,7 @@ def apply_pipeline(
             # closing division is the only float op, so any engine
             # reproduces the result bit-for-bit.  Warm-up rows (< n
             # samples) emit NULL (any NULL lag nulls the decimal sum).
-            n = int(step.get("window-width", 0))
+            n = _field(step, "window-width", int, 0)
             if not 0 < n <= 12:
                 # the left-assoc decimal chain grows one precision digit
                 # per add; 12 terms stays under every engine's 38-digit
@@ -585,7 +526,7 @@ def apply_pipeline(
                     terms = t if terms is None else terms + t
                 df = df.withColumn(c, terms.cast("double") / F.lit(denom))
         elif name == "top":
-            n = int(step["N"])
+            n = _field(step, "N", int)
             c = value_cols[0]
             rn = F.row_number().over(w)
             lag_t = F.lag("ts").over(w)
@@ -609,7 +550,7 @@ def apply_pipeline(
             value_cols = ["value"]
             preordered = True
         elif name in ("frequent-items", "heavy-hitters"):
-            portion = float(step["portion"])
+            portion = _field(step, "portion")
             if not (0.0 <= portion <= 1.0):
                 raise ApplyError("`portion` must be within [0, 1]")
             c = value_cols[0]
@@ -635,7 +576,7 @@ def apply_pipeline(
         elif name == "eval":
             import re
 
-            expr_text = str(step["expr"])
+            expr_text = _field(step, "expr", str)
             # metric names become column references — tokenized, not raw
             # substring replace (a metric named `e` or `sum` must not
             # corrupt `exp(...)`).  A token that is a known column and is

@@ -96,48 +96,75 @@ STATEFUL_OUT_SCHEMA = (
 STATEFUL_STATE_SCHEMA = "acc double, n long"
 
 
-def streaming_cusum(samples: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator via applyInPandasWithState:
-    per-series running sum (the streaming twin of the batch
-    `accumulate`/`cusum` apply node, rate.cc:62-89).
-
-    State is one (acc, n) pair per series — O(#series) cluster-wide, and
-    the grouping key spreads state across executors.  Within a batch
-    rows are folded in ts order; Spark guarantees all rows for a key in
-    a micro-batch reach one invocation.
-    """
+def _forward_fold(
+    samples: DataFrame,
+    key_cols: tuple[str, ...],
+    in_cols: tuple[str, ...],
+    init: tuple,
+    step,
+    out_schema: str,
+    state_schema: str,
+) -> DataFrame:
+    """Per-key forward fold over a stream (applyInPandasWithState,
+    append mode, no timeout): ``step(state, ts, *values) -> (state,
+    tail)`` runs once per row in ts order, and a tail that is not None
+    emits the row ``key + tail``.  The state tuple (``init`` for a new
+    key) is written back after every micro-batch and resumes from the
+    checkpoint, so it is O(#keys) cluster-wide; Spark delivers all of a
+    key's rows in one micro-batch to one invocation.  Cross-batch order
+    is the replay/ingest order (in-order by construction for the
+    layout-backed replay)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    columns = [f.split()[0] for f in out_schema.split(",")]
 
     def fn(key, pdfs, state: GroupState):
         import pandas as pd
 
-        (series_id, metric) = key
-        acc, n = state.get if state.exists else (0.0, 0)
+        st = state.get if state.exists else init
         out = []
         # A key's rows within one micro-batch can span multiple Arrow
         # chunks and arrive unordered ACROSS chunks — concatenate and
         # sort once, then fold.
         chunks = list(pdfs)
-        pdf = (
-            pd.concat(chunks, ignore_index=True).sort_values("ts")
-            if chunks
-            else pd.DataFrame({"ts": [], "value": []})
-        )
-        for ts, value in zip(pdf["ts"], pdf["value"]):
-            acc += float(value)
-            n += 1
-            out.append((series_id, metric, int(ts), float(value), acc, n))
-        state.update((acc, n))
-        yield pd.DataFrame(
-            out, columns=["series_id", "metric", "ts", "value", "cusum", "n"]
-        )
+        if chunks:
+            pdf = pd.concat(chunks, ignore_index=True).sort_values("ts")
+            for ts, *values in zip(pdf["ts"], *(pdf[c] for c in in_cols)):
+                st, tail = step(st, int(ts), *values)
+                if tail is not None:
+                    out.append(key + tail)
+        state.update(st)
+        yield pd.DataFrame(out, columns=columns)
 
-    return samples.groupBy("series_id", "metric").applyInPandasWithState(
+    return samples.groupBy(*key_cols).applyInPandasWithState(
         fn,
-        outputStructType=STATEFUL_OUT_SCHEMA,
-        stateStructType=STATEFUL_STATE_SCHEMA,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def streaming_cusum(samples: DataFrame) -> DataFrame:
+    """Custom stateful streaming operator: per-series running sum (the
+    streaming twin of the batch `accumulate`/`cusum` apply node,
+    rate.cc:62-89), a :func:`_forward_fold` whose state is one (acc, n)
+    pair per series."""
+
+    def step(st, ts, value):
+        acc, n = st
+        acc += float(value)
+        n += 1
+        return (acc, n), (ts, float(value), acc, n)
+
+    return _forward_fold(
+        samples,
+        ("series_id", "metric"),
+        ("value",),
+        (0.0, 0),
+        step,
+        STATEFUL_OUT_SCHEMA,
+        STATEFUL_STATE_SCHEMA,
     )
 
 
@@ -298,51 +325,31 @@ def streaming_hysteresis(
     key_cols: tuple[str, ...] = ("metric",),
 ) -> DataFrame:
     """Stateful streaming alert evaluation with hysteresis (fire at
-    v >= hi, clear at v <= lo) via applyInPandasWithState — the
-    continuous twin of the batch `hysteresis_alerts` window (alerting
-    is THE always-on streaming workload; the batch trick of
-    "state = last crossing event" needs the whole history, so the
-    streaming side carries the one-int state instead).
+    v >= hi, clear at v <= lo) — the continuous twin of the batch
+    `hysteresis_alerts` window (alerting is THE always-on streaming
+    workload; the batch trick of "state = last crossing event" needs
+    the whole history, so the streaming side carries the one-int state
+    instead).
 
-    State is a single int per key — O(#series) cluster-wide.  Emits one
-    row per sample with the post-sample alert state and an
-    episode-start flag; counts aggregate batch-side from the sink.
-    Rows fold in ts order within each micro-batch; cross-batch order is
-    the replay/ingest order (in-order by construction for the
-    layout-backed replay)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    A :func:`_forward_fold` whose state is a single int per key.  Emits
+    one row per sample with the post-sample alert state and an
+    episode-start flag; counts aggregate batch-side from the sink."""
 
-    def fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        (st,) = state.get if state.exists else (0,)
-        out = []
-        # Arrow chunks within a micro-batch are not ts-ordered across
-        # chunk boundaries — concatenate, sort once, fold once.
-        chunks = list(pdfs)
-        pdf = (
-            pd.concat(chunks, ignore_index=True).sort_values("ts")
-            if chunks
-            else pd.DataFrame({"ts": [], "value": []})
-        )
-        for ts, value in zip(pdf["ts"], pdf["value"]):
-            v = float(value)
-            new = 1 if v >= hi else (0 if v <= lo else st)
-            ep = 1 if (new == 1 and st != 1) else 0
-            st = new
-            out.append(key + (int(ts), st, ep))
-        state.update((st,))
-        yield pd.DataFrame(
-            out, columns=[*key_cols, "ts", "alert", "episode_start"]
-        )
+    def step(st, ts, value):
+        (prev,) = st
+        v = float(value)
+        new = 1 if v >= hi else (0 if v <= lo else prev)
+        return (new,), (ts, new, 1 if (new == 1 and prev != 1) else 0)
 
     key_schema = ", ".join(f"{c} string" for c in key_cols)
-    return samples.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        outputStructType=f"{key_schema}, ts long, alert int, episode_start int",
-        stateStructType="st int",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _forward_fold(
+        samples,
+        key_cols,
+        ("value",),
+        (0,),
+        step,
+        f"{key_schema}, ts long, alert int, episode_start int",
+        "st int",
     )
 
 
@@ -356,43 +363,31 @@ def streaming_geofence_visits(
     a key's point stream goes outside->inside, first-ever point inside,
     or re-enters after a gap > gap_us.  Input rows carry (key, ts, ins)
     with ins precomputed (a pure column expression upstream — the fence
-    test itself never enters Python).  State per key is (last_ts,
-    last_ins, visit_count): O(#keys), three ints.  Duplicate (key, ts)
-    rows dedupe in-state (ts == last_ts skips), mirroring the batch
-    side's DISTINCT.  Rows fold in ts order within each micro-batch;
-    cross-batch order is the replay/ingest order (in-order by
-    construction for the layout-backed replay)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    test itself never enters Python).  A :func:`_forward_fold` whose
+    state per key is (last_ts, last_ins, visit_count): three ints.
+    Duplicate (key, ts) rows dedupe in-state (ts == last_ts skips),
+    mirroring the batch side's DISTINCT."""
 
-    def fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        pts, pins, visits = state.get if state.exists else (-1, 0, 0)
-        out = []
-        chunks = list(pdfs)
-        pdf = (
-            pd.concat(chunks, ignore_index=True).sort_values("ts")
-            if chunks
-            else pd.DataFrame({"ts": [], "ins": []})
-        )
-        for ts, ins in zip(pdf["ts"], pdf["ins"]):
-            ts, ins = int(ts), int(ins)
-            if ts == pts:
-                continue
-            if ins == 1 and (pts < 0 or pins == 0 or ts - pts > gap_us):
-                visits += 1
-                out.append(key + (ts, visits))
-            pts, pins = ts, ins
-        state.update((pts, pins, visits))
-        yield pd.DataFrame(out, columns=[*key_cols, "ts", "visit_no"])
+    def step(st, ts, ins):
+        pts, pins, visits = st
+        if ts == pts:
+            return st, None
+        ins = int(ins)
+        tail = None
+        if ins == 1 and (pts < 0 or pins == 0 or ts - pts > gap_us):
+            visits += 1
+            tail = (ts, visits)
+        return (ts, ins, visits), tail
 
     key_schema = ", ".join(f"{c} string" for c in key_cols)
-    return samples.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        outputStructType=f"{key_schema}, ts long, visit_no long",
-        stateStructType="pts long, pins int, visits long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _forward_fold(
+        samples,
+        key_cols,
+        ("ins",),
+        (-1, 0, 0),
+        step,
+        f"{key_schema}, ts long, visit_no long",
+        "pts long, pins int, visits long",
     )
 
 
@@ -401,52 +396,36 @@ def streaming_counter_rate(
     key_cols: tuple[str, ...] = ("metric",),
 ) -> DataFrame:
     """Stateful streaming counter rate with reset detection — the
-    continuous twin of the batch counter-rate query.  State is the last
-    (ts, value) pair per key; each sample emits the Prometheus-rule
-    increase (negative delta ⇒ counter restarted ⇒ increase = current
-    value) divided by the elapsed seconds.  O(#series) state; rows fold
-    in ts order within a micro-batch and the replay order across
-    batches (in-order for the layout-backed replay)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    continuous twin of the batch counter-rate query.  A
+    :func:`_forward_fold` whose state is the last (ts, value) pair per
+    key; each sample after the first emits the Prometheus-rule increase
+    (negative delta ⇒ counter restarted ⇒ increase = current value)
+    divided by the elapsed seconds."""
 
-    def fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        pts, pv = state.get if state.exists else (-1, 0.0)
-        out = []
-        # Concatenate + sort once: chunk-local sorts fold out of order
-        # when a key spans Arrow batches.
-        chunks = list(pdfs)
-        pdf = (
-            pd.concat(chunks, ignore_index=True).sort_values("ts")
-            if chunks
-            else pd.DataFrame({"ts": [], "value": []})
-        )
-        for ts, value in zip(pdf["ts"], pdf["value"]):
-            ts, v = int(ts), float(value)
-            if pts >= 0:
-                if ts == pts:
-                    # duplicate timestamp: elapsed is 0 — emit a NULL
-                    # rate instead of dividing by zero (mirrors the
-                    # batch twin's null/inf semantics)
-                    out.append(key + (ts, None, v < pv))
-                else:
-                    delta = v - pv if v >= pv else v
-                    rate = delta / ((ts - pts) / 1e9)
-                    out.append(key + (ts, rate, v < pv))
-            pts, pv = ts, v
-        state.update((pts, pv))
-        yield pd.DataFrame(
-            out, columns=[*key_cols, "ts", "rate", "reset"]
-        )
+    def step(st, ts, value):
+        pts, pv = st
+        v = float(value)
+        tail = None
+        if pts >= 0:
+            # duplicate timestamp: elapsed is 0 — emit a NULL rate
+            # instead of dividing by zero (mirrors the batch twin's
+            # null/inf semantics)
+            if ts == pts:
+                rate = None
+            else:
+                rate = (v - pv if v >= pv else v) / ((ts - pts) / 1e9)
+            tail = (ts, rate, v < pv)
+        return (ts, v), tail
 
     key_schema = ", ".join(f"{c} string" for c in key_cols)
-    return samples.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        outputStructType=f"{key_schema}, ts long, rate double, reset boolean",
-        stateStructType="pts long, pv double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _forward_fold(
+        samples,
+        key_cols,
+        ("value",),
+        (-1, 0.0),
+        step,
+        f"{key_schema}, ts long, rate double, reset boolean",
+        "pts long, pv double",
     )
 
 

@@ -92,15 +92,11 @@ def test_ewma_warmup_emits_input(eng):
 
 
 def test_ewma_vectorized_matches_sequential_fold(spark):
-    """The pandas-ewm fast path must be bit-identical to the reference
-    fold (sliding_window.cc:23-34) — for a decay where the probe passes
-    it runs vectorized; for one where it fails it must fall back."""
+    """The Engine's ewma (the lockstep kernel) must be bit-identical to
+    the reference fold (sliding_window.cc:23-34) for every decay."""
     import numpy as np
 
-    from stdb_spark.query.apply_nodes import (
-        _ewma_seq,
-        _pd_ewm_bitexact,
-    )
+    from stdb_spark.query.apply_nodes import _ewma_seq
 
     rng = np.random.default_rng(7)
     x = rng.normal(50.0, 9.0, 500)
@@ -116,7 +112,7 @@ def test_ewma_vectorized_matches_sequential_fold(spark):
         ).collect()
         got = np.array([r.value for r in out])
         want = _ewma_seq(x, decay, delta=False)
-        assert np.array_equal(got, want), (decay, _pd_ewm_bitexact(decay))
+        assert np.array_equal(got, want), decay
 
 
 def test_holt_matches_python_model(spark):
@@ -306,6 +302,32 @@ def test_median_filter_rejects_even_width(eng):
         eng.query(q("sig", {"s": "C"}, [{"name": "median", "window-width": 4}]))
 
 
+@pytest.mark.parametrize(
+    "step, field",
+    [
+        ({"name": "ewma"}, "decay"),
+        ({"name": "ewma-error", "decay": "fast"}, "decay"),
+        ({"name": "top"}, "N"),
+        ({"name": "top", "N": "three"}, "N"),
+        ({"name": "frequent-items"}, "portion"),
+        ({"name": "heavy-hitters", "portion": "half"}, "portion"),
+        ({"name": "eval"}, "expr"),
+        ({"name": "holt", "alpha": "a"}, "alpha"),
+        ({"name": "sma", "window-width": "w"}, "window-width"),
+    ],
+    ids=lambda v: v if isinstance(v, str) else "-".join(map(str, v.values())),
+)
+def test_apply_step_field_errors_name_node_and_field(eng, step, field):
+    # a missing or non-numeric field is an ApplyError naming both, not
+    # a raw KeyError / bare ValueError from the conversion
+    from stdb_spark.query.apply_nodes import ApplyError
+
+    with pytest.raises(ApplyError) as err:
+        eng.query(q("sig", {"s": "C"}, [step]))
+    assert f"`{step['name']}`" in str(err.value)
+    assert f"`{field}`" in str(err.value)
+
+
 def test_holt_winters_matches_python_model(spark):
     import numpy as np
 
@@ -406,6 +428,8 @@ def test_holt_lockstep_bitexact_vs_scalar():
     import numpy as np
 
     from stdb_spark.query.apply_nodes import (
+        _ewma_seq,
+        _ewma_udf,
         _holt_seq,
         _holt_winters_seq,
         _holt_udf,
@@ -413,7 +437,8 @@ def test_holt_lockstep_bitexact_vs_scalar():
     )
 
     rng = np.random.default_rng(777)
-    lens = [0, 1, 2, 3, 7, 64, 257, 1000]
+    # 11 and 12 straddle the end of the ewma warm-up (EWMA_WARMUP + 1)
+    lens = [0, 1, 2, 3, 7, 11, 12, 64, 257, 1000]
     X = np.full((len(lens), max(lens)), np.nan)
     for r, n in enumerate(lens):
         X[r, :n] = rng.normal(50.0, 20.0, n)
@@ -439,6 +464,15 @@ def test_holt_lockstep_bitexact_vs_scalar():
         finally:
             A._batched_series_apply_lockstep = orig
         return cell["many"]
+
+    for delta in (False, True):
+        for decay in (0.05, 0.1, 0.3, 0.41101515364177804, 0.5):
+            many = grab_many(_ewma_udf, decay, delta, False)
+            OUT = many(X.copy())
+            for r, n in enumerate(lens):
+                want = _ewma_seq(X[r, :n].copy(), decay, delta)
+                got = OUT[r, :n]
+                assert np.array_equal(got, want), (delta, decay, n)
 
     for delta in (False, True):
         many = grab_many(_holt_udf, 0.4, 0.2, delta, False)

@@ -1632,12 +1632,12 @@ def test_lttb_exact_int_endpoint_modes(spark):
         [("s", i, float(i % 7)) for i in range(30)],
         "series string, ts long, value double",
     )
-    two = downsample.lttb_exact_int(df, 2).collect()
+    two = downsample.lttb(df, 2).collect()
     assert sorted(r.ts for r in two) == [0, 29]
     import pytest
 
     with pytest.raises(ValueError):
-        downsample.lttb_exact_int(df, 1)
+        downsample.lttb(df, 1)
 
 
 def test_connected_components_kernel_drops_null_edges(spark, monkeypatch):

@@ -123,3 +123,31 @@ def test_rows_only_queries_run(spark, entry_mod):
     for name in set(qs) - set(sqls):
         df = qs[name](spark, SF_DIR)
         assert df.count() >= 0, name
+
+
+def test_stream_ohlc_oracle_matches_struct_form_on_ties(ties):
+    """stream_ohlc's oracle (first/last tu per day + FILTERed min/max)
+    gives the same rows as the struct min/max form it replaced, on
+    same-ts ties at the day edges and equal values across days."""
+    from stdb_spark.workloads.tssuite import _STREAM_OHLC_SQL, D1_US
+
+    struct_form = f"""
+SELECT metric || ' user=' || u AS series,
+       (tu // {D1_US}) * {D1_US} AS ts,
+       (min(struct_pack(t := tu, v := value))).v AS open,
+       max(value) AS high,
+       min(value) AS low,
+       (max(struct_pack(t := tu, v := value))).v AS close
+FROM base
+GROUP BY metric, u, tu // {D1_US}
+"""
+    t = ties.selectExpr("metric", "tags['tag'] AS u", "ts", "value").toPandas()
+    # one day per hundred ts: the fixture's bucket edges become day edges
+    t["tu"] = t["ts"] * (D1_US // 100)
+    con = duckdb.connect()
+    con.register("t", t)
+    base = "WITH base AS (SELECT metric, u, tu, value FROM t)"
+    old = _canon(con.sql(base + struct_form).df())
+    new = _canon(con.sql(base + _STREAM_OHLC_SQL).df())
+    assert len(new) == 90
+    pd.testing.assert_frame_equal(old, new)

@@ -288,6 +288,80 @@ def test_streaming_stateful_cusum(spark, tmp_path):
         (4.0, 7.0, 3),
     ]
 
+    # Chunked, unordered arrival: each key's rows are written out of ts
+    # order and, with 4-record Arrow batches, reach the fold in several
+    # chunks of one micro-batch; the forward folds (cusum, hysteresis,
+    # counter-rate) must still fold in ts order.
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from stdb_spark.streaming.ingest import (
+        streaming_counter_rate,
+        streaming_hysteresis,
+    )
+
+    data = [
+        (sid, m, ((i * 17) % 40) * 10**9, float((7 * i + sid) % 11))
+        for sid, m in ((1, "a"), (2, "b"))
+        for i in range(40)
+    ]
+    cols = "series_id long, metric string, ts long, value double"
+    src2 = str(tmp_path / "unordered")
+    spark.createDataFrame(data, cols).coalesce(1).write.parquet(src2)
+    child = spark.newSession()
+    child.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
+
+    def run(fold, name):
+        q = (
+            fold(child.readStream.schema(cols).parquet(src2))
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        return [tuple(r) for r in child.sql(f"SELECT * FROM {name}").collect()]
+
+    def arrival(key, pdfs, state):
+        chunks = list(pdfs)
+        ts = [int(t) for c in chunks for t in c["ts"]]
+        yield pd.DataFrame(
+            {"metric": [key[0]], "chunks": [len(chunks)], "ordered": [ts == sorted(ts)]}
+        )
+
+    probe = run(
+        lambda sdf: sdf.groupBy("metric").applyInPandasWithState(
+            arrival,
+            outputStructType="metric string, chunks int, ordered boolean",
+            stateStructType="x int",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
+        "arrival_t",
+    )
+    assert sorted(probe) == [("a", 10, False), ("b", 10, False)]
+
+    want_cusum, want_hyst, want_rate = [], [], []
+    for sid, m in ((1, "a"), (2, "b")):
+        rows_m = sorted((ts, v) for s, _, ts, v in data if s == sid)
+        acc, alert, prev = 0.0, 0, None
+        for n, (ts, v) in enumerate(rows_m, 1):
+            acc += v
+            want_cusum.append((sid, m, ts, v, acc, n))
+            new = 1 if v >= 8.0 else (0 if v <= 2.0 else alert)
+            want_hyst.append((m, ts, new, int(new == 1 and alert != 1)))
+            alert = new
+            if prev is not None:
+                inc = v - prev[1] if v >= prev[1] else v
+                want_rate.append((m, ts, inc / ((ts - prev[0]) / 1e9), v < prev[1]))
+            prev = (ts, v)
+    assert sorted(run(streaming_cusum, "cusum_u")) == sorted(want_cusum)
+    hyst = run(lambda s: streaming_hysteresis(s, 8.0, 2.0), "hyst_u")
+    assert sorted(hyst) == sorted(want_hyst)
+    assert sorted(run(streaming_counter_rate, "rate_u")) == sorted(want_rate)
+
 
 def test_session_window_agg_batch_shape(spark):
     """session_window collapses bursts separated by > gap; verified on a
