@@ -27,7 +27,10 @@ aggregates are single Catalyst expressions so map-side partials apply;
 `join` aligns metrics with one conditional max per metric (one hash
 exchange, where a pivot plans two).  A small bound table is read in one
 task, so a query over it plans no exchange and runs as one job; larger
-tables keep the distributed plans (see `_one_task`).
+tables keep the distributed plans (see `_one_task`).  The small tables
+are rebound to one clone of the caller's session with code generation
+off, so a query over them compiles no Java (see `_interpreted`); the
+caller's session and the larger tables keep whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -67,12 +70,27 @@ def _quote(name: str) -> str:
 # aggregating queries' turn with a one-task scan is unmeasured.  On
 # more cores a distributed scan spreads wider, so the turn comes
 # earlier there.
+#
+# Below the cut the one task also runs interpreted (`_interpreted`).
+# Re-checked on a 4.0 MB table (310k samples, 32 day partitions, 4
+# metrics) on the same VM, seven alternated triples per shape, new
+# literals every run, medians in ms (interpreted / one task compiled /
+# distributed):
+#   one-day select 225 / 290 / 397, group-aggregate 255 / 296 / 452;
+#   32-day select 752 / 656 / 835, group-aggregate 1421 / 962 / 988.
+# What turns interpretation is the rows a query reads (one day: ~2.4k
+# per metric; 32 days: 77.5k), which the table's bytes do not tell.
+# A lower cut would not give these tables a compiled one task but the
+# distributed plans, which lost every one-day pair and every select;
+# full scans of 1 and 2 MB one-day tables ran their group-aggregate in
+# 410 / 350 / 558 and 563 / 423 / 587 ms.  Only the 4 MB full-scan
+# group-aggregate lost to the distributed plans, so the cut stays.
 _ONE_TASK_BYTES = 4 << 20
 
 
-def _one_task(df: DataFrame | None) -> DataFrame | None:
-    """``df`` in the regime its size allows: a small table is stored
-    ``coalesce(1)``'d, a larger one as it is.
+def _one_task(df: DataFrame | None) -> bool:
+    """Whether ``df`` is small enough to be stored ``coalesce(1)``'d and
+    run interpreted (see ``_interpreted``).
 
     Coalesce reports SinglePartition, which satisfies every distribution
     an engine query asks for: the clustered one of the aggregates, the
@@ -91,14 +109,42 @@ def _one_task(df: DataFrame | None) -> DataFrame | None:
     partition pruning: an upper bound on what any query's scan reads.
     A threshold <= 0 keeps the distributed plans for every table."""
     if df is None:
-        return None
+        return False
     qe = df._jdf.queryExecution()
     limit = qe.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
     if limit <= 0:
-        return df
+        return False
     leaves = qe.analyzed().collectLeaves()
     size = sum(int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size()))
-    return df.coalesce(1) if size <= min(limit, _ONE_TASK_BYTES) else df
+    return size <= min(limit, _ONE_TASK_BYTES)
+
+
+def _interpreted(spark: SparkSession) -> SparkSession:
+    """A clone of ``spark`` that generates no Java: no whole-stage
+    codegen, and every projection, predicate and ordering interpreted.
+
+    A one-task query over a narrow range reads a few thousand rows, so
+    compiling its classes (a few per query, new ones for each query's
+    literals) costs more than the code saves; the note on
+    ``_ONE_TASK_BYTES`` gives where that turns.  ``cloneSession`` keeps
+    the confs, temp views and functions set on ``spark`` at runtime,
+    which ``newSession`` drops; ``spark``'s own conf is not touched.
+    ``factoryMode`` is an internal Spark conf: with ``wholeStage`` off
+    alone, expression projections still compile."""
+    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    child.conf.set("spark.sql.codegen.wholeStage", "false")
+    child.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    return child
+
+
+def _rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s plan as a DataFrame of ``session``: it, and every
+    DataFrame derived from it, plans and runs under ``session``'s conf."""
+    jvm = session.sparkContext._jvm
+    jds = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.queryExecution().logical()
+    )
+    return DataFrame(jds, session)
 
 
 def _and_all(conds):
@@ -160,8 +206,15 @@ class Engine:
                 "storage.write_summary (or storage.summary_table)"
             )
         # the one-task choice is made once per bound table, not per
-        # query; a registry derived from the samples inherits theirs
-        samples, events, summaries = (_one_task(t) for t in (samples, events, summaries))
+        # query; a registry derived from the samples inherits theirs.
+        # The small tables move to one interpreted clone of ``spark``,
+        # made only when some table is small.
+        tables = (samples, events, summaries, series)
+        small = [_one_task(t) for t in tables]
+        child = _interpreted(spark) if any(small) else None
+        samples, events, summaries, series = (
+            _rebind(t.coalesce(1), child) if one else t for t, one in zip(tables, small)
+        )
         self.spark = spark
         self.samples = samples
         self.events = events
@@ -184,8 +237,6 @@ class Engine:
         self.ts_slack_ns = ts_slack_ns
         if series is None and samples is not None:
             series = model.series_registry(samples)
-        else:
-            series = _one_task(series)
         self.series = series
         # decimal-backed sum/mean: reproducible independent of partial-agg
         # order (oracle-comparison mode; slower, default off)

@@ -2883,28 +2883,31 @@ def _ts_m4(spark, sf):
     ).orderBy("series", "bk")
 
 
-_q(
-    "ts_m4_downsample",
-    _ts_m4,
-    BASE
-    + f"""
+# first/last from min/max(tu), min/max from min/max(value), and each
+# one's partner column FILTERed to the rows that hold it: the order of
+# the struct min/max(struct_pack(...)) form, ties included, without
+# its per-group struct state
+_M4_SQL = f"""
 , s AS (
-  SELECT 'click user=' || u AS series, tu, value
+  SELECT 'click user=' || u AS series, tu, value, (tu - {JAN01_US}) // {H6_US} AS bk
   FROM base WHERE metric = 'click' AND tu >= {JAN01_US} AND tu < {FEB01_US}
-), b AS (
-  SELECT series, (tu - {JAN01_US}) // {H6_US} AS bk,
-         min(struct_pack(t := tu, v := value)) AS f,
-         max(struct_pack(t := tu, v := value)) AS l,
-         min(struct_pack(v := value, t := tu)) AS mn,
-         max(struct_pack(v := value, t := tu)) AS mx
-  FROM s GROUP BY series, bk
+), w AS (
+  SELECT series, bk, tu, value,
+         min(tu) OVER (PARTITION BY series, bk) AS t_first,
+         max(tu) OVER (PARTITION BY series, bk) AS t_last,
+         min(value) OVER (PARTITION BY series, bk) AS v_min,
+         max(value) OVER (PARTITION BY series, bk) AS v_max
+  FROM s
 )
-SELECT series, bk, f.t AS first_ts, f.v AS first_v,
-       mn.v AS min_v, mn.t AS min_ts, mx.v AS max_v, mx.t AS max_ts,
-       l.t AS last_ts, l.v AS last_v
-FROM b ORDER BY series, bk
-""",
-)
+SELECT series, bk,
+       min(tu) AS first_ts, min(value) FILTER (WHERE tu = t_first) AS first_v,
+       min(value) AS min_v, min(tu) FILTER (WHERE value = v_min) AS min_ts,
+       max(value) AS max_v, max(tu) FILTER (WHERE value = v_max) AS max_ts,
+       max(tu) AS last_ts, max(value) FILTER (WHERE tu = t_last) AS last_v
+FROM w GROUP BY series, bk ORDER BY series, bk
+"""
+
+_q("ts_m4_downsample", _ts_m4, BASE + _M4_SQL)
 
 
 def _ts_events_json(spark, sf):

@@ -151,3 +151,39 @@ GROUP BY metric, u, tu // {D1_US}
     new = _canon(con.sql(base + _STREAM_OHLC_SQL).df())
     assert len(new) == 90
     pd.testing.assert_frame_equal(old, new)
+
+
+def test_m4_oracle_matches_struct_form_on_ties(ties):
+    """ts_m4_downsample's oracle (min/max of tu and of value, each
+    partner FILTERed to the rows that hold it) gives the same rows as
+    the struct min/max form it replaced, on same-ts ties at the bucket
+    edges and equal values at several ts of one bucket."""
+    from stdb_spark.workloads.tssuite import _M4_SQL, H6_US, JAN01_US
+
+    struct_form = f"""
+, s AS (
+  SELECT 'click user=' || u AS series, tu, value
+  FROM base WHERE metric = 'click'
+), b AS (
+  SELECT series, (tu - {JAN01_US}) // {H6_US} AS bk,
+         min(struct_pack(t := tu, v := value)) AS f,
+         max(struct_pack(t := tu, v := value)) AS l,
+         min(struct_pack(v := value, t := tu)) AS mn,
+         max(struct_pack(v := value, t := tu)) AS mx
+  FROM s GROUP BY series, bk
+)
+SELECT series, bk, f.t AS first_ts, f.v AS first_v,
+       mn.v AS min_v, mn.t AS min_ts, mx.v AS max_v, mx.t AS max_ts,
+       l.t AS last_ts, l.v AS last_v
+FROM b
+"""
+    t = ties.selectExpr("tags['tag'] AS u", "ts", "value").toPandas()
+    # one 6 h bucket per hundred ts: the fixture's bucket edges
+    t["tu"] = JAN01_US + t["ts"] * (H6_US // 100)
+    con = duckdb.connect()
+    con.register("t", t)
+    base = "WITH base AS (SELECT 'click' AS metric, u, tu, value FROM t)"
+    old = _canon(con.sql(base + struct_form).df())
+    new = _canon(con.sql(base + _M4_SQL).df())
+    assert len(new) == 90
+    pd.testing.assert_frame_equal(old, new)

@@ -3,10 +3,13 @@
 
 Each assertion pins one scale property from README "Scale design":
 filter/partition pushdown reaches the parquet scan, dimension joins
-broadcast, aggregations keep map-side partials, hot paths stay inside
-whole-stage codegen, and the dedup pipelines don't re-shuffle between
+broadcast, aggregations keep map-side partials, the distributed
+regime's hot paths stay inside whole-stage codegen (one-task Engine
+tables run interpreted), and the dedup pipelines don't re-shuffle between
 repartition and aggregation.
 """
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -112,6 +115,21 @@ def test_join_pivot_forced_range_single_hash_exchange_below_sort(spark):
 
 _SELECT_CLICK = {"select": "click", "range": {"from": 1704412800000000000, "to": 1705276800000000000}}
 
+_CODEGEN_STAGE = re.compile(r"\*\(\d+\) ")
+_HOUR = 3600 * 10**9
+
+
+def _hourly_click(lo: int) -> dict:
+    return {
+        "group-aggregate": {"step": _HOUR, "metric": "click", "func": ["sum", "max"]},
+        "range": {"from": lo, "to": 1705276800000000000},
+    }
+
+
+def _classes_compiled(spark) -> int:
+    jvm = spark.sparkContext._jvm
+    return jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
 
 def test_small_engine_select_sorts_in_one_job(spark):
     """A small result sorts in one task: no range exchange, so no
@@ -144,13 +162,17 @@ def test_forced_range_session_keeps_range_sort(spark):
 
 def test_table_over_one_task_cut_keeps_range_sort(spark, monkeypatch):
     # the one task would scan the whole table: above the cut the scan
-    # stays spread over the range sort's tasks
+    # stays spread over the range sort's tasks, on the caller's session
+    # and compiled
     from stdb_spark import engine
 
     monkeypatch.setattr(engine, "_ONE_TASK_BYTES", 1024)
     eng = engine.Engine(spark, samples=model.events_as_samples(spark, SF, keep_src=True))
-    plan = _plan(eng.query(_SELECT_CLICK))
-    assert "rangepartitioning" in plan, plan
+    df = eng.query(_SELECT_CLICK)
+    assert "rangepartitioning" in _plan(df), _plan(df)
+    assert df.sparkSession is spark
+    assert df.collect()
+    assert _CODEGEN_STAGE.search(_plan(df)), _plan(df)
 
 
 def test_minhash_agg_reuses_repartition_exchange(spark):
@@ -172,14 +194,63 @@ def test_events_regex_pushed_into_scan_stage(spark):
 
 
 def test_whole_stage_codegen_covers_hot_path(spark):
-    # AQE prints `isFinalPlan=false` without codegen stage markers until
-    # execution; disable it for this one plan to see the `*(n)` spans
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        plan = _plan(QUERIES["ts_group_aggregate"](spark, SF))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    # the distributed regime (tables above the one-task cut, forced by a
+    # threshold <= 0) keeps whole-stage codegen; a one-task table runs
+    # interpreted (test_one_task_engine_compiles_no_class).  AQE prints
+    # `isFinalPlan=false` without codegen stage markers until execution;
+    # disable it for this one plan to see the `*(n)` spans
+    forced = spark.newSession()
+    forced.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    forced.conf.set("spark.sql.adaptive.enabled", "false")
+    plan = _plan(QUERIES["ts_group_aggregate"](forced, SF))
     assert "*(1)" in plan, plan
+
+
+def test_one_task_engine_compiles_no_class(spark):
+    """A query over a one-task table runs interpreted: no whole-stage
+    span in its executed plan, and a second query of the same shape
+    with new literals (which a compiled plan inlines) compiles no class.
+    ``spark.sql.codegen.factoryMode`` is an internal conf; this is the
+    test that catches a Spark upgrade that drops it."""
+    from stdb_spark.engine import Engine
+
+    eng = Engine(spark, samples=model.events_as_samples(spark, SF, keep_src=True))
+    first = eng.query(_hourly_click(1704412800000000000))
+    assert first.collect()
+    assert not _CODEGEN_STAGE.search(_plan(first)), _plan(first)
+    before = _classes_compiled(spark)
+    assert eng.query(_hourly_click(1704412800000000000 + _HOUR)).collect()
+    assert _classes_compiled(spark) == before
+
+
+def test_engine_leaves_caller_codegen_confs(spark):
+    from stdb_spark.engine import Engine
+
+    keys = ("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+
+    def codegen_confs():
+        confs = {k: v for k, v in spark.conf.getAll.items() if k.startswith("spark.sql.codegen.")}
+        return confs, [spark.conf.get(k) for k in keys]
+
+    before = codegen_confs()
+    eng = Engine(spark, samples=model.events_as_samples(spark, SF, keep_src=True))
+    eng.query(_hourly_click(1704412800000000000)).collect()
+    eng.query(_SELECT_CLICK).collect()
+    assert codegen_confs() == before
+
+
+def test_one_task_queries_keep_caller_runtime_confs(spark):
+    # the interpreted session is a clone of the caller: a conf the
+    # caller set at runtime, before the Engine was built, holds there
+    from stdb_spark.engine import Engine
+
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "7")
+    eng = Engine(caller, samples=model.events_as_samples(caller, SF, keep_src=True))
+    session = eng.query(_SELECT_CLICK).sparkSession
+    assert session is not caller
+    assert session.conf.get("spark.sql.shuffle.partitions") == "7"
+    assert session.conf.get("spark.sql.codegen.wholeStage") == "false"
 
 
 def test_prune_range_partition_filters(spark, tmp_path):

@@ -8,7 +8,10 @@ noop-sink run).  Usage:
 For each query prints: median seconds over N timed runs, number of
 Spark jobs the action launched, total stages and tasks — the
 fixed-overhead fingerprint that dominates at test scale and the
-exchange-count proxy that dominates at 100 TB.
+exchange-count proxy that dominates at 100 TB — and the Java classes
+the N timed runs compiled (the CodegenMetrics compilation count; a
+class whose source was compiled before, as in a warm pass with the
+same literals, is a cache hit and is not counted).
 """
 
 from __future__ import annotations
@@ -37,6 +40,7 @@ def main() -> None:
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
     tracker = sc.statusTracker()
+    compiled = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
     out = {}
     for name in args.names:
@@ -49,6 +53,7 @@ def main() -> None:
                     pass
         times = []
         jobs = stages = tasks = 0
+        classes = compiled.getCount()
         for r in range(args.runs):
             group = f"prof_{name}_{r}"
             sc.setJobGroup(group, name)
@@ -68,6 +73,7 @@ def main() -> None:
                         si = tracker.getStageInfo(sid)
                         if si is not None:
                             tasks += si.numTasks
+        classes = compiled.getCount() - classes
         med = sorted(times)[len(times) // 2]
         out[name] = {
             "median_s": round(med, 3),
@@ -75,10 +81,11 @@ def main() -> None:
             "jobs": jobs,
             "stages": stages,
             "tasks": tasks,
+            "classes": classes,
         }
         print(
             f"{name}: median {med:.3f}s runs={[round(t,2) for t in times]} "
-            f"jobs={jobs} stages={stages} tasks={tasks}",
+            f"jobs={jobs} stages={stages} tasks={tasks} classes={classes}",
             file=sys.stderr,
             flush=True,
         )
