@@ -5,7 +5,9 @@ ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Each query is materialized with a noop sink (full execution, no driver
-collection).  A warm-up run of a trivial action initializes the JVM/
+collection), warmed and timed by stdb_spark.profile, whose per-query
+records (build / plan / execute ms and the Spark counters) go into the
+detail file.  A warm-up run of a trivial action initializes the JVM/
 session so timings measure query execution, not startup.
 """
 
@@ -281,120 +283,48 @@ HEADLINE = [
 ]
 
 
-def _group_task_time_ms(sc, store, empty_list, group: str) -> tuple[int, int]:
-    """(executorRunTime ms, executorCpuTime ns) summed over every stage
-    of every job in ``group`` — read from the in-process AppStatusStore
-    (works with spark.ui.enabled=false; same data the REST status API
-    serves).  Read AFTER the wall timing is recorded, so the py4j
-    traversal never pollutes the measured seconds.  VERDICT r11
-    directive #2: the 8-core/32-core wall ratios at sf0.1 sit on a
-    0.3-1 s driver/AQE floor and look flat; recording executor task
-    time alongside wall time makes the scaling signal interpretable
-    (task time tracks compute and is ~invariant across core counts —
-    a query whose task_time >> wall spread IS using the cores)."""
-    run_ms = 0
-    cpu_ns = 0
-    try:
-        for jid in sc.statusTracker().getJobIdsForGroup(group):
-            jd = store.job(jid)
-            sids = jd.stageIds()
-            for i in range(sids.size()):
-                datas = store.stageData(sids.apply(i), False, empty_list, False, None)
-                for k in range(datas.size()):
-                    sdd = datas.apply(k)
-                    run_ms += sdd.executorRunTime()
-                    cpu_ns += sdd.executorCpuTime()
-    except Exception:
-        return (0, 0)
-    return (run_ms, cpu_ns)
-
-
 def main() -> None:
-    from stdb_spark import model as _m
+    import shutil
+
+    from stdb_spark import model
+    from stdb_spark.profile import Profiler, profile_entries
     from stdb_spark.session import get_spark
+    from stdb_spark.sources import storage
 
-    sf_dir = _m.default_sf_dir()
-    from stdb_spark.workloads import QUERIES
-
+    sf_dir = model.default_sf_dir()
     spark = get_spark("stdb-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # warm up the session: JVM/Arrow startup, parquet footers, and the
-    # whole-stage-codegen compile for each headline plan shape (run at
-    # the smallest SF so compilation cost doesn't pollute the timings;
-    # generated-code caching is keyed by plan shape, not data size)
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir) and os.path.abspath(warm_dir) != os.path.abspath(sf_dir):
-        for name in HEADLINE:
-            try:
-                QUERIES[name](spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:
-                pass
-    # One warm pass at the TARGET sf: several queries read write-time
-    # artifacts (partitioned layout, summary table, presigned LSH/SimHash
-    # signatures, IVF centroids) that are built once per dataset and
-    # cached under .cache/.  Building them is ingest-side ETL, not query
-    # latency — the timed pass below measures the steady state a
-    # deployed engine serves from.
-    for name in HEADLINE:
-        try:
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception:
-            pass
+    # warm up the session (JVM/Arrow startup, parquet footers); then
+    # profile_entries warms every entry at sf0.001 (the whole-stage-codegen
+    # compile per plan shape, cheaply: generated-code caching is keyed by
+    # plan shape, not data size) and at the TARGET sf (the write-time
+    # artifacts several queries read -- partitioned layout, summary table,
+    # presigned LSH/SimHash signatures, IVF centroids -- built once per
+    # dataset under .cache/; that is ingest-side ETL, not query latency),
+    # so the timed pass measures the steady state a deployed engine serves
+    for table in ("region", "events", "lineitem"):
+        spark.read.parquet(f"{sf_dir}/{table}.parquet").count()
 
-    # Additions-only instrumentation (VERDICT r11 directives #2, #7):
-    # - STDB_SPARK_BENCH_RUNS=N (default 1 — the driver contract is
-    #   unchanged) times each query N times and reports the MEDIAN;
-    #   every run is recorded in the detail file.  Builder A/Bs use
-    #   N>=3 so single-cold-run drift stops adjudicating rounds.
-    # - per-query executor task time (run + cpu) from the in-process
-    #   AppStatusStore, recorded next to wall time so the core-scaling
-    #   contract is demonstrable (at sf0.1 wall time sits on a fixed
-    #   driver/AQE floor; task time is the compute signal).
+    # STDB_SPARK_BENCH_RUNS=N (default 1) times each query N times and
+    # reports the MEDIAN; every run's wall is in the detail file.  The
+    # query's record is its last run's profile (build / plan / execute ms,
+    # jobs, stages, tasks, executor run and CPU time, scan, shuffle, spill,
+    # Python ms, classes compiled), read after the wall was recorded.
     bench_runs = max(1, int(os.environ.get("STDB_SPARK_BENCH_RUNS", "1")))
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    empty_list = sc._jvm.java.util.ArrayList()
     timings: dict[str, float] = {}
     runs_sec: dict[str, list[float]] = {}
-    task_time: dict[str, float] = {}
-    cpu_time: dict[str, float] = {}
+    records: dict[str, dict] = {}
     failed: list[str] = []
-    for name in HEADLINE:
-        fn = QUERIES[name]
-        runs: list[float] = []
-        broke = False
-        for r in range(bench_runs):
-            group = f"bench:{name}:{r}"
-            sc.setJobGroup(group, name)
-            t0 = time.perf_counter()
-            try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            except Exception as exc:  # noqa: BLE001 — one broken query must
-                # not abort the whole benchmark after minutes of warm-up
-                # (and unlike the warm passes, the failure is REPORTED)
-                failed.append(name)
-                print(f"  {name}: FAILED {exc}", file=sys.stderr, flush=True)
-                broke = True
-                break
-            finally:
-                runs.append(time.perf_counter() - t0)
-                sc.setJobGroup(None, None)
-        if broke:
+    for name, res in profile_entries(spark, HEADLINE, sf_dir, bench_runs):
+        if "error" in res:
+            # one broken query must not abort the whole benchmark after
+            # minutes of warm-up, and unlike the warm passes it is REPORTED
+            failed.append(name)
+            print(f"  {name}: FAILED {res['error']}", file=sys.stderr, flush=True)
             continue
-        run_ms, cpu_ns = _group_task_time_ms(
-            sc, store, empty_list, f"bench:{name}:{bench_runs - 1}"
-        )
-        task_time[name] = round(run_ms / 1e3, 3)
-        cpu_time[name] = round(cpu_ns / 1e9, 3)
-        timings[name] = round(sorted(runs)[len(runs) // 2], 3)
-        runs_sec[name] = [round(t, 3) for t in runs]
+        timings[name] = res["median_s"]
+        runs_sec[name] = [round(r["wall_ms"] / 1e3, 3) for r in res["records"]]
+        records[name] = res["records"][-1]
         print(f"  {name}: {timings[name]}s", file=sys.stderr, flush=True)
 
     # Ingest throughput: time a full write of the events table into the
@@ -402,28 +332,19 @@ def main() -> None:
     # (series_id, ts)) — the reference's headline metric is write rate,
     # so the bench records the Spark-side equivalent.  Repo-local target
     # dir, removed afterwards.
-    import shutil
-
     ingest_dir = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), ".cache", "_bench_ingest"
     )
     shutil.rmtree(ingest_dir, ignore_errors=True)
-    from stdb_spark import model as _model
-    from stdb_spark.sources import storage as _storage
-
-    sc.setJobGroup("bench:ingest_layout_write:0", "ingest_layout_write")
-    t0 = time.perf_counter()
-    _storage.write_samples(_model.events_as_samples(spark, sf_dir), ingest_dir)
-    timings["ingest_layout_write"] = round(time.perf_counter() - t0, 3)
-    sc.setJobGroup(None, None)
-    run_ms, cpu_ns = _group_task_time_ms(
-        sc, store, empty_list, "bench:ingest_layout_write:0"
+    records["ingest_layout_write"] = Profiler(spark).run(
+        lambda: storage.write_samples(model.events_as_samples(spark, sf_dir), ingest_dir)
     )
-    task_time["ingest_layout_write"] = round(run_ms / 1e3, 3)
-    cpu_time["ingest_layout_write"] = round(cpu_ns / 1e9, 3)
+    timings["ingest_layout_write"] = round(records["ingest_layout_write"]["wall_ms"] / 1e3, 3)
     print(f"  ingest_layout_write: {timings['ingest_layout_write']}s", file=sys.stderr, flush=True)
     shutil.rmtree(ingest_dir, ignore_errors=True)
 
+    task_time = {n: round(r["executor_run_ms"] / 1e3, 3) for n, r in records.items()}
+    cpu_time = {n: round(r["executor_cpu_ns"] / 1e9, 3) for n, r in records.items()}
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # The driver captures only a bounded tail of stdout, so the final
@@ -450,13 +371,13 @@ def main() -> None:
         "task_time_total_sec": task_total,
         "bench_runs": bench_runs,
         "runs_sec": runs_sec,
+        "records": records,
     }
     print(json.dumps(detail), file=sys.stderr, flush=True)
     # BENCH_DETAIL.json is the DRIVER's record (it runs bench.py
-    # per-round); builder-local sweeps must redirect via this env var
-    # (tools/bench_heap_ab.py and BENCH_NOTES use BENCH_LOCAL_DETAIL.json)
-    # so a later driver run can't overwrite the builder's evidence chain
-    # (VERDICT r9 "what's wrong" #2).
+    # per-round); local sweeps must redirect via this env var (BENCH_NOTES
+    # uses BENCH_LOCAL_DETAIL.json) so a later driver run can't overwrite
+    # the local evidence chain (VERDICT r9 "what's wrong" #2).
     detail_path = os.environ.get("STDB_SPARK_BENCH_DETAIL") or os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )

@@ -971,7 +971,7 @@ def paragraph_dedup(
     of each document's surviving text is shuffle-pinned — the assembled
     table is corpus-proportional and its post-aggregate static estimate
     is fiction, so a statically chosen broadcast of it dies at scale
-    (tools/broadcast_audit.py).  Returns ONE row per input document (duplicates
+    (tools/plans.py broadcast).  Returns ONE row per input document (duplicates
     removed): a doc whose every paragraph deduplicated away comes back
     with empty text rather than vanishing — downstream metadata joins
     must not silently lose documents.
@@ -986,7 +986,7 @@ def paragraph_dedup(
     # groupBy + join-back: one exchange on the paragraph key instead of
     # two, and no join whose fictional post-aggregate estimate could
     # statically broadcast the corpus-proportional keeper table
-    # (tools/broadcast_audit.py).  Hot boilerplate paragraphs shuffle
+    # (tools/plans.py broadcast).  Hot boilerplate paragraphs shuffle
     # identically under both shapes (the probe side of the join had no
     # partial aggregation either).
     from pyspark.sql import Window as W
@@ -1120,7 +1120,7 @@ def dup_span_profile(
     window, not a groupBy + join-back: one exchange on the gram key
     instead of two, and no join whose fictional post-aggregate estimate
     could statically broadcast a corpus-proportional count table
-    (tools/broadcast_audit.py; benched ~25% faster than the
+    (tools/plans.py broadcast; benched ~25% faster than the
     shuffle-pinned join at sf0.1, bit-identical output).
     """
     from pyspark.sql import Window as W
@@ -1224,7 +1224,7 @@ def dup_span_scrub(
     # gram-PARTITIONED window rather than a groupBy + join-back: one
     # exchange on the gram key instead of two, and no join whose
     # fictional post-aggregate estimate could statically broadcast the
-    # corpus-proportional firsts table (tools/broadcast_audit.py).
+    # corpus-proportional firsts table (tools/plans.py broadcast).
     # The remaining lookups below (covered positions, per-doc rebuild)
     # are shuffle-pinned for the same estimate reason.
     from pyspark.sql import Window as W

@@ -122,7 +122,7 @@ def ngram_contamination(
     screens): the join then shuffles both posting sides on the gram
     hash — the explicit hint would otherwise FORCE a broadcast Spark
     can never demote, which is a driver OOM at scale (the
-    tools/broadcast_audit.py failure mode)."""
+    tools/plans.py broadcast failure mode)."""
     from stdb_spark.functions.dedup import normalized_text
 
     def postings(df: DataFrame, k: str, out: str) -> DataFrame:

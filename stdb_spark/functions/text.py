@@ -344,7 +344,7 @@ def bigram_logprob(
     # unigram_logprob's broadcast): left unpinned, Catalyst's static
     # estimate picked the exploded DOC side as the broadcast build —
     # corpus x tokens rows, a guaranteed driver OOM at scale (caught by
-    # tools/broadcast_audit.py at the 100x replica)
+    # tools/plans.py broadcast at the 100x replica)
     return (
         doc_bg.join(F.broadcast(model_tbl), "bg")
         .groupBy(key)
@@ -389,7 +389,7 @@ def importance_logratio(
     # counts is the vocabulary table — the build side by contract (the
     # unigram_logprob broadcast shape).  Unpinned, Catalyst's static
     # estimate broadcast the exploded TOKEN STREAM instead (corpus x
-    # tokens rows; tools/broadcast_audit.py, 100x replica).
+    # tokens rows; tools/plans.py broadcast, 100x replica).
     return (
         toks.join(F.broadcast(counts), "tok")
         .groupBy(key)

@@ -40,9 +40,11 @@ TESTDATA_TABLES = (
 
 def tags_suffix_col(tags="tags"):
     """Sorted ``k1=v1 k2=v2`` string for the tags map (canonical-form
-    parity with SeriesParser, stdb/index/seriesparser.h:39-53)."""
+    parity with SeriesParser, stdb/index/seriesparser.h:39-53).  Map
+    keys are non-null and unique, so ``sort_array`` orders them as
+    ``array_sort`` would, without planning a lambda comparator."""
     kv = F.transform(
-        F.array_sort(F.map_keys(F.col(tags))),
+        F.sort_array(F.map_keys(F.col(tags))),
         lambda k: F.concat(k, F.lit("="), F.col(tags)[k]),
     )
     return F.array_join(kv, " ")

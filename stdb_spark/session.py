@@ -66,8 +66,8 @@ def get_spark(
         # local[N] runs all N task threads inside the driver JVM, so
         # this is the whole executor heap.  12g is the steady-state
         # sweet spot at the bench scales: adjudicated in r10 with full
-        # driver-shape A/B medians (tools/bench_heap_ab.py, BENCH_NOTES
-        # "r10: heap A/B" — 12g ties or beats 8g on 13/15 of the worst
+        # driver-shape A/B medians (full bench.py runs alternating the
+        # heap, BENCH_NOTES "r10: heap A/B" — 12g ties or beats 8g on 13/15 of the worst
         # r9 drifters, median ratio 0.95, full-suite medians 245 vs
         # 264 s; the r9 suite-wide driver drift was box-state variance,
         # +-15% on identical code).  The 100x rehearsal exports

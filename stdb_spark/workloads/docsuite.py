@@ -520,7 +520,7 @@ def _neardup_survivors(spark, sf):
     )
     # the drop list is dup-count-proportional — shuffle-pinned so its
     # fictional post-distinct estimate can't pick a broadcast anti-join
-    # that OOMs at scale (tools/broadcast_audit.py)
+    # that OOMs at scale (tools/plans.py broadcast)
     drop = verified.select(F.col("b").alias("doc_id")).distinct()
     return docs.join(drop.hint("shuffle_hash"), "doc_id", "left_anti").select(
         "doc_id", "source"
@@ -2037,7 +2037,7 @@ WHERE source <> 'src0'
 # static estimate is fiction, so left alone Catalyst broadcasts the
 # candidate list — fine at this sf, a driver OOM at billions of
 # candidates (the embedding sides are plain narrow scans whose honest
-# estimates flip to shuffle on their own; tools/broadcast_audit.py).
+# estimates flip to shuffle on their own; tools/plans.py broadcast).
 def _hybrid_neardup(spark, sf):
     docs = model.load_table(spark, sf, "documents")
     emb = model.load_table(spark, sf, "embeddings")
@@ -3249,7 +3249,7 @@ def _doc_curation_funnel(spark, sf):
     # pred/qual are narrow map-side projections (honest estimates);
     # keeper carries a corpus-wide window whose static estimate is
     # fiction — shuffle-pin it so Catalyst can't broadcast a per-doc
-    # table (tools/broadcast_audit.py)
+    # table (tools/plans.py broadcast)
     j = docs.select("doc_id").join(pred, "doc_id").join(qual, "doc_id").join(
         keeper.hint("shuffle_hash"), "doc_id"
     )
@@ -4407,7 +4407,7 @@ def _bloom_incremental(spark, sf):
     # the exact digest set is prior-corpus-proportional — shuffle-pin
     # the verify join (its post-distinct estimate is fiction; a
     # broadcast of the full corpus digest set OOMs at scale —
-    # tools/broadcast_audit.py).  The BLOOM side stays the broadcast:
+    # tools/plans.py broadcast).  The BLOOM side stays the broadcast:
     # that is the whole point of the sidecar (32 Kbit, size-dispatched
     # in bloom_probe).
     return (

@@ -2446,7 +2446,7 @@ _LPA_SUPPORT = 2
 
 def copurchase_edges(spark, sf):
     """The support-capped part co-purchase edge list both graph entries
-    (LPA communities, triangle census) and tools/gen_plans.py share:
+    (LPA communities, triangle census) and tools/plans.py md share:
     (a, b) part pairs with a < b bought together in >= _LPA_SUPPORT
     distinct orders."""
     # per-order part SET, pairs generated MAP-SIDE from the sorted

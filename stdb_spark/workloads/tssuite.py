@@ -1009,6 +1009,26 @@ GROUP BY u, 2 HAVING max(value) > 19.0
 """,
 )
 
+# backward buckets end at FEB01; first is the largest value at a
+# bucket's last tu and last the smallest at its first tu: the struct
+# max/min(struct_pack(t := tu, v := value)) order, written as FILTERed
+# plain aggregates (the ts_m4_downsample form).  Follows BASE; tests pin
+# it to the struct form on ties.
+_GAB_SQL = f"""
+, w AS (
+  SELECT u, tu, value, ({FEB01_US} - tu) // {H6_US} AS bk,
+         min(tu) OVER (PARTITION BY u, ({FEB01_US} - tu) // {H6_US}) AS t_first,
+         max(tu) OVER (PARTITION BY u, ({FEB01_US} - tu) // {H6_US}) AS t_last
+  FROM base WHERE metric = 'click' AND tu > {JAN01_US} AND tu <= {FEB01_US}
+)
+SELECT 'click:count|click:first|click:last user=' || u AS series,
+  {FEB01_US} - {H6_US} * bk AS ts,
+  CAST(count(value) AS DOUBLE) AS "count",
+  max(value) FILTER (WHERE tu = t_last) AS "first",
+  min(value) FILTER (WHERE tu = t_first) AS "last"
+FROM w GROUP BY u, bk
+"""
+
 _q(
     "ts_group_aggregate_backward",
     lambda spark, sf: _us(
@@ -1019,16 +1039,7 @@ _q(
             }
         )
     ),
-    BASE
-    + f"""
-SELECT 'click:count|click:first|click:last user=' || u AS series,
-  {FEB01_US} - {H6_US} * (({FEB01_US} - tu) // {H6_US}) AS ts,
-  CAST(count(value) AS DOUBLE) AS "count",
-  (max(struct_pack(t := tu, v := value))).v AS "first",
-  (min(struct_pack(t := tu, v := value))).v AS "last"
-FROM base WHERE metric = 'click' AND tu > {JAN01_US} AND tu <= {FEB01_US}
-GROUP BY u, 2
-""",
+    BASE + _GAB_SQL,
 )
 
 # --------------------------------------------------------------------- join
@@ -2548,17 +2559,27 @@ def _gapfill(spark, sf, how):
     return out.select("series", F.expr("ts div 1000").alias("ts"), "value")
 
 
+# each bucket's first and last (tu, value) anchors, rebuilt as structs
+# after grouping for the fill windows: min/max(tu) and the partner value
+# FILTERed to the rows at that tu give the struct min/max order, ties
+# included, without its per-group struct state.  Tests pin it to the
+# struct form on ties.
 _GAPFILL_PRE = (
     BASE
     + f"""
 , s AS (
   SELECT 'click user=' || u AS series, tu, value
   FROM base WHERE metric = 'click' AND tu >= {JAN01_US} AND tu < {FEB01_US}
+), w AS (
+  SELECT series, (tu - {JAN01_US}) // {H6_US} AS bk, tu, value,
+         min(tu) OVER (PARTITION BY series, (tu - {JAN01_US}) // {H6_US}) AS t_first,
+         max(tu) OVER (PARTITION BY series, (tu - {JAN01_US}) // {H6_US}) AS t_last
+  FROM s
 ), b AS (
-  SELECT series, (tu - {JAN01_US}) // {H6_US} AS bk,
-         min(struct_pack(t := tu, v := value)) AS firstv,
-         max(struct_pack(t := tu, v := value)) AS lastv
-  FROM s GROUP BY series, (tu - {JAN01_US}) // {H6_US}
+  SELECT series, bk,
+         struct_pack(t := min(tu), v := min(value) FILTER (WHERE tu = t_first)) AS firstv,
+         struct_pack(t := max(tu), v := max(value) FILTER (WHERE tu = t_last)) AS lastv
+  FROM w GROUP BY series, bk
 ), grid AS (
   SELECT series, g.bk
   FROM (SELECT DISTINCT series FROM s)

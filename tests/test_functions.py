@@ -1728,9 +1728,9 @@ def test_plan_audit_counts_hof_aggregate_not_operator_names():
     import os
 
     path = os.path.join(
-        os.path.dirname(__file__), "..", "tools", "plan_audit.py"
+        os.path.dirname(__file__), "..", "tools", "plans.py"
     )
-    spec = importlib.util.spec_from_file_location("_plan_audit", path)
+    spec = importlib.util.spec_from_file_location("_plans", path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     plan = (

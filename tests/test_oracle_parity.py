@@ -187,3 +187,74 @@ FROM b
     new = _canon(con.sql(base + _M4_SQL).df())
     assert len(new) == 90
     pd.testing.assert_frame_equal(old, new)
+
+
+def _ties_6h_buckets(ties):
+    """The ties fixture as the oracles' ``base``: metric click, one 6 h
+    bucket per hundred ts, so the fixture's bucket edges become 6 h
+    bucket edges."""
+    from stdb_spark.workloads.tssuite import H6_US, JAN01_US
+
+    t = ties.selectExpr("tags['tag'] AS u", "ts", "value").toPandas()
+    t["tu"] = JAN01_US + t["ts"] * (H6_US // 100)
+    con = duckdb.connect()
+    con.register("t", t)
+    return con, "WITH base AS (SELECT 'click' AS metric, u, tu, value FROM t)"
+
+
+@pytest.mark.parametrize("name", ["ts_gapfill_locf", "ts_gapfill_interpolate"])
+def test_gapfill_oracle_matches_struct_form_on_ties(ties, name):
+    """The gap-fill prelude (first/last tu per bucket + FILTERed
+    min/max, rebuilt as structs) gives the same fill as the struct
+    min/max prelude it replaced, on same-ts ties at the bucket edges."""
+    from stdb_spark import workloads
+    from stdb_spark.workloads.tssuite import _GAPFILL_PRE, BASE, FEB01_US, H6_US, JAN01_US
+
+    struct_pre = f"""
+, s AS (
+  SELECT 'click user=' || u AS series, tu, value
+  FROM base WHERE metric = 'click' AND tu >= {JAN01_US} AND tu < {FEB01_US}
+), b AS (
+  SELECT series, (tu - {JAN01_US}) // {H6_US} AS bk,
+         min(struct_pack(t := tu, v := value)) AS firstv,
+         max(struct_pack(t := tu, v := value)) AS lastv
+  FROM s GROUP BY series, (tu - {JAN01_US}) // {H6_US}
+), grid AS (
+  SELECT series, g.bk
+  FROM (SELECT DISTINCT series FROM s)
+  CROSS JOIN (SELECT unnest(range(0, {(FEB01_US - JAN01_US) // H6_US})) AS bk) g
+), j AS (
+  SELECT grid.series, grid.bk, b.firstv, b.lastv
+  FROM grid LEFT JOIN b ON grid.series = b.series AND grid.bk = b.bk
+)
+"""
+    con, base = _ties_6h_buckets(ties)
+    sql = workloads.ORACLES[name]
+    tail = sql[len(_GAPFILL_PRE):]
+    old = _canon(con.sql(base + struct_pre + tail).df())
+    new = _canon(con.sql(sql.replace(BASE, base)).df())
+    assert len(new) == 10 * (FEB01_US - JAN01_US) // H6_US
+    assert new["value"].notna().sum() >= 90
+    pd.testing.assert_frame_equal(old, new)
+
+
+def test_group_aggregate_backward_oracle_matches_struct_form_on_ties(ties):
+    """ts_group_aggregate_backward's oracle (first/last tu per backward
+    bucket + FILTERed max/min) gives the same rows as the struct
+    max/min form it replaced, on same-ts ties at the bucket edges."""
+    from stdb_spark.workloads.tssuite import _GAB_SQL, FEB01_US, H6_US, JAN01_US
+
+    struct_form = f"""
+SELECT 'click:count|click:first|click:last user=' || u AS series,
+  {FEB01_US} - {H6_US} * (({FEB01_US} - tu) // {H6_US}) AS ts,
+  CAST(count(value) AS DOUBLE) AS "count",
+  (max(struct_pack(t := tu, v := value))).v AS "first",
+  (min(struct_pack(t := tu, v := value))).v AS "last"
+FROM base WHERE metric = 'click' AND tu > {JAN01_US} AND tu <= {FEB01_US}
+GROUP BY u, 2
+"""
+    con, base = _ties_6h_buckets(ties)
+    old = _canon(con.sql(base + struct_form).df())
+    new = _canon(con.sql(base + _GAB_SQL).df())
+    assert len(new) >= 90
+    pd.testing.assert_frame_equal(old, new)

@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stdb_spark import model
+from stdb_spark.profile import Profiler
 from stdb_spark.workloads import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -126,11 +127,6 @@ def _hourly_click(lo: int) -> dict:
     }
 
 
-def _classes_compiled(spark) -> int:
-    jvm = spark.sparkContext._jvm
-    return jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
-
-
 def test_small_engine_select_sorts_in_one_job(spark):
     """A small result sorts in one task: no range exchange, so no
     RangePartitioner sample job re-running the scan — one job total."""
@@ -139,14 +135,10 @@ def test_small_engine_select_sorts_in_one_job(spark):
     eng = Engine(spark, samples=model.events_as_samples(spark, SF, keep_src=True))
     df = eng.query(_SELECT_CLICK)
     assert "rangepartitioning" not in _plan(df), _plan(df)
-    sc = spark.sparkContext
-    sc.setJobGroup("plan-pin-small-select", "small select", False)
-    try:
-        rows = df.collect()
-    finally:
-        sc.setJobGroup(None, None)
+    rows = []
+    rec = Profiler(spark).run(lambda: rows.extend(df.collect()))
     assert rows
-    assert len(sc.statusTracker().getJobIdsForGroup("plan-pin-small-select")) == 1
+    assert rec["jobs"] == 1
 
 
 def test_forced_range_session_keeps_range_sort(spark):
@@ -218,9 +210,12 @@ def test_one_task_engine_compiles_no_class(spark):
     first = eng.query(_hourly_click(1704412800000000000))
     assert first.collect()
     assert not _CODEGEN_STAGE.search(_plan(first)), _plan(first)
-    before = _classes_compiled(spark)
-    assert eng.query(_hourly_click(1704412800000000000 + _HOUR)).collect()
-    assert _classes_compiled(spark) == before
+    rows = []
+    rec = Profiler(spark).run(
+        lambda: rows.extend(eng.query(_hourly_click(1704412800000000000 + _HOUR)).collect())
+    )
+    assert rows
+    assert rec["classes"] == 0
 
 
 def test_engine_leaves_caller_codegen_confs(spark):
@@ -1030,7 +1025,7 @@ def test_logprob_model_is_the_broadcast_build_side(spark):
     """bigram_logprob / importance_logratio broadcast their LM table by
     contract (model-sized).  Left unpinned, Catalyst's static estimate
     chose the exploded DOC/TOKEN side as the build — corpus x tokens
-    rows, an OOM at scale (tools/broadcast_audit.py, 100x replica).
+    rows, an OOM at scale (tools/plans.py broadcast, 100x replica).
     The explicit model broadcast must keep exactly one broadcast join
     whose build side aggregates the model, with the exploded corpus
     side never broadcast."""

@@ -10,6 +10,7 @@ import pytest
 
 from stdb_spark import model
 from stdb_spark.engine import Engine
+from stdb_spark.profile import Profiler
 from stdb_spark.sources import storage
 from tests.conftest import make_events, make_samples
 
@@ -175,15 +176,10 @@ def test_one_task_engine_runs_one_job(spark, engines, method, name, q):
     """Over small tables a query plans no exchange: one job, whatever
     its kind.  The forced engine still shuffles the aggregating kinds."""
     one_task, ranged = engines
-    sc = spark.sparkContext
-    group = f"one-task-{name}"
-    sc.setJobGroup(group, name, False)
-    try:
-        rows = getattr(one_task, method)(q).collect()
-    finally:
-        sc.setJobGroup(None, None)
+    rows = []
+    rec = Profiler(spark).run(lambda: rows.extend(getattr(one_task, method)(q).collect()))
     assert rows, name
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, name
+    assert rec["jobs"] == 1, name
     if method == "suggest" or AGGREGATING & q.keys():
         plan = _plan(getattr(ranged, method)(q))
         assert "Exchange hashpartitioning" in plan, plan

@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from stdb_spark.profile import Profiler
 from stdb_spark.sources import storage
 from tests.conftest import make_samples
 
@@ -144,27 +145,25 @@ def test_replay_stream_lists_batch_files_on_driver(spark, tmp_path):
         "spark.sql.streaming.checkpointFileManagerClass",
     )
     confs = {k: spark.conf.get(k, None) for k in keys}
-    jsc = spark.sparkContext._jsc.sc()
-    store = jsc.statusStore()
-
-    def jobs():
-        listed = store.jobsList(None)
-        return [listed.apply(i) for i in range(listed.size())]
-
-    first = max((j.jobId() for j in jobs()), default=-1)
+    prof = Profiler(spark)
     cols = ("series_id", "metric", "ts", "value")
     jvm = spark._jvm
     recording = jvm.jdk.jfr.Recording()
     recording.enable("jdk.ProcessStart")
     recording.start()
     try:
-        sink = tssuite._replay_stream(
-            spark,
-            path,
-            lambda sdf: sdf.select(*cols),
-            "listing_pin_sink",
-            "append",
-            state_width=4,
+        sinks = []
+        rec = prof.run(
+            lambda: sinks.append(
+                tssuite._replay_stream(
+                    spark,
+                    path,
+                    lambda sdf: sdf.select(*cols),
+                    "listing_pin_sink",
+                    "append",
+                    state_width=4,
+                )
+            )
         )
         # positive control: a process the JVM itself starts inside the
         # recording must show up in it
@@ -181,12 +180,7 @@ def test_replay_stream_lists_batch_files_on_driver(spark, tmp_path):
     ]
     assert "true" in forked, collections.Counter(forked)
     assert "readlink" not in forked, collections.Counter(forked)
-    jsc.listenerBus().waitUntilEmpty()
-    descriptions = [
-        j.description().get()
-        for j in jobs()
-        if j.jobId() > first and j.description().isDefined()
-    ]
+    descriptions = prof.descriptions(rec)
     assert not [d for d in descriptions if "Listing leaf files" in d]
     batches = {
         b
@@ -196,7 +190,7 @@ def test_replay_stream_lists_batch_files_on_driver(spark, tmp_path):
     }
     assert batches == {"0", "1"}, descriptions
     assert {k: spark.conf.get(k, None) for k in keys} == confs
-    got = collections.Counter(map(tuple, sink.collect()))
+    got = collections.Counter(map(tuple, sinks[0].collect()))
     want = collections.Counter(
         map(tuple, spark.read.parquet(path).select(*cols).collect())
     )

@@ -1,17 +1,18 @@
 #!/usr/bin/env python
-"""Per-query profiler: time + job/stage/task counts for named registry
-entries, mirroring bench.py methodology (two warm passes, then a timed
-noop-sink run).  Usage:
+"""Per-query profiler: the bench.py discipline (stdb_spark.profile: warm
+at sf0.001 and at the target, then N timed noop-sink runs) for named
+registry entries.  Usage:
 
-    python tools/query_profile.py [--sf DIR] [--runs N] name [name ...]
+    python tools/query_profile.py [--sf DIR] [--runs N] [--no-warm] name [name ...]
 
-For each query prints: median seconds over N timed runs, number of
-Spark jobs the action launched, total stages and tasks — the
+For each query prints the median seconds over N timed runs, and the last
+run's profile record: build / plan / execute ms, the jobs (build_jobs of
+them launched while the DataFrame was built), stages and tasks -- the
 fixed-overhead fingerprint that dominates at test scale and the
-exchange-count proxy that dominates at 100 TB — and the Java classes
-the N timed runs compiled (the CodegenMetrics compilation count; a
-class whose source was compiled before, as in a warm pass with the
-same literals, is a cache hit and is not counted).
+exchange-count proxy that dominates at 100 TB -- executor time, scan,
+shuffle, spill and Python ms; ``classes`` sums the Java classes the N
+timed runs compiled (a class whose source was compiled before, as in a
+warm pass with the same literals, is a cache hit and is not counted).
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -33,62 +33,20 @@ def main() -> None:
     ap.add_argument("--no-warm", action="store_true")
     args = ap.parse_args()
 
+    from stdb_spark.profile import profile_entries
     from stdb_spark.session import get_spark
-    from stdb_spark.workloads import QUERIES
 
     spark = get_spark("stdb-profile")
-    sc = spark.sparkContext
-    sc.setLogLevel("ERROR")
-    tracker = sc.statusTracker()
-    compiled = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-
+    spark.sparkContext.setLogLevel("ERROR")
     out = {}
-    for name in args.names:
-        fn = QUERIES[name]
-        if not args.no_warm:
-            for wd in ("/root/testdata/sf0.001", args.sf):
-                try:
-                    fn(spark, wd).write.format("noop").mode("overwrite").save()
-                except Exception:
-                    pass
-        times = []
-        jobs = stages = tasks = 0
-        classes = compiled.getCount()
-        for r in range(args.runs):
-            group = f"prof_{name}_{r}"
-            sc.setJobGroup(group, name)
-            t0 = time.perf_counter()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
-            sc.setJobGroup(None, None)
-            if r == args.runs - 1:
-                job_ids = tracker.getJobIdsForGroup(group)
-                jobs = len(job_ids)
-                for jid in job_ids:
-                    ji = tracker.getJobInfo(jid)
-                    if ji is None:
-                        continue
-                    stages += len(ji.stageIds)
-                    for sid in ji.stageIds:
-                        si = tracker.getStageInfo(sid)
-                        if si is not None:
-                            tasks += si.numTasks
-        classes = compiled.getCount() - classes
-        med = sorted(times)[len(times) // 2]
-        out[name] = {
-            "median_s": round(med, 3),
-            "runs_s": [round(t, 3) for t in times],
-            "jobs": jobs,
-            "stages": stages,
-            "tasks": tasks,
-            "classes": classes,
-        }
-        print(
-            f"{name}: median {med:.3f}s runs={[round(t,2) for t in times]} "
-            f"jobs={jobs} stages={stages} tasks={tasks} classes={classes}",
-            file=sys.stderr,
-            flush=True,
-        )
+    warm_at = [] if args.no_warm else None
+    for name, res in profile_entries(spark, args.names, args.sf, args.runs, warm_at):
+        recs = res.pop("records")
+        res["runs_s"] = [round(r["wall_ms"] / 1e3, 3) for r in recs]
+        if recs:
+            res.update(recs[-1], classes=sum(r["classes"] for r in recs))
+        out[name] = res
+        print(f"{name}: {json.dumps(res)}", file=sys.stderr, flush=True)
     print(json.dumps(out, indent=1))
     spark.stop()
 

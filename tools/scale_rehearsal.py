@@ -15,8 +15,8 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -56,12 +56,6 @@ DEFAULT = [
 ]
 
 
-def _time(fn, spark, sf_dir):
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-
 def main() -> None:
     # the big side (10x-100x replicas) needs more heap than the bench
     # steady-state default; callers can still override explicitly
@@ -78,7 +72,9 @@ def main() -> None:
     flag_at = float(os.environ.get("SPARK_SCALE_EXPECT", "14"))
     if not os.path.isdir(big):
         raise SystemExit("run tools/gen_scale.py first")
+    from stdb_spark.profile import Profiler, profile_entries
     from stdb_spark.session import get_spark
+    from stdb_spark.sources import storage
     from stdb_spark.workloads import QUERIES
 
     spark = get_spark("scale-rehearsal")
@@ -90,38 +86,31 @@ def main() -> None:
         print(f"skipping unknown queries: {unknown}", flush=True)
         names = [n for n in names if n not in unknown]
     for name in names:
-        if name in special:
-            import shutil
-
-            from stdb_spark import model as _model
-            from stdb_spark.sources import storage as _storage
-
-            ts = {}
-            for tag, sf_dir in (("small", base), ("big", big)):
+        ts = []
+        for sf_dir in (base, big):
+            if name in special:
                 tgt = os.path.join(big, "_rehearsal_ingest")
                 shutil.rmtree(tgt, ignore_errors=True)
-                t0 = time.perf_counter()
-                _storage.write_samples(
-                    _model.events_as_samples(spark, sf_dir), tgt
+                rec = Profiler(spark).run(
+                    lambda: storage.write_samples(model.events_as_samples(spark, sf_dir), tgt)
                 )
-                ts[tag] = time.perf_counter() - t0
                 shutil.rmtree(tgt, ignore_errors=True)
-            t_small, t_big = ts["small"], ts["big"]
-        else:
-            fn = QUERIES[name]
-            # warm each side, then time it IMMEDIATELY: one-time
-            # artifact builds (k-means centroids, presigned signatures,
-            # layouts) are ingest-side ETL, not query latency — same
-            # steady-state rule bench.py applies (first rehearsal run
-            # showed emb_semantic_dedup at "87x" of which ~80s was
-            # centroid training).  The small side is timed BEFORE the
-            # big side ever runs: timing it after the big warm pass
-            # read up to ~7x high (JVM/GC state pollution, r11
-            # BENCH_NOTES), understating every ratio.
-            fn(spark, base).write.format("noop").mode("overwrite").save()
-            t_small = _time(fn, spark, base)
-            fn(spark, big).write.format("noop").mode("overwrite").save()
-            t_big = _time(fn, spark, big)
+            else:
+                # warm each side, then time it IMMEDIATELY: one-time
+                # artifact builds (k-means centroids, presigned signatures,
+                # layouts) are ingest-side ETL, not query latency -- same
+                # steady-state rule bench.py applies (first rehearsal run
+                # showed emb_semantic_dedup at "87x" of which ~80s was
+                # centroid training).  The small side is timed BEFORE the
+                # big side ever runs: timing it after the big warm pass
+                # read up to ~7x high (JVM/GC state pollution, r11
+                # BENCH_NOTES), understating every ratio.
+                [(_, res)] = profile_entries(spark, [name], sf_dir, warm_at=[sf_dir])
+                if "error" in res:
+                    raise RuntimeError(f"{name} at {sf_dir}: {res['error']}")
+                rec = res["records"][-1]
+            ts.append(rec["wall_ms"] / 1e3)
+        t_small, t_big = ts
         ratio = t_big / t_small if t_small > 0 else float("inf")
         flag = "SUPER-LINEAR" if ratio > flag_at else ""
         rows.append((name, round(t_small, 2), round(t_big, 2), round(ratio, 1), flag))
