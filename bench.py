@@ -295,13 +295,14 @@ def main() -> None:
     spark = get_spark("stdb-bench")
     spark.sparkContext.setLogLevel("ERROR")
     # warm up the session (JVM/Arrow startup, parquet footers); then
-    # profile_entries warms every entry at sf0.001 (the whole-stage-codegen
-    # compile per plan shape, cheaply: generated-code caching is keyed by
-    # plan shape, not data size) and at the TARGET sf (the write-time
-    # artifacts several queries read -- partitioned layout, summary table,
-    # presigned LSH/SimHash signatures, IVF centroids -- built once per
-    # dataset under .cache/; that is ingest-side ETL, not query latency),
-    # so the timed pass measures the steady state a deployed engine serves
+    # profile_entries warms each entry, right before timing it, at sf0.001
+    # (the whole-stage-codegen compile per plan shape, cheaply:
+    # generated-code caching is keyed by plan shape, not data size) and
+    # at the TARGET sf (the write-time artifacts several queries read --
+    # partitioned layout, summary table, presigned LSH/SimHash signatures,
+    # IVF centroids -- built once per dataset under .cache/; that is
+    # ingest-side ETL, not query latency), so the timed runs measure the
+    # steady state a deployed engine serves
     for table in ("region", "events", "lineitem"):
         spark.read.parquet(f"{sf_dir}/{table}.parquet").count()
 

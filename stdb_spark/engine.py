@@ -225,15 +225,10 @@ class Engine:
         # It carries each series' tags, so it binds like the leaf rows.
         self.summaries = summaries
         self.summary_step_ns = summary_step_ns
-        # If the bound DataFrames carry a ``ts_raw`` column (the untouched
-        # storage timestamp, e.g. before µs truncation), range queries also
-        # apply *coarse* bounds on it widened by ts_slack_ns (the max
-        # distance |ts - ts_raw| the transform can introduce).  Filters on
-        # the derived ``ts`` are arithmetic over the parquet column and
-        # never reach PushedFilters; the ts_raw bounds do — at 100 TB with
-        # time-sorted row groups this is the NB+tree time-descent analog
-        # (stdb/storage/nbtree.cc:471-616): read one day, not the full
-        # metric history.
+        # ts_slack_ns bounds |ts - ts_src|, the distance a bound adapter
+        # puts between the derived ``ts`` and the stored timestamp (µs
+        # truncation, say): range queries widen the coarse ``ts_src``
+        # bounds that reach PushedFilters by it (see _range).
         self.ts_slack_ns = ts_slack_ns
         if series is None and samples is not None:
             series = model.series_registry(samples)
@@ -264,6 +259,9 @@ class Engine:
 
     # ------------------------------------------------------------------
     def query(self, q) -> DataFrame:
+        """``q`` as a DataFrame.  ``parse_query`` has decided which
+        clauses and filter keys ``q``'s statement takes; the template
+        runs every one the request carries."""
         req = parse_query(q)
         dispatch = {
             QueryKind.SELECT: self._select,
@@ -362,42 +360,31 @@ class Engine:
 
     def _range(self, req: QueryRequest, table: str) -> list[Column]:
         """Row conditions of the range: half-open [from, to); reversed
-        bounds scan backward over (to, from] (operator.h:88-94).  When a
-        ``ts_raw`` column is bound, coarse bounds on it are added so the
-        Parquet scan prunes row groups (see __init__ on ts_slack_ns).
-        When the table carries the layout's ``day`` partition column
+        bounds scan backward over (to, from] (operator.h:88-94).  When
+        the table carries the physical ``ts_src`` column, coarse bounds
+        on it are added so the Parquet scan prunes row groups (the
+        NB+tree time-descent analog, stdb/storage/nbtree.cc:471-616):
+        the exact cut is on the derived ``ts``, whose predicates are
+        arithmetic over the column and never reach PushedFilters.  When
+        the table carries the layout's ``day`` partition column
         (sources.storage.write_samples), explicit day bounds are added
-        so directory-level partition pruning fires — the NB+tree
-        time-descent analog at the file system level.  ``table`` names
+        so directory-level partition pruning fires.  ``table`` names
         the bound table ("samples" or "events"), whose schema __init__
         read once."""
         if req.begin is None:
             return []
         dtypes = self._dtypes[table]
         # widen BOTH ends by the slack: the contract is the symmetric
-        # |ts - ts_raw| <= ts_slack_ns, so a transform that can move ts
-        # ABOVE ts_raw (round-to-nearest, negative-epoch truncation)
+        # |ts - ts_src| <= ts_slack_ns, so a transform that can move ts
+        # ABOVE ts_src (round-to-nearest, negative-epoch truncation)
         # must not lose boundary rows to a one-sided bound
         g = self.ts_slack_ns
         if req.backward:
             lo, hi = req.end - g, req.begin + g
             cond = (F.col("ts") <= req.begin) & (F.col("ts") > req.end)
-            if "ts_raw" in dtypes:
-                cond = cond & (F.col("ts_raw") <= req.begin + g) & (
-                    F.col("ts_raw") > req.end - g
-                )
         else:
             lo, hi = req.begin - g, req.end + g
             cond = (F.col("ts") >= req.begin) & (F.col("ts") < req.end)
-            if "ts_raw" in dtypes:
-                cond = cond & (F.col("ts_raw") >= req.begin - g) & (
-                    F.col("ts_raw") < req.end + g
-                )
-        # Physical-column bounds: ts/ts_raw are *derived* (timestamp
-        # arithmetic), so their predicates never reach PushedFilters.
-        # When the adapter kept the raw parquet column, add coarse
-        # attribute-vs-literal bounds on it so the scan prunes row
-        # groups (the NB+tree time-descent analog at the storage level).
         src_cond = model.ts_src_bounds(None, int(lo), int(hi), dtypes)
         if src_cond is not None:
             cond = cond & src_cond
@@ -420,13 +407,9 @@ class Engine:
         )
 
     @staticmethod
-    def _order(
-        df: DataFrame, req: QueryRequest, cols: Iterable[str], preordered: bool = False
-    ) -> DataFrame:
+    def _order(df: DataFrame, req: QueryRequest, cols: Iterable[str]) -> DataFrame:
         """Output order; ``cols`` are df's payload columns (all but
         series and ts)."""
-        if preordered:
-            return df
         ts = F.col("ts").desc() if req.backward else F.col("ts").asc()
         sr = F.col("series").desc() if req.backward else F.col("series").asc()
         # (series, ts) is not guaranteed unique (duplicate same-µs
@@ -454,43 +437,32 @@ class Engine:
             df = df.limit(req.limit)
         return df
 
-    def _value_filters(
-        self, df: DataFrame, req: QueryRequest, cols: dict[str, str]
-    ) -> DataFrame:
-        """filters keyed by metric (join/select) or func (group-agg
-        HAVING), combined with all/any (queryparser.cc:748-858)."""
-        if not req.filters:
-            return df
-        conds = []
-        for key, vf in req.filters.items():
-            if key not in cols:
-                raise QueryParseError(f"filter key {key!r} matches no output column")
-            conds.append(_vf_condition(F.col(cols[key]), vf))
-        return df.filter(_and_all(conds) if req.filter_rule == "all" else _or_all(conds))
+    def _output(self, out: DataFrame, req: QueryRequest, cols: list[str]) -> DataFrame:
+        """``out`` (series, ts, *cols) through the apply pipeline over
+        ``cols`` (SURVEY.md §3.1, step 7), then ordered and limited."""
+        out, cols, preordered = apply_pipeline(out, req.apply, cols, req.backward)
+        return self._limit(out if preordered else self._order(out, req, cols), req)
 
-    def _group_aggregate_filters(
-        self,
-        df: DataFrame,
-        req: QueryRequest,
-        cols: dict[str, str],
-        metric_keys: dict[str, str],
+    @staticmethod
+    def _having(
+        df: DataFrame, req: QueryRequest, cols: dict[str, str], metric_col: str | None = None
     ) -> DataFrame:
-        """HAVING for group-aggregate. Func-keyed conditions apply to
-        every bucket row; metric-keyed conditions are strictly
-        per-metric (queryparser.cc:1868,
+        """The value filters over aggregated or joined rows, combined
+        with all/any (queryparser.cc:748-858).  A key of ``cols`` gates
+        every row on its column.  Any other key, which the parser admits
+        only as a single-func group-aggregate's metric, gates only that
+        metric's rows, on ``metric_col`` (queryparser.cc:1868,
         plan/query_plan_builder.cc:58-109): a row of a DIFFERENT metric
-        is unaffected by them — it passes under "all" and is not
-        rescued/rejected by them under "any"."""
+        is unaffected by it -- it passes under "all" and is not
+        rescued/rejected by it under "any"."""
         if not req.filters:
             return df
         global_conds, per_metric = [], {}
         for key, vf in req.filters.items():
             if key in cols:
                 global_conds.append(_vf_condition(F.col(cols[key]), vf))
-            elif key in metric_keys:
-                per_metric[key] = _vf_condition(F.col(metric_keys[key]), vf)
             else:
-                raise QueryParseError(f"filter key {key!r} matches no output column")
+                per_metric[key] = _vf_condition(F.col(metric_col), vf)
         if req.filter_rule == "all":
             conds = global_conds + [
                 (F.col("metric") != F.lit(m)) | c for m, c in per_metric.items()
@@ -510,19 +482,11 @@ class Engine:
     # ------------------------------------------------------------------
     def _select(self, req: QueryRequest) -> DataFrame:
         conds = self._bind(req) + self._range(req, "samples")
-        if req.filters:
-            # reject unknown keys loudly instead of KeyError-crashing /
-            # silently dropping extra named filters
-            unknown = [k for k in req.filters if k not in req.metrics]
-            if unknown:
-                raise QueryParseError(
-                    f"filter key {unknown[0]!r} matches no selected metric"
-                )
+        if req.filters:  # the parser keys it by the one metric
             conds.append(_vf_condition(F.col("value"), req.filters[req.metrics[0]]))
         df = self._group_remap(_filter(self.samples, conds), req)
         out = df.select(self._series_col, F.col("ts"), F.col("value"))
-        out, cols, preordered = apply_pipeline(out, req.apply, ["value"], req.backward)
-        return self._limit(self._order(out, req, cols, preordered), req)
+        return self._output(out, req, ["value"])
 
     def _select_events(self, req: QueryRequest) -> DataFrame:
         if self.events is None:
@@ -534,7 +498,7 @@ class Engine:
             conds.append(F.col("body").rlike(req.event_regex))
         df = self._group_remap(_filter(self.events, conds), req)
         out = df.select(self._series_col, F.col("ts"), F.col("body"))
-        return self._limit(self._order(out, req, ["body"]), req)
+        return self._output(out, req, ["body"])
 
     def _select_meta(self, req: QueryRequest) -> DataFrame:
         if self.series is None:
@@ -629,27 +593,16 @@ class Engine:
         funcs = req.agg_funcs
         df, keys, expr = self._agg_input(req, funcs, bucketed=True)
         gb = df.groupBy("metric", *keys).agg(*[expr(f).alias(f) for f in funcs])
-        # HAVING over bucket components, keyed by function name — plus
-        # the parser's other accepted spellings: the pre-canonical
-        # 'cnt' alias, and metric keys (queryparser.cc:1868 parses
-        # group-aggregate filters per METRIC, never globally): a
-        # metric-keyed threshold gates ONLY the named metric's bucket
-        # rows; rows of other metrics pass untouched. The metric
-        # spelling is unambiguous only when ONE func is requested; with
-        # several, it falls to the "matches no output column" rejection.
+        # HAVING keyed by function name, the pre-canonical 'cnt' alias,
+        # or, with one func, by metric (see _having)
         cols = {f: f for f in funcs}
         if "count" in funcs:
             cols.setdefault("cnt", "count")
-        metric_keys: dict[str, str] = {}
-        if len(funcs) == 1:
-            for m in req.metrics:
-                if m not in cols:
-                    metric_keys[m] = funcs[0]
-        gb = self._group_aggregate_filters(gb, req, cols, metric_keys)
+        gb = self._having(gb, req, cols, funcs[0])
         label = "|".join(f"{{m}}:{f}" for f in funcs)
         label = F.regexp_replace(F.lit(label), F.lit("\\{m\\}"), F.col("metric"))
         out = gb.select(_series_name(label), F.col("ts"), *[F.col(f) for f in funcs])
-        return self._limit(self._order(out, req, funcs), req)
+        return self._output(out, req, list(funcs))
 
     # ------------------------------------------------------------------
     def _join(self, req: QueryRequest) -> DataFrame:
@@ -687,7 +640,6 @@ class Engine:
         by (``_tags_s``, ts); value filters, series name, apply
         pipeline, order and limit."""
         metrics = req.metrics
-        piv = self._value_filters(piv, req, {m: _quote(m) for m in metrics})
+        piv = self._having(piv, req, {m: _quote(m) for m in metrics})
         out = piv.select(_series_name(label), "ts", *[F.col(_quote(m)) for m in metrics])
-        out, cols, preordered = apply_pipeline(out, req.apply, list(metrics), req.backward)
-        return self._limit(self._order(out, req, cols, preordered), req)
+        return self._output(out, req, list(metrics))

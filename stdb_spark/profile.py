@@ -26,11 +26,11 @@ overlap, and no other thread may launch jobs while one is open.  Every
 counter is read after the wall is recorded, once the listener bus has
 drained; the status stores are kept with the UI disabled.
 
-``profile_entries`` is the discipline for registry entries: an untimed
-noop write of every entry at each warm scale (sf0.001 first, which
-compiles each plan shape cheaply, then the target, which builds the
-write-time artifacts a deployed engine serves from), then N timed
-windows per entry and their median.
+``profile_entries`` is the discipline for registry entries, one entry
+at a time: an untimed noop write at each warm scale (sf0.001 first,
+which compiles each plan shape cheaply, then the target, which builds
+the write-time artifacts a deployed engine serves from), then N timed
+windows and their median.
 """
 
 from __future__ import annotations
@@ -167,24 +167,30 @@ def warm_dirs(sf_dir: str) -> list[str]:
 
 
 def profile_entries(spark, names, sf_dir: str, runs: int = 1, warm_at=None):
-    """Warm every entry of ``names`` at each of ``warm_at`` (default
-    ``warm_dirs(sf_dir)``; a warm failure is left for the timed run to
-    report), then time each ``runs`` times at ``sf_dir``.  Yields
+    """Profile each entry of ``names`` in turn: warm it at each of
+    ``warm_at`` (default ``warm_dirs(sf_dir)``; a warm failure is left for
+    the timed run to report), then time it ``runs`` times at ``sf_dir``.
+    An entry's timed runs follow its own warm-up directly: Spark's
+    generated-code cache holds 100 classes
+    (``spark.sql.codegen.cache.maxEntries``), so with every warm run
+    first the other entries' warm-ups evicted an entry's classes before
+    it was timed (bench.py's 248 entries at sf0.01 on a 4-core VM
+    compiled 3,626 classes in their timed runs that way, and 84 warmed
+    entry by entry).  Yields
     ``(name, result)`` per entry as it finishes: ``result["records"]``
     holds one :meth:`Profiler.run` record per run and
     ``result["median_s"]`` the median wall; an entry whose run raised has
     ``result["error"]`` instead and no further runs."""
     from stdb_spark.workloads import QUERIES
 
-    for d in warm_dirs(sf_dir) if warm_at is None else warm_at:
-        for name in names:
-            try:
-                QUERIES[name](spark, d).write.format("noop").mode("overwrite").save()
-            except Exception:  # noqa: BLE001 - reported by the timed run
-                pass
     prof = Profiler(spark)
     for name in names:
         fn = QUERIES[name]
+        for d in warm_dirs(sf_dir) if warm_at is None else warm_at:
+            try:
+                fn(spark, d).write.format("noop").mode("overwrite").save()
+            except Exception:  # noqa: BLE001 - reported by the timed run
+                pass
         records = []
         try:
             for _ in range(runs):

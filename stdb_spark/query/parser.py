@@ -2,11 +2,13 @@
 
 Mirrors the reference's QueryParser semantics (stdb/query/queryparser.cc):
 query kind from the unique statement field (get_query_kind :887-918),
-field allow-list + uniqueness validation (validate_query :920-971),
-range (:629-681), where (:683-740), order-by (:556-576), group-by-tag /
+field uniqueness validation (validate_query :920-971), range
+(:629-681), where (:683-740), order-by (:556-576), group-by-tag /
 pivot-by-tag (:578-611), limit/offset (:613-627 — the reference assigns
 the offset value to limit, a bug we deliberately FIX), value filter
-(:748-858), apply pipeline (:2046-2080).
+(:748-858), apply pipeline (:2046-2080).  One table (``CLAUSES``) says
+which clauses each statement runs, and the parser alone checks clauses
+and filter keys, before the Engine builds anything.
 
 The binding step (where -> series ids) happens in the compiler against
 the series registry DataFrame instead of an inverted index.
@@ -45,19 +47,22 @@ UNIQUE_STMTS = (
     "select-events",
 )
 
-ALLOWED_STMTS = set(UNIQUE_STMTS) | {
-    "output",
-    "order-by",
-    "group-by",
-    "group-by-tag",
-    "pivot-by-tag",
-    "limit",
-    "offset",
-    "range",
-    "where",
-    "apply",
-    "eval",
-    "filter",
+# The clauses each statement's Engine template runs.  ``parse_query``
+# rejects any other clause instead of parsing and ignoring it; ``output``,
+# a wire-format option with no DataFrame meaning, is accepted everywhere.
+_SCAN = {
+    "output", "where", "range", "group-by", "group-by-tag", "pivot-by-tag",
+    "order-by", "limit", "offset",
+}
+_VALUES = _SCAN | {"filter", "apply", "eval"}
+CLAUSES = {
+    "select": _VALUES,
+    "select meta:names": {"output", "where", "limit", "offset"},
+    "select-events": _SCAN | {"filter"},  # `filter` is a regex over bodies
+    "aggregate": _SCAN - {"order-by"},  # output is always series-ordered
+    "join": _VALUES,
+    "group-aggregate": _VALUES,
+    "group-aggregate-join": _VALUES,
 }
 
 AGG_FUNCS = (
@@ -135,7 +140,6 @@ class QueryRequest:
     offset: int = 0
     apply: list[dict[str, Any]] = field(default_factory=list)
     event_regex: str | None = None
-    meta_target: str | None = None  # for select meta:names[:metric]
 
     @property
     def backward(self) -> bool:
@@ -176,15 +180,6 @@ def _parse_where(q: dict) -> WhereClause | None:
             combos.append({str(k): str(v) for k, v in item.items()})
         return WhereClause(series_combos=combos)
     raise QueryParseError("ill-formed `where` clause")
-
-
-# public names for the clause parsers shared with the search/suggest
-# endpoints (Engine.search/suggest must not reach into parser privates
-# — ADVICE/VERDICT r4 #8); the underscore names remain as the internal
-# spelling used by parse_query itself.
-def parse_where(q: dict) -> WhereClause | None:
-    """Public `where` clause parser (parse_where, queryparser.cc)."""
-    return _parse_where(q)
 
 
 @dataclass
@@ -328,15 +323,97 @@ def _parse_apply(q: dict) -> list[dict]:
     return out
 
 
+def _statement(stmt: str, node) -> QueryRequest:
+    """The request of statement ``stmt`` with only its own fields set:
+    the kind, the metrics, and the aggregating statements' funcs and
+    step."""
+    if stmt == "select":
+        if not isinstance(node, str):
+            raise QueryParseError("`select` must be a metric name string")
+        if not node.startswith("meta:"):
+            return QueryRequest(kind=QueryKind.SELECT, metrics=[node])
+        parts = node.split(":")
+        if parts[1] != "names":
+            raise QueryParseError(f"unknown meta query {node!r}")
+        return QueryRequest(kind=QueryKind.SELECT_META, metrics=parts[2:3])
+
+    if stmt == "select-events":
+        if not isinstance(node, str) or not node.startswith("!"):
+            raise QueryParseError("`select-events` metric must start with '!'")
+        return QueryRequest(kind=QueryKind.SELECT_EVENTS, metrics=[node])
+
+    if stmt == "join":
+        metrics = [str(m) for m in _as_list(node)]
+        if not metrics:
+            raise QueryParseError("`join` needs at least one metric")
+        return QueryRequest(kind=QueryKind.JOIN, metrics=metrics)
+
+    if stmt == "aggregate":
+        if not isinstance(node, dict) or not node:
+            raise QueryParseError("`aggregate` must be {metric: func, ...}")
+        metrics, funcs = [], []
+        for metric, fn in node.items():
+            for one in _as_list(fn):
+                if one not in AGG_FUNCS:
+                    raise QueryParseError(f"unknown aggregate function {one!r}")
+                metrics.append(str(metric))
+                funcs.append("count" if one == "cnt" else str(one))
+        return QueryRequest(kind=QueryKind.AGGREGATE, metrics=metrics, agg_funcs=funcs)
+
+    # group-aggregate, group-aggregate-join
+    if not isinstance(node, dict):
+        raise QueryParseError(f"`{stmt}` must be an object")
+    if "step" not in node:
+        raise QueryParseError("`step` is required")
+    step_ns = parse_duration_ns(str(node["step"]))
+    if step_ns <= 0:
+        raise QueryParseError("`step` must be positive")
+    metrics = [str(m) for m in _as_list(node.get("metric", []))]
+    if not metrics:
+        raise QueryParseError("`metric` is required")
+    funcs = [str(f) for f in _as_list(node.get("func", []))]
+    if not funcs:
+        raise QueryParseError("`func` is required")
+    for fn in funcs:
+        if fn not in AGG_FUNCS:
+            raise QueryParseError(f"unknown aggregate function {fn!r}")
+    funcs = ["count" if f == "cnt" else f for f in funcs]
+    if stmt == "group-aggregate-join" and len(funcs) != 1:
+        raise QueryParseError("group-aggregate-join allows exactly one func")
+    kind = QueryKind(stmt.replace("-", "_"))
+    return QueryRequest(kind=kind, metrics=metrics, agg_funcs=funcs, step_ns=step_ns)
+
+
+def _check_filter_keys(req: QueryRequest) -> None:
+    """Reject a value-filter key the statement's output has no column
+    for.  select, join and group-aggregate-join key their filters by
+    metric.  group-aggregate keys its HAVING by a requested func (``cnt``
+    too when ``count`` is requested), or by a metric when exactly one
+    func is requested, which then gates only that metric's rows."""
+    if req.kind is QueryKind.GROUP_AGGREGATE:
+        valid = set(req.agg_funcs) | ({"cnt"} if "count" in req.agg_funcs else set())
+        if len(req.agg_funcs) == 1:
+            valid |= set(req.metrics)
+        what = "output column"
+    else:
+        valid, what = set(req.metrics), "selected metric"
+    for key in req.filters:
+        if key not in valid:
+            raise QueryParseError(f"filter key {key!r} matches no {what}")
+
+
 def parse_query(query: str | dict) -> QueryRequest:
-    """Parse + validate a JSON query into the logical request."""
+    """Parse + validate a JSON query into the logical request: the
+    statement's own fields, then each shared clause once.  A clause
+    outside the statement's ``CLAUSES`` set is rejected, so the Engine
+    runs every clause the request carries."""
     q = json.loads(query) if isinstance(query, str) else query
     if not isinstance(q, dict):
         raise QueryParseError("query must be a JSON object")
 
     seen_unique = [k for k in q if k in UNIQUE_STMTS]
-    for k in q:
-        if k not in ALLOWED_STMTS:
+    for k in q:  # _VALUES holds every statement's clauses
+        if k not in UNIQUE_STMTS and k not in _VALUES:
             raise QueryParseError(f"Query object contains unexpected field `{k}`")
     if len(seen_unique) > 1:
         raise QueryParseError(
@@ -349,169 +426,29 @@ def parse_query(query: str | dict) -> QueryRequest:
         )
 
     stmt = seen_unique[0]
-    group_tags, group_op = _parse_groupby(q)
-    limit, offset = _parse_limit_offset(q)
-    order_by = str(q.get("order-by", "time"))
-    if order_by not in ("time", "series"):
-        raise QueryParseError(f"Unexpected `order-by` field value `{order_by}`")
+    req = _statement(stmt, q[stmt])
+    name = "select meta:names" if req.kind is QueryKind.SELECT_META else stmt
+    for k in q:
+        if k != stmt and k not in CLAUSES[name]:
+            raise QueryParseError(f"`{k}` is not supported for `{name}`")
 
-    if stmt == "select":
-        target = q["select"]
-        if not isinstance(target, str):
-            raise QueryParseError("`select` must be a metric name string")
-        if target.startswith("meta:"):
-            req = QueryRequest(kind=QueryKind.SELECT_META, meta_target=target)
-            parts = target.split(":")
-            if parts[1] != "names":
-                raise QueryParseError(f"unknown meta query {target!r}")
-            req.metrics = [parts[2]] if len(parts) > 2 else []
-            req.where = _parse_where(q)
-            req.limit, req.offset = limit, offset
-            return req
-        begin, end = _parse_range(q, allow_empty=False)
-        filters, rule = _parse_filter(q, [target])
-        return QueryRequest(
-            kind=QueryKind.SELECT,
-            metrics=[target],
-            begin=begin,
-            end=end,
-            where=_parse_where(q),
-            filters=filters,
-            filter_rule=rule,
-            group_tags=group_tags,
-            group_op=group_op,
-            order_by=order_by,
-            limit=limit,
-            offset=offset,
-            apply=_parse_apply(q),
-        )
-
-    if stmt == "select-events":
-        target = q["select-events"]
-        if not isinstance(target, str) or not target.startswith("!"):
-            raise QueryParseError("`select-events` metric must start with '!'")
-        begin, end = _parse_range(q, allow_empty=False)
-        flt = q.get("filter")
-        regex = None
-        if flt is not None:
-            if not isinstance(flt, str):
-                raise QueryParseError("event filter must be a regex string")
-            regex = flt
-        return QueryRequest(
-            kind=QueryKind.SELECT_EVENTS,
-            metrics=[target],
-            begin=begin,
-            end=end,
-            where=_parse_where(q),
-            group_tags=group_tags,
-            group_op=group_op,
-            order_by=order_by,
-            limit=limit,
-            offset=offset,
-            event_regex=regex,
-        )
-
-    if stmt == "aggregate":
-        node = q["aggregate"]
-        if not isinstance(node, dict) or not node:
-            raise QueryParseError("`aggregate` must be {metric: func, ...}")
-        if q.get("filter") is not None:
-            # never consumed by the whole-range aggregate path: reject
-            # loudly rather than validate-then-ignore (a silently
-            # unapplied threshold is a wrong-result generator)
-            raise QueryParseError("`filter` is not supported for `aggregate`")
-        metrics, funcs = [], []
-        for metric, fn in node.items():
-            for one in _as_list(fn):
-                if one not in AGG_FUNCS:
-                    raise QueryParseError(f"unknown aggregate function {one!r}")
-                metrics.append(str(metric))
-                funcs.append("count" if one == "cnt" else str(one))
-        begin, end = _parse_range(q, allow_empty=True)
-        return QueryRequest(
-            kind=QueryKind.AGGREGATE,
-            metrics=metrics,
-            agg_funcs=funcs,
-            begin=begin,
-            end=end,
-            where=_parse_where(q),
-            group_tags=group_tags,
-            group_op=group_op,
-            order_by="series",  # aggregate output is always series-ordered
-            limit=limit,
-            offset=offset,
-        )
-
-    if stmt == "join":
-        node = q["join"]
-        metrics = [str(m) for m in _as_list(node)]
-        if len(metrics) < 1:
-            raise QueryParseError("`join` needs at least one metric")
-        begin, end = _parse_range(q, allow_empty=False)
-        filters, rule = _parse_filter(q, metrics)
-        return QueryRequest(
-            kind=QueryKind.JOIN,
-            metrics=metrics,
-            begin=begin,
-            end=end,
-            where=_parse_where(q),
-            filters=filters,
-            filter_rule=rule,
-            group_tags=group_tags,
-            group_op=group_op,
-            order_by=order_by,
-            limit=limit,
-            offset=offset,
-            apply=_parse_apply(q),
-        )
-
-    if stmt in ("group-aggregate", "group-aggregate-join"):
-        node = q[stmt]
-        if not isinstance(node, dict):
-            raise QueryParseError(f"`{stmt}` must be an object")
-        if "step" not in node:
-            raise QueryParseError("`step` is required")
-        step_ns = parse_duration_ns(str(node["step"]))
-        if step_ns <= 0:
-            raise QueryParseError("`step` must be positive")
-        metrics = [str(m) for m in _as_list(node.get("metric", []))]
-        if not metrics:
-            raise QueryParseError("`metric` is required")
-        funcs = [str(f) for f in _as_list(node.get("func", []))]
-        if not funcs:
-            raise QueryParseError("`func` is required")
-        for fn in funcs:
-            if fn not in AGG_FUNCS:
-                raise QueryParseError(f"unknown aggregate function {fn!r}")
-        funcs = ["count" if f == "cnt" else f for f in funcs]
-        if stmt == "group-aggregate-join" and len(funcs) != 1:
-            raise QueryParseError("group-aggregate-join allows exactly one func")
-        begin, end = _parse_range(q, allow_empty=False)
-        filters, rule = _parse_filter(q, metrics)
-        # group-aggregate HAVING is keyed by function name
-        for key in filters:
-            if stmt == "group-aggregate" and key not in AGG_FUNCS and key not in metrics:
-                raise QueryParseError(f"filter key {key!r} is neither func nor metric")
-        return QueryRequest(
-            kind=(
-                QueryKind.GROUP_AGGREGATE
-                if stmt == "group-aggregate"
-                else QueryKind.GROUP_AGGREGATE_JOIN
-            ),
-            metrics=metrics,
-            agg_funcs=funcs,
-            step_ns=step_ns,
-            begin=begin,
-            end=end,
-            where=_parse_where(q),
-            filters=filters,
-            filter_rule=rule,
-            group_tags=group_tags,
-            group_op=group_op,
-            order_by=order_by,
-            limit=limit,
-            offset=offset,
-            apply=_parse_apply(q),
-        )
-
-    raise QueryParseError(f"unhandled statement {stmt!r}")  # pragma: no cover
+    # every clause is parsed whether present or not: an absent one
+    # yields its default
+    req.where = _parse_where(q)
+    req.group_tags, req.group_op = _parse_groupby(q)
+    req.limit, req.offset = _parse_limit_offset(q)
+    req.order_by = str(q.get("order-by", "time"))
+    if req.order_by not in ("time", "series"):
+        raise QueryParseError(f"Unexpected `order-by` field value `{req.order_by}`")
+    optional = req.kind in (QueryKind.AGGREGATE, QueryKind.SELECT_META)
+    req.begin, req.end = _parse_range(q, allow_empty=optional)
+    req.apply = _parse_apply(q)
+    if req.kind is QueryKind.SELECT_EVENTS:
+        regex = q.get("filter")
+        if regex is not None and not isinstance(regex, str):
+            raise QueryParseError("event filter must be a regex string")
+        req.event_regex = regex
+    else:
+        req.filters, req.filter_rule = _parse_filter(q, req.metrics)
+        _check_filter_keys(req)
+    return req

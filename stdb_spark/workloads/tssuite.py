@@ -49,10 +49,11 @@ DEC = "CAST(value AS DECIMAL(28,10))"
 
 def _engine(spark: SparkSession, sf_dir: str) -> Engine:
     """Engine over µs-truncated ns timestamps + exact (decimal) sums —
-    both required for bit-parity with the DuckDB oracle.  ``ts_raw``
-    keeps the untruncated storage column so Engine._range can push coarse
-    time bounds into the Parquet scan (truncated-ts predicates are
-    arithmetic over the column and never reach PushedFilters).
+    both required for bit-parity with the DuckDB oracle.  ``keep_src``
+    keeps the physical ``ts_src`` column, on which Engine._range pushes
+    coarse time bounds into the Parquet scan, widened by ``ts_slack_ns``
+    (truncated-ts predicates are arithmetic over the column and never
+    reach PushedFilters).
 
     The Engine (its lazy table bindings) is session catalog state —
     memoized per (session, events fingerprint) via model.session_binding;
@@ -63,12 +64,10 @@ def _engine(spark: SparkSession, sf_dir: str) -> Engine:
         trunc = F.expr("(ts div 1000) * 1000")
         samples = (
             model.events_as_samples(spark, sf_dir, keep_src=True)
-            .withColumn("ts_raw", F.col("ts"))
             .withColumn("ts", trunc)
         )
         events = (
             model.events_as_event_stream(spark, sf_dir, keep_src=True)
-            .withColumn("ts_raw", F.col("ts"))
             .withColumn("ts", trunc)
         )
         return Engine(
@@ -771,7 +770,6 @@ def _engine_with_summaries(spark: SparkSession, sf_dir: str) -> Engine:
         trunc = F.expr("(ts div 1000) * 1000")
         samples = (
             model.events_as_samples(spark, sf_dir)
-            .withColumn("ts_raw", F.col("ts"))
             .withColumn("ts", trunc)
         )
         # summaries AND the series registry are WRITE-TIME artifacts (the
@@ -1702,7 +1700,6 @@ def _cohort_engine(spark, sf):
     trunc = F.expr("(ts div 1000) * 1000")
     samples = (
         model.events_as_samples(spark, sf)
-        .withColumn("ts_raw", F.col("ts"))
         .withColumn("ts", trunc)
         .withColumn(
             "tags",

@@ -568,3 +568,30 @@ def test_agg_expr_rejects_unknown_function(spark):
     for backward in (False, True):
         with pytest.raises(ValueError, match="unknown aggregate function 'nope'"):
             agg_expr("nope", backward)
+
+
+@pytest.mark.parametrize(
+    "node", [{"name": "scale", "weight": 100}, {"name": "sma", "window-width": 3}]
+)
+def test_group_aggregate_runs_apply(eng, node):
+    """group-aggregate runs its apply pipeline over the func columns,
+    as select and the joins do (SURVEY.md §3.1, step 7): the result
+    equals the node applied by hand to the un-applied rows."""
+    q = {
+        "group-aggregate": {"metric": "test", "func": ["max", "count"], "step": 100},
+        "range": {"from": 100, "to": 1000},
+        "where": {"tag": ["T1", "T2"]},
+        "order-by": "series",
+    }
+    plain = eng.query(q).collect()
+    got = [tuple(r) for r in eng.query({**q, "apply": [node]}).collect()]
+    if node["name"] == "scale":
+        want = [(r.series, r.ts, r["max"] * 100, r["count"] * 100) for r in plain]
+    else:  # the mean of the previous 3 buckets of the series, 0 before its first
+        want = []
+        for i, r in enumerate(plain):
+            prev = [p for p in plain[max(0, i - 3):i] if p.series == r.series]
+            want.append((r.series, r.ts, *[sum(p[c] for p in prev) / 3 for c in ("max", "count")]))
+    assert len(plain) == 2 * 9
+    assert [g[:2] for g in got] == [w[:2] for w in want]
+    assert [g[2:] for g in got] == [pytest.approx(w[2:]) for w in want]

@@ -41,7 +41,7 @@ def test_select_pushes_filters_to_scan(spark):
     # (NB+tree time-descent parity, stdb/storage/nbtree.cc:471-616).
     # The physical ts column has shipped as int64-ns and TIMESTAMP(MICROS)
     # across testdata generations; accept the pushed form of either.
-    # The coarse bounds are SYMMETRICALLY slack-widened (|ts - ts_raw|
+    # The coarse bounds are SYMMETRICALLY slack-widened (|ts - ts_src|
     # <= ts_slack_ns), so the pushed literals sit one slack below
     # 2024-01-05 / above 2024-01-15.
     assert "PushedFilters:" in plan

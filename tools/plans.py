@@ -90,15 +90,15 @@ def _beside_default(scale: str) -> str:
 
 # ------------------------------------------------------------------- md
 PICK = [
-    ("ts_select_range", "select: filter+projection pushdown to scan, then ordered output"),
-    ("ts_group_aggregate", "group-aggregate: begin-aligned buckets, partial->final hash agg, one exchange"),
-    ("ts_join_pivot", "join: ts-alignment as pivot — zero join operators"),
+    ("ts_select_range", "select (Engine, one interpreted task): bind, range and ts_src bounds in one Filter that reaches PushedFilters, Coalesce 1, sort, no exchange"),
+    ("ts_group_aggregate", "group-aggregate (Engine, one interpreted task): begin-aligned buckets, partial->final hash agg over Coalesce 1, no exchange"),
+    ("ts_join_pivot", "join (Engine, one interpreted task): one conditional max per metric in one hash agg — zero join operators, no exchange"),
     ("rel_q5_local_supplier_volume", "multi-way join: dims broadcast, facts shuffle"),
     ("doc_minhash_lsh_candidates", "minhash+LSH: tokenize ONCE into a column (r7), explode -> flat hashes -> exchange-reused aggregation"),
     ("emb_ann_bruteforce", "ANN brute force: TakeOrderedAndProject, no global sort"),
     ("ts_asof_join", "as-of join: union + window fill — one shuffle, no range join"),
     ("ts_interval_join", "interval join: bucketized equi-join — shuffled hash join, no nested loop"),
-    ("ts_aggregate_summary_pushdown", "aggregate from write-time summaries: two tiny scans + broadcast, no leaf rows"),
+    ("ts_aggregate_summary_pushdown", "aggregate from write-time summaries (Engine, one interpreted task): one tiny summary scan, combine-only aggregate, no leaf rows, no exchange"),
     ("emb_ann_lsh_presigned", "ANN over write-time signatures: bucket equality reaches PushedFilters"),
     ("doc_hamming_near_dups", "simhash near-dup: postings shuffle over 4 pigeonhole blocks, full recall"),
     ("rel_q7_volume_shipping", "double-role dimension: nation broadcast twice under aliases, one agg exchange"),
@@ -112,7 +112,7 @@ PICK = [
     ("ts_m4_downsample", "M4 downsample: struct anchors, partial->final agg on one (series,bucket) exchange"),
     ("doc_tfidf_top_terms", "tf-idf: one (doc,term) exchange, broadcast vocab idf, decimal-exact ranking window"),
     ("doc_ngram_jaccard_capped", "capped Jaccard: stop-shingle postings dropped before the chained-explode pair emission"),
-    ("ts_ewma", "EWMA: hash-partition-batched applyInPandas — one Arrow group per shuffle partition, not per series"),
+    ("ts_ewma", "EWMA (Engine, one interpreted task): applyInPandas batched by hash group over Coalesce 1 — one Arrow group per hash group, not per series, no exchange"),
     ("rel_q21_suppliers_waiting", "waiting supplier: EXISTS/NOT EXISTS as fact self semi/anti joins sharing one key"),
     ("doc_pack_sequences", "sample packing: one shard exchange, window cumsum, zero joins"),
     ("ts_rank_ntile", "rank/ntile: one per-series window sort, rank filter before the output projection"),
@@ -210,6 +210,9 @@ def md(spark, args) -> int:
         "Generated by `python tools/plans.py md`. `*(n)` prefixes mark",
         "whole-stage-codegen stages; see tests/test_plans.py for the asserted",
         "properties (pushdown, broadcast, partial aggregation, exchange reuse).",
+        "An Engine query over a table under the Engine's 4 MB cut (every",
+        "Engine-backed `ts_*` entry here) runs as one interpreted task:",
+        "`Coalesce 1`, no exchange and no `*(n)` span (`engine._one_task`).",
         "",
     ]
     picked = zip(_entries(spark, sf, [name for name, _ in PICK]), PICK)
